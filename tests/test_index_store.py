@@ -785,7 +785,12 @@ def test_delete_from_lexical_index_matches_rebuild(spark):
     RET.save_lexical_index(survivors, ref, mode="overwrite",
                            num_partitions=4)
 
-    victims = corpus.filter(F.col("doc_id") % 5 == 0).select("doc_id")
+    # ids as a Python list (the ANN test above passes a DataFrame),
+    # with a repeated and an absent id: both contribute nothing
+    victims = [
+        r.doc_id for r in corpus.filter(F.col("doc_id") % 5 == 0).collect()
+    ]
+    victims += victims[:1] + [99_999_991]
     assert IDX.delete_from_index(spark, full, victims) == "committed"
     want = probe(ref)
     assert probe(full) == want

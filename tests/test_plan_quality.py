@@ -496,11 +496,11 @@ def test_persisted_lexical_probe_plan_shape(spark):
     reads a vocabulary-sized slice of a corpus-sized artifact), and
     every scoring join must broadcast the query-sized side — never a
     shuffle of the posting relation. On the max_df-PRUNED path the df
-    slice and the one-row stats are driver-materialized since r13
-    (both bounded by the probe's own max_terms contract; the pruned
-    plan referenced them 3×/2×), so there they appear as ExistingRDD
-    scans — the eager collect pushes the same In-list, pinned below
-    on the loader's relation directly."""
+    slice and the one-row stats are driver-materialized (both bounded
+    by the probe's own max_terms contract; the pruned plan references
+    them 3×/2×), so there they appear as LocalTableScans — the eager
+    collect pushes the same In-list, pinned below on the loader's
+    relation directly."""
     import os
     import tempfile
 
@@ -544,11 +544,12 @@ def test_persisted_lexical_probe_plan_shape(spark):
     # scored slice; the rare/head split reads the driver-materialized
     # df, so df scans no longer appear in the final plan at all)
     pruned = RET.probe_lexical_index(
-        tf, df, stats, meta, qt, k=10, max_df=100
+        tf, df, stats, meta, qt, k=10, max_df=_median_query_df(df, qt)
     )
     pplan = plan_of(pruned)
     assert len(re.findall(r"PushedFilters: \[In\(term", pplan)) >= 2, pplan[:2000]
-    assert "ExistingRDD" in pplan  # driver-materialized df/stats (r13)
+    assert "LocalTableScan" in pplan  # driver-materialized df/stats
+    assert "ExistingRDD" not in pplan
     assert "BroadcastHashJoin" in pplan
     assert "SortMergeJoin" not in pplan
     assert "CartesianProduct" not in pplan
@@ -809,3 +810,225 @@ def test_classifier_query_plans(spark):
         plan = plan_of(suite.QUERIES[name](spark, SF_DIR))
         assert "BroadcastHashJoin" in plan, name
         assert "BatchEvalPython" not in plan, name
+
+
+# Sites in workhop2_etl_spark/ that still call spark.createDataFrame on
+# a Python list, each kept on purpose. Everything else builds its tiny
+# driver-side relations through session.local_relation.
+LIST_FRAME_ALLOWLIST = {
+    ("session.py", "local_relation"): "the helper itself (Arrow table in)",
+    ("operators/index_store.py", "_write_centroid_rows"): (
+        "Spark-writer fallback for paths the driver cannot write "
+        "directly (remote filesystems); the local path writes with pyarrow"
+    ),
+    ("operators/index_store.py", "_write_codebook_rows"): (
+        "Spark-writer fallback for paths the driver cannot write "
+        "directly (remote filesystems); the local path writes with pyarrow"
+    ),
+}
+
+
+def test_driver_list_frames_go_through_local_relation():
+    """Static scope guard: no ``createDataFrame`` call in the engine
+    outside the allowlist above."""
+    import ast
+    import pathlib
+
+    import workhop2_etl_spark
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    found = set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                ):
+                    found.add((path.relative_to(root).as_posix(), fn.name))
+    assert found == set(LIST_FRAME_ALLOWLIST), found ^ set(LIST_FRAME_ALLOWLIST)
+
+
+def _sql_executions(spark) -> dict:
+    """{execution id: physical plan description} of every SQL
+    execution the status store holds (it is kept with the UI off)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        e = it.next()
+        out[int(e.executionId())] = str(e.physicalPlanDescription())
+    return out
+
+
+def _assert_no_logical_rdd(spark, name, call):
+    """Run ``call``; neither the optimized plan of a frame it returns
+    nor any query it or that frame's collect executes may read a
+    ``LogicalRDD`` (a Python-list frame: Python-worker tasks, no size
+    statistics)."""
+    seen = set(_sql_executions(spark))
+    out = call()
+    if hasattr(out, "_jdf"):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan, f"{name}:\n{plan}"
+        out.collect()
+    ran = {i: d for i, d in _sql_executions(spark).items() if i not in seen}
+    assert ran or not hasattr(out, "_jdf"), f"{name} executed nothing"
+    for i, desc in ran.items():
+        assert "ExistingRDD" not in desc, f"{name} (execution {i}):\n{desc}"
+
+
+def _median_query_df(df, qt) -> int:
+    """A ``max_df`` that splits the query vocabulary into rare and head
+    terms, so the pruned probe plans its full candidate shape (with
+    every term head, Catalyst folds the pruned plan to an empty
+    LocalRelation)."""
+    vocab = [r.term for r in qt.select("term").distinct().collect()]
+    dfs = sorted(r.df for r in df.filter(F.col("term").isin(vocab)).collect())
+    return dfs[len(dfs) // 2]
+
+
+def _final_plan(df) -> str:
+    """The executed (post-AQE) plan of a frame already collected,
+    without AQE's initial-plan section."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan[:2000]
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_query_bounded_joins_broadcast_without_hints(spark, tmp_path):
+    """The pruned probe's head-bound join (per-query HB, |Q| rows) and
+    the PRF harvest's anti-join against the query relation carry no
+    broadcast hint: the executed plan broadcasts both on its own."""
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    docs = load_table(spark, SF_DIR, "documents")
+    toks = F.split(
+        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
+    )
+    corpus_tokens = docs.select("doc_id", toks.alias("toks"))
+    qt = (
+        corpus_tokens.filter(F.col("doc_id") % 89 == 0)
+        .select(
+            F.col("doc_id").alias("query_id"),
+            F.explode(F.slice("toks", 1, 8)).alias("term"),
+        )
+        .distinct()
+    )
+    path = str(tmp_path / "lex")
+    RET.save_lexical_index(corpus_tokens, path, mode="overwrite")
+    tf, df, stats, meta = RET.load_lexical_index(spark, path)
+
+    pruned = RET.probe_lexical_index(
+        tf, df, stats, meta, qt, k=5, max_df=_median_query_df(df, qt)
+    )
+    assert pruned.collect()
+    plan = _final_plan(pruned)
+    assert re.search(r"BroadcastHashJoin [^\n]*LeftOuter", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+
+    fb = RET.probe_lexical_index(tf, df, stats, meta, qt, k=3).select(
+        "query_id", "doc_id"
+    )
+    harvest = RET._prf_harvest(tf, fb, qt, 2)
+    assert harvest.collect()
+    plan = _final_plan(harvest)
+    assert re.search(r"BroadcastHashJoin [^\n]*LeftAnti", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_driver_relations_plan_as_local_relations(spark, tmp_path):
+    """Every driver-materialized relation of the probe, delete and ANN
+    build paths is a LocalRelation: no optimized plan of a returned
+    frame, and no query executed along the way, has a LogicalRDD
+    leaf."""
+    from workhop2_etl_spark.operators import index_store as IDX
+    from workhop2_etl_spark.operators import retrieval as RET
+    from workhop2_etl_spark.operators import similarity as SIM
+
+    docs = load_table(spark, SF_DIR, "documents")
+    toks = F.split(
+        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
+    )
+    corpus_tokens = docs.select("doc_id", toks.alias("toks"))
+    qt = (
+        corpus_tokens.filter(F.col("doc_id") % 89 == 0)
+        .select(
+            F.col("doc_id").alias("query_id"),
+            F.explode(F.slice("toks", 1, 8)).alias("term"),
+        )
+        .distinct()
+    )
+    lex = str(tmp_path / "lex")
+    RET.save_lexical_index(corpus_tokens, lex, mode="overwrite")
+    tf, df, stats, meta = RET.load_lexical_index(spark, lex)
+    _assert_no_logical_rdd(spark, "probe_lexical_index", lambda: (
+        RET.probe_lexical_index(tf, df, stats, meta, qt, k=5)
+    ))
+    max_df = _median_query_df(df, qt)
+    _assert_no_logical_rdd(spark, "probe_lexical_index(max_df)", lambda: (
+        RET.probe_lexical_index(tf, df, stats, meta, qt, k=5, max_df=max_df)
+    ))
+    _assert_no_logical_rdd(spark, "probe_lexical_index_prf", lambda: (
+        RET.probe_lexical_index_prf(tf, df, stats, meta, qt, k=5)
+    ))
+    _assert_no_logical_rdd(spark, "delete_from_index", lambda: (
+        IDX.delete_from_index(spark, lex, [0, 5, 10, 10**9])
+    ))
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    cents = [
+        (i, [float(x) for x in r.embedding])
+        for i, r in enumerate(emb.orderBy("vec_id").limit(4).collect())
+    ]
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    _assert_no_logical_rdd(spark, "ivf_assign", lambda: (
+        SIM.ivf_assign(emb, cents, nprobe=2)
+    ))
+    ivf = str(tmp_path / "ivf")
+    IDX.save_ivf_index(emb, ivf, cents, dim=64, assign_kernel="expr",
+                       mode="overwrite")
+    postings, cs, imeta = IDX.load_ivf_index(spark, ivf)
+    _assert_no_logical_rdd(spark, "probe_ivf_index", lambda: (
+        IDX.probe_ivf_index(postings, cs, imeta, queries, k=3, nprobe=2)
+    ))
+    _assert_no_logical_rdd(spark, "with_hyperplane_signature", lambda: (
+        SIM.with_hyperplane_signature(emb, "embedding", dim=64, num_planes=6)
+    ))
+    _assert_no_logical_rdd(spark, "with_multitable_signatures", lambda: (
+        SIM.with_multitable_signatures(emb, "embedding", dim=64,
+                                       num_planes=6, num_tables=3)
+    ))
+    codebooks = SIM.sample_pq_codebooks(emb, dim=64, num_subspaces=8,
+                                        codes_per_subspace=4)
+    _assert_no_logical_rdd(spark, "pq_encode", lambda: (
+        SIM.pq_encode(emb, codebooks, dim=64)
+    ))
+
+
+def test_lexical_probe_collects_query_relation_once(spark, tmp_path):
+    """Building the unpruned probe runs ONE query (the (query_id,
+    term) collect behind the vocabulary IN-list); the scoring core
+    reuses those rows instead of collecting the relation again."""
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    docs = load_table(spark, SF_DIR, "documents")
+    corpus_tokens = docs.select(
+        "doc_id", F.split(F.lower(F.col("text")), " ").alias("toks")
+    )
+    qt = corpus_tokens.filter(F.col("doc_id") % 89 == 0).select(
+        F.col("doc_id").alias("query_id"),
+        F.explode(F.slice("toks", 1, 8)).alias("term"),
+    )
+    path = str(tmp_path / "lex")
+    RET.save_lexical_index(corpus_tokens, path, mode="overwrite")
+    tf, df, stats, meta = RET.load_lexical_index(spark, path)
+    seen = set(_sql_executions(spark))
+    probe = RET.probe_lexical_index(tf, df, stats, meta, qt, k=5)
+    ran = [i for i in _sql_executions(spark) if i not in seen]
+    assert len(ran) == 1, ran
+    assert probe.collect()

@@ -1103,8 +1103,11 @@ def test_prf_expand_materializes_locally(spark):
     out = RET.bm25_prf_expand(corpus, qt, n_feedback=2, m_expand=2)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert (
-        "LogicalRDD" in plan or "LocalRelation" in plan
-    ) and "parquet" not in plan and "Join" not in plan, (
+        plan.startswith("LocalRelation")
+        and "LogicalRDD" not in plan
+        and "parquet" not in plan
+        and "Join" not in plan
+    ), (
         f"expected a driver-materialized relation, got:\n{plan}"
     )
     assert out.columns == ["query_id", "term"]

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.session import local_relation
 from workhop2_etl_spark.sources import fs
 
 #: rollup grain: (day, event_type) with combinable measures
@@ -467,7 +468,7 @@ def _epochs_below(spark: SparkSession, d: str, below: int) -> list[str]:
 
 def _union_epochs(spark: SparkSession, dirs: list[str], like: DataFrame):
     if not dirs:
-        return spark.createDataFrame([], like.schema)
+        return local_relation(spark, [], like.schema)
     return spark.read.schema(like.schema).parquet(*dirs)
 
 
@@ -517,7 +518,7 @@ def read_join_view(spark: SparkSession, view_dir: str, like: DataFrame | None = 
     if not dirs:
         if like is None:
             raise ValueError(f"join view {view_dir} is empty")
-        return spark.createDataFrame([], like.schema)
+        return local_relation(spark, [], like.schema)
     return spark.read.parquet(*dirs)
 
 

@@ -60,6 +60,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from workhop2_etl_spark.operators.similarity import (
     _ivf_probe,
@@ -74,6 +75,7 @@ from workhop2_etl_spark.operators.similarity import (
     with_multitable_signatures,
     with_multitable_signatures_blas,
 )
+from workhop2_etl_spark.session import arrow_table, local_relation
 
 FORMAT_VERSION = 1
 
@@ -532,13 +534,8 @@ def _write_centroid_rows(
     # fast path); one Spark job less per save/restore/retrain. Types
     # are normalized to Python int/float first so the Arrow file holds
     # the exact doubles the Spark writer would have.
-    rows = [
-        {"centroid_id": int(cid), "centroid": [float(x) for x in vec]}
-        for cid, vec in centroids
-    ]
-    schema = spark.createDataFrame(
-        [], "centroid_id int, centroid array<double>"
-    ).schema
+    rows = [(int(cid), [float(x) for x in vec]) for cid, vec in centroids]
+    schema = StructType.fromDDL("centroid_id int, centroid array<double>")
     if _driver_write_tiny_parquet(spark, schema, rows, data_path, mode):
         return
     spark.createDataFrame(
@@ -796,11 +793,8 @@ def _write_codebook_rows(
     # encode time; persist exactly what encoded the postings.
     # r13: dimension-sized driver-local list — driver-side write, one
     # Spark job less per pq8 save/restore (see _write_centroid_rows)
-    rows = [
-        {"m": int(m), "j": int(j), "c": [float(x) for x in c]}
-        for m, j, c in codebooks
-    ]
-    schema = spark.createDataFrame([], "m int, j int, c array<double>").schema
+    rows = [(int(m), int(j), [float(x) for x in c]) for m, j, c in codebooks]
+    schema = StructType.fromDDL("m int, j int, c array<double>")
     if _driver_write_tiny_parquet(spark, schema, rows, data_path, mode):
         return
     spark.createDataFrame(
@@ -910,7 +904,7 @@ def _plan_is_empty_local(df: DataFrame) -> bool:
 
 
 def _driver_write_tiny_parquet(
-    spark: SparkSession, schema, rows: list[dict], target_dir: str, mode: str
+    spark: SparkSession, schema, rows: list[tuple], target_dir: str, mode: str
 ) -> bool:
     """Write a dimension-sized (usually empty) relation as ONE parquet
     part file driver-side — the write-side twin of
@@ -930,12 +924,9 @@ def _driver_write_tiny_parquet(
     if os.path.exists(local) and mode != "overwrite":
         return False
     try:
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
-        aschema = to_arrow_schema(schema)
-        table = pa.Table.from_pylist(rows, schema=aschema)
+        table = arrow_table(rows, schema)
     except Exception:  # noqa: BLE001 — unsupported type etc. → Spark path
         return False
     import shutil
@@ -1508,10 +1499,18 @@ def delete_from_index(
             fs.delete(staging_p, True)
         return "skipped"
 
-    if not isinstance(ids, DataFrame):
-        ids = spark.createDataFrame([(i,) for i in ids], ["id"])
     id_name = "doc_id" if meta["kind"] == _LEXICAL_KIND else "id"
-    ids = ids.toDF(id_name).distinct()
+
+    def id_relation(live: DataFrame) -> DataFrame:
+        if isinstance(ids, DataFrame):
+            return ids.toDF(id_name).distinct()
+        # a Python list becomes a local relation typed by the indexed
+        # id column, deduplicated on the driver
+        return local_relation(
+            spark,
+            [(i,) for i in dict.fromkeys(ids)],
+            StructType([StructField(id_name, live.schema[id_name].dataType)]),
+        )
 
     # replay cleanup FIRST: the staging below derives from LIVE state
     # (victims = live ∩ ids), so any files a crashed attempt of THIS
@@ -1544,7 +1543,9 @@ def delete_from_index(
         # small fraction of the corpus by the same contract that lets
         # tombstones broadcast; MEMORY_AND_DISK spills, never
         # recomputes.
-        victims = live.join(F.broadcast(ids), id_name, "left_semi").persist(
+        victims = live.join(
+            F.broadcast(id_relation(tf)), id_name, "left_semi"
+        ).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
@@ -1596,7 +1597,7 @@ def delete_from_index(
         postings = _gated_or_raise(spark, path, "index")
         live = postings.join(F.broadcast(tomb), id_name, "left_anti") if tomb is not None else postings
         present = (
-            live.join(F.broadcast(ids), id_name, "left_semi")
+            live.join(F.broadcast(id_relation(postings)), id_name, "left_semi")
             .select(id_name)
             .distinct()
         )
@@ -2254,7 +2255,8 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
         not problems,
         "; ".join(problems),
     )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [row],
         "kind string, epoch long, n_live long, n_tombstones long,"
         " n_uncommitted_batches long, n_orphan_staging long,"

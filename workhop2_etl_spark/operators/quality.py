@@ -20,6 +20,8 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.session import local_relation
+
 
 def not_null(col: str) -> Column:
     """Rule: column must not be NULL."""
@@ -49,8 +51,10 @@ def check_constraints(df: DataFrame, rules: Mapping[str, Column]) -> DataFrame:
     aggregate (NULL rule results count as violations).
     """
     if not rules:
-        return df.sparkSession.createDataFrame(
-            [], "rule string, n_rows bigint, n_violations bigint, pass boolean"
+        return local_relation(
+            df.sparkSession,
+            [],
+            "rule string, n_rows bigint, n_violations bigint, pass boolean",
         )
     # rule names appear ONLY as literal values (never spliced into
     # SQL text or column identifiers), so any string — spaces,

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.session import local_relation
+
 BM25_K1 = 1.2
 BM25_B = 0.75
 RRF_K = 60
@@ -171,6 +173,7 @@ def _bm25_rank(
     round_digits: int,
     exclude_self: bool,
     agg_shape: str = "window",
+    query_rows: list | None = None,
 ) -> DataFrame:
     """The BM25 scoring + ranking core over prepared relations —
     shared verbatim by ``bm25_topk`` (in-session) and
@@ -181,7 +184,7 @@ def _bm25_rank(
     agg = _bm25_score(
         tf, df_all, stats, query_terms,
         k1=k1, b=b, round_digits=round_digits, exclude_self=exclude_self,
-        agg_shape=agg_shape,
+        agg_shape=agg_shape, query_rows=query_rows,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -202,6 +205,7 @@ def _bm25_score(
     exclude_self: bool,
     candidates: DataFrame | None = None,
     agg_shape: str = "window",
+    query_rows: list | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, n_hit) — the un-ranked scoring half
     of ``_bm25_rank``, split out (r11) so the ``max_df``-pruned path
@@ -230,29 +234,35 @@ def _bm25_score(
       contribution relation comes off a few scan partitions and is
       vocab-bounded; there the global term-string sort the window
       needs measured SLOWER (2.5s → 3.9s, same interleaved protocol),
-      so the probe paths keep the fold deliberately."""
+      so the probe paths keep the fold deliberately.
+
+    ``query_rows``: the distinct (query_id, term) rows of
+    ``query_terms``, when the caller has already collected them (the
+    artifact probe has, for its vocabulary IN-list) — the relation is
+    then built from them instead of being collected a second time."""
     # defensive distinct: a duplicate (query_id, term) input row would
     # double-count that term's contribution — the query relation is
     # tiny by contract, so the dedup is free
     qt = query_terms.select("query_id", "term").distinct()
-    # r12 optimization: materialize the query relation at the driver.
-    # Left lazy, the caller's query-side lineage (typically a corpus
-    # scan + tokenize + explode + distinct) executes once per
-    # broadcast build — query_terms and qvocab are SEPARATE broadcast
-    # exchanges, so the same scan ran 2-4 times per action (t11's
-    # plan held 10 parquet scans of one table). The relation is
+    # materialize the query relation at the driver. Left lazy, the
+    # caller's query-side lineage (typically a corpus scan + tokenize
+    # + explode + distinct) executes once per broadcast build —
+    # query_terms and qvocab are SEPARATE broadcast exchanges, so the
+    # same scan ran 2-4 times per action. The relation is
     # query-bounded by contract; if it exceeds the 2^20-row ceiling,
     # fall back to the lazy form unchanged.
-    cap = 1 << 20
-    rows = qt.limit(cap + 1).collect()
-    if len(rows) <= cap:
+    if query_rows is None:
+        cap = 1 << 20
+        query_rows = qt.limit(cap + 1).collect()
+        if len(query_rows) > cap:
+            query_rows = None
+    if query_rows is not None:
         spark = tf.sparkSession
-        query_terms = spark.createDataFrame(rows, schema=qt.schema)
-        # None-filter (r12 advice fix): a NULL term never joins, and
-        # sorted() raises on None-vs-str — same semantics, no crash
-        vocab = sorted({r.term for r in rows if r.term is not None})
-        qvocab = spark.createDataFrame(
-            [(t,) for t in vocab], schema=qt.select("term").schema
+        query_terms = local_relation(spark, query_rows, qt.schema)
+        # a NULL term never joins, and sorted() raises on None-vs-str
+        vocab = sorted({r.term for r in query_rows if r.term is not None})
+        qvocab = local_relation(
+            spark, [(t,) for t in vocab], qt.select("term").schema
         )
     else:
         query_terms = qt
@@ -465,7 +475,7 @@ def _write_lexical_epoch(
             and _driver_write_tiny_parquet(
                 spark,
                 stats_schema,
-                [{"n_docs": 0, "sum_dl": 0}],
+                [(0, 0)],
                 f"{path}/stats",
                 mode,
             )
@@ -746,17 +756,16 @@ def probe_lexical_index(
     term is head-frequency has no candidates and returns no rows
     (the same contract as a query matching nothing); raise max_df
     for such stopword-only probes."""
-    # r12 optimization: materialize the whole (query_id, term)
-    # relation at the driver in ONE action. The lazy form executed
-    # the caller's query-side plan three times — once for this vocab
-    # collect and once per broadcast build inside the scoring core
-    # (query_terms and qvocab are separate broadcast exchanges) — and
-    # each execution re-ran the caller's corpus-scan/tokenize/explode
-    # lineage. The pair relation is the same bounded class as the
-    # vocabulary itself (|Q|·terms); if it somehow exceeds the
-    # generous 64·max_terms ceiling, fall back to the previous
-    # vocab-only collect instead of failing — behavior for
-    # pathological inputs is unchanged, only the fast path is new.
+    # Materialize the whole (query_id, term) relation at the driver
+    # in ONE action, and hand the rows to the scoring core, which
+    # builds its query relation and vocabulary from them without
+    # collecting again. The lazy form executed the caller's
+    # query-side plan once for this vocab collect and once per
+    # broadcast build inside the scoring core, each time re-running
+    # the caller's corpus-scan/tokenize/explode lineage. The pair
+    # relation is the same bounded class as the vocabulary itself
+    # (|Q|·terms); if it somehow exceeds the generous 64·max_terms
+    # ceiling, fall back to a vocab-only collect instead of failing.
     pair_cap = max_terms * 64
     pair_rows = (
         query_terms.select("query_id", "term")
@@ -776,10 +785,13 @@ def probe_lexical_index(
                 "be the bounded relation — raise max_terms explicitly "
                 "if this is intentional"
             )
-        query_terms = tf.sparkSession.createDataFrame(
-            pair_rows, schema=query_terms.select("query_id", "term").schema
+        query_terms = local_relation(
+            tf.sparkSession,
+            pair_rows,
+            query_terms.select("query_id", "term").schema,
         )
     else:
+        pair_rows = None
         vocab_rows = (
             query_terms.select("term").distinct().limit(max_terms + 1).collect()
         )
@@ -807,6 +819,7 @@ def probe_lexical_index(
             tf_v, df_v, stats, query_terms,
             k=k, k1=k1, b=b, round_digits=round_digits,
             exclude_self=exclude_self, agg_shape="fold",
+            query_rows=pair_rows,
         )
     # r13 optimization (max_df-PRUNED path only): materialize the
     # vocabulary-sized df slice and the one-row stats at the driver.
@@ -819,18 +832,15 @@ def probe_lexical_index(
     # just enforced and stats is ONE row: the same bounded-collect
     # class as the vocabulary IN-list itself, at any corpus size.
     spark = tf.sparkSession
-    df_v = spark.createDataFrame(
-        df_v.select("term", "df").collect(),
-        schema=df_v.select("term", "df").schema,
-    )
-    stats = spark.createDataFrame(
-        stats.select("n_docs", "avgdl").collect(),
-        schema=stats.select("n_docs", "avgdl").schema,
-    )
+    df_v = df_v.select("term", "df")
+    df_v = local_relation(spark, df_v.collect(), df_v.schema)
+    stats = stats.select("n_docs", "avgdl")
+    stats = local_relation(spark, stats.collect(), stats.schema)
     return _bm25_rank_pruned(
         tf_v, df_v, stats, query_terms,
         k=k, k1=k1, b=b, round_digits=round_digits,
         exclude_self=exclude_self, max_df=int(max_df),
+        query_rows=pair_rows,
     )
 
 
@@ -845,6 +855,7 @@ def _bm25_rank_pruned(
     round_digits: int,
     exclude_self: bool,
     max_df: int,
+    query_rows: list | None = None,
 ) -> DataFrame:
     """The ``max_df`` candidate-pruned ranking (see
     ``probe_lexical_index``). Deterministic semantics, independent of
@@ -891,6 +902,7 @@ def _bm25_rank_pruned(
         candidates=cand,
         # probe-slice input: the fold shape wins here (see _bm25_score)
         agg_shape="fold",
+        query_rows=query_rows,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = (
@@ -949,10 +961,7 @@ def _bm25_rank_pruned(
         * F.abs(F.col("__hb"))
         * F.lit(2.0 ** -50)
     )
-    # explicit broadcast: hb derives from the driver-materialized
-    # query relation (LogicalRDD — no size stats), so the planner
-    # can't prove it small; it is |Q| rows by construction (r12)
-    flags = per_q.join(F.broadcast(hb), "query_id", "left").select(
+    flags = per_q.join(hb, "query_id", "left").select(
         "query_id",
         (
             F.col("__hb").isNull()  # no head terms → candidates cover all
@@ -1052,8 +1061,8 @@ def bm25_prf_expand(
             # unpersist in the finally below still runs; the lazy plan
             # recomputes tf, which is exactly the old cost model.
             return expanded
-        return corpus_tokens.sparkSession.createDataFrame(
-            rows, schema=expanded.schema
+        return local_relation(
+            corpus_tokens.sparkSession, rows, expanded.schema
         )
     finally:
         tf.unpersist()
@@ -1072,9 +1081,7 @@ def _prf_harvest(
         tf.join(F.broadcast(fb), "doc_id")
         .groupBy("query_id", "term")
         .agg(F.sum("tf").alias("__w"))
-        # broadcast hint: query_terms may be driver-materialized
-        # (LogicalRDD, no size stats) and is query-bounded (r12)
-        .join(F.broadcast(query_terms), ["query_id", "term"], "left_anti")
+        .join(query_terms, ["query_id", "term"], "left_anti")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("__w"), F.asc("term"))
     return (
@@ -1142,9 +1149,7 @@ def probe_lexical_index_prf(
             "query side must be the bounded relation — raise max_terms "
             "if intentional"
         )
-    expanded = tf.sparkSession.createDataFrame(
-        exp_rows, schema=query_terms.schema
-    )
+    expanded = local_relation(tf.sparkSession, exp_rows, query_terms.schema)
     return probe_lexical_index(
         tf, df, stats, meta, expanded, k=k,
         k1=k1, b=b, round_digits=round_digits, exclude_self=exclude_self,

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from workhop2_etl_spark.session import local_relation
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ with each element widened to double *before* multiply
@@ -179,7 +181,7 @@ def with_hyperplane_signature(
         (p, 1 << p, [_plane_weight(p, d) for d in range(dim)])
         for p in range(num_planes)
     ]
-    planes = spark.createDataFrame(rows, "p int, bit long, w array<double>")
+    planes = local_relation(spark, rows, "p int, bit long, w array<double>")
     one = planes.agg(
         F.sort_array(F.collect_list(F.struct("p", "bit", "w"))).alias("__planes")
     )
@@ -206,7 +208,7 @@ def _ivf_cents_relation(spark: SparkSession, centroids):
     INSIDE the relation (not driver-side Python) so they are the
     exact doubles the inline fold produced."""
     rows = [(int(cid), [float(x) for x in vec]) for cid, vec in centroids]
-    cdf = spark.createDataFrame(rows, "cid int, cv array<double>").withColumn(
+    cdf = local_relation(spark, rows, "cid int, cv array<double>").withColumn(
         "cn", l2_norm(F.col("cv"))
     )
     return cdf.agg(
@@ -597,7 +599,7 @@ def topk_cosine_bruteforce_blas(
             "explicitly if this is intentional"
         )
     if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema + ", rank int")
+        return local_relation(corpus.sparkSession, [], out_schema + ", rank int")
     import numpy as np
 
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
@@ -682,7 +684,9 @@ def with_multitable_signatures(
         for t in range(num_tables)
         for p in range(num_planes)
     ]
-    planes = spark.createDataFrame(rows, "t int, p int, bit long, w array<double>")
+    planes = local_relation(
+        spark, rows, "t int, p int, bit long, w array<double>"
+    )
     one = planes.agg(
         F.sort_array(F.collect_list(F.struct("t", "p", "bit", "w"))).alias("__planes")
     )
@@ -1075,7 +1079,8 @@ def _pq_codebook_relation(spark: SparkSession, codebooks, dim: int):
     bad = [(m, j) for m, j, c in codebooks if len(c) != dsub]
     if bad:
         raise ValueError(f"codewords {bad} are not dim/m = {dsub} long")
-    cb = spark.createDataFrame(
+    cb = local_relation(
+        spark,
         [(int(m), int(j), [float(x) for x in c]) for m, j, c in codebooks],
         "m int, j int, c array<double>",
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 #: Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -102,6 +103,57 @@ def get_spark(app_name: str = "workhop2_etl_spark", shuffle_partitions: int | No
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def arrow_table(rows, schema: StructType | str):
+    """``rows`` (positional tuples or ``Row``s) as a pyarrow Table
+    typed by ``to_arrow_schema(schema)`` — the one row-to-Arrow
+    conversion shared by ``local_relation`` and the driver-side
+    parquet writer. Columns convert straight from Python values, not
+    through pandas, so a nullable int column stays an int column and
+    every double keeps its exact bits. Naive datetimes in TIMESTAMP
+    columns are read as local time, as ``createDataFrame(list)``
+    reads them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    aschema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for i, (col, field) in enumerate(zip(cols, schema.fields)):
+        if isinstance(field.dataType, TimestampType):
+            col = [v.astimezone() if v is not None else None for v in col]
+        arrays.append(pa.array(list(col), type=aschema.field(i).type))
+    return pa.Table.from_arrays(arrays, schema=aschema)
+
+
+def local_relation(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """A driver-side list of rows as a DataFrame whose plan is a
+    ``LocalRelation`` — the one way to build a tiny driver-side
+    relation in this engine.
+
+    ``spark.createDataFrame(list)`` plans as a ``LogicalRDD``: every
+    use of it runs ``defaultParallelism`` Python-worker tasks that do
+    almost no work, and the planner has no size statistics for it,
+    so it never auto-broadcasts and an empty one never folds away.
+    An Arrow-built frame is a ``LocalRelation``: its rows travel
+    inside the plan (no Python workers), it carries its exact size,
+    and Catalyst prunes it when it is empty. Schema (DDL string or
+    ``StructType``, nullability included) and rows equal the
+    list-built frame's.
+
+    The rows live on the driver, so every caller bounds them first:
+    query-side relations by the probe's ``max_terms`` contract (or a
+    2^20-row guard), index geometry (planes, centroids, codebooks) by
+    its parameters, delete ids by the caller's list, and report rows
+    at one per rule or index."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

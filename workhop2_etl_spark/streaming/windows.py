@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.session import local_relation
+
 #: Late-data tolerance for all watermarked aggregations.
 DEFAULT_WATERMARK = "30 minutes"
 
@@ -512,12 +514,12 @@ def stream_join_view_to_parquet(
     from workhop2_etl_spark.sources import fs
 
     schema = spark.read.parquet(fact_path).schema
-    empty_fact = spark.createDataFrame([], schema)
+    empty_fact = local_relation(spark, [], schema)
     if not fs.exists(spark, fs.join(b_dir, "epoch=0")):
         apply_join_delta(
             spark, a_dir, b_dir, view_dir, empty_fact, dim, on, epoch_id=0
         )
-    empty_dim = spark.createDataFrame([], dim.schema)
+    empty_dim = local_relation(spark, [], dim.schema)
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
