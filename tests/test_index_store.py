@@ -7,6 +7,7 @@ posture is build-once, probe-many across sessions (r08 verdict ask
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -1117,54 +1118,118 @@ def test_compact_refuses_uncommitted_stream_epoch_files(spark):
     assert sorted(map(tuple, tf1.collect())) == before
 
 
-def test_empty_seed_save_driver_layout_matches_spark_writer(spark, monkeypatch):
-    """r13 optimization: a provably-empty seed save (the streaming
-    lifecycles' ``save_lexical_index(corpus.limit(0), ...)``) writes
-    its three artifact files DRIVER-SIDE — zero Spark jobs for zero
-    rows. The layout must be indistinguishable from the Spark
-    writer's: one part file per dir, identical read-back schemas,
-    and the one (0, 0) stats partial a global aggregate over empty
-    input produces — so loaders, stream ingests, and compaction see
-    the exact artifact they always did."""
-    from workhop2_etl_spark.operators import index_store as IDXS
+def _data_parts(path):
+    return [
+        f for f in os.listdir(path)
+        if not f.startswith((".", "_"))
+    ]
+
+
+def _spark_schema(spark, path):
+    return [
+        (f.name, f.dataType) for f in spark.read.parquet(path).schema.fields
+    ]
+
+
+def test_empty_seed_save_driver_layout_matches_spark_writer(spark):
+    """A provably-empty seed save (``save_*(corpus.limit(0), ...)``,
+    the streaming lifecycles' starting state) writes its files
+    driver-side. For every artifact kind and storage tier the layout
+    must be the Spark writer's: one part file per data dir, and the
+    read-back schema of a non-empty save with the same parameters
+    (which Spark writes). The lexical seed also holds the one (0, 0)
+    stats partial a global aggregate over empty input produces, and
+    serves a stream epoch like any artifact."""
     from workhop2_etl_spark.operators import retrieval as RET
 
     corpus = _lex_corpus(spark, n=150)
-    fast = _tmp("lex_seed_fast")
-    RET.save_lexical_index(corpus.limit(0), fast, mode="overwrite",
+    seed, full = _tmp("lex_seed_driver"), _tmp("lex_seed_spark")
+    RET.save_lexical_index(corpus.limit(0), seed, mode="overwrite",
                            num_partitions=2)
-    # force the Spark writer for the reference layout
-    monkeypatch.setattr(IDXS, "_driver_write_tiny_parquet",
-                        lambda *a, **k: False)
-    slow = _tmp("lex_seed_spark")
-    RET.save_lexical_index(corpus.limit(0), slow, mode="overwrite",
-                           num_partitions=2)
-    monkeypatch.undo()
-
+    RET.save_lexical_index(corpus, full, mode="overwrite", num_partitions=2)
     for sub in ("tf", "df", "stats"):
-        parts_fast = [
-            f for f in os.listdir(f"{fast}/{sub}")
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-        assert len(parts_fast) == 1, (sub, parts_fast)
-        got = spark.read.parquet(f"{fast}/{sub}")
-        want = spark.read.parquet(f"{slow}/{sub}")
-        assert [(f.name, f.dataType) for f in got.schema.fields] == [
-            (f.name, f.dataType) for f in want.schema.fields
-        ], sub
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
+        assert len(_data_parts(f"{seed}/{sub}")) == 1, sub
+        assert _spark_schema(spark, f"{seed}/{sub}") == _spark_schema(
+            spark, f"{full}/{sub}"
         ), sub
-    # the fast-path artifact loads and serves a stream epoch exactly
-    # like the Spark-written one
+    assert [tuple(r) for r in spark.read.parquet(f"{seed}/stats").collect()] == [
+        (0, 0)
+    ]
+
+    emb = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 120)
+    for dtype in ("float64", "int8"):
+        seed, full = _tmp(f"lsh_seed_{dtype}"), _tmp(f"lsh_full_{dtype}")
+        for src, path in ((emb.limit(0), seed), (emb, full)):
+            IDX.save_lsh_index(src, path, dim=DIM, num_planes=4, num_tables=2,
+                               store_dtype=dtype, mode="overwrite")
+        assert len(_data_parts(f"{seed}/index")) == 1, dtype
+        assert _spark_schema(spark, f"{seed}/index") == _spark_schema(
+            spark, f"{full}/index"
+        ), dtype
+
+    cents = SIM.fit_centroids(emb, n_centroids=4, seed=7, max_iter=5)
+    cbs = SIM.sample_pq_codebooks(emb, dim=DIM)
+    for dtype in ("float64", "int8", "pq8"):
+        seed, full = _tmp(f"ivf_seed_{dtype}"), _tmp(f"ivf_full_{dtype}")
+        for src, path in ((emb.limit(0), seed), (emb, full)):
+            IDX.save_ivf_index(src, path, cents, dim=DIM, store_dtype=dtype,
+                               codebooks=cbs if dtype == "pq8" else None,
+                               mode="overwrite")
+        assert len(_data_parts(f"{seed}/index")) == 1, dtype
+        assert _spark_schema(spark, f"{seed}/index") == _spark_schema(
+            spark, f"{full}/index"
+        ), dtype
+        assert spark.read.parquet(f"{seed}/index").count() == 0
+
+    # an empty append takes the same driver-side path in append mode
+    # (one more part file per dir), and the seeded artifact then loads
+    # and serves a stream epoch
     from workhop2_etl_spark.streaming import index_stream as IS
 
-    assert IS.ingest_epoch(spark, corpus, 0, fast, vec_col="toks") == "committed"
-    tf, df, stats, meta = RET.load_lexical_index(spark, fast)
+    seed = _tmp("lex_seed_driver")
+    RET.append_lexical_index(corpus.limit(0), seed)
+    for sub in ("tf", "df", "stats"):
+        assert len(_data_parts(f"{seed}/{sub}")) == 2, sub
+    assert IS.ingest_epoch(spark, corpus, 0, seed, vec_col="toks") == "committed"
+    tf, df, stats, meta = RET.load_lexical_index(spark, seed)
     assert stats.collect()[0].n_docs == corpus.filter(
         F.size("toks") > 0
     ).count()
-    assert meta["epoch"] == 1
+    assert meta["epoch"] == 2
+
+
+@pytest.mark.parametrize("mode", ["ignore", "append"])
+def test_rejected_save_mode_leaves_no_files(spark, mode):
+    """Save verbs accept 'overwrite' and 'error'/'errorifexists' only,
+    and check the mode before their first write: a rejected mode on a
+    fresh path raises and leaves nothing behind (not a half artifact
+    without its metadata record)."""
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    emb = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 60)
+    cents = [(i, [float(i)] * DIM) for i in range(3)]
+    src = _tmp(f"mode_src_{mode}")
+    IDX.save_ivf_index(emb, src, cents, dim=DIM, mode="overwrite")
+    saves = {
+        "save_centroids": lambda p: IDX.save_centroids(
+            spark, cents, p, dim=DIM, mode=mode),
+        "save_lsh_index": lambda p: IDX.save_lsh_index(
+            emb, p, dim=DIM, num_planes=4, num_tables=2, mode=mode),
+        "save_ivf_index": lambda p: IDX.save_ivf_index(
+            emb, p, cents, dim=DIM, mode=mode),
+        "save_lexical_index": lambda p: RET.save_lexical_index(
+            _lex_corpus(spark, n=50), p, mode=mode),
+        "restore_index": lambda p: IDX.restore_index(
+            spark, src, p, mode=mode),
+        "retrain_ivf_index": lambda p: IDX.retrain_ivf_index(
+            spark, src, p, max_iter=2, mode=mode),
+    }
+    for name, save in saves.items():
+        path = _tmp(f"mode_{mode}_{name}")
+        shutil.rmtree(path, ignore_errors=True)
+        with pytest.raises(ValueError, match="mode"):
+            save(path)
+        assert not os.path.exists(path), (name, os.listdir(path))
 
 
 def test_overwrite_save_clears_stale_lifecycle_state(spark):

@@ -817,14 +817,6 @@ def test_classifier_query_plans(spark):
 # driver-side relations through session.local_relation.
 LIST_FRAME_ALLOWLIST = {
     ("session.py", "local_relation"): "the helper itself (Arrow table in)",
-    ("operators/index_store.py", "_write_centroid_rows"): (
-        "Spark-writer fallback for paths the driver cannot write "
-        "directly (remote filesystems); the local path writes with pyarrow"
-    ),
-    ("operators/index_store.py", "_write_codebook_rows"): (
-        "Spark-writer fallback for paths the driver cannot write "
-        "directly (remote filesystems); the local path writes with pyarrow"
-    ),
 }
 
 
@@ -853,15 +845,23 @@ def test_driver_list_frames_go_through_local_relation():
     assert found == set(LIST_FRAME_ALLOWLIST), found ^ set(LIST_FRAME_ALLOWLIST)
 
 
-def _sql_executions(spark) -> dict:
-    """{execution id: physical plan description} of every SQL
-    execution the status store holds (it is kept with the UI off)."""
+def _sql_executions(spark, seen=None) -> dict:
+    """{execution id: physical plan description} of the SQL executions
+    the status store holds (it is kept with the UI off), leaving out
+    the ids in ``seen``; ``seen=None`` maps every id to None. A
+    description is fetched only when returned: each is a py4j response
+    above 8 KB, which stalls ~44 ms, and the store keeps up to 1,000
+    executions."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     it = spark._jsparkSession.sharedState().statusStore().executionsList().iterator()
     out = {}
     while it.hasNext():
         e = it.next()
-        out[int(e.executionId())] = str(e.physicalPlanDescription())
+        i = int(e.executionId())
+        if seen is None:
+            out[i] = None
+        elif i not in seen:
+            out[i] = str(e.physicalPlanDescription())
     return out
 
 
@@ -876,7 +876,7 @@ def _assert_no_logical_rdd(spark, name, call):
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         assert "LogicalRDD" not in plan, f"{name}:\n{plan}"
         out.collect()
-    ran = {i: d for i, d in _sql_executions(spark).items() if i not in seen}
+    ran = _sql_executions(spark, seen)
     assert ran or not hasattr(out, "_jdf"), f"{name} executed nothing"
     for i, desc in ran.items():
         assert "ExistingRDD" not in desc, f"{name} (execution {i}):\n{desc}"

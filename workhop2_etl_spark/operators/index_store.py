@@ -7,9 +7,11 @@ session, as the in-session operators do, repays that cost on every
 run; the production posture (FAISS on disk, Lucene HNSW segments) is
 an on-disk artifact that any later session loads and probes. This
 module gives both index families that lifecycle on any
-Hadoop-compatible filesystem, via plain Spark parquet/JSON I/O — no
-driver-side file APIs, so the same code addresses local disk, HDFS,
-or object stores:
+Hadoop-compatible filesystem: row data goes through Spark's parquet
+I/O, and the dimension-sized files (metadata, centroids, codebooks,
+empty seeds) through the Hadoop FileSystem streams on the driver
+(sources/fs.py), so the same code addresses local disk, HDFS, or
+object stores:
 
 * ``save_lsh_index`` / ``append_lsh_index`` / ``load_lsh_index`` /
   ``probe_lsh_index`` — the multi-table hyperplane signature index
@@ -58,6 +60,7 @@ after the public FAISS index_factory / write_index lifecycle.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -76,6 +79,14 @@ from workhop2_etl_spark.operators.similarity import (
     with_multitable_signatures_blas,
 )
 from workhop2_etl_spark.session import arrow_table, local_relation
+from workhop2_etl_spark.sources.fs import (
+    data_files,
+    fs_and_path,
+    read_bytes,
+    read_parquet,
+    write_bytes,
+    write_parquet,
+)
 
 FORMAT_VERSION = 1
 
@@ -91,93 +102,63 @@ _META_SCHEMA = (
 )
 
 
-def _write_meta(spark: SparkSession, path: str, meta: dict, mode: str) -> None:
-    """Persist the one-record metadata JSON DRIVER-SIDE through the
-    Hadoop FileSystem API (the same surface the ledger markers use, so
-    local disk / HDFS / object stores all work). Metadata is a single
-    record by contract; the previous Spark-job write (createDataFrame
-    → repartition(1) → .write.json) paid a full job submission + task
-    + commit protocol (~0.5s measured locally) per call for one row —
-    pure scheduling overhead at ANY scale (r12 optimization round).
-    Layout is unchanged (``<path>/meta/part-00000.json``, one JSON
-    line, null fields omitted) and stays readable by spark.read.json."""
-    import json
-
-    # metadata is exactly-one-record by contract: only 'overwrite' and
-    # 'error'/'errorifexists' are meaningful. 'append' used to fall
-    # through and silently CLOBBER part-00000.json (where the old
-    # Spark writer appended a second file that _read_meta rejected
-    # loudly) — reject out-of-contract modes instead (r12 advice fix)
+def _check_save_mode(mode: str) -> None:
+    """A save writes a whole artifact, so ``mode`` is ``'overwrite'``
+    or ``'error'``/``'errorifexists'``. Every save verb checks it
+    before its first write, so a rejected mode leaves nothing behind."""
     if mode not in ("overwrite", "error", "errorifexists"):
         raise ValueError(
-            f"index metadata write mode must be 'overwrite' or "
-            f"'error'/'errorifexists' (one record by contract), got "
-            f"{mode!r}"
+            f"index save mode must be 'overwrite' or 'error'/'errorifexists', "
+            f"got {mode!r}"
         )
+
+
+def _write_meta(spark: SparkSession, path: str, meta: dict, mode: str) -> None:
+    """Persist the one metadata record as ``<path>/meta/part-00000.json``
+    (one JSON line, null fields omitted — the layout
+    ``spark.read.json`` reads) through the driver-side byte path of
+    sources/fs.py. ``'overwrite'`` replaces the record; any other mode
+    raises if it exists."""
+    import json
+
     fields = [f.split()[0] for f in _META_SCHEMA.split(",")]
     # only schema fields persist — load-time conveniences like the
     # in-memory ``_codebooks`` must never leak into the JSON record;
     # nulls are omitted, matching the Spark JSON writer's default
     row = {k: meta[k] for k in fields if meta.get(k) is not None}
-    fs, d = _hadoop_fs(spark, f"{path}/meta")
+    fs, d = fs_and_path(spark, f"{path}/meta")
     if fs.exists(d):
-        if mode == "overwrite":
-            fs.delete(d, True)
-        else:
+        if mode != "overwrite":
             raise ValueError(
                 f"index metadata already exists at {path}/meta "
                 f"(write mode {mode!r})"
             )
-    fs.mkdirs(d)
-    _, part = _hadoop_fs(spark, f"{path}/meta/part-00000.json")
-    out = fs.create(part, True)
-    try:
-        out.write(bytearray((json.dumps(row) + "\n").encode("utf-8")))
-    finally:
-        out.close()
+        fs.delete(d, True)
+    write_bytes(
+        spark, f"{path}/meta/part-00000.json",
+        (json.dumps(row) + "\n").encode("utf-8"),
+    )
 
 
 def _read_meta(spark: SparkSession, path: str, expect_kind: str) -> dict:
-    """Read the metadata record DRIVER-SIDE (see ``_write_meta`` —
-    one record, so a Spark read job is overhead; ~0.3s saved per
-    call). Reads every non-hidden ``*.json`` file under ``meta/`` so
-    artifacts written by the previous Spark JSON writer (or by an
-    external producer) stay loadable."""
+    """The metadata record, read driver-side from every non-hidden
+    ``*.json`` file under ``<path>/meta`` (so a record written by
+    Spark's JSON writer or an external producer loads too)."""
     import json
 
     fields = [f.split()[0] for f in _META_SCHEMA.split(",")]
     try:
-        fs, d = _hadoop_fs(spark, f"{path}/meta")
-        if not fs.exists(d):
-            raise ValueError("metadata directory does not exist")
-        records = []
-        jvm = spark._jvm
-        for st in sorted(
-            fs.listStatus(d), key=lambda s: s.getPath().getName()
-        ):
-            name = st.getPath().getName()
-            if not st.isFile() or name.startswith((".", "_")):
-                continue
-            if not name.endswith(".json"):
-                continue
-            stream = fs.open(st.getPath())
-            try:
-                buf = jvm.java.io.ByteArrayOutputStream()
-                jvm.org.apache.hadoop.io.IOUtils.copyBytes(
-                    stream, buf, 65536, False
-                )
-                text = bytes(buf.toByteArray()).decode("utf-8")
-            finally:
-                stream.close()
-            for line in text.splitlines():
-                if line.strip():
-                    records.append(json.loads(line))
-    except ValueError as ex:
-        raise ValueError(
-            f"no readable index metadata at {path}/meta: {ex}"
-        ) from ex
-    except Exception as ex:  # noqa: BLE001 — name the artifact in the error
+        records = [
+            json.loads(line)
+            for f in data_files(spark, f"{path}/meta")
+            if f.endswith(".json")
+            for line in read_bytes(spark, f).decode("utf-8").splitlines()
+            if line.strip()
+        ]
+    except (Py4JJavaError, ValueError) as ex:  # JVM I/O, decode, JSON
         raise ValueError(f"no readable index metadata at {path}/meta: {ex}") from ex
+    if not records:
+        raise ValueError(f"no readable index metadata at {path}/meta")
     if len(records) != 1:
         raise ValueError(
             f"index metadata at {path}/meta must be exactly one record, "
@@ -231,7 +212,7 @@ def _reset_lifecycle_state(spark: SparkSession, path: str, mode: str) -> None:
     if mode != "overwrite":
         return
     for sub in ("ledger", "tombstones"):
-        fs, d = _hadoop_fs(spark, f"{path}/{sub}")
+        fs, d = fs_and_path(spark, f"{path}/{sub}")
         if fs.exists(d):
             fs.delete(d, True)
 
@@ -265,9 +246,12 @@ def save_lsh_index(
     defaults to the BLAS matmul build (the at-scale path; PERF.md r08
     sigbuild table — 13× the expression fold at 400k vectors).
 
-    Returns the metadata dict it wrote. ``mode`` follows Spark write
-    semantics ('error' | 'overwrite').
+    Returns the metadata dict it wrote. ``mode`` is ``'overwrite'``
+    (replace any artifact at ``path``) or ``'error'``/``'errorifexists'``
+    (raise if one exists); any other mode raises before anything is
+    written.
     """
+    _check_save_mode(mode)
     _reset_lifecycle_state(corpus.sparkSession, path, mode)
     _write_signed(
         corpus, path, dim, num_planes, num_tables, id_col, vec_col,
@@ -336,14 +320,13 @@ def _write_signed(
     if store_dtype == "int8":
         signed = signed.drop("vec")
     target = data_dir or f"{path}/index"
-    # r13: seed saves (save_lsh_index(corpus.limit(0), ...) — the
-    # streaming lifecycles' starting state) previously launched a
-    # Spark write job for zero rows; when Catalyst proves the input
-    # statically empty, write the one empty part driver-side with the
-    # identical read-back schema (guide §1.2)
-    if _plan_is_empty_local(corpus) and _driver_write_tiny_parquet(
-        corpus.sparkSession, signed.schema, [], target, mode
-    ):
+    # a seed save (save_lsh_index(corpus.limit(0), ...), the streaming
+    # lifecycles' starting state) writes its one empty part file
+    # driver-side, with the read-back schema of the Spark writer's
+    if _plan_is_empty_local(corpus):
+        write_parquet(
+            corpus.sparkSession, arrow_table([], signed.schema), target, mode
+        )
         return
     keys = ["table_id", "sig"]
     reparted = (
@@ -487,9 +470,12 @@ def save_centroids(
     mode: str = "error",
 ) -> dict:
     """Persist a trained IVF coarse quantizer (k rows — dimension
-    table sized, one parquet file). ``seed`` records the training
-    seed so a probe pipeline pinned to a seed can refuse a quantizer
-    trained under another one."""
+    table sized, one parquet file written driver-side). ``seed``
+    records the training seed so a probe pipeline pinned to a seed can
+    refuse a quantizer trained under another one. ``mode`` is
+    ``'overwrite'`` or ``'error'``/``'errorifexists'``; any other mode
+    raises before anything is written."""
+    _check_save_mode(mode)
     _write_centroid_rows(spark, centroids, dim, f"{path}/index", mode)
     meta = {
         "kind": _IVF_KIND,
@@ -524,36 +510,27 @@ def _write_centroid_rows(
     data_path: str,
     mode: str,
 ) -> None:
+    """The quantizer as one parquet file, written driver-side
+    (``sources.fs.write_parquet``). Values are normalized to Python
+    int/float first, so the file holds the exact doubles given."""
     bad = [cid for cid, vec in centroids if len(vec) != dim]
     if bad:
         raise ValueError(
             f"centroids {bad} have vectors of the wrong length for dim={dim}"
         )
-    # r13: the quantizer is a dimension-sized DRIVER-LOCAL list — write
-    # it driver-side (the write twin of _read_centroid_rows' pyarrow
-    # fast path); one Spark job less per save/restore/retrain. Types
-    # are normalized to Python int/float first so the Arrow file holds
-    # the exact doubles the Spark writer would have.
     rows = [(int(cid), [float(x) for x in vec]) for cid, vec in centroids]
-    schema = StructType.fromDDL("centroid_id int, centroid array<double>")
-    if _driver_write_tiny_parquet(spark, schema, rows, data_path, mode):
-        return
-    spark.createDataFrame(
-        centroids, "centroid_id int, centroid array<double>"
-    ).repartition(1).write.mode(mode).parquet(data_path)
-    # repartition(1), NOT coalesce(1): a local-list DataFrame
-    # parallelizes into defaultParallelism pickled slices, and
-    # coalesce makes ONE task evaluate all of them serially through
-    # Python workers (~5s measured for this one-row write);
-    # repartition computes the slices in parallel first (~0.5s)
+    write_parquet(
+        spark,
+        arrow_table(rows, "centroid_id int, centroid array<double>"),
+        data_path,
+        mode,
+    )
 
 
 def _read_centroid_rows(
     spark: SparkSession, data_path: str, meta: dict
 ) -> list[tuple[int, list[float]]]:
-    rows = _driver_parquet_records(data_path, spark)  # r12: no job for a
-    if rows is None:  # driver-collected dimension-sized sidecar
-        rows = [r.asDict() for r in spark.read.parquet(data_path).collect()]
+    rows = read_parquet(spark, data_path).to_pylist()
     if len(rows) != meta["n_centroids"]:
         raise ValueError(
             f"centroid artifact at {data_path} has {len(rows)} rows, metadata "
@@ -631,7 +608,10 @@ def save_ivf_index(
     the oracle-reproducible expression twin. Recorded in metadata so
     appends default to the geometry the artifact was built with.
 
-    Returns the metadata dict it wrote."""
+    ``mode`` is ``'overwrite'`` or ``'error'``/``'errorifexists'``; any
+    other mode raises before anything is written. Returns the metadata
+    dict it wrote."""
+    _check_save_mode(mode)
     spark = corpus.sparkSession
     _reset_lifecycle_state(spark, path, mode)
     _write_ivf_postings(
@@ -762,14 +742,14 @@ def _write_ivf_postings(
     else:
         assigned = assigned.withColumn("norm", l2_norm(F.col("vec")))
     target = data_dir or f"{path}/index"
-    # r13: seed saves (save_ivf_index(corpus.limit(0), ...) — the
-    # streaming lifecycles' starting state) previously launched a
-    # Spark write job for zero rows; when Catalyst proves the input
-    # statically empty, write the one empty part driver-side with the
-    # identical read-back schema (guide §1.2)
-    if _plan_is_empty_local(corpus) and _driver_write_tiny_parquet(
-        corpus.sparkSession, assigned.schema, [], target, mode
-    ):
+    # a seed save (save_ivf_index(corpus.limit(0), ...), the streaming
+    # lifecycles' starting state) writes its one empty part file
+    # driver-side, with the read-back schema of the Spark writer's
+    if _plan_is_empty_local(corpus):
+        write_parquet(
+            corpus.sparkSession, arrow_table([], assigned.schema), target,
+            mode,
+        )
         return
     reparted = (
         assigned.repartition(num_partitions, "centroid_id") if num_partitions
@@ -789,102 +769,15 @@ def _write_codebook_rows(
     data_path: str,
     mode: str,
 ) -> None:
-    # grid validation happens in similarity._pq_codebook_relation at
-    # encode time; persist exactly what encoded the postings.
-    # r13: dimension-sized driver-local list — driver-side write, one
-    # Spark job less per pq8 save/restore (see _write_centroid_rows)
+    """The PQ codebooks as one parquet file, written driver-side like
+    the centroids. The grid is validated at encode time
+    (similarity._pq_codebook_relation); this persists exactly what
+    encoded the postings."""
     rows = [(int(m), int(j), [float(x) for x in c]) for m, j, c in codebooks]
-    schema = StructType.fromDDL("m int, j int, c array<double>")
-    if _driver_write_tiny_parquet(spark, schema, rows, data_path, mode):
-        return
-    spark.createDataFrame(
-        [(int(m), int(j), [float(x) for x in c]) for m, j, c in codebooks],
-        "m int, j int, c array<double>",
-    ).repartition(1).write.mode(mode).parquet(data_path)
-
-
-def _driver_parquet_records(
-    data_path: str, spark: SparkSession | None = None
-) -> list[dict] | None:
-    """Dimension-sized sidecar read (centroids / codebooks) as a
-    DRIVER-SIDE pyarrow scan when the path is a local directory —
-    these artifacts are collected to the driver regardless, so a
-    Spark job per read is a fixed ~0.2-0.3s of scheduling for a few
-    KB (r12 optimization; the streaming IVF ingest pays one such read
-    PER EPOCH). Returns None for remote schemes, missing pyarrow, or
-    unreadable files — callers then take the Spark read, which is
-    also the error-reporting path for genuinely corrupt artifacts.
-
-    Scheme-less paths resolve against Hadoop's ``fs.defaultFS``: on a
-    cluster whose default filesystem is HDFS, a bare path means HDFS,
-    and a coincidentally same-named LOCAL directory on the driver must
-    never be read in its place (r12 advice fix) — the fast path is
-    taken only when the default FS is the local one (or the caller
-    spelled an explicit ``file:`` scheme)."""
-    scheme, sep, rest = data_path.partition("://")
-    if sep:
-        if scheme != "file":
-            return None
-        data_path = rest if rest.startswith("/") else "/" + rest
-    elif data_path.startswith("file:"):
-        data_path = data_path[len("file:"):]
-    elif not _default_fs_is_local(spark):
-        return None
-    import os
-
-    if not os.path.isdir(data_path):
-        return None
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None
-    parts = sorted(
-        f for f in os.listdir(data_path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    write_parquet(
+        spark, arrow_table(rows, "m int, j int, c array<double>"), data_path,
+        mode,
     )
-    if not parts:
-        return None
-    try:
-        out: list[dict] = []
-        for f in parts:
-            out.extend(
-                pq.read_table(os.path.join(data_path, f)).to_pylist()
-            )
-        return out
-    except Exception:  # noqa: BLE001 — corrupt file: report via Spark path
-        return None
-
-
-def _default_fs_is_local(spark: SparkSession | None) -> bool:
-    """True when Hadoop's ``fs.defaultFS`` names the local filesystem
-    (the shipped local-mode default) — the gate for resolving
-    SCHEME-LESS paths driver-side. With no session to consult, be
-    conservative: scheme-less paths take the Spark read."""
-    if spark is None:
-        return False
-    try:
-        default_fs = (
-            spark.sparkContext._jsc.hadoopConfiguration().get(
-                "fs.defaultFS", "file:///"
-            )
-        )
-    except Exception:  # noqa: BLE001 — any doubt → the Spark path
-        return False
-    return str(default_fs).startswith("file:")
-
-
-def _driver_local_path(path: str, spark: SparkSession | None) -> str | None:
-    """OS path for ``path`` when it is driver-local (explicit
-    ``file:`` scheme, or scheme-less with a local default FS — the
-    same resolution rule as ``_driver_parquet_records``), else None."""
-    scheme, sep, rest = path.partition("://")
-    if sep:
-        if scheme != "file":
-            return None
-        return rest if rest.startswith("/") else "/" + rest
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    return path if _default_fs_is_local(spark) else None
 
 
 def _plan_is_empty_local(df: DataFrame) -> bool:
@@ -903,54 +796,10 @@ def _plan_is_empty_local(df: DataFrame) -> bool:
         return False
 
 
-def _driver_write_tiny_parquet(
-    spark: SparkSession, schema, rows: list[tuple], target_dir: str, mode: str
-) -> bool:
-    """Write a dimension-sized (usually empty) relation as ONE parquet
-    part file driver-side — the write-side twin of
-    ``_driver_parquet_records`` (guide §1.2: zero rows should never
-    launch a distributed job). Layout matches the Spark writer: one
-    ``part-00000-<uuid>-c000.snappy.parquet`` + ``_SUCCESS``; column
-    types/nullability come from the Spark schema via Arrow, so readers
-    infer the identical schema. Returns False (caller takes the Spark
-    writer) for non-local paths, missing pyarrow, or any mode except
-    'overwrite' against an existing dir — the Spark path keeps the
-    exact exists/append error semantics."""
-    local = _driver_local_path(target_dir, spark)
-    if local is None:
-        return False
-    import os
-
-    if os.path.exists(local) and mode != "overwrite":
-        return False
-    try:
-        import pyarrow.parquet as pq
-
-        table = arrow_table(rows, schema)
-    except Exception:  # noqa: BLE001 — unsupported type etc. → Spark path
-        return False
-    import shutil
-    import uuid
-
-    if os.path.exists(local):
-        shutil.rmtree(local)
-    os.makedirs(local)
-    pq.write_table(
-        table,
-        os.path.join(local, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
-        compression="snappy",
-    )
-    with open(os.path.join(local, "_SUCCESS"), "w"):
-        pass
-    return True
-
-
 def _read_codebook_rows(
     spark: SparkSession, data_path: str, meta: dict
 ) -> list[tuple[int, int, list[float]]]:
-    rows = _driver_parquet_records(data_path, spark)
-    if rows is None:
-        rows = [r.asDict() for r in spark.read.parquet(data_path).collect()]
+    rows = read_parquet(spark, data_path).to_pylist()
     want = int(meta["pq_m"]) * int(meta["pq_k"])
     if len(rows) != want:
         raise ValueError(
@@ -1061,9 +910,11 @@ def retrain_ivf_index(
     originals are gone by design) and keeps the dtype; a ``pq8``
     artifact keeps its codebooks too — retrain refits the COARSE
     quantizer, not the product codebooks (rebuild from the float
-    corpus to refit those)."""
+    corpus to refit those). ``mode`` is as ``save_ivf_index``'s,
+    checked before the training scan."""
     from workhop2_etl_spark.operators.similarity import fit_centroids
 
+    _check_save_mode(mode)
     postings, _, meta = load_ivf_index(spark, src_path)
     store_dtype = meta.get("store_dtype", "float64")
     if store_dtype == "pq8":
@@ -1279,7 +1130,7 @@ def _ledger_gated_parquet(
     back to the last ``compact_index`` (compaction folds batches into
     base files, physically — the Delta-VACUUM analog) and does not
     cover un-ledgered batch appends."""
-    fs, p = _hadoop_fs(spark, f"{path}/{sub}")
+    fs, p = fs_and_path(spark, f"{path}/{sub}")
     if not fs.exists(p):
         return None
     files = [
@@ -1302,7 +1153,7 @@ def _ledger_gated_parquet(
             markers.add(f"epoch-{epoch}")
     hidden = set()
     for m in markers:
-        _, marker = _hadoop_fs(spark, f"{path}/ledger/{m}")
+        _, marker = fs_and_path(spark, f"{path}/ledger/{m}")
         kind, _, tag = m.partition("-")
         prefix = ("delete-" if kind == "delete" else "stream-") + tag + "-"
         if not fs.exists(marker):
@@ -1331,10 +1182,10 @@ def _sweep_uncommitted_delete_batches(spark: SparkSession, path: str) -> int:
     never fold into the compacted layout; the batch's replay (same
     label) restages from post-compaction live state. Single-writer by
     contract, like every mutator here. Returns files removed."""
-    fs, _ = _hadoop_fs(spark, path)
+    fs, _ = fs_and_path(spark, path)
     removed = 0
     for sub in ("tombstones", "df", "stats"):
-        _, d = _hadoop_fs(spark, f"{path}/{sub}")
+        _, d = fs_and_path(spark, f"{path}/{sub}")
         if not fs.exists(d):
             continue
         for st in fs.listStatus(d):
@@ -1346,7 +1197,7 @@ def _sweep_uncommitted_delete_batches(spark: SparkSession, path: str) -> int:
             ):
                 continue
             batch = name[len("delete-"):-len(".parquet")].rsplit("-", 1)[0]
-            _, marker = _hadoop_fs(spark, f"{path}/ledger/delete-{batch}")
+            _, marker = fs_and_path(spark, f"{path}/ledger/delete-{batch}")
             if not fs.exists(marker):
                 fs.delete(st.getPath(), False)
                 removed += 1
@@ -1371,7 +1222,7 @@ def _assert_no_uncommitted_stream_files(spark: SparkSession, path: str) -> None:
     assumes its own renamed files are the only copies; sweeping could
     race a concurrent resume, so the stream must converge first."""
     for sub in ("tf", "df", "stats", "index"):
-        fs, d = _hadoop_fs(spark, f"{path}/{sub}")
+        fs, d = fs_and_path(spark, f"{path}/{sub}")
         if not fs.exists(d):
             continue
         for st in fs.listStatus(d):
@@ -1383,7 +1234,7 @@ def _assert_no_uncommitted_stream_files(spark: SparkSession, path: str) -> None:
             ):
                 continue
             epoch = name[len("stream-"):-len(".parquet")].rsplit("-", 1)[0]
-            _, marker = _hadoop_fs(spark, f"{path}/ledger/epoch-{epoch}")
+            _, marker = fs_and_path(spark, f"{path}/ledger/epoch-{epoch}")
             if not fs.exists(marker):
                 raise ValueError(
                     f"index at {path} has files from an UNCOMMITTED stream "
@@ -1467,7 +1318,7 @@ def delete_from_index(
         kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
         verb="delete from",
     )
-    fs, ledger_p = _hadoop_fs(spark, f"{path}/ledger")
+    fs, ledger_p = fs_and_path(spark, f"{path}/ledger")
     if batch is None:
         import re
 
@@ -1491,9 +1342,9 @@ def delete_from_index(
                 f"auto-generated delete batch label {batch!r} already has "
                 f"a ledger marker at {path} — pass an explicit batch label"
             )
-    _, marker = _hadoop_fs(spark, f"{path}/ledger/delete-{batch}")
+    _, marker = fs_and_path(spark, f"{path}/ledger/delete-{batch}")
     staging = f"{path}/delete.{batch}"
-    _, staging_p = _hadoop_fs(spark, staging)
+    _, staging_p = fs_and_path(spark, staging)
     if fs.exists(marker):
         if fs.exists(staging_p):
             fs.delete(staging_p, True)
@@ -1523,7 +1374,7 @@ def delete_from_index(
         if meta["kind"] == _LEXICAL_KIND else ("tombstones",)
     )
     for sub in dst_subs:
-        _, dst_dir_p = _hadoop_fs(spark, f"{path}/{sub}")
+        _, dst_dir_p = fs_and_path(spark, f"{path}/{sub}")
         if fs.exists(dst_dir_p):
             for st in fs.listStatus(dst_dir_p):
                 if st.getPath().getName().startswith(prefix):
@@ -1607,7 +1458,7 @@ def delete_from_index(
         moves = [(f"{staging}/tombstones", f"{path}/tombstones")]
 
     for src_dir, dst_dir in moves:
-        _, src_dir_p = _hadoop_fs(spark, src_dir)
+        _, src_dir_p = fs_and_path(spark, src_dir)
         staged = sorted(
             (
                 st.getPath()
@@ -1617,10 +1468,10 @@ def delete_from_index(
             ),
             key=lambda p: p.getName(),
         )
-        _, dst_dir_p = _hadoop_fs(spark, dst_dir)
+        _, dst_dir_p = fs_and_path(spark, dst_dir)
         fs.mkdirs(dst_dir_p)
         for i, src in enumerate(staged):
-            _, dst = _hadoop_fs(spark, f"{dst_dir}/{prefix}{i:05d}.parquet")
+            _, dst = fs_and_path(spark, f"{dst_dir}/{prefix}{i:05d}.parquet")
             if not fs.rename(src, dst):
                 raise IOError(
                     f"rename {src} -> {dst} failed during delete batch "
@@ -1715,7 +1566,7 @@ def compact_index(
         # partials FOLD to one net record (load-equivalent)
         specs = _lexical_compact_specs(tomb)
 
-    fs, root_p = _hadoop_fs(spark, path)
+    fs, root_p = fs_and_path(spark, path)
 
     # an UNCOMMITTED stream epoch (streaming/index_stream.py) always
     # leaves its ingest.epoch-* staging dir behind; compacting now
@@ -1726,7 +1577,7 @@ def compact_index(
     for st in fs.listStatus(root_p):
         name = st.getPath().getName()
         if name.startswith("ingest.epoch-"):
-            _, marker = _hadoop_fs(
+            _, marker = fs_and_path(
                 spark, f"{path}/ledger/epoch-{name.removeprefix('ingest.epoch-')}"
             )
             if fs.exists(marker):
@@ -1756,7 +1607,7 @@ def compact_index(
         after_total += fa
 
     if tomb is not None:  # every dir swapped: the purge is physical
-        _, tomb_p = _hadoop_fs(spark, f"{path}/tombstones")
+        _, tomb_p = fs_and_path(spark, f"{path}/tombstones")
         fs.delete(tomb_p, True)
 
     meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
@@ -1786,16 +1637,16 @@ def _compact_dir(
     key-clustered layout); either way it must be load-equivalent.
     Returns (files_before | None on crash-recovery, files_after)."""
     staging = f"{data}.compacting"
-    fs, data_p = _hadoop_fs(spark, data)
-    _, staging_p = _hadoop_fs(spark, staging)
-    _, staged_ok = _hadoop_fs(spark, f"{staging}/_SUCCESS")
+    fs, data_p = fs_and_path(spark, data)
+    _, staging_p = fs_and_path(spark, staging)
+    _, staged_ok = fs_and_path(spark, f"{staging}/_SUCCESS")
 
     if fs.exists(staging_p) and not fs.exists(staged_ok):
         # uncommitted leftover from a crash mid-stage: the live data
         # dir is intact — discard and compact normally
         fs.delete(staging_p, True)
     if not fs.exists(staged_ok):
-        files_before = _count_part_files(spark, data)
+        files_before = len(data_files(spark, data))
         df = spark.read.parquet(data)
         if transform is not None:
             df = transform(df)
@@ -1823,7 +1674,7 @@ def _compact_dir(
         fs.delete(data_p, True)
     if not fs.rename(staging_p, data_p):
         raise IOError(f"rename {staging} -> {data} failed during compaction")
-    return files_before, _count_part_files(spark, data)
+    return files_before, len(data_files(spark, data))
 
 
 def restore_index(
@@ -1859,10 +1710,12 @@ def restore_index(
     dimension-sized sidecar writes — no driver-side row movement.
     Refuses ``dst_path == src_path``: an in-place restore would
     destroy the history it is reading (restore next to, then swap at
-    the catalog level). ``mode`` follows Spark write semantics
-    ('error' | 'overwrite'). Returns the metadata written."""
+    the catalog level). ``mode`` is ``'overwrite'`` or
+    ``'error'``/``'errorifexists'``; any other mode raises before
+    anything is written. Returns the metadata written."""
     from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
 
+    _check_save_mode(mode)
     if src_path.rstrip("/") == dst_path.rstrip("/"):
         raise ValueError(
             f"restore_index target equals the source ({src_path}) — an "
@@ -2011,7 +1864,7 @@ def index_changes(
             f"({from_seq}, {to_seq})"
         )
 
-    fs, ledger_p = _hadoop_fs(spark, f"{path}/ledger")
+    fs, ledger_p = fs_and_path(spark, f"{path}/ledger")
     batches: list[tuple[int, str, str, str]] = []  # (seq, op, sub, prefix)
     if fs.exists(ledger_p):
         for st in fs.listStatus(ledger_p):
@@ -2037,7 +1890,7 @@ def index_changes(
 
     parts: list[DataFrame] = []
     for seq, op, sub, prefix in sorted(batches):
-        _, d = _hadoop_fs(spark, f"{path}/{sub}")
+        _, d = fs_and_path(spark, f"{path}/{sub}")
         files = (
             [
                 str(st.getPath())
@@ -2115,7 +1968,7 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     data_sub = "tf" if lexical else "index"
     problems: list[str] = []
 
-    fs, root_p = _hadoop_fs(spark, path)
+    fs, root_p = fs_and_path(spark, path)
     # orphan staging dirs at the artifact root
     n_orphans = sum(
         1
@@ -2129,7 +1982,7 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     # ledgered batch files whose marker is absent
     uncommitted: set[str] = set()
     for sub in ("tf", "df", "stats", "index", "tombstones"):
-        _, d = _hadoop_fs(spark, f"{path}/{sub}")
+        _, d = fs_and_path(spark, f"{path}/{sub}")
         if not fs.exists(d):
             continue
         for st in fs.listStatus(d):
@@ -2139,7 +1992,7 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
             for pfx, mk in (("delete-", "delete-"), ("stream-", "epoch-")):
                 if name.startswith(pfx):
                     tag = name[len(pfx):-len(".parquet")].rsplit("-", 1)[0]
-                    _, marker = _hadoop_fs(spark, f"{path}/ledger/{mk}{tag}")
+                    _, marker = fs_and_path(spark, f"{path}/ledger/{mk}{tag}")
                     if not fs.exists(marker):
                         uncommitted.add(f"{mk}{tag}")
 
@@ -2285,28 +2138,8 @@ def _read_meta_any_kind(
     return meta
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def _count_part_files(spark: SparkSession, path: str) -> int:
-    """Data files in a parquet dir: everything except commit markers
-    (_SUCCESS/_temporary) and checksum sidecars — stream-ingested
-    files (streaming/index_stream.py) carry epoch-derived names, not
-    the part- prefix, and must count too."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return sum(
-        1
-        for st in fs.listStatus(hpath)
-        if st.isFile()
-        and not st.getPath().getName().startswith((".", "_"))
-    )
-
-
 def _delete_dir(spark: SparkSession, path: str) -> None:
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = fs_and_path(spark, path)
     fs.delete(hpath, True)
 
 

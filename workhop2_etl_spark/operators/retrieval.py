@@ -35,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from workhop2_etl_spark.session import local_relation
+from workhop2_etl_spark.session import arrow_table, local_relation
+from workhop2_etl_spark.sources.fs import write_parquet
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -387,13 +388,17 @@ def save_lexical_index(
     record. ``tokenizer`` is a free-form contract string recorded so
     a probe pipeline can refuse an index tokenized under another
     convention (the guard is load-time, by label — the tokens
-    themselves were the caller's input). Returns the metadata."""
+    themselves were the caller's input). ``mode`` is ``'overwrite'``
+    or ``'error'``/``'errorifexists'``; any other mode raises before
+    anything is written. Returns the metadata."""
     from workhop2_etl_spark.operators.index_store import (
         FORMAT_VERSION,
+        _check_save_mode,
         _reset_lifecycle_state,
         _write_meta,
     )
 
+    _check_save_mode(mode)
     _reset_lifecycle_state(corpus_tokens.sparkSession, path, mode)
     _write_lexical_epoch(
         corpus_tokens, path, id_col, tok_col, mode,
@@ -405,7 +410,7 @@ def save_lexical_index(
         "id_col": id_col,
         # recorded so stream ingest reads the artifact's OWN token
         # column instead of inferring one from caller arguments
-        # (streaming/index_stream.py, r11)
+        # (streaming/index_stream.py)
         "tok_col": tok_col,
         "tokenizer": tokenizer,
         "epoch": 0,
@@ -422,38 +427,26 @@ def _write_lexical_epoch(
     mode: str,
     num_partitions: int | None = None,
 ) -> None:
-    # ONE corpus pass (r12): the tf relation persists across the
-    # three writes so the corpus is tokenized+aggregated once — df
-    # AND stats both derive from it (stats via min(dl) per doc, the
-    # same per-doc-exact trick the delete path uses), where the old
-    # shape re-ran the regex tokenization for each of tf/df/stats
-    # (3× the dominant cost; measured 8.9s → ~4s on the sf0.1 save,
-    # and at 100 TB the difference between one corpus scan and
-    # three). tf is the aggregation OUTPUT (distinct (doc, term)
-    # pairs), far smaller than the raw corpus; MEMORY_AND_DISK spills
-    # rather than recomputing.
+    # ONE corpus pass: the tf relation persists across the three
+    # writes so the corpus is tokenized and aggregated once — df AND
+    # stats both derive from it (stats via min(dl) per doc, the same
+    # per-doc-exact trick the delete path uses). tf is the
+    # aggregation OUTPUT (distinct (doc, term) pairs), far smaller
+    # than the raw corpus; MEMORY_AND_DISK spills rather than
+    # recomputing.
     from pyspark import StorageLevel
 
-    tf = _tf_relation(corpus_tokens, id_col, tok_col)
-    # r13 optimization: SEED saves (``save_lexical_index(
-    # corpus.limit(0), ...)`` — every streaming lifecycle seeds an
-    # empty artifact this way) previously launched three Spark write
-    # jobs for zero rows. When Catalyst itself proves the input
-    # statically empty (the optimized plan folds to an empty
-    # LocalRelation — a real source scan never does), the three files
-    # are written driver-side with the identical layout: empty tf/df
-    # parts, the one (0, 0) stats partial a global aggregate over
-    # empty input produces, schemas taken from the same lazy frames
-    # the Spark writer would have used (guide §1.2 — zero records
-    # should never launch a distributed job). Non-local paths, a
-    # missing pyarrow, or append-into-existing fall through to the
-    # Spark writer unchanged.
-    from workhop2_etl_spark.operators.index_store import (
-        _driver_write_tiny_parquet,
-        _plan_is_empty_local,
-    )
+    from workhop2_etl_spark.operators.index_store import _plan_is_empty_local
 
+    tf = _tf_relation(corpus_tokens, id_col, tok_col)
+    # a seed save (save_lexical_index(corpus.limit(0), ...), every
+    # streaming lifecycle's starting state, or an empty append) writes
+    # its three files driver-side when Catalyst proves the input
+    # statically empty: empty tf/df parts and the one (0, 0) stats
+    # partial a global aggregate over empty input produces, typed by
+    # the same lazy frames the Spark writer would have written
     if _plan_is_empty_local(tf):
+        spark = corpus_tokens.sparkSession
         df_schema = tf.groupBy("term").agg(
             F.count(F.lit(1)).alias("df")
         ).schema
@@ -466,21 +459,12 @@ def _write_lexical_epoch(
             )
             .schema
         )
-        spark = corpus_tokens.sparkSession
-        if (
-            _driver_write_tiny_parquet(spark, tf.schema, [], f"{path}/tf", mode)
-            and _driver_write_tiny_parquet(
-                spark, df_schema, [], f"{path}/df", mode
-            )
-            and _driver_write_tiny_parquet(
-                spark,
-                stats_schema,
-                [(0, 0)],
-                f"{path}/stats",
-                mode,
-            )
-        ):
-            return
+        write_parquet(spark, arrow_table([], tf.schema), f"{path}/tf", mode)
+        write_parquet(spark, arrow_table([], df_schema), f"{path}/df", mode)
+        write_parquet(
+            spark, arrow_table([(0, 0)], stats_schema), f"{path}/stats", mode
+        )
+        return
 
     tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -514,7 +498,7 @@ def _write_lexical_epoch(
         # coalesce(1), not repartition(1): the aggregations above
         # already shuffle, so coalesce folds the post-shuffle read
         # into the single per-epoch partial file without a SECOND
-        # exchange (r12; one less Exchange + stage per write). The
+        # exchange (one less Exchange and stage per write). The
         # two partial writes are independent reads of the cached tf,
         # so they run CONCURRENTLY (guide §2.6 — the second job's
         # tasks back-fill the first's tail; actions are only

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
 
+from workhop2_etl_spark.sources.fs import fs_and_path
+
 #: Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
     "region",
@@ -219,68 +221,49 @@ def _ntz_of_epoch_micros(us_expr: str):
     )
 
 
-def _local_parquet_part(path: str) -> str | None:
-    """Resolve ``path`` to a driver-local parquet part file, or None
-    when the path is remote (``hdfs:``/``s3a:``/...) or a partitioned
-    directory with no top-level part files — those take the
-    Spark-native fallback probe instead."""
-    scheme, sep, rest = path.partition("://")
-    if sep:
-        if scheme != "file":
-            return None
-        path = rest if rest.startswith("/") else "/" + rest
-    elif path.startswith("file:"):
-        path = path[len("file:"):]
-    if os.path.isfile(path):
-        return path
-    if os.path.isdir(path):
-        parts = sorted(
-            f for f in os.listdir(path)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        if parts:
-            return os.path.join(path, parts[0])
-    return None
-
-
 def _events_ts_is_nanos(spark: SparkSession, path: str) -> bool:
     """True when this testdata generation ships events.ts as
     TIMESTAMP(NANOS) — which Spark's reader rejects without the
     legacy nanos-as-long conf.
 
-    Fast path: a driver-side pyarrow footer probe on a local part
-    file (pyarrow is a driver-only dependency of this fast path).
-    Fallback — remote schemes, partitioned layouts, or pyarrow
-    absent — probes through Spark itself: with the legacy conf set,
-    schema ANALYSIS (footer-only, no job) reports a nanos column as
-    LongType and a real timestamp as TimestampType; the conf is
-    restored before returning, so alive frames from earlier loads
-    keep decoding the way they were planned."""
-    probe = _local_parquet_part(path)
-    if probe is not None:
-        try:
-            import pyarrow.parquet as pq
-
-            return str(pq.read_schema(probe).field("ts").type) == "timestamp[ns]"
-        except ImportError:
-            pass  # fall through to the Spark-native probe
-        except (KeyError, OSError):
+    Reads the footer of the dataset's first non-hidden data file
+    on the driver: the file is found through the Hadoop FileSystem
+    (recursively, so a partitioned layout works, on any scheme) and
+    its footer read with parquet-mr. No Spark job runs and no session
+    conf changes."""
+    jvm = spark._jvm
+    fs, root = fs_and_path(spark, path)
+    if not fs.exists(root):
+        return False
+    depth = fs.makeQualified(root).depth()
+    files = fs.listFiles(root, True)
+    while True:
+        if not files.hasNext():
             return False
-    from pyspark.sql.types import LongType
-
-    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "true")
+        part = p = files.next().getPath()
+        hidden = False
+        while p.depth() > depth:  # the file and its dirs below root
+            hidden = hidden or p.getName().startswith(("_", "."))
+            p = p.getParent()
+        if not hidden:
+            break
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            part, spark._jsc.hadoopConfiguration()
+        )
+    )
     try:
-        schema = spark.read.parquet(path).schema
-        if "ts" not in schema.names:
-            return False
-        return isinstance(schema["ts"].dataType, LongType)
+        schema = reader.getFooter().getFileMetaData().getSchema()
     finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
+        reader.close()
+    if not schema.containsField("ts"):
+        return False
+    ann = schema.getType("ts").getLogicalTypeAnnotation()
+    return (
+        ann is not None
+        and ann.getClass().getSimpleName() == "TimestampLogicalTypeAnnotation"
+        and ann.getUnit().name() == "NANOS"
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -56,7 +56,6 @@ from workhop2_etl_spark.operators.index_store import (
     _IVF_POSTINGS_KIND,
     _LSH_KIND,
     _commit_marker,
-    _hadoop_fs,
     _read_centroid_rows,
     _read_meta_any_kind,
     _write_ivf_postings,
@@ -64,6 +63,7 @@ from workhop2_etl_spark.operators.index_store import (
     _write_signed,
 )
 from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
+from workhop2_etl_spark.sources.fs import fs_and_path
 
 _INGEST_KINDS = (_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND)
 
@@ -99,9 +99,9 @@ def ingest_epoch(
     epoch or none of it (never tf rows without their df/stats
     partials), and a delete derives its victims from COMMITTED rows
     only."""
-    fs, marker = _hadoop_fs(spark, f"{index_path}/ledger/epoch-{epoch_id:012d}")
+    fs, marker = fs_and_path(spark, f"{index_path}/ledger/epoch-{epoch_id:012d}")
     staging = f"{index_path}/ingest.epoch-{epoch_id:012d}"
-    _, staging_p = _hadoop_fs(spark, staging)
+    _, staging_p = fs_and_path(spark, staging)
     if fs.exists(marker):
         if fs.exists(staging_p):  # crash between marker and sweep
             fs.delete(staging_p, True)
@@ -195,7 +195,7 @@ def ingest_epoch(
     # epoch's own files)
     prefix = f"stream-{epoch_id:012d}-"
     for src_dir, dst_dir in moves:
-        _, src_dir_p = _hadoop_fs(spark, src_dir)
+        _, src_dir_p = fs_and_path(spark, src_dir)
         staged = sorted(
             (
                 st.getPath()
@@ -205,12 +205,12 @@ def ingest_epoch(
             ),
             key=lambda p: p.getName(),
         )
-        _, dst_dir_p = _hadoop_fs(spark, dst_dir)
+        _, dst_dir_p = fs_and_path(spark, dst_dir)
         for st in fs.listStatus(dst_dir_p):
             if st.getPath().getName().startswith(prefix):
                 fs.delete(st.getPath(), False)
         for i, src in enumerate(staged):
-            _, dst = _hadoop_fs(
+            _, dst = fs_and_path(
                 spark, f"{dst_dir}/{prefix}{i:05d}.parquet"
             )
             if not fs.rename(src, dst):
@@ -309,8 +309,8 @@ def stream_index_ingest(
     legacy_names = {
         f"_stream-{hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]}"
     }
-    fs, ledger_p = _hadoop_fs(spark, f"{index_path}/ledger")
-    _, bind_p = _hadoop_fs(spark, f"{index_path}/ledger/_stream-{digest}")
+    fs, ledger_p = fs_and_path(spark, f"{index_path}/ledger")
+    _, bind_p = fs_and_path(spark, f"{index_path}/ledger/_stream-{digest}")
     if fs.exists(ledger_p):
         entries = [
             st.getPath().getName() for st in fs.listStatus(ledger_p)
@@ -346,14 +346,14 @@ def stream_index_ingest(
                 )
             for e in entries:  # deliberate migration: re-bind
                 if e.startswith("_stream-"):
-                    _, old = _hadoop_fs(spark, f"{index_path}/ledger/{e}")
+                    _, old = fs_and_path(spark, f"{index_path}/ledger/{e}")
                     fs.delete(old, False)
         elif bound_elsewhere and not has_epochs:
             # stale binding with no epochs: nothing committed, safe to
             # re-bind silently
             for e in entries:
                 if e.startswith("_stream-"):
-                    _, old = _hadoop_fs(spark, f"{index_path}/ledger/{e}")
+                    _, old = fs_and_path(spark, f"{index_path}/ledger/{e}")
                     fs.delete(old, False)
     fs.mkdirs(ledger_p)
     fs.createNewFile(bind_p)
