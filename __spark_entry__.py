@@ -29,210 +29,84 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # entries in insertion order, so ordering decides which queries get an
 # oracle verdict. This comment is the maintained spec for the window —
 # keep it exact. The window composes from tools/staleness_report.py
-# (latest green per CORRECTNESS_r*.json + last kernel-touching commit
-# round from git), ordered never-verified > kernel-changed > oldest
-# green.
-# ROUND-13 WINDOW (exactly 50; composed per tools/staleness_report.py,
-# never-verified > kernel-changed > oldest-green). No query is
-# never-driver-verified (CORRECTNESS_r12 graded the whole r12 head
-# block), so the window leads with the r13 OPTIMIZATION round's
-# kernel-changed set:
-# (a) 20 kernel-changed r13 — every query through the rewritten BM25
-#     scoring core (_bm25_score: in-session paths use a term-sorted
-#     window aggregate, probe paths keep the fold; bit-identity
-#     pinned by test_bm25_window_sum_bit_identical_to_fold), the probe's
-#     driver-materialized df/stats slices, the driver-side empty-seed
-#     writes, restore_index's overlapped writes, or the shared
-#     IVF centroid/codebook relations: t11, t12, t13, t14, t15, t16,
-#     t17, st13, st14, st15, st16, st17, v5, v7, v13, v14, v15, v16,
-#     v18, v19. This also closes the r12 verdict's evidence gap for
-#     t11/t12/v15/st13/st14/v13/v14 (touched in r12, local-only
-#     verified then).
-# (b) 3 remaining r12-touched-local-only (the verdict's ask #2):
-#     x17_corpus_pipeline (row-based SimHash), v9/v10 (persisted
-#     LSH/IVF lifecycles through the r12 meta/sidecar driver I/O).
-# (c) 27 staleness tail, in the order the r12 spec queued them:
-#     the 7 displaced non-flagged r07 entries (f1, q10, q11, q12,
-#     q14, q15, q16), the 12 r07 greens q17/q19/q20/q4/q6/q8/s2/
-#     sql3/x13/x18/x1/x3, then 8 of the r11-green rotation (u5, k1,
-#     k2, dq2, e7, q3, q9, w5).
-# Deferred, each with the displacing rationale:
-# - The r12 head block (t14, v18, t15, v19, t16, st15, st16, st17,
-#   t17, r4, r5, t18, x19, r6, v16, t13 ...) would normally rotate
-#   out after its r12 green, but most of it is RE-verified here
-#   anyway because the BM25/lifecycle kernels changed again in r13 —
-#   only r4/r5/r6 (sketches), t18/x19 (classifier) rotate out:
-#   kernels untouched in r13, r12-green, pinned by their pytest
-#   batteries.
-# - w6_ewma, x10_group_sample (r11 greens, kernels untouched since):
-#   displaced by the kernel-changed block; next in the r14 tail.
-# - q1/a-family/... r08+ greens with untouched kernels: normal
-#   rotation order via tools/staleness_report.py.
-# ROUND-12 WINDOW (historical; superseded by the r13 list above):
-# (a) 7 never-driver-verified, the r11 verdict's ask #1 plus this
-#     round's additions: t14_bm25_index_delete + v18_topk_ivf_index_
-#     delete (the r11 deletion lifecycle: tombstones + signed lexical
-#     partials — now marker-gated for reader atomicity, r12),
-#     t15_bm25_prf (Rocchio PRF, both passes oracle-replayed),
-#     v19_hybrid_weighted (CombSUM convex fusion — r12 union-
-#     aggregate plan), t16_bm25_prf_persisted (NEW r12: the PRF loop
-#     probed twice against the persisted artifact), and
-#     st15_streaming_ingest_delete (NEW r12: stream-ingest ∘ delete
-#     ≡ rebuild-on-survivors — pins the marker-gated visibility
-#     end to end), and st16_snapshot_as_of (NEW r12: load(as_of=N)
-#     snapshot read at a recorded commit sequence — probes the
-#     pre-delete state bit-exactly).
-# (b) 2 r12-kernel-changed with pre-r12 greens: v16_hybrid_persisted_
-#     rrf (rrf_fuse rebuilt as union + hash aggregate, extrema
-#     broadcast — same semantics, new plan) and t13_bm25_pruned_probe
-#     (_bm25_rank_pruned's HB now a deterministic term-sorted fold
-#     with FP slack; k1<=0 rejected).
-# (c) the full 8-query r06 cohort — the staleness tail's oldest:
-#     q13, q18, q21, q22, q2, q5, q7, s5_jdbc_roundtrip.
-# (d) all 21 STALE-flagged r07 queries (kernel newer than green),
-#     then the first 8 non-flagged r07 queries in staleness-report
-#     order.
-# (a2, added later in r12) 7 MORE never-verified queries from this
-#     round's second build pass: st17_index_restore (restore_index —
-#     snapshot materialization), t17_index_changelog (index_changes —
-#     the CDC feed), r4_kmv_distinct + r5_cm_heavy_hitters
-#     (operators/sketch.py — cross-engine mergeable sketches),
-#     t18_hashed_linear_quality (hashed-features linear classifier —
-#     model-based quality filtering as pure expressions), and
-#     x19_model_gated_corpus (the classifier as the corpus pipeline's
-#     quality gate: score → gate → exact-dedup → per-lang stats), and
-#     r6_kmv_by_group (per-group KMV — the grouped merge algebra).
-#     Per the never-verified > stale rule they displace the LAST 7
-#     block-(d) entries (f1_normalize_text, q10_returned_items,
-#     q11_revenue_concentration, q12_late_shipping, q14_promo_share,
-#     q15_top_supplier, q16_supplier_part_counts — all from the
-#     NON-flagged r07 sub-block: greens r07, kernels ≤ r07, never
-#     STALE-flagged; f1's kernel is additionally pinned by the
-#     in-window pipeline queries and its pytest golden); those seven
-#     lead the r13 staleness tail with the q17/q19/... block below.
-# Deferred, each with the displacing rationale:
-# - v15_hybrid_rrf (green r10, kernel r12 via rrf_fuse): the changed
-#   fusion kernel is exercised in-window by v16 (same rrf_fuse
-#   through BOTH persisted artifacts) and v19 (weighted sibling);
-#   pinned by the test_retrieval fusion battery + the new no-SMJ
-#   plan guard; VERIFYLOCAL_r12 green at this head.
-# - t12_bm25_persisted_index (green r11, kernel r12 via
-#   load_lexical_index's marker-gated reads): the gated loader is
-#   exercised in-window by t14 (the delete path the gating exists
-#   for) and t16 (plain load→probe); the append-partials path is
-#   pinned by test_lexical_index_roundtrip_and_append.
-# - st14_streaming_lexical_ingest (green r11, kernel r12 via
-#   index_stream's legacy-digest branch): the changed branch only
-#   runs against pre-r11 ledgers, which its query never creates;
-#   pinned by test_legacy_raw_digest_binding_migrates.
-# - u5/k1/k2/dq2/e7/q3/q9/w5/w6/x10 + the rest of the r11-green
-#   head: kernels untouched in r12, greens one round old — normal
-#   rotation, next in the r13 tail.
-# - q17/q19/q20/q4/q6/q8/s2/sql3/x13/x18/x1/x3 (r07 greens, kernels
-#   ≤ r07, never STALE-flagged): the 12 displaced by head (a)+(b);
-#   they lead the r13 staleness tail.
-# ROUND-11 WINDOW (historical; superseded by the r12 list below):
-# (a) 1 never-driver-verified: t13_bm25_pruned_probe (NEW r11 — the
-#     max_df impact-ordered probe of the persisted BIGRAM lexical
-#     index; the oracle recomputes the candidate-pruned semantics, so
-#     green proves the WAND-family bounded serving path exactly).
-# (b) 6 r11-kernel-changed with r10 greens older than their kernels:
-#     k1_salted_agg + k2_salted_skew_join (operators/skew.py salt_on
-#     deterministic salt; both suite queries now pass salt_on=
-#     event_id), t12_bm25_persisted_index (probe_lexical_index grew
-#     the max_df branch and _bm25_rank split into _bm25_score+window;
-#     save_lexical_index records tok_col), st14_streaming_lexical_
-#     ingest (index_stream tok_col-from-metadata + canonical
-#     checkpoint binding + _META_SCHEMA tok_col field),
-#     v16_hybrid_persisted_rrf (rrf_fuse now collapses each arm to
-#     best rank; covers BOTH artifact meta roundtrips after the
-#     schema change), u5_apply_changes (merge_* grew on_null_key;
-#     default path re-verified).
-# (c) the 7-query r05 cohort, all in: dq2_rolling_outliers,
-#     e7_cohort_month, q3_shipping_priority, q9_product_profit,
-#     w5_gapfill_days, w6_ewma, x10_group_sample.
-# (d) 36 of the 44-query r06 cohort, staleness-report order (every
-#     STALE-flagged r06 query is in; see deferrals below).
-# Deferred, each with the displacing rationale:
-# - q2/q5/q7/q13/q18/q21/q22 (r06 star-join family): greens POSTDATE
-#   their kernels by 3+ rounds (kernels r01-r03, untouched since),
-#   q5/q18 run in every round's bench HEADLINE next to the in-window
-#   q3/q9 siblings, and all seven hold VERIFYLOCAL_r11 greens at this
-#   head. These seven are the kernel-touch displacements for (a)+(b).
-# - s5_jdbc_roundtrip (r06): kernel round == green round (nothing
-#   changed since the verdict) and the embedded-Derby value-compare
-#   pytest twin runs every round — the one allowed plain deferral.
-# - t11_bm25_topk / v15_hybrid_rrf (kernel r11, greens r10): the
-#   changed kernels (_bm25_score split, rrf_fuse arm collapse) are
-#   exercised in-window by t12/t13 (same scoring core through the
-#   persisted probe) and v16 (same fusion through both artifacts);
-#   pinned by the new tests/test_retrieval.py adversarial battery;
-#   VERIFYLOCAL_r11 green at this head.
-# - v9-v13/st13 (kernel r11 via the additive _META_SCHEMA tok_col
-#   field, greens r10 — only one round old): the meta roundtrip is
-#   exercised in-window by t12/st14 (lexical kind, which actually
-#   sets the new field) and v16 (IVF kind through save/load/probe);
-#   pinned by the full test_index_store/test_index_stream batteries;
-#   VERIFYLOCAL_r11 green at this head.
-# (The r11 'queued for r12' block is delivered above as head (a).)
+# (latest oracle green per CORRECTNESS_r*.json, kernel round from git),
+# ordered never-verified > kernel-changed > stale, oldest green first
+# within each class. Earlier windows live in git history.
+#
+# CURRENT WINDOW (exactly 50):
+# - never-verified: none (every registry query holds an oracle green).
+# - (a) 16 kernel-changed by the one-kernel-per-side ANN change (corpus
+#   inputs always take the BLAS twins, queries the expression kernel;
+#   no kernel metadata fields): the in-session searches v5, v7, v8,
+#   v13, v14 and the persisted lifecycles v9, v10, v11, v12, v16, v18,
+#   st13, st15, st16, st17, t17.
+# - (b) 34 kernel-changed this round by the LocalRelation and
+#   driver-side I/O changes, in staleness-report order: the 7 r08
+#   greens, the 9 r10 greens, the 11 r11 greens, then 7 of the r12
+#   greens.
+# Deferred, each with a local oracle green (tools/verify_local.py)
+# newer than its kernel: the other 16 kernel-changed this round (g3,
+# g4, r1–r6, v3, w1–w3 with r12 greens; dq2, k1, k2, w5 with r13
+# greens; green locally at this change), then the STALE tail with
+# kernels from r09–r13 (a7_operator_key_dups, j5, j6, m8–m10, s3,
+# st1–st7, st9, t8, t9, u1, u4, x2, x7–x9; green in
+# VERIFYLOCAL_r13.jsonl). They lead the next window.
 _PRIORITY = [
-    # (a) kernel-changed r13: the rewritten BM25 scoring core, the
-    # probe's driver-materialized df/stats, driver-side empty seeds,
-    # overlapped restore writes, shared IVF relations
-    "t11_bm25_topk",
-    "t12_bm25_persisted_index",
-    "t13_bm25_pruned_probe",
-    "t14_bm25_index_delete",
-    "t15_bm25_prf",
-    "t16_bm25_prf_persisted",
-    "t17_index_changelog",
+    # (a) kernel-changed: one ANN kernel per side
+    "v5_topk_cosine_ivf",
+    "v7_topk_cosine_ivf_nprobe",
+    "v8_topk_cosine_lsh_multitable",
+    "v13_topk_ivf_pq",
+    "v14_topk_ivf_pq_refine",
+    "v9_topk_lsh_persisted_index",
+    "v10_topk_ivf_persisted_index",
+    "v11_ivf_index_health",
+    "v12_topk_ivf_int8_index",
+    "v16_hybrid_persisted_rrf",
+    "v18_topk_ivf_index_delete",
     "st13_streaming_index_ingest",
-    "st14_streaming_lexical_ingest",
     "st15_streaming_ingest_delete",
     "st16_snapshot_as_of",
     "st17_index_restore",
-    "v5_topk_cosine_ivf",
-    "v7_topk_cosine_ivf_nprobe",
-    "v13_topk_ivf_pq",
-    "v14_topk_ivf_pq_refine",
-    "v15_hybrid_rrf",
-    "v16_hybrid_persisted_rrf",
-    "v18_topk_ivf_index_delete",
-    "v19_hybrid_weighted",
-    # (b) r12-touched, local-only verified then (verdict ask #2)
-    "x17_corpus_pipeline",
-    "v9_topk_lsh_persisted_index",
-    "v10_topk_ivf_persisted_index",
-    # (c) staleness tail: the 7 displaced non-flagged r07 entries...
-    "f1_normalize_text",
-    "q10_returned_items",
-    "q11_revenue_concentration",
-    "q12_late_shipping",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    # ...the 12 r07 greens queued by the r12 spec...
-    "q17_small_qty_revenue",
-    "q19_disjunctive_revenue",
-    "q20_excess_suppliers",
-    "q4_order_priority",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "s2_json_roundtrip",
-    "sql3_corpus_quality_sql",
-    "x13_weighted_sample",
-    "x18_leakage_safe_split",
-    "x1_word_count",
-    "x3_hash_sample",
-    # ...then 8 of the r11-green rotation
-    "u5_apply_changes",
-    "k1_salted_agg",
-    "k2_salted_skew_join",
-    "dq2_rolling_outliers",
-    "e7_cohort_month",
-    "q3_shipping_priority",
-    "q9_product_profit",
-    "w5_gapfill_days",
+    "t17_index_changelog",
+    # (b) kernel-changed this round, staleness-report order: r08 greens
+    "a3_quality_counts",
+    "a7_key_dup_rows",
+    "a9_flag_influence",
+    "dq4_profile_drift",
+    "g5_grouping_sets",
+    "o2_sort_limit",
+    "v1_topk_cosine_bruteforce",
+    # ...r10 greens
+    "a12_weighted_median",
+    "a13_profile_stats",
+    "a14_equidepth_deciles",
+    "dq3_mad_outliers",
+    "v17_topk_truncated_refine",
+    "v2_topk_cosine_lsh",
+    "v4_embedding_near_dup",
+    "w4_ohlc_resample",
+    "z1_zorder_key",
+    # ...r11 greens
+    "a4_dup_counts",
+    "d9_semantic_dedup",
+    "g1_pivot",
+    "g6_pagerank",
+    "g7_triangle_count",
+    "g8_label_propagation",
+    "q1_pricing_summary",
+    "v6_topk_cosine_lsh_multiprobe",
+    "w6_ewma",
+    "w7_rolling_corr",
+    "w8_rolling_slope",
+    # ...7 of the r12 greens
+    "a11_approx_sketches",
+    "a1_topk_group_count",
+    "a2_count_distinct",
+    "a5_histogram",
+    "a6_full_dedupe",
+    "a8_top_entities",
+    "g2_cube",
 ]
 
 

@@ -28,18 +28,15 @@ def _tmp(name: str) -> str:
     )
 
 
-@pytest.mark.parametrize("sig_kernel", ["expr", "blas"])
-def test_lsh_index_roundtrip_probe_identical(spark, sig_kernel):
+def test_lsh_index_roundtrip_probe_identical(spark):
     """save → load → probe ≡ the in-session topk_cosine_lsh_multitable
-    under BOTH signature kernels (vec/norm doubles round-trip parquet
-    exactly; signatures are kernel-independent)."""
+    (vec/norm doubles round-trip parquet exactly)."""
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    path = _tmp(f"lsh_{sig_kernel}")
+    path = _tmp("lsh_roundtrip")
 
     meta = IDX.save_lsh_index(
-        emb, path, dim=DIM, num_planes=6, num_tables=8,
-        sig_kernel=sig_kernel, mode="overwrite",
+        emb, path, dim=DIM, num_planes=6, num_tables=8, mode="overwrite",
     )
     index, loaded_meta = IDX.load_lsh_index(
         spark, path, dim=DIM, num_planes=6, num_tables=8
@@ -553,6 +550,102 @@ def test_ivf_index_pq8_lifecycle(spark):
     with pytest.raises(ValueError, match="requires codebooks"):
         IDX.save_ivf_index(emb, _tmp("pq8_bad"), cents, dim=DIM,
                            store_dtype="pq8", mode="overwrite")
+
+
+def test_insession_ivf_pq_never_ranks_corrupt_vectors(spark):
+    """Two near-copies of a query vector — one carrying a NaN element,
+    one cut to half length — must never come back from the in-session
+    IVF-PQ search, in recon or adc mode: the corpus encodes through
+    pq_encode_blas, which drops them, where the expression encoder
+    gave both valid codewords and ranked them 1–2 at score 1.0. The
+    in-session rows equal the persisted pq8 path for the same
+    centroids and codebooks."""
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    qvec = [float(x) for x in queries.orderBy("vec_id").first().embedding]
+    nan_id, short_id = 10**6 + 1, 10**6 + 2
+    dirty = spark.createDataFrame(
+        [(nan_id, [float("nan")] + qvec[1:]), (short_id, qvec[: DIM // 2])],
+        emb.schema,
+    )
+    corpus = emb.unionByName(dirty)
+    rows = (
+        emb.filter(F.col("vec_id") % 37 == 0).orderBy("vec_id")
+        .limit(8).select("embedding").collect()
+    )
+    cents = [(i, list(r.embedding)) for i, r in enumerate(rows)]
+    cb = SIM.sample_pq_codebooks(emb, dim=DIM)
+
+    got = {}
+    for mode in ("recon", "adc"):
+        got[mode] = sorted(map(tuple, SIM.topk_cosine_ivf_pq(
+            corpus, queries, cents, cb, dim=DIM, k=3, nprobe=8,
+            score_mode=mode,
+        ).collect()))
+        ids = {r[1] for r in got[mode]}
+        assert got[mode] and not ids & {nan_id, short_id}, (mode, ids)
+
+    path = _tmp("ivf_pq8_dirty")
+    IDX.save_ivf_index(corpus, path, cents, dim=DIM, store_dtype="pq8",
+                       codebooks=cb, mode="overwrite")
+    postings, lc, lm = IDX.load_ivf_index(spark, path)
+    persisted = sorted(map(tuple, IDX.probe_ivf_index(
+        postings, lc, lm, queries, k=3, nprobe=8).collect()))
+    assert persisted == got["recon"]
+
+
+def test_artifacts_with_kernel_metadata_still_grow(spark):
+    """Artifacts written before the kernel option was removed carry a
+    ``sig_kernel`` / ``assign_kernel`` field in their metadata. They
+    still load (without the dropped key), append and stream-ingest,
+    and then probe equal to a fresh build over the union."""
+    import json
+
+    from workhop2_etl_spark.sources.fs import read_bytes, write_bytes
+    from workhop2_etl_spark.streaming import index_stream as IS
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    base, delta, epoch = (emb.filter(F.col("vec_id") % 3 == i) for i in range(3))
+    cents = SIM.fit_centroids(emb, n_centroids=4, seed=7, max_iter=5)
+
+    def add_meta_field(path, key):
+        f = f"{path}/meta/part-00000.json"
+        rec = json.loads(read_bytes(spark, f))
+        rec[key] = "expr"
+        write_bytes(spark, f, (json.dumps(rec) + "\n").encode("utf-8"))
+
+    lsh, lsh_full = _tmp("lsh_kernel_meta"), _tmp("lsh_kernel_meta_full")
+    IDX.save_lsh_index(base, lsh, dim=DIM, num_planes=6, num_tables=8,
+                       mode="overwrite")
+    add_meta_field(lsh, "sig_kernel")
+    assert "sig_kernel" not in IDX.load_lsh_index(spark, lsh)[1]
+    IDX.append_lsh_index(delta, lsh)
+    assert IS.ingest_epoch(spark, epoch, 0, lsh) == "committed"
+    IDX.save_lsh_index(emb, lsh_full, dim=DIM, num_planes=6, num_tables=8,
+                       mode="overwrite")
+    (gi, gm), (fi, fm) = (IDX.load_lsh_index(spark, p) for p in (lsh, lsh_full))
+    assert gm["epoch"] == 2 and "sig_kernel" not in gm
+    got = sorted(map(tuple, IDX.probe_lsh_index(gi, gm, queries, k=3).collect()))
+    want = sorted(map(tuple, IDX.probe_lsh_index(fi, fm, queries, k=3).collect()))
+    assert got == want and got
+
+    ivf, ivf_full = _tmp("ivf_kernel_meta"), _tmp("ivf_kernel_meta_full")
+    IDX.save_ivf_index(base, ivf, cents, dim=DIM, mode="overwrite")
+    add_meta_field(ivf, "assign_kernel")
+    assert "assign_kernel" not in IDX.load_ivf_index(spark, ivf)[2]
+    IDX.append_ivf_index(delta, ivf)
+    assert IS.ingest_epoch(spark, epoch, 0, ivf) == "committed"
+    IDX.save_ivf_index(emb, ivf_full, cents, dim=DIM, mode="overwrite")
+    (gp, gc, gm), (fp, fc, fm) = (
+        IDX.load_ivf_index(spark, p) for p in (ivf, ivf_full)
+    )
+    assert gm["epoch"] == 2 and "assign_kernel" not in gm
+    got = sorted(map(tuple, IDX.probe_ivf_index(
+        gp, gc, gm, queries, k=3, nprobe=2).collect()))
+    want = sorted(map(tuple, IDX.probe_ivf_index(
+        fp, fc, fm, queries, k=3, nprobe=2).collect()))
+    assert got == want and got
 
 
 def test_retrain_ivf_index_blue_green(spark):

@@ -941,6 +941,27 @@ def test_query_bounded_joins_broadcast_without_hints(spark, tmp_path):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_minhash_self_join_reuses_band_exchange(spark):
+    """The MinHash LSH self-join computes the signatures once: in the
+    executed (post-AQE) plan its second side is a ReusedExchange of the
+    band exchange, so the document scan appears once. The static plan
+    carries both lineages; the reuse is an adaptive runtime property."""
+    from workhop2_etl_spark.operators import dedup_text as DT
+
+    docs = load_table(spark, SF_DIR, "documents")
+    pairs = DT.minhash_candidates(docs, text_col="text", id_col="doc_id")
+    assert pairs.collect()
+    plan = _final_plan(pairs)
+    reused = [ln for ln in plan.splitlines() if "ReusedExchange" in ln]
+    assert len(reused) == 1, plan
+    assert re.search(
+        r"Exchange hashpartitioning\(band_id#\d+, band_key#\d+, \d+\), "
+        r"REPARTITION_BY_COL", reused[0]
+    ), reused[0]
+    assert plan.count("REPARTITION_BY_COL") == 2, plan
+    assert plan.count("FileScan parquet") == 1, plan
+
+
 def test_driver_relations_plan_as_local_relations(spark, tmp_path):
     """Every driver-materialized relation of the probe, delete and ANN
     build paths is a LocalRelation: no optimized plan of a returned
@@ -990,8 +1011,7 @@ def test_driver_relations_plan_as_local_relations(spark, tmp_path):
         SIM.ivf_assign(emb, cents, nprobe=2)
     ))
     ivf = str(tmp_path / "ivf")
-    IDX.save_ivf_index(emb, ivf, cents, dim=64, assign_kernel="expr",
-                       mode="overwrite")
+    IDX.save_ivf_index(emb, ivf, cents, dim=64, mode="overwrite")
     postings, cs, imeta = IDX.load_ivf_index(spark, ivf)
     _assert_no_logical_rdd(spark, "probe_ivf_index", lambda: (
         IDX.probe_ivf_index(postings, cs, imeta, queries, k=3, nprobe=2)

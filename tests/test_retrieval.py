@@ -236,8 +236,8 @@ def test_nonfinite_vectors_never_rank(spark):
     """A corpus vector with an inf or NaN element must be EXCLUDED
     from every probe's ranking (not crowned rank 1 by NaN-largest
     ordering); the zero vector still scores 0.0 and ranks last. The
-    expression paths must agree with the BLAS kernel, which drops
-    non-finite scores via its np.isfinite mask."""
+    IVF and LSH searches must agree with the brute-force BLAS kernel,
+    which drops non-finite scores via its np.isfinite mask."""
     emb, q = _dirty_fixture(spark)
     want = [(100, 1, 1), (100, 2, 2), (100, 5, 3)]
     for df in (

@@ -1470,9 +1470,8 @@ def test_profile_drift_zero_mean_group_is_null(spark):
 def test_multitable_signatures_blas_identical_to_expression(spark):
     """The Arrow/BLAS signature kernel emits row-for-row IDENTICAL
     (table_id, sig) assignments to the expression fold (same
-    md5-derived planes, same float64 sign tests), and the multitable
-    top-k is bit-identical under either sig_kernel — so at-scale call
-    sites can take the matmul build path with zero semantic drift."""
+    md5-derived planes, same float64 sign tests) — so corpus-sized
+    inputs take the matmul kernel with zero semantic drift."""
     from workhop2_etl_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -1496,18 +1495,6 @@ def test_multitable_signatures_blas_identical_to_expression(spark):
     }
     assert expr_sigs == blas_sigs
     assert len(expr_sigs) == emb.count() * 8
-
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    a = SIM.topk_cosine_lsh_multitable(emb, queries, dim=dim, k=3).collect()
-    b = SIM.topk_cosine_lsh_multitable(
-        emb, queries, dim=dim, k=3, sig_kernel="blas"
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="sig_kernel"):
-        SIM.topk_cosine_lsh_multitable(emb, queries, dim=dim, sig_kernel="numpy")
 
 
 def test_multitable_signatures_blas_drops_dirty_rows(spark):
@@ -1551,8 +1538,7 @@ def test_ivf_assign_blas_identical_to_expression(spark):
     (id, centroid_id) assignments to the expression argmin — at
     nprobe=1 and at the nprobe=2 recall knob, and through the zero-
     vector / NaN-vector / zero-norm-centroid edges where the two
-    engines' tie and NaN orderings could diverge — and topk_cosine_ivf
-    is bit-identical under either assign_kernel."""
+    engines' tie and NaN orderings could diverge."""
     from workhop2_etl_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -1594,18 +1580,6 @@ def test_ivf_assign_blas_identical_to_expression(spark):
             for r in SIM.ivf_assign_blas(edgy, ecents, nprobe=nprobe).collect()
         )
         assert expr == blas
-
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    a = SIM.topk_cosine_ivf(emb, queries, cents, k=3, nprobe=2).collect()
-    b = SIM.topk_cosine_ivf(
-        emb, queries, cents, k=3, nprobe=2, assign_kernel="blas"
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and a
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="assign_kernel"):
-        SIM.topk_cosine_ivf(emb, queries, cents, assign_kernel="numpy")
 
 
 def test_ivf_assign_blas_drops_dirty_rows(spark):
@@ -1786,19 +1760,6 @@ def test_pq_encode_blas_identical_to_expression(spark):
         ).collect()
     }
     assert {r.vec_id: list(r.codes) for r in rows} == clean_expr
-
-    # the IVF-PQ search is identical under either build kernel
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    rows37 = (
-        emb.filter(F.col("vec_id") % 37 == 0).orderBy("vec_id")
-        .limit(8).select("embedding").collect()
-    )
-    cents = [(i, list(r.embedding)) for i, r in enumerate(rows37)]
-    a = SIM.topk_cosine_ivf_pq(emb, queries, cents, cb, dim=DIM, k=3,
-                               nprobe=2).collect()
-    b = SIM.topk_cosine_ivf_pq(emb, queries, cents, cb, dim=DIM, k=3,
-                               nprobe=2, assign_kernel="blas").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and a
 
 
 def test_incremental_rollup_null_day_partition_survives(spark):

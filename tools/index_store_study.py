@@ -242,10 +242,7 @@ def main() -> None:
 
             t0 = time.time()
             lex2 = RET.bm25_topk(corpus_tokens, query_terms, k=20)
-            vec2 = topk_cosine_ivf(
-                emb, vqueries, cents, k=20, nprobe=NPROBE,
-                assign_kernel="blas",
-            )
+            vec2 = topk_cosine_ivf(emb, vqueries, cents, k=20, nprobe=NPROBE)
             fused_insession = RET.rrf_fuse(
                 lex2.select("query_id", "doc_id", "rank"),
                 vec2.select(
@@ -607,10 +604,7 @@ def main() -> None:
             cents = fit_centroids(emb, n_centroids=N_CENTROIDS, seed=7)
             lex = RET.bm25_topk(corpus_tokens, qt, k=20).cache()
             vec = (
-                topk_cosine_ivf(
-                    emb, vqueries, cents, k=20, nprobe=NPROBE,
-                    assign_kernel="blas",
-                )
+                topk_cosine_ivf(emb, vqueries, cents, k=20, nprobe=NPROBE)
                 .select(
                     "query_id", F.col("neighbor_id").alias("doc_id"),
                     "rank", "score",
@@ -654,7 +648,7 @@ def main() -> None:
             t0 = time.time()
             IDX.save_lsh_index(
                 emb, path, dim=DIM, num_planes=PLANES, num_tables=TABLES,
-                sig_kernel="blas", mode="overwrite",
+                mode="overwrite",
             )
             build_save = round(time.time() - t0, 2)
 
@@ -666,7 +660,7 @@ def main() -> None:
             t0 = time.time()
             rows_insession = topk_cosine_lsh_multitable(
                 emb, queries, dim=DIM, k=K, num_planes=PLANES,
-                num_tables=TABLES, sig_kernel="blas",
+                num_tables=TABLES,
             ).collect()
             insession = round(time.time() - t0, 2)
         elif family == "ivf":
@@ -687,7 +681,7 @@ def main() -> None:
 
             t0 = time.time()
             rows_insession = topk_cosine_ivf(
-                emb, queries, cents, k=K, nprobe=NPROBE, assign_kernel="blas"
+                emb, queries, cents, k=K, nprobe=NPROBE
             ).collect()
             insession = round(time.time() - t0, 2)
         else:  # pq
@@ -714,7 +708,6 @@ def main() -> None:
             t0 = time.time()
             rows_insession = topk_cosine_ivf_pq(
                 emb, queries, cents, cb, dim=DIM, k=K, nprobe=NPROBE,
-                assign_kernel="blas",
             ).collect()
             insession = round(time.time() - t0, 2)
 

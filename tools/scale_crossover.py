@@ -344,8 +344,8 @@ def sigbuild_crossover(spark: SparkSession, sizes: list[int]) -> list[dict]:
     (pytest-proven identical), different formulation — L·b interpreted
     aggregate folds per row vs one (batch×dim)·(dim×L·b) matmul per
     Arrow batch. Build cost is what an index pays over the WHOLE
-    corpus at 100 TB, so this ratio prices the default for at-scale
-    call sites (sig_kernel='blas')."""
+    corpus at 100 TB, so this ratio is why every corpus-sized input
+    signs with the BLAS kernel."""
     from workhop2_etl_spark.operators.similarity import (
         with_multitable_signatures,
         with_multitable_signatures_blas,

@@ -248,21 +248,19 @@ def minhash_candidates(
         .select(id_col, F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key"))
         .filter(F.col("band_key").isNotNull())
     )
-    # r13 optimization: pre-partition the banded relation on the join
-    # keys so the self-join's two sides read ONE exchange
-    # (ReusedExchange) instead of each re-running the whole
-    # signature pipeline (normalize + shingle + one md5 PER SHINGLE —
-    # the dominant cost; the planner previously broadcast one side,
-    # which rebuilt that lineage in the broadcast build and would be
-    # a corpus-sized broadcast at scale). The banded rows are ~30
-    # bytes each (id + band key), so the single shuffle is cheap at
-    # any corpus size and the join needs no further exchange.
+    # Pre-partition the banded relation on the join keys, so both
+    # sides of the self-join can read one exchange instead of each
+    # re-running the signature pipeline (normalize + shingle + one
+    # md5 per shingle, the dominant cost). The banded rows are ~30
+    # bytes each (id + band key), so the one shuffle is cheap at any
+    # corpus size and the join needs no further exchange. The MERGE
+    # hint keeps the planner from broadcast-building one side (its
+    # size estimate is small), which would re-run that lineage in the
+    # build. The static plan still carries both lineages: the reuse is
+    # an adaptive runtime property of the executed plan, where AQE
+    # plans the second side as a ReusedExchange of the first side's
+    # band exchange (pinned in tests/test_plan_quality.py).
     banded = banded.repartition("band_id", "band_key")
-    # MERGE hint: without it the planner broadcast-builds one side
-    # (small size estimate), which re-runs the signature lineage and
-    # ignores the shared exchange; as a sort-merge join both sides'
-    # required distribution is already satisfied, so the second side
-    # plans as a ReusedExchange and the signatures compute ONCE
     a = banded.alias("a").hint("merge")
     b = banded.alias("b")
     return (

@@ -46,7 +46,7 @@ object stores:
   own files.
 
 Every artifact carries a metadata record (kind, dim, planes, tables,
-sig_kernel / seed, format version) written as a one-row JSON dataset
+seed, format version) written as a one-row JSON dataset
 next to the data. ``load_*`` validates it against what the caller
 expects and raises a descriptive error on drift — probing an index
 built at dim=64 with dim=128 queries, or mixing centroids trained
@@ -73,7 +73,6 @@ from workhop2_etl_spark.operators.similarity import (
     ivf_assign_blas,
     l2_norm,
     pq_decode,
-    pq_encode,
     pq_encode_blas,
     with_multitable_signatures,
     with_multitable_signatures_blas,
@@ -96,7 +95,7 @@ _IVF_POSTINGS_KIND = "ivf-postings"
 
 _META_SCHEMA = (
     "kind string, version int, dim int, num_planes int, num_tables int,"
-    " sig_kernel string, assign_kernel string, id_col string, seed long,"
+    " id_col string, seed long,"
     " n_centroids int, plane_scheme string, epoch int, store_dtype string,"
     " pq_m int, pq_k int, tokenizer string, tok_col string"
 )
@@ -225,7 +224,6 @@ def save_lsh_index(
     num_tables: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sig_kernel: str = "blas",
     store_dtype: str = "float64",
     mode: str = "error",
 ) -> dict:
@@ -242,8 +240,8 @@ def save_lsh_index(
     (table_id, sig) before the parquet write, so each file's row
     groups cluster whole buckets — parquet (table_id, sig) min/max
     stats then let a future point-probe prune at the scan, and the
-    probe join's input is already bucket-contiguous. ``sig_kernel``
-    defaults to the BLAS matmul build (the at-scale path; PERF.md r08
+    probe join's input is already bucket-contiguous. Signing runs the
+    BLAS matmul kernel, as every corpus-sized input does (PERF.md
     sigbuild table — 13× the expression fold at 400k vectors).
 
     Returns the metadata dict it wrote. ``mode`` is ``'overwrite'``
@@ -254,8 +252,8 @@ def save_lsh_index(
     _check_save_mode(mode)
     _reset_lifecycle_state(corpus.sparkSession, path, mode)
     _write_signed(
-        corpus, path, dim, num_planes, num_tables, id_col, vec_col,
-        sig_kernel, mode, store_dtype=store_dtype,
+        corpus, path, dim, num_planes, num_tables, id_col, vec_col, mode,
+        store_dtype=store_dtype,
     )
     meta = {
         "kind": _LSH_KIND,
@@ -263,7 +261,6 @@ def save_lsh_index(
         "dim": dim,
         "num_planes": num_planes,
         "num_tables": num_tables,
-        "sig_kernel": sig_kernel,
         "store_dtype": store_dtype,
         "id_col": id_col,
         "plane_scheme": "md5(plane:dim)[:8]/2^31 - 1",
@@ -281,22 +278,15 @@ def _write_signed(
     num_tables: int,
     id_col: str,
     vec_col: str,
-    sig_kernel: str,
     mode: str,
     data_dir: str | None = None,
     num_partitions: int | None = None,
     store_dtype: str = "float64",
 ) -> None:
-    if sig_kernel not in ("expr", "blas"):
-        raise ValueError(f"sig_kernel must be 'expr' or 'blas', got {sig_kernel!r}")
     if store_dtype not in ("float64", "int8"):
         raise ValueError(
             f"store_dtype must be 'float64' or 'int8', got {store_dtype!r}"
         )
-    signatures = (
-        with_multitable_signatures if sig_kernel == "expr"
-        else with_multitable_signatures_blas
-    )
     base = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if store_dtype == "int8":
         # the LSH relation stores the vector once per TABLE row (×L
@@ -308,7 +298,7 @@ def _write_signed(
         base = _int8_quantize(base)
     else:
         base = base.withColumn("norm", l2_norm(F.col("vec")))
-    signed = signatures(
+    signed = with_multitable_signatures_blas(
         base,
         "vec",
         dim,
@@ -345,7 +335,6 @@ def append_lsh_index(
     path: str,
     id_col: str | None = None,
     vec_col: str = "embedding",
-    sig_kernel: str | None = None,
 ) -> dict:
     """Incrementally GROW an existing index with newly-arrived corpus
     rows — the other half of the 100 TB lifecycle (an index is built
@@ -373,7 +362,6 @@ def append_lsh_index(
         int(meta["num_tables"]),
         id_col or meta["id_col"],
         vec_col,
-        sig_kernel or meta["sig_kernel"],
         "append",
         store_dtype=meta.get("store_dtype", "float64"),
     )
@@ -562,7 +550,6 @@ def save_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int | None = None,
-    assign_kernel: str = "blas",
     store_dtype: str = "float64",
     codebooks: list[tuple[int, int, list[float]]] | None = None,
     mode: str = "error",
@@ -602,11 +589,9 @@ def save_ivf_index(
     meaningful under the centroids that assigned them; a probe can
     never pair them with a drifted quantizer.
 
-    ``assign_kernel`` defaults to the BLAS matmul assignment (the
-    at-scale build path — ivf_assign_blas docstring; the measured
-    expression assignment at 20k×64d×64c ran 290s); pass 'expr' for
-    the oracle-reproducible expression twin. Recorded in metadata so
-    appends default to the geometry the artifact was built with.
+    Assignment and PQ encoding run the BLAS matmul kernels, as every
+    corpus-sized input does (ivf_assign_blas docstring; the expression
+    assignment at 20k×64d×64c ran 290s).
 
     ``mode`` is ``'overwrite'`` or ``'error'``/``'errorifexists'``; any
     other mode raises before anything is written. Returns the metadata
@@ -615,7 +600,7 @@ def save_ivf_index(
     spark = corpus.sparkSession
     _reset_lifecycle_state(spark, path, mode)
     _write_ivf_postings(
-        corpus, path, centroids, id_col, vec_col, assign_kernel, mode,
+        corpus, path, centroids, id_col, vec_col, mode,
         store_dtype=store_dtype, codebooks=codebooks, dim=dim,
     )
     _write_centroid_rows(spark, centroids, dim, f"{path}/centroids", mode)
@@ -625,7 +610,6 @@ def save_ivf_index(
         "dim": dim,
         "n_centroids": len(centroids),
         "id_col": id_col,
-        "assign_kernel": assign_kernel,
         "store_dtype": store_dtype,
         "epoch": 0,
     }
@@ -698,7 +682,6 @@ def _write_ivf_postings(
     centroids: list[tuple[int, list[float]]],
     id_col: str,
     vec_col: str,
-    assign_kernel: str,
     mode: str,
     data_dir: str | None = None,
     num_partitions: int | None = None,
@@ -706,18 +689,13 @@ def _write_ivf_postings(
     codebooks: list[tuple[int, int, list[float]]] | None = None,
     dim: int | None = None,
 ) -> None:
-    if assign_kernel not in ("expr", "blas"):
-        raise ValueError(
-            f"assign_kernel must be 'expr' or 'blas', got {assign_kernel!r}"
-        )
     if store_dtype not in ("float64", "int8", "pq8"):
         raise ValueError(
             f"store_dtype must be 'float64', 'int8' or 'pq8', got {store_dtype!r}"
         )
     if store_dtype == "pq8" and (codebooks is None or dim is None):
         raise ValueError("store_dtype='pq8' requires codebooks and dim")
-    assign = ivf_assign if assign_kernel == "expr" else ivf_assign_blas
-    assigned = assign(
+    assigned = ivf_assign_blas(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
         centroids,
         id_col="id",
@@ -725,12 +703,8 @@ def _write_ivf_postings(
     )
     if store_dtype == "pq8":
         # PQ tier: m small ints + one reconstruction norm per vector
-        # (see similarity.pq_encode) — the FAISS-IVFPQ disk model.
-        # assign_kernel doubles as the build kernel: 'blas' takes the
-        # matmul encoder (the expression encoder's m·k interpreted
-        # folds per row dominate a corpus-scale build)
-        encode = pq_encode if assign_kernel == "expr" else pq_encode_blas
-        assigned = encode(
+        # (see similarity.pq_encode) — the FAISS-IVFPQ disk model
+        assigned = pq_encode_blas(
             assigned, codebooks, dim, id_col="id", vec_col="vec",
             norm_col="norm", keep_cols=("centroid_id",),
         )
@@ -816,12 +790,10 @@ def append_ivf_index(
     path: str,
     id_col: str | None = None,
     vec_col: str = "embedding",
-    assign_kernel: str | None = None,
 ) -> dict:
     """Grow an existing IVF index with newly-arrived corpus rows,
     assigned under the artifact's OWN stored quantizer (the caller
-    cannot accidentally mix assignments from drifted centroids) with
-    its stored assignment kernel unless overridden.
+    cannot accidentally mix assignments from drifted centroids).
     Parquet-append + metadata epoch bump; id discipline and the
     single-writer contract are as ``append_lsh_index``."""
     spark = corpus_delta.sparkSession
@@ -839,7 +811,6 @@ def append_ivf_index(
         centroids,
         id_col or meta["id_col"],
         vec_col,
-        assign_kernel or meta.get("assign_kernel", "expr"),
         "append",
         store_dtype=store_dtype,
         codebooks=codebooks,
@@ -891,7 +862,6 @@ def retrain_ivf_index(
     seed: int = 42,
     max_iter: int = 20,
     sample_fraction: float | None = None,
-    assign_kernel: str = "blas",
     mode: str = "error",
 ) -> dict:
     """Rebuild the IVF index at ``src_path`` under a FRESHLY-TRAINED
@@ -944,7 +914,6 @@ def retrain_ivf_index(
         dim=int(meta["dim"]),
         id_col=meta["id_col"],
         seed=seed,
-        assign_kernel=assign_kernel,
         store_dtype=store_dtype,
         codebooks=meta.get("_codebooks"),
         mode=mode,

@@ -200,58 +200,44 @@ def with_hyperplane_signature(
     )
 
 
-def _ivf_cents_relation(spark: SparkSession, centroids):
-    """One-row broadcastable relation holding the sorted
-    (cid, cv, cn) centroid struct array — ``ivf_assign``'s broadcast
-    side, extracted (r13) so one search's corpus and query
-    assignments share a single broadcast build. Centroid norms fold
-    INSIDE the relation (not driver-side Python) so they are the
-    exact doubles the inline fold produced."""
-    rows = [(int(cid), [float(x) for x in vec]) for cid, vec in centroids]
-    cdf = local_relation(spark, rows, "cid int, cv array<double>").withColumn(
-        "cn", l2_norm(F.col("cv"))
-    )
-    return cdf.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cv", "cn"))).alias("__cents")
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     nprobe: int = 1,
-    _cents_rel: DataFrame | None = None,
 ) -> DataFrame:
     """IVF coarse quantization: assign every vector to its ``nprobe``
     nearest centroids (max cosine, centroid-id tiebreak).
 
-    ``centroids`` are (centroid_id, vector) pairs the caller obtained
-    from a bounded driver-side step (a sampled k-means, or — as in the
-    suite — a deterministic data subset). The centroid table rides as
-    a broadcast one-row array-of-structs relation (not plan literals —
-    same rationale as ``with_hyperplane_signature``); assignment is a
-    per-row argmin over that array, no shuffle. ``nprobe=1`` (the
-    indexing side) emits one row per vector; ``nprobe>1`` (the search
-    side's recall knob) emits one row per probed cell — sort the
-    per-centroid scores, slice the top p, explode. Ranking is a
-    lexicographic sort over (-cosine, cid) structs, identical to a
-    row_number ORDER BY score DESC, cid — reproducible across engines
-    because the cosine folds sequentially in double precision.
+    This is the query-side kernel: every search assigns its |Q|
+    queries here, while corpus-sized inputs take the row-identical
+    ``ivf_assign_blas``. ``centroids`` are (centroid_id, vector) pairs
+    the caller obtained from a bounded driver-side step (a sampled
+    k-means, or — as in the suite — a deterministic data subset). The
+    centroid table rides as a broadcast one-row array-of-structs
+    relation (not plan literals — same rationale as
+    ``with_hyperplane_signature``); assignment is a per-row argmin
+    over that array, no shuffle. ``nprobe=1`` emits one row per
+    vector; ``nprobe>1`` (the search side's recall knob) emits one
+    row per probed cell — sort the per-centroid scores, slice the top
+    p, explode. Ranking is a lexicographic sort over (-cosine, cid)
+    structs, identical to a row_number ORDER BY score DESC, cid —
+    reproducible across engines because the cosine folds sequentially
+    in double precision.
     """
     if nprobe < 1 or nprobe > len(centroids):
         raise ValueError(f"nprobe must be in [1, {len(centroids)}], got {nprobe}")
-    # r13: callers assigning BOTH sides with one centroid set (the
-    # in-session IVF searches) pass a prebuilt relation so the two
-    # assignments share ONE broadcast build instead of constructing
-    # (and broadcast-building) identical relations twice — identical
-    # local relations are separate plans, so exchange reuse never
-    # dedupes them.
+    rows = [(int(cid), [float(x) for x in vec]) for cid, vec in centroids]
+    # centroid norms fold inside the relation, not driver-side Python,
+    # so they are the exact doubles of the row-side fold
     one = (
-        _ivf_cents_relation(df.sparkSession, centroids)
-        if _cents_rel is None
-        else _cents_rel
+        local_relation(df.sparkSession, rows, "cid int, cv array<double>")
+        .withColumn("cn", l2_norm(F.col("cv")))
+        .agg(
+            F.sort_array(F.collect_list(F.struct("cid", "cv", "cn")))
+            .alias("__cents")
+        )
     )
     # min over (-score, cid): highest cosine, then smallest id. The
     # row's own norm is computed once, not once per centroid entry.
@@ -381,48 +367,27 @@ def topk_cosine_ivf(
     vec_col: str = "embedding",
     round_digits: int = 6,
     nprobe: int = 1,
-    assign_kernel: str = "expr",
 ) -> DataFrame:
     """IVF ANN: exact cosine within the query's ``nprobe`` nearest
     cells (the recall knob IVF indexes are actually tuned with).
 
-    Both sides quantize with the same centroids; the corpus is
-    indexed into exactly one cell, each query probes its ``nprobe``
-    nearest cells (exploded on the broadcast query side — mirrors the
-    LSH multi-probe shape: the corpus is never replicated). The
-    search stays an equi-join on centroid_id — shuffle ∝ probed-cell
+    Both sides quantize with the same centroids: the corpus through
+    ``ivf_assign_blas`` into exactly one cell, each query through the
+    expression ``ivf_assign`` into its ``nprobe`` nearest cells
+    (exploded on the broadcast query side — mirrors the LSH
+    multi-probe shape: the corpus is never replicated). The search
+    stays an equi-join on centroid_id — shuffle ∝ probed-cell
     populations (~nprobe/n_cells of the corpus per query), never the
     n×|Q| cross product. A (query, neighbor) pair matches in at most
     one cell (the neighbor lives in one cell; the probe set is
     distinct), so no dedup pass is needed.
-
-    ``assign_kernel``: ``'expr'`` (default — pure column expressions,
-    the oracle-reproducible variant) or ``'blas'`` (Arrow-batched
-    matmul assignment for the CORPUS side via ``ivf_assign_blas`` —
-    identical cells, the at-scale build path; queries always assign
-    with the expression kernel, |Q| is small by contract).
     """
-    if assign_kernel not in ("expr", "blas"):
-        raise ValueError(
-            f"assign_kernel must be 'expr' or 'blas', got {assign_kernel!r}"
-        )
-    # r13: one shared centroid relation for both sides' assignments
-    # (identical local relations never hit exchange reuse — each extra
-    # reference was a separate broadcast build)
-    cents_rel = _ivf_cents_relation(corpus.sparkSession, centroids)
-    c = (
-        ivf_assign(corpus, centroids, id_col, vec_col, _cents_rel=cents_rel)
-        if assign_kernel == "expr"
-        else ivf_assign_blas(corpus, centroids, id_col, vec_col)
-    ).select(
+    c = ivf_assign_blas(corpus, centroids, id_col, vec_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("__cvec"),
         F.col("centroid_id"),
     ).withColumn("__cn", l2_norm(F.col("__cvec")))
-    q = ivf_assign(
-        queries, centroids, id_col, vec_col, nprobe=nprobe,
-        _cents_rel=cents_rel,
-    ).select(
+    q = ivf_assign(queries, centroids, id_col, vec_col, nprobe=nprobe).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
         F.col("centroid_id"),
@@ -830,18 +795,15 @@ def topk_cosine_lsh_multitable(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_digits: int = 6,
-    sig_kernel: str = "expr",
 ) -> DataFrame:
     """Approximate top-k with MULTI-TABLE hyperplane LSH — the
     production recall configuration (FAISS/Annoy-style L independent
     tables OR'ed), vs ``topk_cosine_lsh``'s single table + optional
     Hamming probe.
 
-    ``sig_kernel``: ``'expr'`` (default — pure column expressions,
-    the oracle-reproducible variant) or ``'blas'`` (Arrow-batched
-    matmul signatures via ``with_multitable_signatures_blas`` —
-    identical output, ~10× the corpus-side signature throughput; the
-    default for new at-scale call sites).
+    The corpus signs through ``with_multitable_signatures_blas`` and
+    the queries through the expression ``with_multitable_signatures``
+    (identical signatures; the matmul kernel is the one that scales).
 
     Plan shape: corpus and queries each explode to L (table, sig)
     rows; the probe is an equi-join on (table_id, sig) with the query
@@ -856,15 +818,9 @@ def topk_cosine_lsh_multitable(
     recall as 1−(1−p^b)^L; planes-per-table divide bucket population
     (2^b buckets/table). b=6, L=8 at cosine-0.8 neighbors ≈ 0.90
     expected pair recall."""
-    if sig_kernel not in ("expr", "blas"):
-        raise ValueError(f"sig_kernel must be 'expr' or 'blas', got {sig_kernel!r}")
-    signatures = (
-        with_multitable_signatures if sig_kernel == "expr"
-        else with_multitable_signatures_blas
-    )
     # norms attach BEFORE the ×L signature explode so each row's
     # array fold runs once, not once per table
-    c = signatures(
+    c = with_multitable_signatures_blas(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
         ).withColumn("__cn", l2_norm(F.col("__cvec"))),
@@ -875,7 +831,7 @@ def topk_cosine_lsh_multitable(
         table_col="__ct",
         sig_col="__csig",
     )
-    q = signatures(
+    q = with_multitable_signatures(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
         ).withColumn("__qn", l2_norm(F.col("__qvec"))),
@@ -1099,8 +1055,6 @@ def pq_encode(
     codes_col: str = "codes",
     norm_col: str = "recon_norm",
     keep_cols: tuple[str, ...] = (),
-    recon_col: str | None = None,
-    _cb_rel=None,
 ) -> DataFrame:
     """PQ-encode every vector: ``codes[m] = argmin_j ‖x_m − c_mj‖²``
     (squared-L2 per subspace, ties to the smallest code id — the
@@ -1112,16 +1066,11 @@ def pq_encode(
     affordable (FAISS IVFPQ). Distances fold sequentially in float64,
     so codes are reproducible cross-engine.
 
-    ``recon_col`` (r13) additionally emits the reconstruction itself —
-    the same ``pq_decode`` expression the norm is computed from — so a
-    caller scoring against reconstructions (the recon-mode search)
-    doesn't pay a second codebook broadcast + decode projection.
-    ``_cb_rel`` (internal) shares a prebuilt ``_pq_codebook_relation``
-    with the caller for the same reason."""
-    spark = df.sparkSession
-    one, num_subspaces, k, dsub = (
-        _cb_rel if _cb_rel is not None
-        else _pq_codebook_relation(spark, codebooks, dim)
+    This is the reference encoder: every build and search encodes
+    through the row-identical ``pq_encode_blas``, which also drops
+    the non-finite vectors this fold would encode as valid codes."""
+    one, num_subspaces, k, dsub = _pq_codebook_relation(
+        df.sparkSession, codebooks, dim
     )
 
     def sub_dist(cw):
@@ -1146,19 +1095,14 @@ def pq_encode(
             )
         )["j"],
     )
-    staged = (
+    return (
         df.crossJoin(F.broadcast(one))
         .withColumn(codes_col, codes)
         .withColumn(norm_col, l2_norm(pq_decode(F.col(codes_col), "__cb", k)))
-    )
-    if recon_col is not None:
-        staged = staged.withColumn(
-            recon_col, pq_decode(F.col(codes_col), "__cb", k)
+        .select(
+            F.col(id_col), F.col(codes_col), F.col(norm_col),
+            *[F.col(c) for c in keep_cols],
         )
-    return staged.select(
-        F.col(id_col), F.col(codes_col), F.col(norm_col),
-        *([F.col(recon_col)] if recon_col is not None else []),
-        *[F.col(c) for c in keep_cols],
     )
 
 
@@ -1195,9 +1139,9 @@ def pq_encode_blas(
     self-neutralizes (its scores are NaN and lose every ranking),
     but PQ would encode it as a perfectly VALID codeword-0
     reconstruction that masquerades as a real neighbor; the
-    expression twin keeps that behavior (documented divergence) and
-    build paths default to this kernel, so corrupt embeddings never
-    reach a production index."""
+    expression twin keeps that behavior (documented divergence), and
+    every build and search encodes with this kernel, so corrupt
+    embeddings never reach an index or a ranking."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
@@ -1290,7 +1234,6 @@ def topk_cosine_ivf_pq(
     vec_col: str = "embedding",
     round_digits: int = 6,
     nprobe: int = 1,
-    assign_kernel: str = "expr",
     score_mode: str = "recon",
 ) -> DataFrame:
     """IVF-PQ ANN search: IVF cells bound the candidate set (exactly
@@ -1302,7 +1245,11 @@ def topk_cosine_ivf_pq(
     float (asymmetric distance — the standard, higher-recall PQ
     configuration). Reconstruction + the sequential cosine fold make
     scores cross-engine reproducible; the probe itself is the shared
-    ``_ivf_probe``.
+    ``_ivf_probe``. The corpus assigns and encodes through the BLAS
+    kernels (``ivf_assign_blas``, ``pq_encode_blas``), exactly as a
+    persisted ``pq8`` build does, so NULL, ragged and non-finite
+    vectors never become neighbors; queries assign through the
+    expression ``ivf_assign``.
 
     ``score_mode='adc'`` is the classic asymmetric-distance-
     computation variant: per query, the dot against every codeword
@@ -1312,34 +1259,18 @@ def topk_cosine_ivf_pq(
     to float addition order (the m partials sum in a hash
     aggregate), so ADC is the non-oracle performance path —
     tolerance-compared in pytest, measured in PERF.md."""
-    if assign_kernel not in ("expr", "blas"):
-        raise ValueError(
-            f"assign_kernel must be 'expr' or 'blas', got {assign_kernel!r}"
-        )
     if score_mode not in ("recon", "adc"):
         raise ValueError(
             f"score_mode must be 'recon' or 'adc', got {score_mode!r}"
         )
-    spark = corpus.sparkSession
-    # r13: the codebook relation and the centroid relation each build
-    # ONCE and are shared by every site that broadcasts them (encode +
-    # decode; corpus + query assignment) — identical driver-built
+    # one codebook relation, broadcast by both the encode and the
+    # decode (or the ADC lookup table): identical driver-built
     # relations are distinct plans, so exchange reuse never dedupes
-    # them and each extra reference was its own broadcast-build job.
-    cb_rel = _pq_codebook_relation(spark, codebooks, dim)
-    one, num_subspaces, kk, dsub = cb_rel
-    cents_rel = _ivf_cents_relation(spark, centroids)
-    corpus_assign = ivf_assign if assign_kernel == "expr" else ivf_assign_blas
-    encode = pq_encode if assign_kernel == "expr" else pq_encode_blas
-    assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col, _cents_rel=cents_rel)
-        if assign_kernel == "expr"
-        else corpus_assign(corpus, centroids, id_col, vec_col)
-    )
-    q = ivf_assign(
-        queries, centroids, id_col, vec_col, nprobe=nprobe,
-        _cents_rel=cents_rel,
-    ).select(
+    # them and each extra reference is its own broadcast build
+    cb_rel = _pq_codebook_relation(corpus.sparkSession, codebooks, dim)
+    one, _, _, dsub = cb_rel
+    assigned = ivf_assign_blas(corpus, centroids, id_col, vec_col)
+    q = ivf_assign(queries, centroids, id_col, vec_col, nprobe=nprobe).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qvec"),
         F.col("centroid_id"),
@@ -1348,7 +1279,7 @@ def topk_cosine_ivf_pq(
     if score_mode == "recon":
         # the encode emits the reconstruction alongside the norm — the
         # identical pq_decode expression, no second codebook broadcast
-        enc = encode(
+        enc = pq_encode_blas(
             assigned,
             codebooks,
             dim,
@@ -1365,7 +1296,7 @@ def topk_cosine_ivf_pq(
             F.col("recon_norm").alias("__cn"),
         )
         return _ivf_probe(c, q, k=k, round_digits=round_digits)
-    enc = encode(
+    enc = pq_encode_blas(
         assigned,
         codebooks,
         dim,
@@ -1456,7 +1387,6 @@ def topk_cosine_ivf_pq_refine(
     vec_col: str = "embedding",
     round_digits: int = 6,
     nprobe: int = 1,
-    assign_kernel: str = "expr",
     score_mode: str = "recon",
 ) -> DataFrame:
     """IVF-PQ search with an exact refine stage — FAISS's
@@ -1489,7 +1419,6 @@ def topk_cosine_ivf_pq_refine(
         vec_col=vec_col,
         round_digits=round_digits,
         nprobe=nprobe,
-        assign_kernel=assign_kernel,
         score_mode=score_mode,
     ).select("query_id", "neighbor_id")
     return _exact_rescore_candidates(

@@ -120,7 +120,6 @@ def ingest_epoch(
             int(meta["num_tables"]),
             id_col or meta["id_col"],
             vec_col,
-            meta.get("sig_kernel", "expr"),
             "overwrite",
             data_dir=staging,
             num_partitions=partitions_per_epoch,
@@ -175,7 +174,6 @@ def ingest_epoch(
             centroids,
             id_col or meta["id_col"],
             vec_col,
-            meta.get("assign_kernel", "expr"),
             "overwrite",
             data_dir=staging,
             num_partitions=partitions_per_epoch,

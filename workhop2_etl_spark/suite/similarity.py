@@ -487,7 +487,7 @@ def v9_topk_lsh_persisted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = io_dir("v9_lsh_index")
     IDX.save_lsh_index(
         emb, path, dim=DIM, num_planes=_MT_PLANES, num_tables=_MT_TABLES,
-        sig_kernel="blas", mode="overwrite",
+        mode="overwrite",
     )
     index, meta = IDX.load_lsh_index(
         spark, path, dim=DIM, num_planes=_MT_PLANES, num_tables=_MT_TABLES
