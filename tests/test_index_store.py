@@ -28,12 +28,17 @@ def _tmp(name: str) -> str:
     )
 
 
-def test_lsh_index_roundtrip_probe_identical(spark):
+@pytest.mark.parametrize("sig_kernel", ["expr", "blas"])
+def test_lsh_index_roundtrip_probe_identical(spark, sig_kernel):
     """save → load → probe ≡ the in-session topk_cosine_lsh_multitable
-    (vec/norm doubles round-trip parquet exactly)."""
+    (vec/norm doubles round-trip parquet exactly). The build signs with
+    the BLAS kernel; the persisted (id, table_id, sig) rows equal what
+    EITHER signature kernel assigns the corpus, so the probe — which
+    signs its queries with the expression kernel — meets the same
+    buckets whichever kernel is taken as the reference."""
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
-    path = _tmp("lsh_roundtrip")
+    path = _tmp(f"lsh_{sig_kernel}")
 
     meta = IDX.save_lsh_index(
         emb, path, dim=DIM, num_planes=6, num_tables=8, mode="overwrite",
@@ -42,6 +47,16 @@ def test_lsh_index_roundtrip_probe_identical(spark):
         spark, path, dim=DIM, num_planes=6, num_tables=8
     )
     assert loaded_meta == meta
+    sign = {
+        "expr": SIM.with_multitable_signatures,
+        "blas": SIM.with_multitable_signatures_blas,
+    }[sig_kernel]
+    want_sigs = sign(emb, "embedding", DIM, num_planes=6, num_tables=8)
+    assert sorted(
+        map(tuple, index.select("id", "table_id", "sig").collect())
+    ) == sorted(
+        map(tuple, want_sigs.select("vec_id", "table_id", "sig").collect())
+    )
     got = sorted(
         map(tuple, IDX.probe_lsh_index(index, loaded_meta, queries, k=3).collect())
     )
