@@ -1052,3 +1052,61 @@ def test_lexical_probe_collects_query_relation_once(spark, tmp_path):
     ran = [i for i in _sql_executions(spark) if i not in seen]
     assert len(ran) == 1, ran
     assert probe.collect()
+
+
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending into AQE's
+    final plan, its query stages and reused exchanges."""
+    yield node
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+    elif cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+    elif cls == "ReusedExchangeExec":
+        yield from _plan_nodes(node.child())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _output_rows(node) -> int:
+    return node.metrics().apply("numOutputRows").value()
+
+
+def test_fuzzy_fallback_tests_containment_over_distinct_haystacks(spark):
+    """The pipeline's fuzzy-match fallback evaluates the artist
+    containment over distinct values. In the executed (post-AQE) plan
+    its one nested-loop join builds on the distinct-haystack
+    relation (broadcast rows ≤ distinct artists_norm), and the
+    surviving pairs reach the spotify_top rows through a hash join on
+    artists_norm."""
+    import pandas as pd
+
+    from tests.fixtures_grammy import make_grammy, make_spotify
+    from workhop2_etl_spark.plans import grammy_spotify as P
+    from workhop2_etl_spark.plans.schemas import GRAMMY_SCHEMA, SPOTIFY_SCHEMA
+
+    gp, sp = make_grammy(), make_spotify()
+    g = spark.createDataFrame(gp.where(pd.notnull(gp), None), schema=GRAMMY_SCHEMA)
+    s = spark.createDataFrame(sp.where(pd.notnull(sp), None), schema=SPOTIFY_SCHEMA)
+    out = P.run_pipeline(g, s, mode="spec")
+    assert out.collect()
+    _final_plan(out)
+    n_hays = P.normalize_tables(g, s)[1].select("artists_norm").distinct().count()
+
+    nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+    bnlj = [n for n in nodes if n.getClass().getSimpleName() == "BroadcastNestedLoopJoinExec"]
+    assert len(bnlj) == 1, [n.simpleString(200) for n in bnlj]
+    (bnlj,) = bnlj
+    assert re.search(r"BuildRight, Inner, Contains\(artists_norm#\d+, __needle#\d+\)",
+                     bnlj.simpleString(200)), bnlj.simpleString(200)
+    build = [n for n in _plan_nodes(bnlj.right())
+             if n.getClass().getSimpleName() == "BroadcastExchangeExec"][0]
+    assert re.search(r"HashAggregate\(keys=\[artists_norm#\d+\]", build.treeString()), build.treeString()
+    assert 0 < _output_rows(build) <= n_hays, (_output_rows(build), n_hays)
+
+    back = [n.getClass().getSimpleName() for n in nodes
+            if n.getClass().getSimpleName().endswith("JoinExec")
+            and re.match(r"\w+ \[artists_norm#\d+\], \[artists_norm#\d+\]", n.simpleString(200))]
+    assert back and all(c in ("BroadcastHashJoinExec", "ShuffledHashJoinExec") for c in back), back

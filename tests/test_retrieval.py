@@ -10,6 +10,7 @@ stage is exhaustive.
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -1111,3 +1112,55 @@ def test_prf_expand_materializes_locally(spark):
         f"expected a driver-materialized relation, got:\n{plan}"
     )
     assert out.columns == ["query_id", "term"]
+
+
+def test_probe_vocabulary_crosses_py4j_once(spark, tmp_path, monkeypatch):
+    """The probe's term IN-list is built inside the JVM from one Arrow
+    vocabulary relation: building a probe over 1,000 query terms makes
+    no more py4j literal conversions than building it over 10, the
+    IN-list still reaches the posting scan, and the rows equal the
+    in-session ranking."""
+    import pyspark.sql.classic.column as CC
+
+    from workhop2_etl_spark.operators import retrieval as RETOP
+
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    corpus = docs.select(
+        "doc_id",
+        F.when(F.trim("text") == "", F.array().cast("array<string>"))
+        .otherwise(F.split(F.trim("text"), " "))
+        .alias("toks"),
+    )
+    path = str(tmp_path / "lex")
+    RETOP.save_lexical_index(corpus, path, mode="overwrite")
+    tf, df, stats, meta = RETOP.load_lexical_index(spark, path)
+
+    calls = {"n": 0}
+
+    def counting(wrapped):
+        def f(*a, **kw):
+            calls["n"] += 1
+            return wrapped(*a, **kw)
+        return f
+
+    monkeypatch.setattr(CC, "_create_column_from_literal", counting(CC._create_column_from_literal))
+    monkeypatch.setattr(F, "lit", counting(F.lit))
+
+    def build(n_terms: int):
+        real = ["apple", "banana", "date", "elephant"]
+        terms = real + [f"zz{i:04d}" for i in range(n_terms - len(real))]
+        qt = spark.createDataFrame(
+            [(i % 4, t) for i, t in enumerate(terms)], "query_id long, term string"
+        )
+        calls["n"] = 0
+        probe = RETOP.probe_lexical_index(tf, df, stats, meta, qt, k=10)
+        return probe, calls["n"], qt
+
+    _, n_small, _ = build(10)
+    large, n_large, qt = build(1000)
+    assert n_large == n_small, (n_small, n_large)
+    plan = large._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In\(term", plan), plan
+    got = large.collect()
+    want = RETOP.bm25_topk(corpus, qt, k=10).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and got

@@ -34,25 +34,8 @@ def argmax_dedupe(df: DataFrame, keys: list[str], order_by: list[Column]) -> Dat
     )
 
 
-def dedupe_full_rows(df: DataFrame) -> DataFrame:
-    """A6 — exact full-row dedup (`drop_duplicates()`, eda.ipynb cell 12).
-    Spark's dropDuplicates is a hash aggregate over all columns —
-    partial+final, no sort."""
-    return df.dropDuplicates()
-
-
 def key_duplicate_rows(df: DataFrame, keys: list[str], count_col: str = "n_per_key") -> DataFrame:
     """A7 — rows whose key appears more than once (`duplicated(keep=False)`,
     eda.ipynb cell 13), with the per-key count attached."""
     w = Window.partitionBy(*keys)
     return df.withColumn(count_col, F.count(F.lit(1)).over(w)).filter(F.col(count_col) > 1)
-
-
-def duplicate_count(df: DataFrame) -> DataFrame:
-    """A4 — scalar full-row duplicate count (`duplicated().sum()`).
-    count(*) - count(distinct *) without collecting anything."""
-    total = df.agg(F.count(F.lit(1)).alias("n_rows"))
-    distinct = df.dropDuplicates().agg(F.count(F.lit(1)).alias("n_distinct"))
-    return total.crossJoin(distinct).select(
-        "n_rows", (F.col("n_rows") - F.col("n_distinct")).alias("n_full_dups")
-    )

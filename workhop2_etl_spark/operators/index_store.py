@@ -583,8 +583,9 @@ def save_ivf_index(
     scan plus a k-way argmin per row). At 100 TB the assignment IS
     the expensive half, so the production posture (FAISS IVF on disk)
     stores the posting lists: one row per vector — id, vector, its
-    L2 norm, centroid_id — clustered by centroid_id so a probe scans
-    only the probed cells (parquet min/max stats prune at the scan).
+    L2 norm, centroid_id — hash-partitioned on centroid_id and sorted
+    within each file. Every file spans most cells, so the probe's cell
+    filter drops rows during the scan but skips no file.
     The quantizer rides inside the artifact because postings are only
     meaningful under the centroids that assigned them; a probe can
     never pair them with a drifted quantizer.
@@ -2105,11 +2106,6 @@ def _read_meta_any_kind(
             f"{allowed} indexes {verb}"
         )
     return meta
-
-
-def _delete_dir(spark: SparkSession, path: str) -> None:
-    fs, hpath = fs_and_path(spark, path)
-    fs.delete(hpath, True)
 
 
 def probe_ivf_index(

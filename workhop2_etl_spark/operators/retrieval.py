@@ -381,9 +381,10 @@ def save_lexical_index(
     num_partitions: int | None = None,
 ) -> dict:
     """Build the BM25 posting relation and persist the index at
-    ``path``: ``tf`` (doc_id, term, tf, dl — repartitioned and sorted
-    by term, so a point-probe's term IN-list prunes whole files via
-    parquet min/max stats), ``df`` (per-epoch (term, df) partials),
+    ``path``: ``tf`` (doc_id, term, tf, dl — hash-repartitioned on
+    term and sorted within each file, so every file spans most of the
+    term range and a probe's term IN-list filters rows, not files),
+    ``df`` (per-epoch (term, df) partials),
     ``stats`` (per-epoch (n_docs, sum_dl) partials), and the metadata
     record. ``tokenizer`` is a free-form contract string recorded so
     a probe pipeline can refuse an index tokenized under another
@@ -654,8 +655,10 @@ def lexical_index_stats(
 def _lexical_compact_specs(tombstones: DataFrame | None = None):
     """Per-dir compaction specs for ``index_store.compact_index``:
     (subdir, cluster keys, optional transform, fold-to-one flag). tf
-    re-clusters by term (so IN-list min/max pruning skips whole files
-    again) and, when deletes are pending, PURGES tombstoned docs; df
+    re-clusters by term (hash-partitioned, sorted within each file:
+    term ranges of the files still overlap, so the probe's IN-list
+    prunes no file) and, when deletes are pending, PURGES tombstoned
+    docs; df
     and stats FOLD their per-epoch signed partials into one net
     record (append partials positive, delete partials negative — the
     loader aggregates either way, so the fold is load-equivalent
@@ -684,6 +687,19 @@ def _lexical_compact_specs(tombstones: DataFrame | None = None):
     ]
 
 
+def _term_in(spark, vocab: list[str]) -> Column:
+    """``term IN (vocab)``, built inside the JVM. The vocabulary crosses
+    py4j once, as the one array cell of an Arrow ``LocalRelation``,
+    whose rows the plan holds, so reading it back runs no query; the
+    JVM turns that array into the IN-list. ``Column.isin`` would
+    convert every term to a literal in its own py4j call."""
+    jvm = spark._jvm
+    rel = local_relation(spark, [(vocab,)], "terms array<string>")
+    cell = rel._jdf.queryExecution().analyzed().data().apply(0).getArray(0)
+    terms = cell.toObjectArray(jvm.org.apache.spark.sql.types.DataTypes.StringType)
+    return Column(F.col("term")._jc.isInCollection(jvm.java.util.Arrays.asList(terms)))
+
+
 def probe_lexical_index(
     tf: DataFrame,
     df: DataFrame,
@@ -704,10 +720,11 @@ def probe_lexical_index(
 
     The query vocabulary collects to the driver (bounded loudly at
     ``max_terms`` — query terms are dimension-sized by contract) and
-    becomes an IN-list filter on the posting scan: the tf relation is
-    term-clustered on disk, so parquet min/max stats skip every file
-    holding no query term — the probe reads a vocabulary-sized slice
-    of a corpus-sized artifact.
+    becomes an IN-list filter pushed into the posting scan. It drops
+    non-query terms' rows during the scan; it does not skip files,
+    because the tf files are hash-partitioned on term and each spans
+    most of the term range, so the probe still reads the whole
+    artifact.
 
     ``max_df`` (r11, OFF by default — the default path stays
     oracle-exact and unpruned) bounds the probe's candidate volume
@@ -787,8 +804,9 @@ def probe_lexical_index(
                 "if this is intentional"
             )
         vocab = [r.term for r in vocab_rows]
-    tf_v = tf.filter(F.col("term").isin(vocab))
-    df_v = df.filter(F.col("term").isin(vocab))
+    term_in = _term_in(tf.sparkSession, vocab)
+    tf_v = tf.filter(term_in)
+    df_v = df.filter(term_in)
     if max_df is None:
         # the unpruned path references df/stats ONCE each — their lazy
         # broadcast builds overlap the final action's other stages
@@ -1095,9 +1113,9 @@ def probe_lexical_index_prf(
     twin of ``bm25_prf_expand`` + second ``bm25_topk`` pass, and the
     100 TB answer to the two-pass cost: the corpus-sized tf
     aggregation is paid ONCE at build time; pass 1 and pass 2 are
-    both ``probe_lexical_index`` probes of the artifact, each reading
-    only the vocabulary-pruned (IN-list pushed-down, term-clustered)
-    posting slice for its query terms, and the harvest between them
+    both ``probe_lexical_index`` probes of the artifact, each keeping
+    only its query terms' postings (IN-list pushed into the scan), and
+    the harvest between them
     joins the broadcast |Q|·n_feedback feedback-doc list against the
     SAME artifact tf relation (map-side — the feedback docs' postings
     only). No relation in the whole loop is corpus-shuffled.

@@ -63,15 +63,6 @@ def stopword_ratio(c: Column, stopwords: list[str] | None = None) -> Column:
     return F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def mean_token_len(c: Column) -> Column:
-    """Average token length — flags boilerplate/garbage (very long or
-    very short means)."""
-    toks = tokens(c)
-    n = F.size(toks)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
 def quality_score(c: Column) -> Column:
     """Composite [0,1] heuristic: length band + punctuation sanity +
     stopword presence. Deterministic, expression-only; the weights
@@ -98,19 +89,6 @@ LANG_PROFILES: dict[str, list[str]] = {
     "de": ["der", "die", "das", "und", "ist", "ein", "eine", "zu", "den", "von"],
     "zh": ["的", "了", "是", "我", "不", "在", "有", "人", "这", "他"],
 }
-
-
-def lang_scores(c: Column) -> list[Column]:
-    """One score column per language (hit-fraction of tokens)."""
-    toks = tokens(F.lower(c))
-    n = F.size(toks)
-    out = []
-    for lang, words in LANG_PROFILES.items():
-        prof = F.array(*[F.lit(w) for w in words])
-        hits = F.size(F.filter(toks, lambda t: F.array_contains(prof, t)))
-        score = F.when(n > 0, hits.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-        out.append(F.round(score, 6).alias(f"score_{lang}"))
-    return out
 
 
 def lang_id(c: Column) -> Column:
@@ -146,22 +124,6 @@ def fingerprint(c: Column) -> Column:
     fingerprint regardless of case/spacing — the exact-dedup key."""
     normed = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
     return F.md5(normed)
-
-
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full analysis profile to a documents table."""
-    c = F.col(text_col)
-    return df.select(
-        "*",
-        token_count(c).alias("n_tokens"),
-        bpeish_token_count(c).alias("n_bpeish"),
-        F.round(punct_ratio(c), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(c), 6).alias("stopword_ratio"),
-        F.round(mean_token_len(c), 6).alias("mean_token_len"),
-        quality_score(c).alias("quality"),
-        lang_id(c).alias("lang_pred"),
-        fingerprint(c).alias("fingerprint"),
-    )
 
 
 # ---------------------------------------------------------------------------

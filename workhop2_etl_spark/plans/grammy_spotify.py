@@ -212,7 +212,9 @@ def match_songs(grammy: DataFrame, spotify_top: DataFrame, mode: str = "spec") -
     Pass 1: artists contain the grammy artist AND track title equals
     the nominee (equality arm → hash join). Pass 2 (misses only):
     artists contain the artist AND track title contains the nominee's
-    pre-'(' prefix (theta arm → broadcast NLJ). Best match = highest
+    pre-'(' prefix (theta arm: the artist containment runs as a
+    broadcast NLJ over distinct values, the title check on the
+    surviving candidates). Best match = highest
     popularity. Unmatched rows keep NULL enrichment. Output rows ==
     input rows (left-join conservation).
 
@@ -224,17 +226,18 @@ def match_songs(grammy: DataFrame, spotify_top: DataFrame, mode: str = "spec") -
     g = grammy.withColumn("__song_prefix", clean.prefix_before(F.col("nominee_norm")))
 
     if mode == "strict":
-        artist_cond = F.col("artists_norm").contains(F.col("artist_norm"))
+        needle = F.col("artist_norm")
         prefix_cond = F.col("track_name_norm").contains(F.col("__song_prefix"))
     else:
+        # a vacuous artist searches for '', which every artists_norm
+        # (never NULL: normalize_tables coalesces) contains
         vacuous = F.col("artist_norm").isin("", "unknown", "nan")
-        artist_cond = F.when(vacuous, F.lit(True)).otherwise(
-            F.col("artists_norm").contains(F.col("artist_norm"))
-        )
+        needle = F.when(vacuous, F.lit("")).otherwise(F.col("artist_norm"))
         prefix_cond = (F.col("__song_prefix") != "") & F.col("track_name_norm").contains(
             F.col("__song_prefix")
         )
 
+    artist_cond = F.col("artists_norm").contains(needle)
     exact = artist_cond & (F.col("track_name_norm") == F.col("nominee_norm"))
     fallback = artist_cond & prefix_cond
 
@@ -263,6 +266,9 @@ def match_songs(grammy: DataFrame, spotify_top: DataFrame, mode: str = "spec") -
         # the match depends only on the normalized keys — grammy rows
         # sharing (artist, nominee) resolve once.
         probe_keys=["artist_norm", "nominee_norm", "__song_prefix"],
+        # artist_cond is a conjunct of the fallback: pass 2 tests it
+        # over distinct (needle, artists_norm) values, then the titles.
+        fallback_contains=("artists_norm", needle),
     )
     return enriched.drop("__song_prefix")
 

@@ -269,9 +269,3 @@ def _events_ts_is_nanos(spark: SparkSession, path: str) -> bool:
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """All testdata tables as a dict of lazy DataFrames."""
     return {t: load_table(spark, sf_dir, t) for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

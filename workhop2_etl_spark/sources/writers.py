@@ -1,14 +1,16 @@
-"""Sink writers — SURVEY.md §2.1 (S4–S7).
+"""Sink writers — SURVEY.md §2.1 (S4–S6).
 
 All writers are partitioned-write capable (the reference writes
 single CSV files from one process — dags/etl_grammy_spotify.py:326);
 ``single_file`` exists only for byte-level parity with it and must
 never be used at scale.
+
+S7, the reference's Google Drive upload of its final CSV
+(dags/etl_grammy_spotify.py:332-359), is driver-side work on the
+written path, not a Spark concern: it is left to the caller.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -84,27 +86,3 @@ def write_jdbc(
         .mode(mode)
         .save()
     )
-
-
-#: S7 — the reference uploads its final CSV to Google Drive via OAuth2
-#: (dags/etl_grammy_spotify.py:332-359). That is driver-side post-write
-#: work, not a Spark concern: the engine exposes it as a pluggable hook
-#: invoked with the written path. The default hook is a stub (the
-#: google-api libs are not part of the engine's footprint).
-PostWriteHook = Callable[[str], None]
-
-
-def noop_post_write(path: str) -> None:  # pragma: no cover - trivial
-    """Default S7 hook: do nothing (tests and local runs)."""
-
-
-def write_csv_with_hook(
-    df: DataFrame,
-    path: str,
-    hook: PostWriteHook = noop_post_write,
-    **kwargs,
-) -> None:
-    """S4 + S7 — write CSV, then hand the path to the export hook
-    (Drive upload in the reference; stubbed here)."""
-    write_csv(df, path, **kwargs)
-    hook(path)
