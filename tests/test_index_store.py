@@ -1982,3 +1982,103 @@ def test_meta_driver_side_io_roundtrip_and_compat(spark):
 
     with pytest.raises(ValueError, match="no readable index metadata"):
         IDX._read_meta(spark, _tmp("meta_never_written"), "ivf-postings")
+
+
+def test_delete_labels_that_prefix_each_other_stay_independent(spark):
+    """A delete batch owns exactly the files of its own label: labels
+    that prefix each other ('b' of 'b-2', 'auto' of the 'auto-NNNNNN'
+    defaults) never replay-clean, hide or changelog each other's
+    files."""
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    corpus = _lex_corpus(spark, n=40).filter(F.size("toks") > 0)
+    ids = sorted(r.doc_id for r in corpus.select("doc_id").collect())
+    path = _tmp("lex_label_prefix")
+    RET.save_lexical_index(corpus, path, mode="overwrite", num_partitions=1)
+
+    def live():
+        tf, _, stats, _ = RET.load_lexical_index(spark, path)
+        docs = {r.doc_id for r in tf.select("doc_id").distinct().collect()}
+        assert stats.collect()[0].n_docs == len(docs)
+        return docs
+
+    # (a) a later 'b' neither undoes nor changelogs the committed 'b-2'
+    assert IDX.delete_from_index(spark, path, [ids[0]], batch="b-2") == "committed"
+    assert IDX.delete_from_index(spark, path, [ids[1]], batch="b") == "committed"
+    assert live() == set(ids) - {ids[0], ids[1]}
+    assert IDX.check_index(spark, path).collect()[0].consistent
+    assert {(r.commit_seq, r.doc_id) for r in
+            IDX.index_changes(spark, path).collect()} == {(1, ids[0]), (2, ids[1])}
+
+    # (b) an uncommitted 'b' hides only its own files, not 'b-2''s
+    os.remove(f"{path}/ledger/delete-b")
+    assert live() == set(ids) - {ids[0]}
+    row = IDX.check_index(spark, path).collect()[0]
+    assert row.consistent and row.n_uncommitted_batches == 1
+    assert IDX.delete_from_index(spark, path, [ids[1]], batch="b") == "committed"
+
+    # (c) an explicit 'auto' leaves the auto-labelled batches alone
+    assert IDX.delete_from_index(spark, path, [ids[2]]) == "committed"
+    assert IDX.delete_from_index(spark, path, [ids[3]]) == "committed"
+    assert IDX.delete_from_index(spark, path, [ids[4]], batch="auto") == "committed"
+    assert live() == set(ids) - set(ids[:5])
+    assert IDX.check_index(spark, path).collect()[0].consistent
+
+
+def test_mixed_crash_state_hides_exactly_the_uncommitted_batches(spark):
+    """One artifact holding a crashed delete batch, a crashed stream
+    epoch, a committed batch of each kind, a legacy empty marker and
+    the stream's checkpoint binding: readers hide exactly the crashed
+    batches' files, check_index counts both, index_changes skips the
+    binding, and as_of treats the legacy marker as always visible."""
+    from workhop2_etl_spark.operators import ledger
+    from workhop2_etl_spark.operators import retrieval as RET
+    from workhop2_etl_spark.streaming import index_stream as IS
+
+    corpus = _lex_corpus(spark, n=160).filter(F.size("toks") > 0)
+    part = lambda r: corpus.filter(F.col("doc_id") % 4 == r)  # noqa: E731
+    docs = lambda d: {r.doc_id for r in d.select("doc_id").collect()}  # noqa: E731
+    path = _tmp("lex_mixed_crash")
+    RET.save_lexical_index(part(0), path, mode="overwrite", num_partitions=1)
+    assert IS.ingest_epoch(spark, part(1), 0, path, vec_col="toks") == "committed"
+    kept = sorted(docs(part(0)))[:3]
+    assert IDX.delete_from_index(spark, path, kept, batch="kept") == "committed"
+    assert IS.ingest_epoch(spark, part(2), 1, path, vec_col="toks") == "committed"
+    os.remove(f"{path}/ledger/epoch-{1:012d}")        # crashed stream epoch
+    os.makedirs(f"{path}/ingest.epoch-{1:012d}")      # ... and its staging
+    crashed = sorted(docs(part(1)))[:3]
+    assert IDX.delete_from_index(spark, path, crashed, batch="crashed") == "committed"
+    os.remove(f"{path}/ledger/delete-crashed")        # crashed delete batch
+    open(f"{path}/ledger/_stream-0123456789ab", "w").close()
+
+    crashed_prefixes = (f"stream-{1:012d}-", "delete-crashed-")
+    for sub in ("tf", "df", "stats", "tombstones"):
+        names = sorted(
+            f for f in os.listdir(f"{path}/{sub}")
+            if not f.startswith((".", "_"))
+        )
+        files, _ = ledger.visible_files(spark, path, sub)
+        assert sorted(os.path.basename(f) for f in files) == [
+            f for f in names if not f.startswith(crashed_prefixes)
+        ]
+    want = (docs(part(0)) | docs(part(1))) - set(kept)
+    tf, _, stats, _ = RET.load_lexical_index(spark, path)
+    assert {r.doc_id for r in tf.select("doc_id").distinct().collect()} == want
+    assert stats.collect()[0].n_docs == len(want)
+
+    row = IDX.check_index(spark, path).collect()[0]
+    assert row.consistent
+    assert row.n_uncommitted_batches == 2 and row.n_orphan_staging == 1
+    assert {(r.commit_seq, r.op) for r in IDX.index_changes(spark, path).collect()} == {
+        (1, "insert"), (2, "delete")
+    }
+
+    # a legacy empty marker is committed at an unknown point: visible
+    # under any as_of, while the sequenced 'kept' delete hides at 0
+    mark = f"{path}/ledger/epoch-{0:012d}"
+    os.remove(mark)
+    open(mark, "w").close()
+    tf0, _, _, _ = RET.load_lexical_index(spark, path, as_of=0)
+    assert {r.doc_id for r in tf0.select("doc_id").distinct().collect()} == (
+        docs(part(0)) | docs(part(1))
+    )

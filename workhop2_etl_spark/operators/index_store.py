@@ -77,10 +77,14 @@ from workhop2_etl_spark.operators.similarity import (
     with_multitable_signatures,
     with_multitable_signatures_blas,
 )
+from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.session import arrow_table, local_relation
 from workhop2_etl_spark.sources.fs import (
     data_files,
+    delete,
     fs_and_path,
+    join,
+    list_child_dirs,
     read_bytes,
     read_parquet,
     write_bytes,
@@ -92,6 +96,8 @@ FORMAT_VERSION = 1
 _LSH_KIND = "multitable-hyperplane-lsh"
 _IVF_KIND = "ivf-centroids"
 _IVF_POSTINGS_KIND = "ivf-postings"
+# the data dirs a ledgered batch renames its files into
+_BATCH_SUBS = ("tf", "df", "stats", "index", "tombstones")
 
 _META_SCHEMA = (
     "kind string, version int, dim int, num_planes int, num_tables int,"
@@ -1026,194 +1032,83 @@ def _gated_or_raise(
     return rel
 
 
-def _commit_marker(fs, marker, seq: int) -> None:
-    """Create a ledger marker carrying its COMMIT SEQUENCE (the
-    metadata epoch the committing batch is about to write) as file
-    content — the total order that makes ``as_of`` snapshot reads
-    possible. Marker EXISTENCE is still the atomic commit signal
-    (create-then-write; a crash between them leaves an existing,
-    empty marker = committed with unknown seq, which snapshot reads
-    treat as always-visible — the pre-r12 marker format)."""
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(str(int(seq)).encode("ascii")))
-    finally:
-        out.close()
-
-
-def _marker_seq(fs, marker) -> int | None:
-    """The commit sequence recorded in a ledger marker, or None for
-    legacy/empty markers (always-visible under ``as_of``)."""
-    try:
-        stream = fs.open(marker)
-    except Exception:  # noqa: BLE001 — racing delete; treat as legacy
-        return None
-    try:
-        data = bytearray()
-        b = stream.read()
-        while b != -1 and len(data) < 32:
-            data.append(b)
-            b = stream.read()
-    finally:
-        stream.close()
-    try:
-        return int(bytes(data)) if data else None
-    except ValueError:
-        return None
-
-
 def _ledger_gated_parquet(
     spark: SparkSession, path: str, sub: str, as_of: int | None = None
 ):
     """Parquet relation at ``<path>/<sub>`` with UNCOMMITTED ledgered
-    batches hidden — the artifact's reader-side MVCC. Two mutators
-    rename multi-file batches into live dirs and only then create a
-    ledger marker (one atomic ``createNewFile``), so the marker is
-    each batch's reader-visible commit point:
-
-    - ``delete_from_index``: ``delete-<batch>-NNNNN.parquet`` across
-      up to three dirs, marker ``ledger/delete-<batch>``;
-    - ``ingest_epoch`` (streaming): ``stream-<epoch:012d>-NNNNN
-      .parquet`` across the kind's dirs, marker
-      ``ledger/epoch-<epoch:012d>``.
-
-    Files whose marker is absent (a crashed or, under a racing
-    reader, still-in-flight batch) are excluded, which makes the
-    rename sequence invisible to readers REGARDLESS of rename order:
-    a reader never sees decremented stats with the victims' tf rows
-    still visible (delete), nor an epoch's tf rows without its
-    df/stats partials (stream ingest) — r12, generalizing the r11
-    delete-window advice to every ledgered batch. Batch appends
+    batches hidden — the artifact's reader-side MVCC. A delete batch
+    or a stream epoch becomes visible at its ledger marker
+    (operators/ledger.py), so a reader racing the renames, or loading
+    after a mid-rename crash, never sees decremented stats with the
+    victims' tf rows still visible (delete), nor an epoch's tf rows
+    without its df/stats partials (stream ingest). Batch appends
     (``append_*``) are NOT ledgered and keep their documented
-    single-writer/stop-the-world contract. When no batch is hidden
-    the plain directory read is used (identical scan, partition
-    discovery and parquet pushdown). Returns None when the directory
-    is missing or nothing is visible.
+    single-writer/stop-the-world contract. When no file is hidden the
+    plain directory read is used (identical scan, partition discovery
+    and parquet pushdown). Returns None when the directory is missing
+    or nothing is visible.
 
-    ``as_of`` (r12 — SNAPSHOT READS): additionally hide committed
-    batches whose marker records a commit sequence GREATER than
-    ``as_of`` — the load then reconstructs the artifact exactly as it
-    stood after commit ``as_of`` (each marker carries the metadata
-    epoch its batch wrote, a total order under the single-writer
-    contract; see ``_commit_marker``). Legacy/empty markers carry no
-    sequence and stay visible under any ``as_of``. History reaches
-    back to the last ``compact_index`` (compaction folds batches into
-    base files, physically — the Delta-VACUUM analog) and does not
-    cover un-ledgered batch appends."""
-    fs, p = fs_and_path(spark, f"{path}/{sub}")
-    if not fs.exists(p):
-        return None
-    files = [
-        st.getPath()
-        for st in fs.listStatus(p)
-        if st.isFile() and not st.getPath().getName().startswith((".", "_"))
-    ]
+    ``as_of`` (SNAPSHOT READS): additionally hide committed batches
+    whose marker records a commit sequence GREATER than ``as_of`` —
+    the load then reconstructs the artifact exactly as it stood after
+    commit ``as_of`` (each marker carries the metadata epoch its batch
+    wrote, a total order under the single-writer contract). Markers
+    without a sequence stay visible under any ``as_of``. History
+    reaches back to the last ``compact_index`` (compaction folds
+    batches into base files, physically — the Delta-VACUUM analog) and
+    does not cover un-ledgered batch appends."""
+    files, hid = ledger.visible_files(spark, path, sub, as_of)
     if not files:  # e.g. a replay swept a crashed batch's files
         return None
-    markers = set()  # required ledger marker names
-    for f in files:
-        name = f.getName()
-        if not name.endswith(".parquet"):
-            continue
-        if name.startswith("delete-"):
-            batch = name[len("delete-"):-len(".parquet")].rsplit("-", 1)[0]
-            markers.add(f"delete-{batch}")
-        elif name.startswith("stream-"):
-            epoch = name[len("stream-"):-len(".parquet")].rsplit("-", 1)[0]
-            markers.add(f"epoch-{epoch}")
-    hidden = set()
-    for m in markers:
-        _, marker = fs_and_path(spark, f"{path}/ledger/{m}")
-        kind, _, tag = m.partition("-")
-        prefix = ("delete-" if kind == "delete" else "stream-") + tag + "-"
-        if not fs.exists(marker):
-            hidden.add(prefix)
-        elif as_of is not None:
-            seq = _marker_seq(fs, marker)
-            if seq is not None and seq > as_of:
-                hidden.add(prefix)
-    if not hidden:
-        return spark.read.parquet(f"{path}/{sub}")
-    visible = [
-        str(f) for f in files
-        if not any(f.getName().startswith(h) for h in hidden)
-    ]
-    if not visible:
-        return None
-    return spark.read.parquet(*visible)
+    if hid:
+        return spark.read.parquet(*files)
+    return spark.read.parquet(f"{path}/{sub}")
 
 
-def _sweep_uncommitted_delete_batches(spark: SparkSession, path: str) -> int:
-    """Physically remove every uncommitted delete batch's files
-    (ledger marker absent — see ``_ledger_gated_parquet``; such a
-    batch was never reader-visible and its ``delete_from_index`` call
-    never returned 'committed'). ``compact_index`` runs this before
-    reading any data dir so a crashed batch's negative partials can
-    never fold into the compacted layout; the batch's replay (same
-    label) restages from post-compaction live state. Single-writer by
-    contract, like every mutator here. Returns files removed."""
-    fs, _ = fs_and_path(spark, path)
-    removed = 0
-    for sub in ("tombstones", "df", "stats"):
-        _, d = fs_and_path(spark, f"{path}/{sub}")
-        if not fs.exists(d):
-            continue
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if not (
-                st.isFile()
-                and name.startswith("delete-")
-                and name.endswith(".parquet")
-            ):
-                continue
-            batch = name[len("delete-"):-len(".parquet")].rsplit("-", 1)[0]
-            _, marker = fs_and_path(spark, f"{path}/ledger/delete-{batch}")
-            if not fs.exists(marker):
-                fs.delete(st.getPath(), False)
-                removed += 1
-        if sub == "tombstones" and not any(
-            st.isFile() and not st.getPath().getName().startswith((".", "_"))
-            for st in fs.listStatus(d)
-        ):  # only delete batches ever populate it — drop the husk
-            fs.delete(d, True)
-    return removed
+def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
+    """Bring the ledger to a state ``compact_index`` may fold.
+    Compaction reads data dirs DIRECTLY (not through the marker-gated
+    loader — it rewrites whole dirs), so:
 
+    - an UNCOMMITTED stream epoch (renamed files or a staging dir
+      without a marker) stops it: its renamed rows would fold into the
+      compacted files, where the epoch's replay would duplicate them.
+      The replay assumes its own renamed files are the only copies, so
+      sweeping them could race a concurrent resume; the stream must
+      converge first;
+    - an uncommitted delete batch's files are swept: they were never
+      reader-visible, and its replay (same label) restages from the
+      post-compaction live state;
+    - a committed epoch's leftover staging (crash between marker and
+      sweep) is swept.
 
-def _assert_no_uncommitted_stream_files(spark: SparkSession, path: str) -> None:
-    """Refuse to compact over unmarked ``stream-<epoch>-*`` files.
-    ``compact_index`` reads data dirs DIRECTLY (not through the
-    marker-gated loader — it must rewrite whole dirs), so an epoch
-    that crashed mid-rename AND lost its staging dir (the normal
-    crash leaves staging behind and is caught by the existing
-    ingest.epoch-* guard) would otherwise fold reader-invisible rows
-    into the compacted files, where the epoch's replay would then
-    duplicate them. Unlike a delete batch — whose replay restages
-    from live state, so compact sweeps it — a stream epoch's replay
-    assumes its own renamed files are the only copies; sweeping could
-    race a concurrent resume, so the stream must converge first."""
-    for sub in ("tf", "df", "stats", "index"):
-        fs, d = fs_and_path(spark, f"{path}/{sub}")
-        if not fs.exists(d):
-            continue
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if not (
-                st.isFile()
-                and name.startswith("stream-")
-                and name.endswith(".parquet")
-            ):
-                continue
-            epoch = name[len("stream-"):-len(".parquet")].rsplit("-", 1)[0]
-            _, marker = fs_and_path(spark, f"{path}/ledger/epoch-{epoch}")
-            if not fs.exists(marker):
-                raise ValueError(
-                    f"index at {path} has files from an UNCOMMITTED stream "
-                    f"epoch ({sub}/{name}; marker ledger/epoch-{epoch} "
-                    "absent) — resume the stream to convergence (or remove "
-                    "the epoch's stream-* files if the stream is abandoned) "
-                    "before compacting, else the epoch's replay would "
-                    "duplicate rows"
-                )
+    Single-writer by contract, like every mutator here."""
+    pending = ledger.uncommitted(spark, path, _BATCH_SUBS)
+    for b, files in pending.items():
+        if b.kind == ledger.STREAM:
+            raise ValueError(
+                f"index at {path} has files from an UNCOMMITTED stream "
+                f"epoch ({files[0]}; marker ledger/{b.marker} absent) — "
+                "resume the stream to convergence (or remove the epoch's "
+                "files if the stream is abandoned) before compacting, else "
+                "the epoch's replay would duplicate rows"
+            )
+    staged = [b for b in ledger.staging_dirs(spark, path) if b.kind == ledger.STREAM]
+    for b in staged:
+        if not ledger.committed(spark, path, b):
+            raise ValueError(
+                f"index at {path} has an uncommitted stream ingest epoch "
+                f"({b.staging}) — resume the stream to convergence (or "
+                "remove the staging dir if the stream is abandoned) before "
+                "compacting, else the epoch's replay would duplicate rows"
+            )
+    for b in staged:
+        delete(spark, join(path, b.staging))
+    for files in pending.values():  # only delete batches are left
+        for f in files:
+            delete(spark, f, False)
+    if not data_files(spark, join(path, "tombstones")):
+        delete(spark, join(path, "tombstones"))  # only deletes populate it
 
 
 def _read_tombstones(spark: SparkSession, path: str, as_of: int | None = None):
@@ -1250,22 +1145,16 @@ def delete_from_index(
     survivors — the same additivity that powers appends, run in
     reverse (deletion needs no re-read of the corpus).
 
-    Protocol (the ingest_epoch discipline, module docstring of
-    streaming/index_stream.py): a ledger marker
-    (``ledger/delete-<batch>``) short-circuits committed replays; the
-    batch's files stage under ``<path>/delete.<batch>`` and rename in
-    with batch-owned names, and a replay of a half-renamed batch
-    deletes its own files first and restages from live state. The
-    MARKER is the commit point for readers too: every loader hides
-    ``delete-<batch>-*`` files whose marker is absent
-    (``_ledger_gated_parquet``), so the negative partials and the
-    tombstones become visible together — atomically, at marker
-    creation — or not at all, even to a reader racing the writer or
-    loading after a mid-rename crash. ``batch`` defaults to the next
-    ``auto-NNNNNN`` label (max existing auto sequence + 1 — explicit
-    labels live in their own namespace and can never collide with or
-    be replayed by an auto-labelled call); pass an explicit one to
-    make retries of a caller-level job idempotent.
+    The batch commits through the ledger (operators/ledger.py), like
+    a stream epoch: a committed label short-circuits, a replay of a
+    half-renamed batch deletes its own files and restages from live
+    state, and the tombstones and negative partials become visible to
+    readers together, at the marker, or not at all. ``batch``
+    defaults to the next ``auto-NNNNNN`` label (max existing auto
+    sequence + 1 — explicit labels live in their own namespace and
+    can never collide with or be replayed by an auto-labelled call);
+    pass an explicit one to make retries of a caller-level job
+    idempotent.
 
     Semantics (SQL DELETE over the rows present now): ids not
     present — or already deleted — contribute nothing, because
@@ -1281,46 +1170,15 @@ def delete_from_index(
 
     Returns ``'committed'`` or ``'skipped'`` (batch already in the
     ledger). Single-writer by contract, like append and compact."""
-    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
+    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND, _doc_stats
 
     meta = _read_meta_any_kind(
         spark, path,
         kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
         verb="delete from",
     )
-    fs, ledger_p = fs_and_path(spark, f"{path}/ledger")
-    if batch is None:
-        import re
-
-        existing = (
-            [st.getPath().getName() for st in fs.listStatus(ledger_p)]
-            if fs.exists(ledger_p) else []
-        )
-        # auto labels are namespaced ('auto-') and derived from the
-        # MAX existing auto sequence, not a count — a caller's
-        # explicit label of the same shape can neither collide with
-        # a later auto label (count-after-gaps) nor be silently
-        # 'skipped' against its marker
-        seqs = [
-            int(m.group(1))
-            for e in existing
-            if (m := re.fullmatch(r"delete-auto-(\d{6})", e))
-        ]
-        batch = f"auto-{(max(seqs) + 1 if seqs else 0):06d}"
-        if f"delete-{batch}" in existing:  # unreachable by max+1; guards
-            raise ValueError(  # a hand-minted marker shadowing the scheme
-                f"auto-generated delete batch label {batch!r} already has "
-                f"a ledger marker at {path} — pass an explicit batch label"
-            )
-    _, marker = fs_and_path(spark, f"{path}/ledger/delete-{batch}")
-    staging = f"{path}/delete.{batch}"
-    _, staging_p = fs_and_path(spark, staging)
-    if fs.exists(marker):
-        if fs.exists(staging_p):
-            fs.delete(staging_p, True)
-        return "skipped"
-
-    id_name = "doc_id" if meta["kind"] == _LEXICAL_KIND else "id"
+    lexical = meta["kind"] == _LEXICAL_KIND
+    id_name = "doc_id" if lexical else "id"
 
     def id_relation(live: DataFrame) -> DataFrame:
         if isinstance(ids, DataFrame):
@@ -1333,69 +1191,53 @@ def delete_from_index(
             StructType([StructField(id_name, live.schema[id_name].dataType)]),
         )
 
-    # replay cleanup FIRST: the staging below derives from LIVE state
-    # (victims = live ∩ ids), so any files a crashed attempt of THIS
-    # batch already renamed in must leave before the live relations
-    # are read — otherwise partial tombstones would shrink the victim
-    # set and the restaged negative partials would understate
-    prefix = f"delete-{batch}-"
-    dst_subs = (
-        ("df", "stats", "tombstones")
-        if meta["kind"] == _LEXICAL_KIND else ("tombstones",)
-    )
-    for sub in dst_subs:
-        _, dst_dir_p = fs_and_path(spark, f"{path}/{sub}")
-        if fs.exists(dst_dir_p):
-            for st in fs.listStatus(dst_dir_p):
-                if st.getPath().getName().startswith(prefix):
-                    fs.delete(st.getPath(), False)
+    def stage(staging: str) -> None:
+        tomb = _read_tombstones(spark, path)
+        if not lexical:
+            postings = _gated_or_raise(spark, path, "index")
+            live = postings.join(F.broadcast(tomb), id_name, "left_anti") if tomb is not None else postings
+            present = (
+                live.join(F.broadcast(id_relation(postings)), id_name, "left_semi")
+                .select(id_name)
+                .distinct()
+            )
+            present.coalesce(1).write.mode("overwrite").parquet(
+                f"{staging}/tombstones"
+            )  # coalesce, not repartition — see the lexical branch below
+            return
+        from concurrent.futures import ThreadPoolExecutor
 
-    tomb = _read_tombstones(spark, path)
-    if meta["kind"] == _LEXICAL_KIND:
         from pyspark import StorageLevel
 
         tf = _gated_or_raise(spark, path, "tf")
         live = tf.join(F.broadcast(tomb), id_name, "left_anti") if tomb is not None else tf
         # persist the victim rows across the THREE partial writes
-        # below (r12): each write is its own action, so the lazy form
-        # re-ran the gated tf scan + tombstone anti-join + id
-        # semi-join once per file — 14 jobs per delete, of which 2
-        # whole re-executions of the victim scan. Victim rows are a
-        # small fraction of the corpus by the same contract that lets
-        # tombstones broadcast; MEMORY_AND_DISK spills, never
-        # recomputes.
+        # below: each write is its own action, so the lazy form re-ran
+        # the gated tf scan + tombstone anti-join + id semi-join once
+        # per file. Victim rows are a small fraction of the corpus by
+        # the same contract that lets tombstones broadcast;
+        # MEMORY_AND_DISK spills, never recomputes.
         victims = live.join(
             F.broadcast(id_relation(tf)), id_name, "left_semi"
-        ).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             # negative partials over the victims' OWN rows: df loses
             # one per (term, victim doc); stats lose the victim count
-            # and their Σ dl (dl rides every tf row — min() is
-            # per-doc exact)
+            # and their Σ dl
             neg_df = victims.groupBy("term").agg(
                 (-F.count(F.lit(1))).alias("df")
             )
-            neg_stats = victims.groupBy(id_name).agg(
-                F.min("dl").alias("__dl")
-            ).agg(
-                (-F.count(F.lit(1))).alias("n_docs"),
-                (-F.coalesce(F.sum("__dl"), F.lit(0))).alias("sum_dl"),
+            neg_stats = _doc_stats(victims).select(
+                (-F.col("n_docs")).alias("n_docs"),
+                (-F.col("sum_dl")).alias("sum_dl"),
             )
             present = victims.select(id_name).distinct()
             # coalesce(1), not repartition(1): these are real
             # aggregation outputs (the shuffle boundary already exists
             # upstream), so coalesce folds the post-shuffle read into
             # the single writer task without paying a SECOND exchange
-            # per file (r12; the repartition-vs-coalesce note in
-            # _write_centroid_rows is about pickled local-list frames,
-            # which these are not). The three staged writes are
-            # independent reads of the persisted victims, so they run
-            # concurrently (guide §2.6); all three land in STAGING —
-            # nothing is reader-visible until the renames + marker.
-            from concurrent.futures import ThreadPoolExecutor
-
+            # per file. The three staged writes are independent reads
+            # of the persisted victims, so they run concurrently.
             def _w(pair):
                 rel, sub = pair
                 rel.coalesce(1).write.mode("overwrite").parquet(
@@ -1410,50 +1252,16 @@ def delete_from_index(
                 ]))
         finally:
             victims.unpersist()
-        moves = [
-            (f"{staging}/{sub}", f"{path}/{sub}")
-            for sub in ("df", "stats", "tombstones")
-        ]
-    else:
-        postings = _gated_or_raise(spark, path, "index")
-        live = postings.join(F.broadcast(tomb), id_name, "left_anti") if tomb is not None else postings
-        present = (
-            live.join(F.broadcast(id_relation(postings)), id_name, "left_semi")
-            .select(id_name)
-            .distinct()
-        )
-        present.coalesce(1).write.mode("overwrite").parquet(
-            f"{staging}/tombstones"
-        )  # coalesce, not repartition — see the lexical branch above
-        moves = [(f"{staging}/tombstones", f"{path}/tombstones")]
 
-    for src_dir, dst_dir in moves:
-        _, src_dir_p = fs_and_path(spark, src_dir)
-        staged = sorted(
-            (
-                st.getPath()
-                for st in fs.listStatus(src_dir_p)
-                if st.isFile()
-                and not st.getPath().getName().startswith((".", "_"))
-            ),
-            key=lambda p: p.getName(),
-        )
-        _, dst_dir_p = fs_and_path(spark, dst_dir)
-        fs.mkdirs(dst_dir_p)
-        for i, src in enumerate(staged):
-            _, dst = fs_and_path(spark, f"{dst_dir}/{prefix}{i:05d}.parquet")
-            if not fs.rename(src, dst):
-                raise IOError(
-                    f"rename {src} -> {dst} failed during delete batch "
-                    f"{batch}"
-                )
-
-    fs.mkdirs(marker.getParent())
-    seq = int(meta.get("epoch") or 0) + 1
-    _commit_marker(fs, marker, seq)
-    fs.delete(staging_p, True)
-    _write_meta(spark, path, dict(meta, epoch=seq), "overwrite")
-    return "committed"
+    return ledger.commit(
+        spark, path,
+        ledger.delete_batch(
+            ledger.auto_delete_label(spark, path) if batch is None else batch
+        ),
+        meta,
+        ("df", "stats", "tombstones") if lexical else ("tombstones",),
+        stage,
+    )
 
 
 def compact_index(
@@ -1495,10 +1303,7 @@ def compact_index(
     the metadata plus ``files_before`` / ``files_after`` so callers
     and tests can see the layout actually collapsed.
     """
-    from workhop2_etl_spark.operators.retrieval import (
-        _LEXICAL_KIND,
-        _lexical_compact_specs,
-    )
+    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
 
     meta = _read_meta_any_kind(
         spark,
@@ -1506,59 +1311,16 @@ def compact_index(
         kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
         verb="compact",
     )
-    # an UNCOMMITTED (crashed) delete batch's files sweep first: they
-    # were never reader-visible (marker-gated) and must not fold into
-    # the compacted layout — the batch's replay restages from the
-    # post-compaction live state. Then the pending COMMITTED delete
-    # tombstones purge PHYSICALLY here (every loader anti-joined them
-    # logically until now); the tombstone dir clears after every data
-    # dir has swapped — a crash in between leaves tombstones pointing
-    # at already-purged rows, whose anti-join is a no-op, so any
-    # intermediate state stays load-correct
-    _sweep_uncommitted_delete_batches(spark, path)
-    _assert_no_uncommitted_stream_files(spark, path)
+    # uncommitted ledgered batches settle first (swept, or compaction
+    # refuses); then the pending COMMITTED delete tombstones purge
+    # PHYSICALLY here (every loader anti-joined them logically until
+    # now); the tombstone dir clears after every data dir has swapped —
+    # a crash in between leaves tombstones pointing at already-purged
+    # rows, whose anti-join is a no-op, so any intermediate state stays
+    # load-correct
+    _settle_ledger_for_compaction(spark, path)
     tomb = _read_tombstones(spark, path)
-
-    def _purge_ids(d: DataFrame) -> DataFrame:
-        return d.join(F.broadcast(tomb), "id", "left_anti")
-
-    if meta["kind"] == _LSH_KIND:
-        specs = [
-            ("index", ["table_id", "sig"],
-             _purge_ids if tomb is not None else None, False)
-        ]
-    elif meta["kind"] == _IVF_POSTINGS_KIND:
-        specs = [
-            ("index", ["centroid_id"],
-             _purge_ids if tomb is not None else None, False)
-        ]
-    else:  # lexical: tf re-clusters (+ purges); df/stats signed
-        # partials FOLD to one net record (load-equivalent)
-        specs = _lexical_compact_specs(tomb)
-
-    fs, root_p = fs_and_path(spark, path)
-
-    # an UNCOMMITTED stream epoch (streaming/index_stream.py) always
-    # leaves its ingest.epoch-* staging dir behind; compacting now
-    # would fold its already-renamed rows into part-* files and the
-    # epoch's replay would re-add them — duplicates. A COMMITTED
-    # epoch's leftover staging (crash between marker and sweep) is
-    # just swept.
-    for st in fs.listStatus(root_p):
-        name = st.getPath().getName()
-        if name.startswith("ingest.epoch-"):
-            _, marker = fs_and_path(
-                spark, f"{path}/ledger/epoch-{name.removeprefix('ingest.epoch-')}"
-            )
-            if fs.exists(marker):
-                fs.delete(st.getPath(), True)
-            else:
-                raise ValueError(
-                    f"index at {path} has an uncommitted stream ingest epoch "
-                    f"({name}) — resume the stream to convergence (or remove "
-                    "the staging dir if the stream is abandoned) before "
-                    "compacting, else the epoch's replay would duplicate rows"
-                )
+    specs = _compact_specs(meta, tomb)
 
     # each data dir stages and swaps independently; every dir's
     # content is load-equivalent before and after its own swap, so a
@@ -1577,12 +1339,54 @@ def compact_index(
         after_total += fa
 
     if tomb is not None:  # every dir swapped: the purge is physical
-        _, tomb_p = fs_and_path(spark, f"{path}/tombstones")
-        fs.delete(tomb_p, True)
+        delete(spark, join(path, "tombstones"))
 
     meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
     _write_meta(spark, path, meta, "overwrite")
     return dict(meta, files_before=before_total, files_after=after_total)
+
+
+def _compact_specs(meta: dict, tomb: DataFrame | None) -> list:
+    """Per-dir specs (subdir, cluster keys, optional transform,
+    fold-to-one flag) that rewrite the artifact at ``meta`` into its
+    freshly-built layout with the tombstoned ids ``tomb`` purged — what
+    ``compact_index`` writes in place and ``restore_index`` writes to a
+    new path."""
+    from workhop2_etl_spark.operators.retrieval import (
+        _LEXICAL_KIND,
+        _lexical_compact_specs,
+    )
+
+    if meta["kind"] == _LEXICAL_KIND:
+        return _lexical_compact_specs(tomb)
+    keys = ["table_id", "sig"] if meta["kind"] == _LSH_KIND else ["centroid_id"]
+
+    def purge(d: DataFrame) -> DataFrame:
+        return d.join(F.broadcast(tomb), "id", "left_anti")
+
+    return [("index", keys, purge if tomb is not None else None, False)]
+
+
+def _clustered(
+    df: DataFrame,
+    keys: list[str],
+    num_partitions: int | None,
+    transform,
+    fold_one: bool,
+) -> DataFrame:
+    """``df`` after ``transform``, laid out as one compaction spec
+    says: folded partials are dimension-sized, so one file (coalesce,
+    not repartition: the fold's own aggregation already provides the
+    shuffle boundary); everything else hash-partitioned on ``keys``
+    and sorted within each file."""
+    if transform is not None:
+        df = transform(df)
+        if fold_one:
+            return df.coalesce(1).sortWithinPartitions(*keys) if keys else df.coalesce(1)
+    return (
+        df.repartition(num_partitions, *keys) if num_partitions
+        else df.repartition(*keys)
+    ).sortWithinPartitions(*keys)
 
 
 def _compact_dir(
@@ -1617,23 +1421,9 @@ def _compact_dir(
         fs.delete(staging_p, True)
     if not fs.exists(staged_ok):
         files_before = len(data_files(spark, data))
-        df = spark.read.parquet(data)
-        if transform is not None:
-            df = transform(df)
-        if transform is not None and fold_one:
-            # folded partials are dimension-sized — one file; coalesce
-            # (not repartition) because the fold's own aggregation
-            # already provides the shuffle boundary (r12)
-            reparted = (
-                df.coalesce(1).sortWithinPartitions(*keys)
-                if keys
-                else df.coalesce(1)
-            )
-        else:
-            reparted = (
-                df.repartition(num_partitions, *keys) if num_partitions
-                else df.repartition(*keys)
-            ).sortWithinPartitions(*keys)
+        reparted = _clustered(
+            spark.read.parquet(data), keys, num_partitions, transform, fold_one
+        )
         reparted.write.mode("overwrite").parquet(staging)
     else:
         files_before = None  # crash recovery: old layout already gone
@@ -1699,84 +1489,47 @@ def restore_index(
     )
     _reset_lifecycle_state(spark, dst_path, mode)
     tomb = _read_tombstones(spark, src_path, as_of=as_of)
+    # the compaction specs over the snapshot; the writes read
+    # DIFFERENT source dirs and write different target dirs, so they
+    # submit from a thread pool: the lexical kind's
+    # dimension-sized fold jobs back-fill the clustered tf rewrite's
+    # straggler tail instead of queuing behind it
+    writes = [
+        (
+            _clustered(
+                _gated_or_raise(spark, src_path, sub, as_of=as_of),
+                keys, num_partitions, transform, fold_one,
+            ),
+            sub,
+        )
+        for sub, keys, transform, fold_one in _compact_specs(meta, tomb)
+    ]
+    from concurrent.futures import ThreadPoolExecutor
 
-    if meta["kind"] == _LEXICAL_KIND:
-        tf = _gated_or_raise(spark, src_path, "tf", as_of=as_of)
-        if tomb is not None:
-            tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
-        reparted = (
-            tf.repartition(num_partitions, "term") if num_partitions
-            else tf.repartition("term")
-        )
-        # signed per-epoch partials FOLD to one net record each — the
-        # loader aggregates either way, so the fold is load-equivalent
-        # (and exactly what compact_index writes). The three writes
-        # read DIFFERENT source dirs (tf / df / stats) and write
-        # different target dirs, so they submit from a thread pool
-        # (guide §2.6, the r12 epoch/delete-write pattern): the
-        # dimension-sized fold jobs back-fill the clustered tf
-        # rewrite's straggler tail instead of queuing behind it.
-        df_fold = (
-            _gated_or_raise(spark, src_path, "df", as_of=as_of)
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .filter(F.col("df") > 0)
-            .coalesce(1)  # agg already shuffled — no second exchange
-            .sortWithinPartitions("term")
-        )
-        stats_fold = (
-            _gated_or_raise(spark, src_path, "stats", as_of=as_of)
-            .agg(
-                F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
-                F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("sum_dl"),
-            )
-            .coalesce(1)  # one-row global aggregate
-        )
-        from concurrent.futures import ThreadPoolExecutor
+    def _w(pair):
+        rel, sub = pair
+        rel.write.mode(mode).parquet(f"{dst_path}/{sub}")
 
-        def _w(pair):
-            rel, sub = pair
-            rel.write.mode(mode).parquet(f"{dst_path}/{sub}")
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(_w, [
-                (reparted.sortWithinPartitions("term"), "tf"),
-                (df_fold, "df"),
-                (stats_fold, "stats"),
-            ]))
-    else:
-        rows = _gated_or_raise(spark, src_path, "index", as_of=as_of)
-        if tomb is not None:
-            rows = rows.join(F.broadcast(tomb), "id", "left_anti")
-        keys = (
-            ["table_id", "sig"] if meta["kind"] == _LSH_KIND
-            else ["centroid_id"]
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        list(pool.map(_w, writes))
+    if meta["kind"] == _IVF_POSTINGS_KIND:
+        # the quantizer (and pq8 codebooks) ride the artifact —
+        # the snapshot's postings are only meaningful under them
+        centroids = _read_centroid_rows(
+            spark, f"{src_path}/centroids", meta
         )
-        reparted = (
-            rows.repartition(num_partitions, *keys) if num_partitions
-            else rows.repartition(*keys)
+        _write_centroid_rows(
+            spark, centroids, int(meta["dim"]), f"{dst_path}/centroids",
+            mode,
         )
-        reparted.sortWithinPartitions(*keys).write.mode(mode).parquet(
-            f"{dst_path}/index"
-        )
-        if meta["kind"] == _IVF_POSTINGS_KIND:
-            # the quantizer (and pq8 codebooks) ride the artifact —
-            # the snapshot's postings are only meaningful under them
-            centroids = _read_centroid_rows(
-                spark, f"{src_path}/centroids", meta
+        if meta.get("store_dtype") == "pq8":
+            codebooks = _read_codebook_rows(
+                spark, f"{src_path}/codebooks", meta
             )
-            _write_centroid_rows(
-                spark, centroids, int(meta["dim"]), f"{dst_path}/centroids",
-                mode,
+            _write_codebook_rows(
+                spark, codebooks, int(meta["dim"]),
+                f"{dst_path}/codebooks", mode,
             )
-            if meta.get("store_dtype") == "pq8":
-                codebooks = _read_codebook_rows(
-                    spark, f"{src_path}/codebooks", meta
-                )
-                _write_codebook_rows(
-                    spark, codebooks, int(meta["dim"]),
-                    f"{dst_path}/codebooks", mode,
-                )
 
     out = {k: v for k, v in meta.items() if k != "_codebooks"}
     out["epoch"] = 0
@@ -1834,48 +1587,31 @@ def index_changes(
             f"({from_seq}, {to_seq})"
         )
 
-    fs, ledger_p = fs_and_path(spark, f"{path}/ledger")
-    batches: list[tuple[int, str, str, str]] = []  # (seq, op, sub, prefix)
-    if fs.exists(ledger_p):
-        for st in fs.listStatus(ledger_p):
-            name = st.getPath().getName()
-            if name.startswith("epoch-"):
-                op, sub = "insert", data_sub
-                prefix = f"stream-{name[len('epoch-'):]}-"
-            elif name.startswith("delete-"):
-                op, sub = "delete", "tombstones"
-                prefix = f"delete-{name[len('delete-'):]}-"
-            else:  # e.g. the _stream-<digest> checkpoint binding
-                continue
-            seq = _marker_seq(fs, st.getPath())
-            if seq is None:
-                raise ValueError(
-                    f"ledger marker {name} at {path} carries no commit "
-                    "sequence (legacy pre-snapshot format or a crash "
-                    "while writing the marker) — the changelog needs a "
-                    "total order; compact the index and tail from there"
-                )
-            if from_seq < seq <= to_seq:
-                batches.append((seq, op, sub, prefix))
+    batches = []
+    for b, seq in ledger.commits(spark, path):
+        if seq is None:
+            raise ValueError(
+                f"ledger marker {b.marker} at {path} carries no commit "
+                "sequence (legacy pre-snapshot format or a crash "
+                "while writing the marker) — the changelog needs a "
+                "total order; compact the index and tail from there"
+            )
+        if from_seq < seq <= to_seq:
+            batches.append((seq, b))
 
     parts: list[DataFrame] = []
-    for seq, op, sub, prefix in sorted(batches):
-        _, d = fs_and_path(spark, f"{path}/{sub}")
-        files = (
-            [
-                str(st.getPath())
-                for st in fs.listStatus(d)
-                if st.isFile() and st.getPath().getName().startswith(prefix)
-            ]
-            if fs.exists(d)
-            else []
+    for seq, b in sorted(batches):
+        op, sub = (
+            ("delete", "tombstones") if b.kind == ledger.DELETE
+            else ("insert", data_sub)
         )
+        files = ledger.batch_files(spark, path, sub, b)
         if not files:
             raise ValueError(
                 f"commit seq {seq} at {path} has a ledger marker but no "
-                f"{sub}/{prefix}* files — a compaction folded this batch "
-                "into base files, so the changelog cannot reach it; tail "
-                "from a sequence after the compaction"
+                f"{sub}/ files of batch {b.marker} — a compaction folded "
+                "this batch into base files, so the changelog cannot reach "
+                "it; tail from a sequence after the compaction"
             )
         ids = spark.read.parquet(*files).select(id_name).distinct()
         parts.append(
@@ -1912,9 +1648,10 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     - ``n_uncommitted_batches`` — ledgered batches with renamed files
       but no marker (crashed or in-flight writers; readers don't see
       them — resume/replay to converge);
-    - ``n_orphan_staging`` — leftover staging dirs (``delete.<b>``,
-      ``ingest.epoch-*``, ``*.compacting``) from crashed writers:
-      harmless to readers, swept or completed by their verb's replay;
+    - ``n_orphan_staging`` — leftover staging dirs (a ledgered
+      batch's, see operators/ledger.py, or a ``*.compacting`` one) from
+      crashed writers: harmless to readers, swept or completed by their
+      verb's replay;
     - ``consistent`` + ``problems`` — kind-specific invariants:
       lexical: the loader's folded df/stats partials must equal a
       recount over the visible tf rows (the additivity every append/
@@ -1926,7 +1663,12 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     the honest fsck price; run it on the maintenance cadence, not per
     probe. Read-only, safe against a live artifact (it sees the last
     committed state, like any reader)."""
-    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
+    from workhop2_etl_spark.operators.retrieval import (
+        _LEXICAL_KIND,
+        _doc_stats,
+        _fold_df,
+        _fold_stats,
+    )
 
     meta = _read_meta_any_kind(
         spark, path,
@@ -1938,33 +1680,11 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     data_sub = "tf" if lexical else "index"
     problems: list[str] = []
 
-    fs, root_p = fs_and_path(spark, path)
-    # orphan staging dirs at the artifact root
-    n_orphans = sum(
-        1
-        for st in fs.listStatus(root_p)
-        if st.isDirectory()
-        and (
-            st.getPath().getName().startswith(("delete.", "ingest.epoch-"))
-            or st.getPath().getName().endswith(".compacting")
-        )
+    n_orphans = len(ledger.staging_dirs(spark, path)) + sum(
+        1 for name in list_child_dirs(spark, path)
+        if name.endswith(".compacting")
     )
-    # ledgered batch files whose marker is absent
-    uncommitted: set[str] = set()
-    for sub in ("tf", "df", "stats", "index", "tombstones"):
-        _, d = fs_and_path(spark, f"{path}/{sub}")
-        if not fs.exists(d):
-            continue
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if not (st.isFile() and name.endswith(".parquet")):
-                continue
-            for pfx, mk in (("delete-", "delete-"), ("stream-", "epoch-")):
-                if name.startswith(pfx):
-                    tag = name[len(pfx):-len(".parquet")].rsplit("-", 1)[0]
-                    _, marker = fs_and_path(spark, f"{path}/ledger/{mk}{tag}")
-                    if not fs.exists(marker):
-                        uncommitted.add(f"{mk}{tag}")
+    n_uncommitted = len(ledger.uncommitted(spark, path, _BATCH_SUBS))
 
     rel = _ledger_gated_parquet(spark, path, data_sub)
     tomb = _read_tombstones(spark, path)
@@ -1984,11 +1704,7 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
             if got_df_rel is None:  # tampered: the loader would raise
                 problems.append("df/ missing or every partial uncommitted")
             else:
-                got_df = (
-                    got_df_rel.groupBy("term")
-                    .agg(F.sum("df").alias("df"))
-                    .filter(F.col("df") > 0)
-                )
+                got_df = _fold_df(got_df_rel)
                 want_df = live.groupBy("term").agg(
                     F.count(F.lit(1)).alias("df")
                 )
@@ -2006,19 +1722,8 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
             if got_stats_rel is None:
                 problems.append("stats/ missing or every partial uncommitted")
             else:
-                got_stats = got_stats_rel.agg(
-                    F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
-                    F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("sum_dl"),
-                ).collect()[0]
-                want_stats = (
-                    live.groupBy(id_name)
-                    .agg(F.min("dl").alias("__dl"))
-                    .agg(
-                        F.count(F.lit(1)).alias("n_docs"),
-                        F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"),
-                    )
-                    .collect()[0]
-                )
+                got_stats = _fold_stats(got_stats_rel).collect()[0]
+                want_stats = _doc_stats(live).collect()[0]
                 if (int(got_stats.n_docs), int(got_stats.sum_dl)) != (
                     int(want_stats.n_docs), int(want_stats.sum_dl)
                 ):
@@ -2073,7 +1778,7 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
         int(meta.get("epoch") or 0),
         n_live,
         n_tomb,
-        len(uncommitted),
+        n_uncommitted,
         n_orphans,
         not problems,
         "; ".join(problems),

@@ -1,0 +1,248 @@
+"""The ledger of a persisted index's batch commits: one commit path
+for the two verbs that change an artifact in multi-file batches, and
+the one place that knows how those batches are named.
+
+``index_store.delete_from_index`` commits a delete batch (tombstones,
+plus negative df/stats partials for the lexical kind) and
+``index_stream.ingest_epoch`` a stream epoch (one micro-batch's rows,
+plus positive partials). Under the artifact root ``<path>``:
+
+- delete batch ``<label>``: files ``<sub>/delete-<label>-NNNNN.parquet``,
+  marker ``ledger/delete-<label>``, staging dir ``delete.<label>``;
+- stream epoch ``e``: files ``<sub>/stream-<e:012d>-NNNNN.parquet``,
+  marker ``ledger/epoch-<e:012d>``, staging dir ``ingest.epoch-<e:012d>``.
+
+Other names under ``ledger/`` (the stream's ``_stream-<digest>``
+checkpoint binding) are not batches. Labels may contain ``-``: a file
+belongs to the batch whose tag is its whole name minus the kind and
+the trailing file number, never to a batch whose tag is a prefix.
+
+``commit`` runs the protocol that makes a batch exactly-once and
+atomic for readers:
+
+1. a batch whose marker exists is committed: a replay sweeps its
+   staging leftover and returns ``'skipped'``;
+2. files a crashed attempt of THIS batch already renamed in are
+   deleted, so its live file set is rebuilt whole from fresh staging;
+3. the caller stages the batch under ``<staging>/<sub>/``;
+4. the staged files rename into ``<path>/<sub>/`` under batch-owned
+   names;
+5. the marker is written, holding the commit sequence (the metadata
+   epoch + 1). Its existence is the commit point: readers hide the
+   files of a batch without a marker, so a reader racing the renames
+   or loading after a crash sees the whole batch or none of it;
+6. staging is swept and the metadata epoch bumped to the sequence.
+
+A marker that exists but holds no sequence (a crash between creating
+and writing it, or one written before markers carried sequences) is
+committed at an unknown point: ``as_of`` snapshot reads always show
+it. Single writer by contract, like every index mutator. All I/O goes
+through sources/fs.py, so the artifact may live on any Hadoop
+filesystem."""
+
+from __future__ import annotations
+
+import re
+from typing import NamedTuple
+
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import SparkSession
+
+from workhop2_etl_spark.sources.fs import (
+    data_files,
+    delete,
+    exists,
+    join,
+    list_child_dirs,
+    list_names,
+    mkdirs,
+    read_bytes,
+    rename_or_raise,
+    write_bytes,
+)
+
+DELETE = "delete"
+STREAM = "stream"
+
+_FILE = re.compile(r"(delete|stream)-(.+)-\d+\.parquet")
+_MARKER = re.compile(r"(delete|epoch)-(.+)")
+_STAGING = re.compile(r"delete\.(.+)|ingest\.epoch-(.+)")
+
+
+class Batch(NamedTuple):
+    """One ledgered batch: ``kind`` is ``DELETE`` or ``STREAM``, ``tag``
+    the delete label or the zero-padded stream epoch."""
+
+    kind: str
+    tag: str
+
+    @property
+    def marker(self) -> str:
+        return f"{'delete' if self.kind == DELETE else 'epoch'}-{self.tag}"
+
+    @property
+    def staging(self) -> str:
+        if self.kind == DELETE:
+            return f"delete.{self.tag}"
+        return f"ingest.epoch-{self.tag}"
+
+    def file_name(self, i: int) -> str:
+        return f"{self.kind}-{self.tag}-{i:05d}.parquet"
+
+
+def delete_batch(label: str) -> Batch:
+    return Batch(DELETE, label)
+
+
+def stream_batch(epoch_id: int) -> Batch:
+    return Batch(STREAM, f"{epoch_id:012d}")
+
+
+def _parse_file(name: str) -> Batch | None:
+    """The batch a data file belongs to, or None for a base file."""
+    m = _FILE.fullmatch(name)
+    return Batch(m[1], m[2]) if m else None
+
+
+def parse_marker(name: str) -> Batch | None:
+    m = _MARKER.fullmatch(name)
+    return Batch(DELETE if m[1] == "delete" else STREAM, m[2]) if m else None
+
+
+def _parse_staging(name: str) -> Batch | None:
+    m = _STAGING.fullmatch(name)
+    if not m:
+        return None
+    return Batch(DELETE, m[1]) if m[1] is not None else Batch(STREAM, m[2])
+
+
+def _name(file_path: str) -> str:
+    return file_path.rsplit("/", 1)[-1]
+
+
+def _markers(spark: SparkSession, path: str) -> set[str]:
+    return set(list_names(spark, join(path, "ledger")))
+
+
+def committed(spark: SparkSession, path: str, batch: Batch) -> bool:
+    return exists(spark, join(path, "ledger", batch.marker))
+
+
+def _commit_seq(spark: SparkSession, path: str, batch: Batch) -> int | None:
+    """The commit sequence in ``batch``'s marker, or None when the
+    marker holds none (or vanished under a racing delete)."""
+    try:
+        data = read_bytes(spark, join(path, "ledger", batch.marker))
+    except Py4JJavaError:
+        return None
+    try:
+        return int(data) if data else None
+    except ValueError:
+        return None
+
+
+def commits(spark: SparkSession, path: str) -> list[tuple[Batch, int | None]]:
+    """Every committed batch with its commit sequence."""
+    return [
+        (b, _commit_seq(spark, path, b))
+        for b in map(parse_marker, sorted(_markers(spark, path)))
+        if b is not None
+    ]
+
+
+def auto_delete_label(spark: SparkSession, path: str) -> str:
+    """The next default delete label, ``auto-NNNNNN``: one past the
+    highest existing auto sequence (not a count, so gaps and explicit
+    labels of any shape never make it collide with a marker)."""
+    seqs = [
+        int(m[1])
+        for b in map(parse_marker, _markers(spark, path))
+        if b is not None and b.kind == DELETE
+        and (m := re.fullmatch(r"auto-(\d+)", b.tag))
+    ]
+    return f"auto-{(max(seqs) + 1 if seqs else 0):06d}"
+
+
+def batch_files(
+    spark: SparkSession, path: str, sub: str, batch: Batch
+) -> list[str]:
+    """``batch``'s own files under ``<path>/<sub>``."""
+    return [
+        f for f in data_files(spark, join(path, sub))
+        if _parse_file(_name(f)) == batch
+    ]
+
+
+def visible_files(
+    spark: SparkSession, path: str, sub: str, as_of: int | None = None
+) -> tuple[list[str], bool]:
+    """The data files under ``<path>/<sub>`` a reader sees, and whether
+    any file was hidden. Hidden are the files of a batch without a
+    marker and, under ``as_of``, of a batch whose marker holds a
+    sequence greater than ``as_of``."""
+    files = data_files(spark, join(path, sub))
+    owner = {f: _parse_file(_name(f)) for f in files}
+    batches = set(owner.values()) - {None}
+    if not batches:
+        return files, False
+    hidden = {
+        b for b in batches
+        if not committed(spark, path, b)
+        or (
+            as_of is not None
+            and (seq := _commit_seq(spark, path, b)) is not None
+            and seq > as_of
+        )
+    }
+    visible = [f for f in files if owner[f] not in hidden]
+    return visible, len(visible) < len(files)
+
+
+def uncommitted(
+    spark: SparkSession, path: str, subs
+) -> dict[Batch, list[str]]:
+    """The files under each ``<path>/<sub>`` of every batch without a
+    marker, by batch."""
+    out: dict[Batch, list[str]] = {}
+    for sub in subs:
+        for f in data_files(spark, join(path, sub)):
+            if (b := _parse_file(_name(f))) is not None:
+                out.setdefault(b, []).append(f)
+    return {b: fl for b, fl in out.items() if not committed(spark, path, b)}
+
+
+def staging_dirs(spark: SparkSession, path: str) -> list[Batch]:
+    """The batches whose staging dir exists at the artifact root."""
+    return [
+        b for b in map(_parse_staging, sorted(list_child_dirs(spark, path)))
+        if b is not None
+    ]
+
+
+def commit(
+    spark: SparkSession, path: str, batch: Batch, meta: dict, subs, stage
+) -> str:
+    """Commit ``batch`` into the artifact at ``path`` (protocol in the
+    module docstring). ``stage(staging)`` writes the batch's files
+    under ``<staging>/<sub>`` for each of ``subs``; ``meta`` is the
+    artifact's metadata record. Returns ``'committed'`` or
+    ``'skipped'`` (already committed)."""
+    from workhop2_etl_spark.operators.index_store import _write_meta
+
+    staging = join(path, batch.staging)
+    if committed(spark, path, batch):
+        delete(spark, staging)  # a crash between marker and sweep
+        return "skipped"
+    for sub in subs:
+        for f in batch_files(spark, path, sub, batch):
+            delete(spark, f, False)
+    stage(staging)
+    for sub in subs:
+        mkdirs(spark, join(path, sub))
+        for i, src in enumerate(data_files(spark, join(staging, sub))):
+            rename_or_raise(spark, src, join(path, sub, batch.file_name(i)))
+    seq = int(meta.get("epoch") or 0) + 1
+    write_bytes(spark, join(path, "ledger", batch.marker), str(seq).encode("ascii"))
+    delete(spark, staging)
+    _write_meta(spark, path, dict(meta, epoch=seq), "overwrite")
+    return "committed"

@@ -163,6 +163,39 @@ def _stats_from_counts(counts: DataFrame) -> DataFrame:
     )
 
 
+def _doc_stats(tf: DataFrame) -> DataFrame:
+    """One-row (n_docs, sum_dl) recounted from tf rows: dl rides every
+    tf row of its doc, so ``min(dl)`` per doc is exact."""
+    return (
+        tf.groupBy("doc_id")
+        .agg(F.min("dl").alias("__dl"))
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"),
+        )
+    )
+
+
+def _fold_df(partials: DataFrame) -> DataFrame:
+    """Net df per term from signed per-batch df partials (appends
+    positive, deletes negative); terms netting to ≤ 0 are dropped, as
+    a rebuild would."""
+    return (
+        partials.groupBy("term")
+        .agg(F.sum("df").alias("df"))
+        .filter(F.col("df") > 0)
+    )
+
+
+def _fold_stats(partials: DataFrame) -> DataFrame:
+    """One-row net (n_docs, sum_dl) from signed per-batch stats
+    partials."""
+    return partials.agg(
+        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+        F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("sum_dl"),
+    )
+
+
 def _bm25_rank(
     tf: DataFrame,
     df_all: DataFrame,
@@ -440,6 +473,15 @@ def _write_lexical_epoch(
     from workhop2_etl_spark.operators.index_store import _plan_is_empty_local
 
     tf = _tf_relation(corpus_tokens, id_col, tok_col)
+    # df/stats are PARTIALS over THIS epoch's documents only (never a
+    # re-read of the accumulated tf dir, which in append mode already
+    # holds earlier epochs); the loader sums partials, which equals
+    # the single-shot aggregate because epochs index disjoint
+    # documents (id discipline is the caller's, as with ANN appends).
+    # Deriving stats from tf is exact: tf and _stats_partial exclude
+    # the same empty-token docs and the counts/sums are integers.
+    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    stats = _doc_stats(tf)
     # a seed save (save_lexical_index(corpus.limit(0), ...), every
     # streaming lifecycle's starting state, or an empty append) writes
     # its three files driver-side when Catalyst proves the input
@@ -448,22 +490,10 @@ def _write_lexical_epoch(
     # the same lazy frames the Spark writer would have written
     if _plan_is_empty_local(tf):
         spark = corpus_tokens.sparkSession
-        df_schema = tf.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df")
-        ).schema
-        stats_schema = (
-            tf.groupBy("doc_id")
-            .agg(F.min("dl").alias("__dl"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"),
-            )
-            .schema
-        )
         write_parquet(spark, arrow_table([], tf.schema), f"{path}/tf", mode)
-        write_parquet(spark, arrow_table([], df_schema), f"{path}/df", mode)
+        write_parquet(spark, arrow_table([], df.schema), f"{path}/df", mode)
         write_parquet(
-            spark, arrow_table([(0, 0)], stats_schema), f"{path}/stats", mode
+            spark, arrow_table([(0, 0)], stats.schema), f"{path}/stats", mode
         )
         return
 
@@ -478,32 +508,14 @@ def _write_lexical_epoch(
             .write.mode(mode)
             .parquet(f"{path}/tf")
         )
-        # df/stats are PARTIALS over THIS epoch's documents only
-        # (never a re-read of the accumulated tf dir, which in append
-        # mode already holds earlier epochs); the loader sums
-        # partials, which equals the single-shot aggregate because
-        # epochs index disjoint documents (id discipline is the
-        # caller's, as with ANN appends). Deriving stats from tf is
-        # exact: tf and _stats_partial exclude the same empty-token
-        # docs, dl is a per-doc constant carried on every tf row, and
-        # the counts/sums are integers.
-        df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        stats = (
-            tf.groupBy("doc_id")
-            .agg(F.min("dl").alias("__dl"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"),
-            )
-        )
         # coalesce(1), not repartition(1): the aggregations above
         # already shuffle, so coalesce folds the post-shuffle read
         # into the single per-epoch partial file without a SECOND
         # exchange (one less Exchange and stage per write). The
         # two partial writes are independent reads of the cached tf,
-        # so they run CONCURRENTLY (guide §2.6 — the second job's
-        # tasks back-fill the first's tail; actions are only
-        # sequential when driver code calls them sequentially).
+        # so they run CONCURRENTLY (the second job's tasks back-fill
+        # the first's tail; actions are only sequential when driver
+        # code calls them sequentially).
         from concurrent.futures import ThreadPoolExecutor
 
         def _w(pair):
@@ -559,7 +571,7 @@ def load_lexical_index(
     all: all three reads hide files whose ledger marker is absent, so
     the marker is each batch's atomic commit point even under a
     reader racing the writer's renames or after a mid-rename crash
-    (index_store._ledger_gated_parquet, r12). ``as_of`` reconstructs
+    (operators/ledger.py). ``as_of`` reconstructs
     the SNAPSHOT after that commit sequence: ledgered batches (stream
     epochs, deletes) committed later are hidden across all three
     relations at once, so the snapshot's scores are the bit-exact
@@ -579,17 +591,9 @@ def load_lexical_index(
     tomb = _read_tombstones(spark, path, as_of=as_of)
     if tomb is not None:  # pending deletes: logical until compaction
         tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
-    df = (
-        _gated_or_raise(spark, path, "df", as_of=as_of)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") > 0)
-    )
+    df = _fold_df(_gated_or_raise(spark, path, "df", as_of=as_of))
     stats = _stats_from_counts(
-        _gated_or_raise(spark, path, "stats", as_of=as_of).agg(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
-            F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("sum_dl"),
-        )
+        _fold_stats(_gated_or_raise(spark, path, "stats", as_of=as_of))
     )
     return tf, df, stats, meta
 
@@ -667,23 +671,10 @@ def _lexical_compact_specs(tombstones: DataFrame | None = None):
     def purge_tf(d: DataFrame) -> DataFrame:
         return d.join(F.broadcast(tombstones), "doc_id", "left_anti")
 
-    def fold_df(d: DataFrame) -> DataFrame:
-        return (
-            d.groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .filter(F.col("df") > 0)
-        )
-
-    def fold_stats(d: DataFrame) -> DataFrame:
-        return d.agg(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
-            F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("sum_dl"),
-        )
-
     return [
         ("tf", ["term"], purge_tf if tombstones is not None else None, False),
-        ("df", ["term"], fold_df, True),
-        ("stats", [], fold_stats, True),
+        ("df", ["term"], _fold_df, True),
+        ("stats", [], _fold_stats, True),
     ]
 
 
@@ -1010,7 +1001,7 @@ def bm25_prf_expand(
     aggregation; at 100 TB run both passes against the persisted
     lexical index instead (load once, probe twice).
 
-    Execution (r12 optimization): the expanded relation materializes
+    Execution: the expanded relation materializes
     HERE, at the driver — it is query-bounded by contract (|Q|·(terms
     + m_expand) rows, guarded loudly at 2^20), the same bounded-
     collect class as ``probe_lexical_index_prf``'s expansion. Lazy
@@ -1037,14 +1028,7 @@ def bm25_prf_expand(
     try:
         query_terms = query_terms.select("query_id", "term").distinct()
         df_all = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        stats = _stats_from_counts(
-            tf.groupBy("doc_id")
-            .agg(F.min("dl").alias("__dl"))
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(F.sum("__dl"), F.lit(0)).alias("sum_dl"),
-            )
-        )
+        stats = _stats_from_counts(_doc_stats(tf))
         fb = _bm25_rank(
             tf, df_all, stats, query_terms,
             k=n_feedback, k1=k1, b=b, round_digits=round_digits,
@@ -1057,9 +1041,9 @@ def bm25_prf_expand(
         rows = expanded.limit(cap + 1).collect()
         if len(rows) > cap:
             # out-of-contract input: fall back to the LAZY expanded
-            # relation — the pre-r12 behavior (slow: pass 1 + the
-            # harvest sit in the caller's pass-2 lineage), never an
-            # error where the old code worked (r12 advice fix). The
+            # relation — slow (pass 1 + the harvest sit in the
+            # caller's pass-2 lineage), but never an error where the
+            # lazy form worked. The
             # unpersist in the finally below still runs; the lazy plan
             # recomputes tf, which is exactly the old cost model.
             return expanded

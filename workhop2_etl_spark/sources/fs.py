@@ -79,6 +79,11 @@ def has_data(spark: SparkSession, path: str) -> bool:
     )
 
 
+def mkdirs(spark: SparkSession, path: str) -> None:
+    fs, p = fs_and_path(spark, path)
+    fs.mkdirs(p)
+
+
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
     fs, s = fs_and_path(spark, src)
     _, d = fs_and_path(spark, dst)

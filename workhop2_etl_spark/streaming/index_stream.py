@@ -7,30 +7,15 @@ arrive continuously, and the index must stay current without a
 rebuild and without double-indexing a replayed micro-batch. This
 module runs ``append``-equivalent index work inside ``foreachBatch``
 with an idempotence protocol that makes at-least-once delivery
-EXACTLY-ONCE in effect:
-
-1. **Ledger short-circuit** — each committed epoch leaves a marker
-   file under ``<path>/ledger/``; a replayed epoch that already
-   committed returns immediately (after sweeping any staging
-   leftovers).
-2. **Staged write** — the batch's postings/signature rows are
-   assigned/signed under the artifact's OWN stored parameters (same
-   guarantee as ``append_*_index``) and written to a per-epoch
-   staging dir with ``mode=overwrite``, so a replay of a half-staged
-   epoch starts clean.
-3. **Epoch-owned renames** — any live files a previous attempt of
-   THIS epoch already moved in are deleted first (each epoch's files
-   carry its id in their names, so an epoch only ever touches its
-   own), then the staged files rename into the live ``<path>/index``
-   dir. A crash at any point between deletes or renames converges on
-   replay — the epoch's live file set is rebuilt from the fresh
-   staging whole-or-not-at-all, with no reliance on the replay
-   reproducing the same partitioning. (This is why duplicates never
-   reach ``_ivf_probe``, whose top-k window would count a
-   double-indexed neighbor twice.)
-4. **Marker, then sweep** — the ledger marker is created only after
-   every staged file is in place; staging is deleted after the
-   marker, so the worst crash leaves a swept-on-replay leftover.
+EXACTLY-ONCE in effect: each epoch commits through the artifact's
+ledger (operators/ledger.py) — a committed epoch short-circuits, a
+replay rebuilds the epoch's live files whole from fresh staging
+(epoch ids in the file names scope every delete to the epoch's own
+files, so duplicates never reach ``_ivf_probe``, whose top-k window
+would count a double-indexed neighbor twice), and the marker makes
+the epoch visible to readers at once. The batch's rows are
+assigned/signed under the artifact's OWN stored parameters (same
+guarantee as ``append_*_index``).
 
 Contracts: single writer (don't run two streams or a concurrent
 ``append_*_index``/``compact_index`` against one artifact — stop the
@@ -52,14 +37,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.operators.index_store import (
     _IVF_POSTINGS_KIND,
     _LSH_KIND,
-    _commit_marker,
     _read_centroid_rows,
+    _read_codebook_rows,
     _read_meta_any_kind,
     _write_ivf_postings,
-    _write_meta,
     _write_signed,
 )
 from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
@@ -92,140 +77,93 @@ def ingest_epoch(
     lexical artifact the batch must already carry the tokenized
     column (``vec_col`` names it; default contract 'toks').
 
-    Reader atomicity (r12): the epoch's renamed files are hidden from
-    every loader until the ledger marker lands
-    (index_store._ledger_gated_parquet) — a reader racing these
-    renames, or loading after a mid-rename crash, sees the whole
-    epoch or none of it (never tf rows without their df/stats
-    partials), and a delete derives its victims from COMMITTED rows
-    only."""
-    fs, marker = fs_and_path(spark, f"{index_path}/ledger/epoch-{epoch_id:012d}")
-    staging = f"{index_path}/ingest.epoch-{epoch_id:012d}"
-    _, staging_p = fs_and_path(spark, staging)
-    if fs.exists(marker):
-        if fs.exists(staging_p):  # crash between marker and sweep
-            fs.delete(staging_p, True)
-        return "skipped"
-
+    Reader atomicity: the epoch's renamed files are hidden from every
+    loader until the ledger marker lands (operators/ledger.py) — a
+    reader racing these renames, or loading after a mid-rename crash,
+    sees the whole epoch or none of it (never tf rows without their
+    df/stats partials), and a delete derives its victims from
+    COMMITTED rows only."""
     meta = _read_meta_any_kind(
         spark, index_path, kinds=_INGEST_KINDS, verb="stream-ingest"
     )
-    # (staging subpath, live dir) pairs to rename after the stage
-    if meta["kind"] == _LSH_KIND:
-        _write_signed(
-            batch,
-            index_path,
-            int(meta["dim"]),
-            int(meta["num_planes"]),
-            int(meta["num_tables"]),
-            id_col or meta["id_col"],
-            vec_col,
-            "overwrite",
-            data_dir=staging,
-            num_partitions=partitions_per_epoch,
-            store_dtype=meta.get("store_dtype", "float64"),
-        )
-        moves = [(staging, f"{index_path}/index")]
-    elif meta["kind"] == _LEXICAL_KIND:
-        from workhop2_etl_spark.operators.retrieval import (
-            _write_lexical_epoch,
-        )
+    lexical = meta["kind"] == _LEXICAL_KIND
 
-        # the artifact's own metadata names its token column (recorded
-        # at save time, r11) — caller arguments can confirm but never
-        # silently remap it; pre-r11 artifacts without the field fall
-        # back to the old convention (vec_col unless it still holds
-        # the ANN default, then 'toks')
-        tok_col = meta.get("tok_col")
-        if tok_col is None:
-            tok_col = vec_col if vec_col != "embedding" else "toks"
-        elif vec_col not in ("embedding", tok_col):
-            raise ValueError(
-                f"lexical index at {index_path} records "
-                f"tok_col={tok_col!r} in its metadata, but the stream "
-                f"was started with vec_col={vec_col!r} — the artifact's "
-                "recorded token column wins; drop the vec_col override "
-                "or rebuild the artifact under the new column name"
+    def stage(staging: str) -> None:
+        if meta["kind"] == _LSH_KIND:
+            _write_signed(
+                batch,
+                index_path,
+                int(meta["dim"]),
+                int(meta["num_planes"]),
+                int(meta["num_tables"]),
+                id_col or meta["id_col"],
+                vec_col,
+                "overwrite",
+                data_dir=f"{staging}/index",
+                num_partitions=partitions_per_epoch,
+                store_dtype=meta.get("store_dtype", "float64"),
             )
-        if tok_col not in batch.columns:
-            raise ValueError(
-                f"lexical ingest into {index_path} expects token column "
-                f"{tok_col!r} (recorded in the artifact metadata at save "
-                f"time), but the prepared micro-batch has columns "
-                f"{list(batch.columns)} — fix the stream's prepare hook "
-                "to produce that column"
+        elif lexical:
+            from workhop2_etl_spark.operators.retrieval import (
+                _write_lexical_epoch,
             )
-        _write_lexical_epoch(
-            batch, staging, id_col or meta["id_col"], tok_col, "overwrite",
-            num_partitions=partitions_per_epoch,
-        )
-        moves = [
-            (f"{staging}/{sub}", f"{index_path}/{sub}")
-            for sub in ("tf", "df", "stats")
-        ]
-    else:  # _IVF_POSTINGS_KIND (guaranteed by _read_meta_any_kind)
-        from workhop2_etl_spark.operators.index_store import _read_codebook_rows
 
-        centroids = _read_centroid_rows(spark, f"{index_path}/centroids", meta)
-        store_dtype = meta.get("store_dtype", "float64")
-        _write_ivf_postings(
-            batch,
-            index_path,
-            centroids,
-            id_col or meta["id_col"],
-            vec_col,
-            "overwrite",
-            data_dir=staging,
-            num_partitions=partitions_per_epoch,
-            store_dtype=store_dtype,
-            codebooks=(
-                _read_codebook_rows(spark, f"{index_path}/codebooks", meta)
-                if store_dtype == "pq8"
-                else None
-            ),
-            dim=int(meta["dim"]),
-        )
-        moves = [(staging, f"{index_path}/index")]
-
-    # a previous attempt of this epoch may have moved files in before
-    # crashing; remove them so the live set is rebuilt whole from the
-    # fresh staging (epoch id in the name scopes the delete to this
-    # epoch's own files)
-    prefix = f"stream-{epoch_id:012d}-"
-    for src_dir, dst_dir in moves:
-        _, src_dir_p = fs_and_path(spark, src_dir)
-        staged = sorted(
-            (
-                st.getPath()
-                for st in fs.listStatus(src_dir_p)
-                if st.isFile()
-                and not st.getPath().getName().startswith((".", "_"))
-            ),
-            key=lambda p: p.getName(),
-        )
-        _, dst_dir_p = fs_and_path(spark, dst_dir)
-        for st in fs.listStatus(dst_dir_p):
-            if st.getPath().getName().startswith(prefix):
-                fs.delete(st.getPath(), False)
-        for i, src in enumerate(staged):
-            _, dst = fs_and_path(
-                spark, f"{dst_dir}/{prefix}{i:05d}.parquet"
-            )
-            if not fs.rename(src, dst):
-                raise IOError(
-                    f"rename {src} -> {dst} failed during epoch "
-                    f"{epoch_id} index ingest"
+            # the artifact's own metadata names its token column
+            # (recorded at save time) — caller arguments can confirm
+            # but never silently remap it; artifacts without the field
+            # fall back to the old convention (vec_col unless it still
+            # holds the ANN default, then 'toks')
+            tok_col = meta.get("tok_col")
+            if tok_col is None:
+                tok_col = vec_col if vec_col != "embedding" else "toks"
+            elif vec_col not in ("embedding", tok_col):
+                raise ValueError(
+                    f"lexical index at {index_path} records "
+                    f"tok_col={tok_col!r} in its metadata, but the stream "
+                    f"was started with vec_col={vec_col!r} — the artifact's "
+                    "recorded token column wins; drop the vec_col override "
+                    "or rebuild the artifact under the new column name"
                 )
+            if tok_col not in batch.columns:
+                raise ValueError(
+                    f"lexical ingest into {index_path} expects token column "
+                    f"{tok_col!r} (recorded in the artifact metadata at save "
+                    f"time), but the prepared micro-batch has columns "
+                    f"{list(batch.columns)} — fix the stream's prepare hook "
+                    "to produce that column"
+                )
+            _write_lexical_epoch(
+                batch, staging, id_col or meta["id_col"], tok_col,
+                "overwrite", num_partitions=partitions_per_epoch,
+            )
+        else:  # _IVF_POSTINGS_KIND (guaranteed by _read_meta_any_kind)
+            centroids = _read_centroid_rows(
+                spark, f"{index_path}/centroids", meta
+            )
+            store_dtype = meta.get("store_dtype", "float64")
+            _write_ivf_postings(
+                batch,
+                index_path,
+                centroids,
+                id_col or meta["id_col"],
+                vec_col,
+                "overwrite",
+                data_dir=f"{staging}/index",
+                num_partitions=partitions_per_epoch,
+                store_dtype=store_dtype,
+                codebooks=(
+                    _read_codebook_rows(spark, f"{index_path}/codebooks", meta)
+                    if store_dtype == "pq8"
+                    else None
+                ),
+                dim=int(meta["dim"]),
+            )
 
-    # commit point: marker first (replays now short-circuit; the
-    # marker records the commit sequence for as_of snapshot reads),
-    # then sweep staging and bump the epoch counter to that sequence
-    fs.mkdirs(marker.getParent())
-    seq = int(meta.get("epoch") or 0) + 1
-    _commit_marker(fs, marker, seq)
-    fs.delete(staging_p, True)
-    _write_meta(spark, index_path, dict(meta, epoch=seq), "overwrite")
-    return "committed"
+    return ledger.commit(
+        spark, index_path, ledger.stream_batch(epoch_id), meta,
+        ("tf", "df", "stats") if lexical else ("index",),
+        stage,
+    )
 
 
 def _canon_checkpoint(checkpoint_dir: str) -> str:
@@ -296,7 +234,7 @@ def stream_index_ingest(
     import hashlib
 
     digest = hashlib.md5(_canon_checkpoint(checkpoint_dir).encode()).hexdigest()[:12]
-    # pre-canonicalization ledgers (bound before r11) carry
+    # pre-canonicalization ledgers carry
     # md5(raw path) markers; a resume that spells the SAME checkpoint
     # non-canonically (relative prefix, trailing slash, file: URI,
     # symlinked parent) must not trip the different-checkpoint error.
@@ -313,7 +251,10 @@ def stream_index_ingest(
         entries = [
             st.getPath().getName() for st in fs.listStatus(ledger_p)
         ]
-        has_epochs = any(e.startswith("epoch-") for e in entries)
+        has_epochs = any(
+            b is not None and b.kind == ledger.STREAM
+            for b in map(ledger.parse_marker, entries)
+        )
         legacy_bound = any(e in legacy_names for e in entries)
         bound_elsewhere = any(
             e.startswith("_stream-")
@@ -322,7 +263,7 @@ def stream_index_ingest(
             for e in entries
         )
         if has_epochs and legacy_bound and not fs.exists(bind_p):
-            # one-time migration: same checkpoint under its pre-r11
+            # one-time migration: same checkpoint under its legacy
             # raw-string digest — adopt it as the canonical binding
             # (the canonical marker is created below; the legacy
             # marker stays, harmless, so older code can still resume)
