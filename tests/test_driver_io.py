@@ -23,7 +23,7 @@ from workhop2_etl_spark.operators import index_store as IDX
 from workhop2_etl_spark.operators import retrieval as RET
 from workhop2_etl_spark.operators import similarity as SIM
 from workhop2_etl_spark.session import arrow_table, load_table
-from workhop2_etl_spark.sources import fs
+from workhop2_etl_spark.sources import fs, readers
 from workhop2_etl_spark.streaming import index_stream as IS
 
 DIM = 64
@@ -181,3 +181,116 @@ def test_truncated_centroid_file_names_the_artifact(spark, tmp_path, keep_crc):
         os.remove(f"{data}/.{part}.crc")
     with pytest.raises(ValueError, match=re.escape(data)):
         IDX.load_centroids(spark, path)
+
+
+def test_index_loads_and_parquet_reads_run_no_spark_job(spark, root):
+    """load_lexical_index (with a pending delete), load_ivf_index,
+    load_lsh_index and readers.read_parquet build their frames without
+    a Spark job: every parquet schema comes from a footer read on the
+    driver, on a bare path and on a non-local scheme."""
+    emb = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 120)
+    toks = load_table(spark, SF_DIR, "documents").filter(
+        F.col("doc_id") < 80
+    ).select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+    RET.save_lexical_index(toks, f"{root}/lex", mode="overwrite", num_partitions=2)
+    IDX.delete_from_index(spark, f"{root}/lex", [3, 5])
+    IDX.save_ivf_index(emb, f"{root}/ivf", _centroids(4, DIM), dim=DIM,
+                       mode="overwrite")
+    IDX.save_lsh_index(emb, f"{root}/lsh", dim=DIM, num_planes=4,
+                       num_tables=2, mode="overwrite")
+
+    calls = {
+        "load_lexical_index": lambda: RET.load_lexical_index(spark, f"{root}/lex"),
+        "load_ivf_index": lambda: IDX.load_ivf_index(spark, f"{root}/ivf"),
+        "load_lsh_index": lambda: IDX.load_lsh_index(spark, f"{root}/lsh"),
+        "read_parquet": lambda: readers.read_parquet(spark, f"{root}/lex/tf"),
+    }
+    for name, call in calls.items():
+        _, n = _jobs(spark, call)
+        assert n == 0, (name, n)
+    tf, _, stats, _ = RET.load_lexical_index(spark, f"{root}/lex")
+    assert stats.collect()[0].n_docs == toks.filter(
+        ~F.col("doc_id").isin(3, 5)).count()
+    assert tf.filter(F.col("doc_id").isin(3, 5)).count() == 0
+
+
+def _same_schema(spark, *paths):
+    got = readers.read_parquet(spark, *paths)
+    want = spark.read.parquet(*paths)
+    assert got.schema == want.schema, (got.schema, want.schema)
+    assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+
+
+@pytest.mark.parametrize("infer_ntz", ["true", "false"])
+def test_parquet_schema_matches_spark_inference(spark, tmp_path, infer_ntz):
+    """The driver-resolved schema equals spark.read.parquet's inferred
+    one for NTZ and LTZ timestamps, decimal, binary, array<struct> and
+    map columns, a hive-partitioned dir, explicit file lists, and
+    pyarrow-written files (with and without a time zone) beside
+    Spark-written ones, under either timestamp-inference setting."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", infer_ntz)
+    try:
+        typed = str(tmp_path / "typed")
+        spark.sql(
+            "SELECT id, CAST(id AS STRING) AS k, "
+            "TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ntz, "
+            "TIMESTAMP'2024-01-02 03:04:05' AS ltz, "
+            "CAST(id / 7 AS DECIMAL(18, 4)) AS dec, "
+            "CAST(CAST(id AS STRING) AS BINARY) AS bin, "
+            "array(named_struct('a', id, 'b', CAST(id AS STRING))) AS arr, "
+            "map(CAST(id AS STRING), id * 2.5D) AS m "
+            "FROM range(6)"
+        ).write.parquet(typed)
+        _same_schema(spark, typed)
+
+        parted = str(tmp_path / "parted")
+        spark.read.parquet(typed).withColumn("p", F.col("id") % 2).write.partitionBy(
+            "p", "k"
+        ).parquet(parted)
+        _same_schema(spark, parted)
+        _same_schema(spark, *fs.data_files(spark, typed)[:2])
+
+        mixed = str(tmp_path / "mixed")
+        spark.sql(
+            "SELECT id, TIMESTAMP'2024-01-02 03:04:05' AS ts FROM range(3)"
+        ).write.parquet(mixed)
+        ts = [dt.datetime(2024, 5, 6, 7, 8, 9)]
+        for name, tz in (("a-first.parquet", None), ("z-last.parquet", "UTC")):
+            pq.write_table(
+                pa.table({
+                    "id": pa.array([9], pa.int64()),
+                    "ts": pa.array(ts, pa.timestamp("us", tz=tz)),
+                }),
+                f"{mixed}/{name}",
+            )
+            _same_schema(spark, mixed)
+            _same_schema(spark, f"{mixed}/{name}")
+            os.remove(f"{mixed}/{name}")
+    finally:
+        spark.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
+
+
+def test_parquet_schema_errors_name_the_path(spark, tmp_path):
+    """A missing path, a directory without data files and a truncated
+    footer raise, naming the path."""
+    missing = str(tmp_path / "missing")
+    with pytest.raises(FileNotFoundError, match=re.escape(missing)):
+        readers.read_parquet(spark, missing)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(ValueError, match=re.escape(str(empty))):
+        readers.read_parquet(spark, str(empty))
+    cut = str(tmp_path / "cut")
+    spark.range(10).coalesce(1).write.parquet(cut)
+    (part,) = [f for f in os.listdir(cut) if f.startswith("part-")]
+    with open(f"{cut}/{part}", "r+b") as fh:
+        fh.truncate(os.path.getsize(f"{cut}/{part}") // 2)
+    os.remove(f"{cut}/.{part}.crc")
+    with pytest.raises(ValueError, match=re.escape(cut)):
+        readers.read_parquet(spark, cut)

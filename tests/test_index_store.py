@@ -1883,6 +1883,68 @@ def test_check_index_clean_and_tampered(spark):
     assert not row.consistent and "df partials disagree" in row.problems
 
 
+def test_compact_sweeps_crashed_delete_staging(spark):
+    """A crashed delete's staging dir does not outlive compaction:
+    after compact_index the leftover ``delete.crashed/`` is gone and
+    check_index counts no orphan staging; replaying that label
+    afterwards still deletes from the post-compaction state."""
+    import shutil
+
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    corpus = _lex_corpus(spark, n=100)
+    path = _tmp("compact_delete_staging")
+    RET.save_lexical_index(corpus, path, mode="overwrite", num_partitions=1)
+    # the crash: the batch staged its partials, then died before any
+    # rename (no batch files under the data dirs, no marker)
+    os.makedirs(f"{path}/delete.crashed")
+    shutil.copytree(f"{path}/df", f"{path}/delete.crashed/df")
+    assert IDX.check_index(spark, path).collect()[0].n_orphan_staging == 1
+
+    IDX.compact_index(spark, path, num_partitions=1)
+    assert not os.path.exists(f"{path}/delete.crashed")
+    row = IDX.check_index(spark, path).collect()[0]
+    assert row.consistent and row.n_orphan_staging == 0
+
+    victims = corpus.filter(F.col("doc_id") % 6 == 0).select("doc_id")
+    assert IDX.delete_from_index(spark, path, victims, batch="crashed") == "committed"
+    ref = _tmp("compact_delete_staging_ref")
+    RET.save_lexical_index(
+        corpus.filter(F.col("doc_id") % 6 != 0), ref,
+        mode="overwrite", num_partitions=1,
+    )
+    got, want = RET.load_lexical_index(spark, path), RET.load_lexical_index(spark, ref)
+    assert got[2].collect() == want[2].collect()
+    for a, b in ((got[0], want[0]), (got[1], want[1])):
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def test_index_changes_skips_compacted_legacy_marker(spark):
+    """A sequence-less marker raises only while its batch's files are
+    live: once compaction folded them into the base state the
+    changelog skips it, so tailing after the compaction works."""
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    corpus = _lex_corpus(spark, n=120)
+    path = _tmp("changes_legacy_compacted")
+    RET.save_lexical_index(corpus, path, mode="overwrite", num_partitions=1)
+    victims = corpus.filter(F.col("doc_id") % 7 == 0).select("doc_id")
+    assert IDX.delete_from_index(spark, path, victims, batch="b1") == "committed"
+    open(f"{path}/ledger/delete-b1", "w").close()  # sequence-less marker
+    with pytest.raises(ValueError, match="no commit sequence"):
+        IDX.index_changes(spark, path)
+
+    IDX.compact_index(spark, path, num_partitions=1)
+    assert IDX.index_changes(spark, path, from_seq=2).count() == 0
+    more = corpus.filter(F.col("doc_id") % 7 == 1).select("doc_id")
+    assert IDX.delete_from_index(spark, path, more, batch="b2") == "committed"
+    rows = IDX.index_changes(spark, path, from_seq=2).collect()
+    assert {(r.commit_seq, r.op) for r in rows} == {(3, "delete")}
+    assert sorted(r.doc_id for r in rows) == sorted(
+        r.doc_id for r in more.collect()
+    )
+
+
 def test_check_index_counts_uncommitted_and_orphans(spark):
     from workhop2_etl_spark.operators import retrieval as RET
 

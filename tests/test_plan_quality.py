@@ -845,6 +845,55 @@ def test_driver_list_frames_go_through_local_relation():
     assert found == set(LIST_FRAME_ALLOWLIST), found ^ set(LIST_FRAME_ALLOWLIST)
 
 
+# Sites in workhop2_etl_spark/ that read parquet through spark.read
+# without a declared schema (each such read launches a Spark job to
+# infer it), each kept on purpose. Everything else reads through
+# sources.readers.read_parquet, which resolves the footer schema on the
+# driver and passes it to .schema(...), or declares a schema it holds.
+PARQUET_READ_ALLOWLIST = {
+    ("suite/core.py", "s6_schema_evolution"):
+        "a mergeSchema read: Spark must union every file's footer",
+}
+
+
+def test_parquet_reads_declare_a_schema():
+    """Static scope guard: no ``.read....parquet(`` call chain without a
+    ``.schema(`` in the engine outside the allowlist above."""
+    import ast
+    import pathlib
+
+    import workhop2_etl_spark
+
+    def chain(node) -> list[str]:
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    found = set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                ):
+                    continue
+                names = chain(node.func.value)
+                if "read" in names and "schema" not in names:
+                    found.add((path.relative_to(root).as_posix(), fn.name))
+    assert found == set(PARQUET_READ_ALLOWLIST), found ^ set(PARQUET_READ_ALLOWLIST)
+
+
 def _sql_executions(spark, seen=None) -> dict:
     """{execution id: physical plan description} of the SQL executions
     the status store holds (it is kept with the UI off), leaving out
@@ -960,6 +1009,45 @@ def test_minhash_self_join_reuses_band_exchange(spark):
     ), reused[0]
     assert plan.count("REPARTITION_BY_COL") == 2, plan
     assert plan.count("FileScan parquet") == 1, plan
+
+
+def test_near_dup_pairs_fans_out_one_file_input(spark, tmp_path):
+    """A one-file input arrives as one partition; near_dup_pairs spreads
+    it round-robin over defaultParallelism partitions, and in the
+    executed plan the shingle stage reads that exchange uncoalesced
+    (one task per partition). Inputs already spread — a shuffle's
+    output, or as many files as cores — get no extra exchange, and
+    every form finds the same pairs."""
+    from workhop2_etl_spark.operators import dedup_text as DT
+    from workhop2_etl_spark.sources import readers
+
+    n = spark.sparkContext.defaultParallelism
+    one_file = readers.read_parquet(spark, f"{SF_DIR}/documents.parquet")
+    assert one_file.rdd.getNumPartitions() < n
+    pairs = DT.near_dup_pairs(one_file)
+    want = sorted(map(tuple, pairs.collect()))
+    assert want
+    plan = _final_plan(pairs)
+    rr = [ln for ln in plan.splitlines() if "RoundRobinPartitioning" in ln]
+    assert rr and all(f"RoundRobinPartitioning({n})" in ln for ln in rr), plan
+    assert all("REPARTITION_BY_NUM" in ln for ln in rr), plan
+    # the shingle stages read the round-robin stage directly, never
+    # through a coalescing AQEShuffleRead, so they keep n tasks
+    lines = plan.splitlines()
+    for i, ln in enumerate(lines):
+        if "RoundRobinPartitioning" in ln:
+            assert "ShuffleQueryStage" in lines[i - 1], plan
+            assert "AQEShuffleRead" not in lines[i - 2], plan
+
+    spread_dir = str(tmp_path / "spread")
+    one_file.repartition(n).write.parquet(spread_dir)
+    for already in (
+        one_file.repartition(n, "doc_id"),
+        readers.read_parquet(spark, spread_dir),
+    ):
+        got = DT.near_dup_pairs(already)
+        assert sorted(map(tuple, got.collect())) == want
+        assert "RoundRobinPartitioning" not in _final_plan(got)
 
 
 def test_driver_relations_plan_as_local_relations(spark, tmp_path):

@@ -10,10 +10,16 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from workhop2_etl_spark.functions import clean
-from workhop2_etl_spark.operators.dedup_text import dedupe_exact, jaccard, word_shingles
+from workhop2_etl_spark.operators.dedup_text import (
+    dedupe_exact,
+    jaccard,
+    word_ngrams,
+    word_shingles,
+)
 
 _SEP = re.compile(r"\s*(?:feat\.|featuring|ft\.|&|and)\s*")
 _WS = re.compile(r"\s+")
@@ -107,6 +113,78 @@ def test_jaccard_bounds_and_identity(spark):
             assert r.self_j == 1.0
         else:
             assert r.self_j == 0.0
+
+
+def _zip_tokens(c):
+    t = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, " "))
+
+
+def _zip_ngrams(toks, n: int):
+    """The token-array n-gram form (arrays_zip of shifted slices) that
+    the regex kernel replaced, kept as its reference."""
+    k = F.size(toks)
+    shifted = [toks.alias("t0")] + [
+        F.slice(toks, 1 + j, k).alias(f"t{j}") for j in range(1, n)
+    ]
+    grams = F.transform(
+        F.arrays_zip(*shifted),
+        lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(n)]),
+    )
+    return F.when(k >= n, F.slice(grams, 1, k - n + 1)).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
+def _zip_shingles(c, n: int):
+    toks = _zip_tokens(c)
+    k = F.size(toks)
+    return F.array_distinct(
+        F.when(k == 0, F.array().cast("array<string>"))
+        .when(k >= n, _zip_ngrams(toks, n))
+        .otherwise(F.array(F.concat_ws(" ", toks)))
+    )
+
+
+_NGRAM_EDGES = [
+    None,
+    "",
+    "   ",
+    "\t\n \r\n",
+    "one",
+    "two words",
+    " three  words\there ",
+    "tab\tand\nnewline\r\nruns  of   space",
+    "Ça VA très bien, élève — naïve façade Œuvre",
+    "a.b (c)* [d]+ $e ^f \\g |h ?i {j} k\\1 1+1=2 ^$ .*",
+    "x y z x y z x y",
+    "non\u00a0breaking space",
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_word_ngrams_match_arrays_zip_reference(spark, n):
+    """The regex n-gram kernel gives the token-array reference's exact
+    arrays (all n-grams, and the distinct shingles with the short-text
+    and NULL rules) on NULL, empty, whitespace-only, tab/newline,
+    accented, regex-metacharacter and shorter-than-n texts, and on the
+    seeded hazard batch."""
+    texts = _NGRAM_EDGES + _batch(200)
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, s string")
+    s = F.col("s")
+    rows = df.select(
+        "i",
+        word_ngrams(s, n).alias("new"),
+        _zip_ngrams(_zip_tokens(s), n).alias("ref"),
+        word_shingles(s, n).alias("new_sh"),
+        _zip_shingles(s, n).alias("ref_sh"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r.new == r.ref, (texts[r.i], r.new, r.ref)
+        assert r.new_sh == r.ref_sh, (texts[r.i], r.new_sh, r.ref_sh)
+    short = [r for r in rows if texts[r.i] and 0 < len(texts[r.i].split()) < n]
+    assert not n > 1 or short  # the short-text rule is exercised
 
 
 def test_dedupe_exact_row_math(spark):

@@ -28,47 +28,52 @@ from workhop2_etl_spark.operators.text import fingerprint
 # ---------------------------------------------------------------------------
 
 
+def _norm_text(c: Column) -> Column:
+    """Lower-cased text with every whitespace run collapsed to one
+    space and the ends trimmed: its tokens are its space-separated
+    words."""
+    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+
+
 def _norm_tokens(c: Column) -> Column:
-    t = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    t = _norm_text(c)
     return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, " "))
 
 
-def all_ngrams(toks: Column, n: int) -> Column:
-    """All word n-grams (repeats kept, document order) of a token
-    array; empty for documents shorter than n tokens.
+def _ngrams_of_norm(t: Column, n: int, short_whole: bool = False) -> Column:
+    """Word n-grams of normalized text ``t`` (NULL for NULL text) in
+    one regex pass: each match is a zero-width lookahead at a word
+    start that captures the n words from there. With ``short_whole``
+    a text of fewer than n words captures itself whole, at the start
+    of input only (a lookbehind that no character precedes)."""
+    grams = r"\S+(?: \S+){%d}" % (n - 1)
+    if short_whole and n > 1:
+        grams += r"|(?<![\s\S])\S+(?: \S+){0,%d}$" % (n - 2)
+    return F.regexp_extract_all(t, F.lit(f"(?:^| )(?=({grams}))"), 1)
 
-    THE one sliding-n-gram kernel — word_shingles (d-family), the
-    t5 repetition ratio, and the t10 bigram counts all build on it.
-    Zips the token array with its own shifted slices, so the token
-    expression is evaluated a CONSTANT number of times per row.
-    (Referencing ``toks`` inside a per-element lambda re-evaluates
-    the whole regexp+split chain for every element — O(k²) regex
-    work per document, measured ~12s for 5k docs vs ~1s here.
-    arrays_zip pads short slices with NULLs; those tail pseudo-grams
-    are cut by the final slice.)"""
-    k = F.size(toks)
-    shifted = [toks.alias("t0")] + [
-        F.slice(toks, 1 + j, k).alias(f"t{j}") for j in range(1, n)
-    ]
-    grams_all = F.transform(
-        F.arrays_zip(*shifted),
-        lambda s: F.concat_ws(" ", *[s[f"t{j}"] for j in range(n)]),
-    )
-    return F.when(k >= n, F.slice(grams_all, 1, k - n + 1)).otherwise(
-        F.array().cast("array<string>")
+
+def word_ngrams(c: Column, n: int) -> Column:
+    """All word n-grams (repeats kept, document order) of normalized
+    text; empty for NULL text and for documents shorter than n words.
+
+    THE one sliding-n-gram kernel — word_shingles (d-family), the t5
+    repetition ratio and the t10 bigram counts all build on it. One
+    ``regexp_extract_all`` over the normalized string, with no token
+    array, zip or per-element lambda in between."""
+    return F.coalesce(
+        _ngrams_of_norm(_norm_text(c), n), F.array().cast("array<string>")
     )
 
 
 def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of normalized text. Documents shorter
-    than n words contribute their whole text as one shingle (so they
-    still participate in dedup)."""
-    toks = _norm_tokens(c)
-    k = F.size(toks)
-    whole = F.array(F.concat_ws(" ", toks))
-    empty = F.array().cast("array<string>")
-    return F.array_distinct(
-        F.when(k == 0, empty).when(k >= n, all_ngrams(toks, n)).otherwise(whole)
+    """Distinct word n-grams of normalized text (the ``word_ngrams``
+    kernel). Documents shorter than n words contribute their whole
+    normalized text as one shingle, captured by the same regex pass
+    (so they still participate in dedup); empty and whitespace-only
+    texts have none, and NULL text has the one shingle ``''``."""
+    return F.coalesce(
+        F.array_distinct(_ngrams_of_norm(_norm_text(c), n, short_whole=True)),
+        F.array(F.lit("")),
     )
 
 
@@ -291,6 +296,25 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union > 0, inter.cast("double") / union.cast("double")).otherwise(F.lit(0.0))
 
 
+def _fanned_out(df: DataFrame) -> DataFrame:
+    """``df`` spread round-robin over ``defaultParallelism`` partitions
+    when it arrives in fewer: a one-file input is one scan task, and
+    every per-document stage downstream (normalize, shingle, one md5
+    per shingle) would run on one core. The count is explicit because
+    AQE never coalesces a ``repartition(n)``. An input with enough
+    partitions, or that is itself a shuffle's output (an adaptive
+    plan, partitioned at run time), is returned as is, so no shuffle
+    is added to an input that is already spread. Reading the partition
+    count of a shuffle-free plan runs no job."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
+    if qe.toRdd().getNumPartitions() >= n:
+        return df
+    return df.repartition(n)
+
+
 def near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -302,7 +326,10 @@ def near_dup_pairs(
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact shingle-Jaccard
     verification → pairs ≥ threshold. The expensive O(n²) comparison
-    never happens; Jaccard runs only on LSH survivors."""
+    never happens; Jaccard runs only on LSH survivors. An input in
+    fewer partitions than the default parallelism is spread over it
+    first (``_fanned_out``), so both shingle stages use every core."""
+    df = _fanned_out(df)
     cands = minhash_candidates(df, text_col, id_col, num_hashes, num_bands, shingle_n)
     sh = df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("__shingles")

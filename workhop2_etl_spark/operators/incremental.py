@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from workhop2_etl_spark.session import local_relation
 from workhop2_etl_spark.sources import fs
+from workhop2_etl_spark.sources.readers import read_parquet
 
 #: rollup grain: (day, event_type) with combinable measures
 _KEYS = ["day", "event_type"]
@@ -162,7 +163,7 @@ def refresh_daily_rollup(
         affected = F.col("day").isin([x for x in days if x is not None])
         if any(x is None for x in days):
             affected = affected | F.col("day").isNull()
-        base = spark.read.parquet(table_dir).filter(affected)
+        base = read_parquet(spark, table_dir).filter(affected)
         merged = combine_rollups(base, d).localCheckpoint(eager=True)
     else:
         merged = d
@@ -305,7 +306,7 @@ def compact_rollup_epochs(
         in_dirs.append(fs.join(table_dir, f"base={k}"))
     in_dirs.extend(fs.join(table_dir, f"epoch={e}") for e in foldable)
 
-    combined = combine_fn(spark.read.parquet(*in_dirs))
+    combined = combine_fn(read_parquet(spark, *in_dirs))
     new_k = foldable[-1]
     tmp = fs.join(table_dir, "_compact_tmp")
     combined.write.mode("overwrite").parquet(tmp)
@@ -519,7 +520,7 @@ def read_join_view(spark: SparkSession, view_dir: str, like: DataFrame | None = 
         if like is None:
             raise ValueError(f"join view {view_dir} is empty")
         return local_relation(spark, [], like.schema)
-    return spark.read.parquet(*dirs)
+    return read_parquet(spark, *dirs)
 
 
 def compact_join_view(

@@ -79,6 +79,7 @@ from workhop2_etl_spark.operators.similarity import (
 )
 from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.session import arrow_table, local_relation
+from workhop2_etl_spark.sources import readers
 from workhop2_etl_spark.sources.fs import (
     data_files,
     delete,
@@ -1061,8 +1062,8 @@ def _ledger_gated_parquet(
     if not files:  # e.g. a replay swept a crashed batch's files
         return None
     if hid:
-        return spark.read.parquet(*files)
-    return spark.read.parquet(f"{path}/{sub}")
+        return readers.read_parquet(spark, *files)
+    return readers.read_parquet(spark, f"{path}/{sub}")
 
 
 def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
@@ -1080,7 +1081,9 @@ def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
       reader-visible, and its replay (same label) restages from the
       post-compaction live state;
     - a committed epoch's leftover staging (crash between marker and
-      sweep) is swept.
+      sweep) is swept, and so is every delete batch's staging dir
+      (committed or not: a replay of the label restages from the
+      post-compaction live state).
 
     Single-writer by contract, like every mutator here."""
     pending = ledger.uncommitted(spark, path, _BATCH_SUBS)
@@ -1093,9 +1096,9 @@ def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
                 "files if the stream is abandoned) before compacting, else "
                 "the epoch's replay would duplicate rows"
             )
-    staged = [b for b in ledger.staging_dirs(spark, path) if b.kind == ledger.STREAM]
+    staged = ledger.staging_dirs(spark, path)
     for b in staged:
-        if not ledger.committed(spark, path, b):
+        if b.kind == ledger.STREAM and not ledger.committed(spark, path, b):
             raise ValueError(
                 f"index at {path} has an uncommitted stream ingest epoch "
                 f"({b.staging}) — resume the stream to convergence (or "
@@ -1288,16 +1291,17 @@ def compact_index(
     before and after compaction is row-identical (pytest-asserted).
 
     Single-writer, stop-the-world by contract (same as append), and
-    crash-safe by construction: the rewrite stages into
-    ``<path>/index.compacting`` (one full write — the postings are
-    never written twice), then swaps in with filesystem
-    metadata-only operations (delete old dir, rename staging). A
-    crash before the staged ``_SUCCESS`` marker leaves the live
-    ``<path>/index`` untouched and the dead staging dir is discarded
-    on the next run; a crash inside the swap window is detected on
-    the next run (staging committed) and the swap completes WITHOUT
-    re-reading the data dir — the one sequence that must never
-    happen is recompacting a half-replaced data dir. Readers must
+    crash-safe by construction: each data dir (``index``, or the
+    lexical kind's ``tf``, ``df`` and ``stats``) stages on its own, all
+    of them concurrently, into ``<dir>.compacting`` (one full write —
+    the postings are never written twice), then swaps in with
+    filesystem metadata-only operations (delete old dir, rename
+    staging). A crash before the staged ``_SUCCESS`` marker leaves the
+    live dir untouched and the dead staging dir is discarded on the
+    next run; a crash inside the swap window is detected on the next
+    run (staging committed) and the swap completes WITHOUT re-reading
+    the data dir — the one sequence that must never happen is
+    recompacting a half-replaced data dir. Readers must
     not hold the path open across a compaction outside a
     transactional table format. Bumps the metadata epoch; returns
     the metadata plus ``files_before`` / ``files_after`` so callers
@@ -1325,18 +1329,22 @@ def compact_index(
     # each data dir stages and swaps independently; every dir's
     # content is load-equivalent before and after its own swap, so a
     # crash between dirs leaves a correct (part-compacted) artifact
-    # and the next run completes the rest
-    before_total: int | None = 0
-    after_total = 0
-    for sub, keys, transform, fold_one in specs:
-        fb, fa = _compact_dir(
-            spark, f"{path}/{sub}", keys, num_partitions, transform,
-            fold_one,
+    # and the next run completes the rest. Being independent, the dirs
+    # stage concurrently: the dimension-sized folds run beside the
+    # corpus-sized rewrite instead of queuing behind it
+    from concurrent.futures import ThreadPoolExecutor
+
+    def compact(spec) -> tuple[int | None, int]:
+        sub, keys, transform, fold_one = spec
+        return _compact_dir(
+            spark, f"{path}/{sub}", keys, num_partitions, transform, fold_one
         )
-        before_total = (
-            None if (fb is None or before_total is None) else before_total + fb
-        )
-        after_total += fa
+
+    with ThreadPoolExecutor(max_workers=len(specs)) as pool:
+        counts = list(pool.map(compact, specs))
+    before = [fb for fb, _ in counts]
+    before_total = None if None in before else sum(before)
+    after_total = sum(fa for _, fa in counts)
 
     if tomb is not None:  # every dir swapped: the purge is physical
         delete(spark, join(path, "tombstones"))
@@ -1422,7 +1430,7 @@ def _compact_dir(
     if not fs.exists(staged_ok):
         files_before = len(data_files(spark, data))
         reparted = _clustered(
-            spark.read.parquet(data), keys, num_partitions, transform, fold_one
+            readers.read_parquet(spark, data), keys, num_partitions, transform, fold_one
         )
         reparted.write.mode("overwrite").parquet(staging)
     else:
@@ -1567,8 +1575,10 @@ def index_changes(
     snapshotted); compaction folds batch files into base files, so —
     as with ``as_of`` — history reaches back to the last compaction,
     and asking past it raises rather than under-reporting. Legacy
-    (pre-sequence, empty) markers carry no order and raise too:
-    compact once to adopt the sequenced format going forward."""
+    (pre-sequence, empty) markers carry no order: they raise while
+    their batch's files are live, and are skipped once a compaction
+    has folded those files into the base state, so compacting once
+    adopts the sequenced format going forward."""
     from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
 
     meta = _read_meta_any_kind(
@@ -1590,6 +1600,10 @@ def index_changes(
     batches = []
     for b, seq in ledger.commits(spark, path):
         if seq is None:
+            if not any(
+                ledger.batch_files(spark, path, sub, b) for sub in _BATCH_SUBS
+            ):
+                continue  # a compaction folded it into the base state
             raise ValueError(
                 f"ledger marker {b.marker} at {path} carries no commit "
                 "sequence (legacy pre-snapshot format or a crash "
@@ -1613,7 +1627,7 @@ def index_changes(
                 "this batch into base files, so the changelog cannot reach "
                 "it; tail from a sequence after the compaction"
             )
-        ids = spark.read.parquet(*files).select(id_name).distinct()
+        ids = readers.read_parquet(spark, *files).select(id_name).distinct()
         parts.append(
             ids.select(
                 F.lit(seq).cast("long").alias("commit_seq"),

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
 
 from workhop2_etl_spark.sources.fs import fs_and_path
+from workhop2_etl_spark.sources.readers import read_parquet
 
 #: Tables the driver generates under /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -172,7 +173,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
@@ -184,12 +185,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # common micros generation from silently changing how every
         # other parquet read in the session decodes nanos columns.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(path)
+        raw = read_parquet(spark, path)
         # integer `div`, not `/`: ns epochs (~1.7e18) overflow double's
         # 53-bit mantissa, so float division would corrupt microseconds.
         ts = _ntz_of_epoch_micros("ts div 1000")
     else:
-        raw = spark.read.parquet(path)
+        raw = read_parquet(spark, path)
         if isinstance(raw.schema["ts"].dataType, TimestampNTZType):
             # parquet isAdjustedToUTC=false read natively as NTZ
             # (inferTimestampNTZ) — already session-tz-independent

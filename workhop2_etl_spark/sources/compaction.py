@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from workhop2_etl_spark.sources import fs
+from workhop2_etl_spark.sources.readers import read_parquet
 
 
 def plan_file_count(spark: SparkSession, path: str, target_mb: int = 128) -> int:
@@ -48,7 +49,7 @@ def compact_parquet(
     a plain repartition (round-robin) that just fixes file sizes.
     """
     n = plan_file_count(spark, src, target_mb)
-    df = spark.read.parquet(src)
+    df = read_parquet(spark, src)
     if sort_by:
         cols = [F.col(c) for c in sort_by]
         df = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)

@@ -37,12 +37,94 @@ def read_csv(
     return reader.option("inferSchema", "true").csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet scan — the engine's native interchange format. Schema
-    travels in the footer; predicate pushdown and column pruning reach
-    the row groups via Catalyst."""
-    require_exists(path)
-    return spark.read.parquet(path)
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """Parquet scan of the files and directories ``paths`` — the
+    engine's native interchange format. The schema travels in the
+    footer and is resolved on the driver by ``_parquet_schema``, so
+    building the frame runs no Spark job (a schema-less
+    ``spark.read.parquet`` launches one per call to read that same
+    footer). Partition columns of a hive-partitioned directory are
+    discovered as usual; predicate pushdown and column pruning reach
+    the row groups via Catalyst. Raises ``FileNotFoundError`` for a
+    missing path and ``ValueError`` naming the path when there is no
+    data file or the footer does not decode."""
+    return spark.read.schema(_parquet_schema(spark, *paths)).parquet(*paths)
+
+
+def _parquet_schema(spark: SparkSession, *paths: str) -> StructType:
+    """The data schema Spark's non-merging inference gives the parquet
+    files at ``paths``, resolved on the driver without a Spark job: the
+    listing of Spark's file index (recursive; ``_``/``.`` names
+    skipped, except partition dirs and summary files), then the footer
+    of the first summary file or else of the first data file in path
+    order, converted under the session's SQL conf. Spark-written files
+    carry their Spark schema in the footer, which takes precedence."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    files = {}  # qualified path -> FileStatus
+    pending = []
+    for path in paths:
+        jpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(conf)
+        if not fs.exists(jpath):
+            raise FileNotFoundError(f"source path does not exist: {path}")
+        st = fs.getFileStatus(jpath)
+        pending.append((fs, st, st.getPath().toString()))
+    while pending:
+        fs, st, qualified = pending.pop()
+        if not st.isDirectory():
+            files[qualified] = st
+            continue
+        for child in fs.listStatus(st.getPath()):
+            child_path = child.getPath().toString()
+            if _listed(_name(child_path)):
+                pending.append((fs, child, child_path))
+    rank = {name: i for i, name in enumerate(_SUMMARY_FILES)}
+    first = min(
+        files, key=lambda f: (rank.get(_name(f), len(rank)), f), default=None
+    )
+    if first is None:
+        raise ValueError(f"no parquet data files under {', '.join(paths)}")
+    st = files[first]
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    try:
+        footer = pq.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+    except Py4JJavaError as ex:
+        raise ValueError(f"unreadable parquet footer in {first}: {ex}") from ex
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(st.getPath(), footer),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return _parse_datatype_json_string(schema.json())
+
+
+#: parquet summary files, preferred over data files in this order
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _name(path: str) -> str:
+    return path.rsplit("/", 1)[-1]
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a child of this name: it skips
+    ``_``/``.`` names (commit markers, checksums, staging) except
+    partition dirs (``_k=v``) and parquet summary files, and files
+    still being copied in."""
+    if name.startswith(_SUMMARY_FILES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
 
 
 def read_json(

@@ -43,6 +43,7 @@ from workhop2_etl_spark.operators.incremental import (
     sweep_stale_generations,
 )
 from workhop2_etl_spark.sources import fs
+from workhop2_etl_spark.sources.readers import read_parquet
 
 
 def _sig_similarity(a: str, b: str, num_hashes: int) -> F.Column:
@@ -212,9 +213,7 @@ def stream_neardup_ingest(
         prior = [f"base={k}"] if k >= 0 else []
         prior += [f"epoch={e}" for e in epochs if e < epoch_id]
         if prior:
-            index = spark_l.read.parquet(
-                *[fs.join(index_dir, d) for d in prior]
-            )
+            index = read_parquet(spark_l, *[fs.join(index_dir, d) for d in prior])
         # pin=True materializes the band signatures + drop decision
         # once, so the survivor and index writes share one computed
         # dedup pass (and one consistent decision set) instead of
@@ -273,7 +272,7 @@ def compact_index_epochs(spark, index_dir: str) -> int:
     ]
     new_k = foldable[-1]
     tmp = fs.join(index_dir, "_compact_tmp")
-    spark.read.parquet(*in_dirs).write.mode("overwrite").parquet(tmp)
+    read_parquet(spark, *in_dirs).write.mode("overwrite").parquet(tmp)
     # publish must succeed before any input dies — a false return from
     # Hadoop rename with the deletes still running would strand the
     # fold in _compact_tmp (invisible to readers)

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from workhop2_etl_spark.sources.readers import read_parquet
 from workhop2_etl_spark.sources.writers import write_jdbc
 
 
@@ -220,7 +221,7 @@ def stream_upsert_to_jdbc(
     in-flight batch is skipped by the ledger even if its merge had
     already committed.
     """
-    schema = spark.read.parquet(parquet_path).schema
+    schema = read_parquet(spark, parquet_path).schema
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         jdbc_upsert_batch(batch_df, epoch_id, url, table, keys, **jdbc_options)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from workhop2_etl_spark.session import local_relation
+from workhop2_etl_spark.sources.readers import read_parquet
 
 #: Late-data tolerance for all watermarked aggregations.
 DEFAULT_WATERMARK = "30 minutes"
@@ -175,7 +176,7 @@ def run_stream_to_memory(
     state + watermark, not just in batch."""
     import tempfile
 
-    schema = spark.read.parquet(parquet_path).schema
+    schema = read_parquet(spark, parquet_path).schema
     stream = spark.readStream.schema(schema).parquet(parquet_path)
     out = transform(stream, watermark)
     ckpt = tempfile.mkdtemp(prefix="w2e_ckpt_")
@@ -303,7 +304,7 @@ def stream_upsert_to_parquet(
     from workhop2_etl_spark.operators.upsert import merge_upsert
     from workhop2_etl_spark.sources import fs
 
-    schema = spark.read.parquet(parquet_path).schema
+    schema = read_parquet(spark, parquet_path).schema
     tmp_dir = table_dir.rstrip("/") + "__tmp"
     old_dir = table_dir.rstrip("/") + "__old"
 
@@ -322,7 +323,7 @@ def stream_upsert_to_parquet(
         if any(
             n.endswith(".parquet") for n in fs.list_names(spark_l, table_dir)
         ):
-            base = spark_l.read.parquet(table_dir)
+            base = read_parquet(spark_l, table_dir)
             merged = merge_upsert(base, batch_df, keys)
         else:
             merged = batch_df
@@ -408,7 +409,7 @@ def stream_rollup_to_parquet(
 
     if rollup_fn is None:
         rollup_fn = rollup_events_daily
-    schema = spark.read.parquet(parquet_path).schema
+    schema = read_parquet(spark, parquet_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -449,7 +450,7 @@ def read_rollup(
     if combine_fn is None:
         combine_fn = _combine_parts
     return combine_fn(
-        spark.read.parquet(*rollup_part_dirs(spark, table_dir, as_of=as_of))
+        read_parquet(spark, *rollup_part_dirs(spark, table_dir, as_of=as_of))
     )
 
 
@@ -513,7 +514,7 @@ def stream_join_view_to_parquet(
     from workhop2_etl_spark.operators.incremental import apply_join_delta
     from workhop2_etl_spark.sources import fs
 
-    schema = spark.read.parquet(fact_path).schema
+    schema = read_parquet(spark, fact_path).schema
     empty_fact = local_relation(spark, [], schema)
     if not fs.exists(spark, fs.join(b_dir, "epoch=0")):
         apply_join_delta(
@@ -568,7 +569,7 @@ def stream_join_view_two_sided(
     dim. Same replay-idempotence argument as the one-sided wrapper."""
     from workhop2_etl_spark.operators.incremental import apply_join_delta
 
-    schema = spark.read.parquet(src_path).schema
+    schema = read_parquet(spark, src_path).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

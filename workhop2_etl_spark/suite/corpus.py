@@ -188,11 +188,12 @@ def x7_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # t10: corpus-wide top-50 bigrams. The bigram array is built row-side
-# by the shared sliding-n-gram kernel (dedup_text.all_ngrams) — a
-# NARROW transform (no shuffle, no self-join on (doc, pos)); the only
-# shuffle is the count aggregation on the bigram key, partial-agg
-# bounded. Ranking keys (n desc, bigram asc) are exact, so the top-k
-# is cross-engine deterministic.
+# by the shared sliding-n-gram kernel (dedup_text.word_ngrams, one
+# regex pass over the normalized text; empty for texts under two
+# words) — a NARROW transform (no shuffle, no self-join on (doc,
+# pos)); the only shuffle is the count aggregation on the bigram key,
+# partial-agg bounded. Ranking keys (n desc, bigram asc) are exact, so
+# the top-k is cross-engine deterministic.
 # ---------------------------------------------------------------------------
 
 
@@ -215,13 +216,10 @@ def x7_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t10_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    from workhop2_etl_spark.operators.dedup_text import all_ngrams
+    from workhop2_etl_spark.operators.dedup_text import word_ngrams
 
-    t = _toks()
     return (
-        docs.select(t.alias("__t"))
-        .filter(F.size("__t") >= 2)
-        .select(F.explode(all_ngrams(F.col("__t"), 2)).alias("bigram"))
+        docs.select(F.explode(word_ngrams(F.col("text"), 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("bigram"))

@@ -49,9 +49,9 @@ def _toks() -> "F.Column":
 
 # ---------------------------------------------------------------------------
 # t5: repetition ratio — 1 - distinct/total word-3-grams per doc.
-# All-grams (not distinct) via the same arrays_zip trick as
-# word_shingles: the token array is evaluated once per row, never
-# inside a per-element lambda (the O(k²) regex pitfall).
+# All-grams (not distinct) from the one sliding-n-gram kernel
+# (dedup_text.word_ngrams): a single regex pass over the normalized
+# text, no token array in between.
 # ---------------------------------------------------------------------------
 @query(
     "t5_repetition_ratio",
@@ -76,10 +76,10 @@ def _toks() -> "F.Column":
     """,
 )
 def t5_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from workhop2_etl_spark.operators.dedup_text import all_ngrams
+    from workhop2_etl_spark.operators.dedup_text import word_ngrams
 
     docs = load_table(spark, sf_dir, "documents")
-    grams = all_ngrams(_toks(), 3)
+    grams = word_ngrams(F.col("text"), 3)
     g = F.col("g")
     return (
         docs.select("doc_id", grams.alias("g"))

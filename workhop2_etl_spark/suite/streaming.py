@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workhop2_etl_spark.session import load_table
+from workhop2_etl_spark.sources.readers import read_parquet
 from workhop2_etl_spark.streaming import windows as SW
 from workhop2_etl_spark.suite import query
 
@@ -212,7 +213,7 @@ def st7_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = os.path.join(tempfile.mkdtemp(prefix="w2e_st7_"), "events_us.parquet")
     load_table(spark, sf_dir, "events").write.mode("overwrite").parquet(src)
 
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     out = SW.running_user_totals(stream)
     ckpt = tempfile.mkdtemp(prefix=f"w2e_st7_ckpt_{tag}_")
