@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 from workhop2_etl_spark.functions import clean
 from workhop2_etl_spark.operators.dedup_text import (
     dedupe_exact,
+    exact_dup_groups,
     jaccard,
+    near_dup_pairs,
     word_ngrams,
     word_shingles,
 )
@@ -185,6 +187,18 @@ def test_word_ngrams_match_arrays_zip_reference(spark, n):
         assert r.new_sh == r.ref_sh, (texts[r.i], r.new_sh, r.ref_sh)
     short = [r for r in rows if texts[r.i] and 0 < len(texts[r.i].split()) < n]
     assert not n > 1 or short  # the short-text rule is exercised
+
+
+def test_near_dup_pairs_never_pair_null_text(spark):
+    """NULL text is unknown content: near_dup_pairs pairs no NULL-text
+    document, as exact_dup_groups groups none, while the pair between
+    the two identical texts stays."""
+    text = "the quick brown fox jumps over the lazy dog"
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, text), (4, text)], "doc_id long, text string"
+    )
+    assert [tuple(r) for r in near_dup_pairs(df).collect()] == [(3, 4, 4, 1.0)]
+    assert [r.doc_ids for r in exact_dup_groups(df).collect()] == [[3, 4]]
 
 
 def test_dedupe_exact_row_math(spark):

@@ -328,8 +328,13 @@ def near_dup_pairs(
     verification → pairs ≥ threshold. The expensive O(n²) comparison
     never happens; Jaccard runs only on LSH survivors. An input in
     fewer partitions than the default parallelism is spread over it
-    first (``_fanned_out``), so both shingle stages use every core."""
-    df = _fanned_out(df)
+    first (``_fanned_out``), so both shingle stages use every core.
+
+    NULL-text documents never pair: their one shingle ``''`` would
+    make every two of them a pair at Jaccard 1.0, and unknown content
+    is not evidence of similar content (``exact_dup_groups`` excludes
+    them for the same reason)."""
+    df = _fanned_out(df.filter(F.col(text_col).isNotNull()))
     cands = minhash_candidates(df, text_col, id_col, num_hashes, num_bands, shingle_n)
     sh = df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("__shingles")

@@ -60,11 +60,22 @@ after the public FAISS index_factory / write_index lifecycle.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
+
 from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from workhop2_etl_spark.operators.retrieval import (
+    _LEXICAL_KIND,
+    _doc_stats,
+    _fold_df,
+    _fold_stats,
+    _tf_relation,
+)
 from workhop2_etl_spark.operators.similarity import (
     _ivf_probe,
     _multitable_probe,
@@ -83,11 +94,13 @@ from workhop2_etl_spark.sources import readers
 from workhop2_etl_spark.sources.fs import (
     data_files,
     delete,
+    exists,
     fs_and_path,
     join,
     list_child_dirs,
     read_bytes,
     read_parquet,
+    rename_or_raise,
     write_bytes,
     write_parquet,
 )
@@ -97,8 +110,32 @@ FORMAT_VERSION = 1
 _LSH_KIND = "multitable-hyperplane-lsh"
 _IVF_KIND = "ivf-centroids"
 _IVF_POSTINGS_KIND = "ivf-postings"
+
+
+class _Layout(NamedTuple):
+    """Where one index kind keeps its rows (``_write_dirs`` says how)."""
+
+    data: str  # the corpus-sized data dir
+    id_col: str  # its row id, which tombstones carry
+    keys: tuple[str, ...]  # what ``data`` is clustered on
+    partials: tuple[str, ...] = ()  # one-file aggregates each batch adds
+
+    @property
+    def subs(self) -> tuple[str, ...]:
+        """The dirs one batch of rows writes."""
+        return (self.data, *self.partials)
+
+
+_LAYOUTS = {
+    _LSH_KIND: _Layout("index", "id", ("table_id", "sig")),
+    _IVF_POSTINGS_KIND: _Layout("index", "id", ("centroid_id",)),
+    _LEXICAL_KIND: _Layout("tf", "doc_id", ("term",), ("df", "stats")),
+}
 # the data dirs a ledgered batch renames its files into
-_BATCH_SUBS = ("tf", "df", "stats", "index", "tombstones")
+_BATCH_SUBS = (
+    *dict.fromkeys(s for lay in _LAYOUTS.values() for s in lay.subs),
+    "tombstones",
+)
 
 _META_SCHEMA = (
     "kind string, version int, dim int, num_planes int, num_tables int,"
@@ -202,6 +239,196 @@ def _check_drift(path: str, meta: dict, expected: dict) -> None:
 
 
 # ---------------------------------------------------------------------------
+# Index data dirs: one layout per kind (_LAYOUTS), one writer
+# ---------------------------------------------------------------------------
+
+
+def _write_batch(
+    batch: DataFrame,
+    path: str,
+    meta: dict,
+    mode: str,
+    col: str,
+    id_col: str | None = None,
+    target: str | None = None,
+    num_partitions: int | None = None,
+    centroids: list[tuple[int, list[float]]] | None = None,
+    codebooks: list[tuple[int, int, list[float]]] | None = None,
+) -> None:
+    """Index one batch of rows — a save's corpus, an append's delta or
+    a stream epoch — into the kind's data dirs under ``target``
+    (default: the artifact at ``path``), prepared under the
+    parameters of the artifact's metadata ``meta``. ``col`` holds the
+    vectors (the token arrays for the lexical kind); ``id_col``
+    defaults to the recorded one. LSH rows are signed with the
+    recorded geometry; IVF rows are assigned under ``centroids`` (and
+    pq8-encoded under ``codebooks``), by default the quantizer stored
+    at ``path``; lexical rows become the batch's tf rows plus its df
+    and stats partials."""
+    spark = batch.sparkSession
+    lay = _LAYOUTS[meta["kind"]]
+    target = target or path
+    id_col = id_col or meta["id_col"]
+    if meta["kind"] == _LEXICAL_KIND:
+        # ONE corpus pass: tf (the (doc, term) aggregation output, far
+        # smaller than the raw corpus) is shared by the three writes,
+        # and df and stats both derive from it (stats via min(dl) per
+        # doc, the per-doc-exact trick the delete path uses). Both are
+        # PARTIALS over this batch's documents only, never a re-read
+        # of the accumulated tf dir; the loader sums partials, which
+        # equals the single-shot aggregate because batches index
+        # disjoint documents (id discipline is the caller's). Deriving
+        # stats from tf is exact: tf and _stats_partial exclude the
+        # same empty-token docs and the counts/sums are integers. The
+        # partials read tf, so they write after it.
+        tf = _tf_relation(batch, id_col, col)
+        df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        _write_dirs(
+            spark,
+            [
+                [_Write(tf, f"{target}/tf", lay.keys)],
+                [
+                    _Write(df, f"{target}/df", one_file=True),
+                    # a global aggregate over no rows is one (0, 0) row
+                    _Write(_doc_stats(tf), f"{target}/stats", one_file=True,
+                           if_empty=((0, 0),)),
+                ],
+            ],
+            mode, num_partitions, seed=tf, shared=tf,
+        )
+        return
+    if meta["kind"] == _LSH_KIND:
+        rows = _signed_rows(batch, meta, id_col, col)
+    else:
+        if centroids is None:  # the artifact's own quantizer
+            centroids = _read_centroid_rows(spark, f"{path}/centroids", meta)
+            if meta.get("store_dtype") == "pq8":
+                codebooks = _read_codebook_rows(
+                    spark, f"{path}/codebooks", meta
+                )
+        rows = _posting_rows(batch, meta, id_col, col, centroids, codebooks)
+    _write_dirs(
+        spark, [[_Write(rows, f"{target}/{lay.data}", lay.keys)]], mode,
+        num_partitions, seed=batch,
+    )
+
+
+class _Write(NamedTuple):
+    """One relation for ``_write_dirs`` to lay into ``target``."""
+
+    rel: DataFrame
+    target: str
+    keys: tuple[str, ...] = ()
+    one_file: bool = False  # a dimension-sized aggregate
+    if_empty: tuple = ()  # its rows when the seed is empty
+
+
+def _write_dirs(
+    spark: SparkSession,
+    waves: list[list[_Write]],
+    mode: str,
+    num_partitions: int | None = None,
+    seed: DataFrame | None = None,
+    shared: DataFrame | None = None,
+) -> None:
+    """THE writer of index data dirs: every save, append, stream
+    epoch, delete, compaction and restore lays its relations out here.
+    The layout:
+
+    - a corpus-sized relation (LSH rows, IVF postings, lexical tf) is
+      hash-partitioned on its cluster keys into ``num_partitions``
+      files (default: the shuffle-partition setting) and sorted within
+      each file. Each file therefore spans most of the key range: a
+      probe's filter on the keys (the IVF cell list, the BM25 term
+      IN-list) drops rows during the scan but skips no file;
+    - a dimension-sized aggregate (``one_file``: a batch's df, stats
+      or tombstones partial, a compaction's fold) is one file, sorted
+      on its keys if it has any. ``coalesce(1)``, not
+      ``repartition(1)``: the aggregation upstream already shuffles,
+      so coalescing folds the post-shuffle read into the one writer
+      task without a second exchange;
+    - when Catalyst proves ``seed`` statically empty (a
+      ``save_*(corpus.limit(0), ...)`` seed, the streaming lifecycles'
+      starting state, or an empty append or epoch), each relation is
+      written on the driver as one part file of its ``if_empty`` rows,
+      typed by the schema the Spark writer would have written, and no
+      job runs.
+
+    ``waves`` run in order; the writes of one wave are independent and
+    run concurrently from one thread pool, so each job's tasks
+    back-fill the others' tails. ``shared``, a relation several writes
+    read, is persisted across them (MEMORY_AND_DISK spills, never
+    recomputes)."""
+    writes = [w for wave in waves for w in wave]
+    if seed is not None and _plan_is_empty_local(seed):
+        for w in writes:
+            write_parquet(spark, arrow_table(list(w.if_empty), w.rel.schema),
+                          w.target, mode)
+        return
+
+    def lay(w: _Write) -> None:
+        if w.one_file:
+            rel = w.rel.coalesce(1)
+        elif num_partitions:
+            rel = w.rel.repartition(num_partitions, *w.keys)
+        else:
+            rel = w.rel.repartition(*w.keys)
+        if w.keys:
+            rel = rel.sortWithinPartitions(*w.keys)
+        rel.write.mode(mode).parquet(w.target)
+
+    shared = shared if len(writes) > 1 else None
+    if shared is not None:
+        shared.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        for wave in filter(None, waves):
+            if len(wave) == 1:
+                lay(wave[0])
+                continue
+            with ThreadPoolExecutor(max_workers=len(wave)) as pool:
+                list(pool.map(lay, wave))
+    finally:
+        if shared is not None:
+            shared.unpersist()
+
+
+def _plan_is_empty_local(df: DataFrame) -> bool:
+    """True when the frame's OPTIMIZED plan is an empty LocalRelation
+    — i.e. Catalyst itself proved the input statically empty (a
+    ``.limit(0)`` seed, an empty literal frame). Analysis-only: no
+    job. A real source scan never folds to this, so the check can
+    only ever route provably-empty inputs to a fast path."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return (
+            plan.getClass().getSimpleName() == "LocalRelation"
+            and plan.data().isEmpty()
+        )
+    except Exception:  # noqa: BLE001 — any doubt → the normal path
+        return False
+
+
+def _append(
+    batch: DataFrame,
+    path: str,
+    kind: str,
+    col: str,
+    id_col: str | None = None,
+    num_partitions: int | None = None,
+) -> dict:
+    """The ``append_*_index`` verbs: ``batch`` appended through
+    ``_write_batch`` under the artifact's own metadata, then the
+    metadata epoch bumped. Returns the new metadata."""
+    spark = batch.sparkSession
+    meta = _read_meta(spark, path, kind)
+    _write_batch(batch, path, meta, "append", col, id_col,
+                 num_partitions=num_partitions)
+    meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
+    _write_meta(spark, path, meta, "overwrite")
+    return meta
+
+
+# ---------------------------------------------------------------------------
 # Multi-table LSH signature index
 # ---------------------------------------------------------------------------
 
@@ -210,11 +437,10 @@ def _reset_lifecycle_state(spark: SparkSession, path: str, mode: str) -> None:
     """On an ``overwrite`` save, clear the artifact's LIFECYCLE state
     (``ledger/`` markers and pending ``tombstones/``) along with the
     data the Spark writers overwrite. Without this a rebuild over an
-    existing artifact path inherited the old tombstones — the new
+    existing artifact path would inherit the old tombstones — the new
     corpus's rows anti-joined against stale victim ids — and old
-    ledger markers silently 'skipped' the first stream epochs /
-    delete batches of the new life (r12 fix, found by a test-harness
-    double-run)."""
+    ledger markers would silently 'skip' the first stream epochs /
+    delete batches of the new life."""
     if mode != "overwrite":
         return
     for sub in ("ledger", "tombstones"):
@@ -243,13 +469,12 @@ def save_lsh_index(
     probe rescoring dequantizes (approximate within quantization
     error, buckets exact).
 
-    One shuffle total: the signed rows repartition+sort by
-    (table_id, sig) before the parquet write, so each file's row
-    groups cluster whole buckets — parquet (table_id, sig) min/max
-    stats then let a future point-probe prune at the scan, and the
-    probe join's input is already bucket-contiguous. Signing runs the
-    BLAS matmul kernel, as every corpus-sized input does (PERF.md
-    sigbuild table — 13× the expression fold at 400k vectors).
+    One shuffle total: the signed rows are laid out on (table_id,
+    sig) by ``_write_dirs``, so each file's row groups cluster whole
+    buckets and the probe join's input is already bucket-contiguous.
+    Signing runs the BLAS matmul kernel, as every corpus-sized input
+    does (PERF.md sigbuild table — 13× the expression fold at 400k
+    vectors).
 
     Returns the metadata dict it wrote. ``mode`` is ``'overwrite'``
     (replace any artifact at ``path``) or ``'error'``/``'errorifexists'``
@@ -258,10 +483,6 @@ def save_lsh_index(
     """
     _check_save_mode(mode)
     _reset_lifecycle_state(corpus.sparkSession, path, mode)
-    _write_signed(
-        corpus, path, dim, num_planes, num_tables, id_col, vec_col, mode,
-        store_dtype=store_dtype,
-    )
     meta = {
         "kind": _LSH_KIND,
         "version": FORMAT_VERSION,
@@ -273,23 +494,17 @@ def save_lsh_index(
         "plane_scheme": "md5(plane:dim)[:8]/2^31 - 1",
         "epoch": 0,
     }
+    _write_batch(corpus, path, meta, mode, vec_col)
     _write_meta(corpus.sparkSession, path, meta, mode)
     return meta
 
 
-def _write_signed(
-    corpus: DataFrame,
-    path: str,
-    dim: int,
-    num_planes: int,
-    num_tables: int,
-    id_col: str,
-    vec_col: str,
-    mode: str,
-    data_dir: str | None = None,
-    num_partitions: int | None = None,
-    store_dtype: str = "float64",
-) -> None:
+def _signed_rows(
+    corpus: DataFrame, meta: dict, id_col: str, vec_col: str
+) -> DataFrame:
+    """The LSH index rows of ``corpus`` under the geometry in ``meta``:
+    (id, vec | qvec + scale, norm, table_id, sig)."""
+    store_dtype = meta.get("store_dtype", "float64")
     if store_dtype not in ("float64", "int8"):
         raise ValueError(
             f"store_dtype must be 'float64' or 'int8', got {store_dtype!r}"
@@ -308,33 +523,13 @@ def _write_signed(
     signed = with_multitable_signatures_blas(
         base,
         "vec",
-        dim,
-        num_planes,
-        num_tables,
+        int(meta["dim"]),
+        int(meta["num_planes"]),
+        int(meta["num_tables"]),
         table_col="table_id",
         sig_col="sig",
     )
-    if store_dtype == "int8":
-        signed = signed.drop("vec")
-    target = data_dir or f"{path}/index"
-    # a seed save (save_lsh_index(corpus.limit(0), ...), the streaming
-    # lifecycles' starting state) writes its one empty part file
-    # driver-side, with the read-back schema of the Spark writer's
-    if _plan_is_empty_local(corpus):
-        write_parquet(
-            corpus.sparkSession, arrow_table([], signed.schema), target, mode
-        )
-        return
-    keys = ["table_id", "sig"]
-    reparted = (
-        signed.repartition(num_partitions, *keys) if num_partitions
-        else signed.repartition(*keys)
-    )
-    (
-        reparted.sortWithinPartitions(*keys)
-        .write.mode(mode)
-        .parquet(target)
-    )
+    return signed.drop("vec") if store_dtype == "int8" else signed
 
 
 def append_lsh_index(
@@ -359,22 +554,7 @@ def append_lsh_index(
     parquet-append + metadata overwrite, single-writer by contract;
     wrap the path in a transactional table format if concurrent
     writers are possible."""
-    spark = corpus_delta.sparkSession
-    meta = _read_meta(spark, path, _LSH_KIND)
-    _write_signed(
-        corpus_delta,
-        path,
-        int(meta["dim"]),
-        int(meta["num_planes"]),
-        int(meta["num_tables"]),
-        id_col or meta["id_col"],
-        vec_col,
-        "append",
-        store_dtype=meta.get("store_dtype", "float64"),
-    )
-    meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
-    _write_meta(spark, path, meta, "overwrite")
-    return meta
+    return _append(corpus_delta, path, _LSH_KIND, vec_col, id_col)
 
 
 def load_lsh_index(
@@ -590,9 +770,7 @@ def save_ivf_index(
     scan plus a k-way argmin per row). At 100 TB the assignment IS
     the expensive half, so the production posture (FAISS IVF on disk)
     stores the posting lists: one row per vector — id, vector, its
-    L2 norm, centroid_id — hash-partitioned on centroid_id and sorted
-    within each file. Every file spans most cells, so the probe's cell
-    filter drops rows during the scan but skips no file.
+    L2 norm, centroid_id — clustered on centroid_id (``_write_dirs``).
     The quantizer rides inside the artifact because postings are only
     meaningful under the centroids that assigned them; a probe can
     never pair them with a drifted quantizer.
@@ -607,11 +785,6 @@ def save_ivf_index(
     _check_save_mode(mode)
     spark = corpus.sparkSession
     _reset_lifecycle_state(spark, path, mode)
-    _write_ivf_postings(
-        corpus, path, centroids, id_col, vec_col, mode,
-        store_dtype=store_dtype, codebooks=codebooks, dim=dim,
-    )
-    _write_centroid_rows(spark, centroids, dim, f"{path}/centroids", mode)
     meta = {
         "kind": _IVF_POSTINGS_KIND,
         "version": FORMAT_VERSION,
@@ -621,6 +794,9 @@ def save_ivf_index(
         "store_dtype": store_dtype,
         "epoch": 0,
     }
+    _write_batch(corpus, path, meta, mode, vec_col,
+                 centroids=centroids, codebooks=codebooks)
+    _write_centroid_rows(spark, centroids, dim, f"{path}/centroids", mode)
     if store_dtype == "pq8":
         ms = {m for m, _, _ in codebooks}
         js = {j for _, j, _ in codebooks}
@@ -684,25 +860,24 @@ def _int8_quantize(df: DataFrame, vec: str = "vec") -> DataFrame:
     )
 
 
-def _write_ivf_postings(
+def _posting_rows(
     corpus: DataFrame,
-    path: str,
-    centroids: list[tuple[int, list[float]]],
+    meta: dict,
     id_col: str,
     vec_col: str,
-    mode: str,
-    data_dir: str | None = None,
-    num_partitions: int | None = None,
-    store_dtype: str = "float64",
-    codebooks: list[tuple[int, int, list[float]]] | None = None,
-    dim: int | None = None,
-) -> None:
+    centroids: list[tuple[int, list[float]]],
+    codebooks: list[tuple[int, int, list[float]]] | None,
+) -> DataFrame:
+    """The IVF postings of ``corpus`` assigned under ``centroids``, in
+    the storage tier of ``meta``: (id, vec | qvec + scale | codes,
+    norm, centroid_id)."""
+    store_dtype = meta.get("store_dtype", "float64")
     if store_dtype not in ("float64", "int8", "pq8"):
         raise ValueError(
             f"store_dtype must be 'float64', 'int8' or 'pq8', got {store_dtype!r}"
         )
-    if store_dtype == "pq8" and (codebooks is None or dim is None):
-        raise ValueError("store_dtype='pq8' requires codebooks and dim")
+    if store_dtype == "pq8" and codebooks is None:
+        raise ValueError("store_dtype='pq8' requires codebooks")
     assigned = ivf_assign_blas(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
         centroids,
@@ -712,36 +887,16 @@ def _write_ivf_postings(
     if store_dtype == "pq8":
         # PQ tier: m small ints + one reconstruction norm per vector
         # (see similarity.pq_encode) — the FAISS-IVFPQ disk model
-        assigned = pq_encode_blas(
-            assigned, codebooks, dim, id_col="id", vec_col="vec",
-            norm_col="norm", keep_cols=("centroid_id",),
+        return pq_encode_blas(
+            assigned, codebooks, int(meta["dim"]), id_col="id",
+            vec_col="vec", norm_col="norm", keep_cols=("centroid_id",),
         )
-    elif store_dtype == "int8":
+    if store_dtype == "int8":
         # assignment above ran on the FLOAT vector (cell choice is
         # never quantized); storage quantizes via the shared
         # _int8_quantize (dirty-vector guard documented there)
-        assigned = _int8_quantize(assigned).drop("vec")
-    else:
-        assigned = assigned.withColumn("norm", l2_norm(F.col("vec")))
-    target = data_dir or f"{path}/index"
-    # a seed save (save_ivf_index(corpus.limit(0), ...), the streaming
-    # lifecycles' starting state) writes its one empty part file
-    # driver-side, with the read-back schema of the Spark writer's
-    if _plan_is_empty_local(corpus):
-        write_parquet(
-            corpus.sparkSession, arrow_table([], assigned.schema), target,
-            mode,
-        )
-        return
-    reparted = (
-        assigned.repartition(num_partitions, "centroid_id") if num_partitions
-        else assigned.repartition("centroid_id")
-    )
-    (
-        reparted.sortWithinPartitions("centroid_id")
-        .write.mode(mode)
-        .parquet(target)
-    )
+        return _int8_quantize(assigned).drop("vec")
+    return assigned.withColumn("norm", l2_norm(F.col("vec")))
 
 
 def _write_codebook_rows(
@@ -760,22 +915,6 @@ def _write_codebook_rows(
         spark, arrow_table(rows, "m int, j int, c array<double>"), data_path,
         mode,
     )
-
-
-def _plan_is_empty_local(df: DataFrame) -> bool:
-    """True when the frame's OPTIMIZED plan is an empty LocalRelation
-    — i.e. Catalyst itself proved the input statically empty (a
-    ``.limit(0)`` seed, an empty literal frame). Analysis-only: no
-    job. A real source scan never folds to this, so the check can
-    only ever route provably-empty inputs to a fast path."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        return (
-            plan.getClass().getSimpleName() == "LocalRelation"
-            and plan.data().isEmpty()
-        )
-    except Exception:  # noqa: BLE001 — any doubt → the normal path
-        return False
 
 
 def _read_codebook_rows(
@@ -804,29 +943,7 @@ def append_ivf_index(
     cannot accidentally mix assignments from drifted centroids).
     Parquet-append + metadata epoch bump; id discipline and the
     single-writer contract are as ``append_lsh_index``."""
-    spark = corpus_delta.sparkSession
-    meta = _read_meta(spark, path, _IVF_POSTINGS_KIND)
-    centroids = _read_centroid_rows(spark, f"{path}/centroids", meta)
-    store_dtype = meta.get("store_dtype", "float64")
-    codebooks = (
-        _read_codebook_rows(spark, f"{path}/codebooks", meta)
-        if store_dtype == "pq8"
-        else None
-    )
-    _write_ivf_postings(
-        corpus_delta,
-        path,
-        centroids,
-        id_col or meta["id_col"],
-        vec_col,
-        "append",
-        store_dtype=store_dtype,
-        codebooks=codebooks,
-        dim=int(meta["dim"]),
-    )
-    meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
-    _write_meta(spark, path, meta, "overwrite")
-    return meta
+    return _append(corpus_delta, path, _IVF_POSTINGS_KIND, vec_col, id_col)
 
 
 def load_ivf_index(
@@ -1173,60 +1290,40 @@ def delete_from_index(
 
     Returns ``'committed'`` or ``'skipped'`` (batch already in the
     ledger). Single-writer by contract, like append and compact."""
-    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND, _doc_stats
-
-    meta = _read_meta_any_kind(
-        spark, path,
-        kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
-        verb="delete from",
-    )
-    lexical = meta["kind"] == _LEXICAL_KIND
-    id_name = "doc_id" if lexical else "id"
+    meta = _read_meta_any_kind(spark, path, verb="delete from")
+    lay = _LAYOUTS[meta["kind"]]
 
     def id_relation(live: DataFrame) -> DataFrame:
         if isinstance(ids, DataFrame):
-            return ids.toDF(id_name).distinct()
+            return ids.toDF(lay.id_col).distinct()
         # a Python list becomes a local relation typed by the indexed
         # id column, deduplicated on the driver
         return local_relation(
             spark,
             [(i,) for i in dict.fromkeys(ids)],
-            StructType([StructField(id_name, live.schema[id_name].dataType)]),
+            StructType(
+                [StructField(lay.id_col, live.schema[lay.id_col].dataType)]
+            ),
         )
 
     def stage(staging: str) -> None:
         tomb = _read_tombstones(spark, path)
-        if not lexical:
-            postings = _gated_or_raise(spark, path, "index")
-            live = postings.join(F.broadcast(tomb), id_name, "left_anti") if tomb is not None else postings
-            present = (
-                live.join(F.broadcast(id_relation(postings)), id_name, "left_semi")
-                .select(id_name)
-                .distinct()
-            )
-            present.coalesce(1).write.mode("overwrite").parquet(
-                f"{staging}/tombstones"
-            )  # coalesce, not repartition — see the lexical branch below
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import StorageLevel
-
-        tf = _gated_or_raise(spark, path, "tf")
-        live = tf.join(F.broadcast(tomb), id_name, "left_anti") if tomb is not None else tf
-        # persist the victim rows across the THREE partial writes
-        # below: each write is its own action, so the lazy form re-ran
-        # the gated tf scan + tombstone anti-join + id semi-join once
-        # per file. Victim rows are a small fraction of the corpus by
-        # the same contract that lets tombstones broadcast;
-        # MEMORY_AND_DISK spills, never recomputes.
+        data = _gated_or_raise(spark, path, lay.data)
+        live = (
+            data.join(F.broadcast(tomb), lay.id_col, "left_anti")
+            if tomb is not None else data
+        )
         victims = live.join(
-            F.broadcast(id_relation(tf)), id_name, "left_semi"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+            F.broadcast(id_relation(data)), lay.id_col, "left_semi"
+        )
+        writes = [_Write(victims.select(lay.id_col).distinct(),
+                         f"{staging}/tombstones", one_file=True)]
+        if meta["kind"] == _LEXICAL_KIND:
             # negative partials over the victims' OWN rows: df loses
             # one per (term, victim doc); stats lose the victim count
-            # and their Σ dl
+            # and their Σ dl. Victim rows are a small fraction of the
+            # corpus by the same contract that lets tombstones
+            # broadcast, so the three writes share them persisted.
             neg_df = victims.groupBy("term").agg(
                 (-F.count(F.lit(1))).alias("df")
             )
@@ -1234,27 +1331,11 @@ def delete_from_index(
                 (-F.col("n_docs")).alias("n_docs"),
                 (-F.col("sum_dl")).alias("sum_dl"),
             )
-            present = victims.select(id_name).distinct()
-            # coalesce(1), not repartition(1): these are real
-            # aggregation outputs (the shuffle boundary already exists
-            # upstream), so coalesce folds the post-shuffle read into
-            # the single writer task without paying a SECOND exchange
-            # per file. The three staged writes are independent reads
-            # of the persisted victims, so they run concurrently.
-            def _w(pair):
-                rel, sub = pair
-                rel.coalesce(1).write.mode("overwrite").parquet(
-                    f"{staging}/{sub}"
-                )
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                list(pool.map(_w, [
-                    (neg_df, "df"),
-                    (neg_stats, "stats"),
-                    (present, "tombstones"),
-                ]))
-        finally:
-            victims.unpersist()
+            writes[:0] = [
+                _Write(neg_df, f"{staging}/df", one_file=True),
+                _Write(neg_stats, f"{staging}/stats", one_file=True),
+            ]
+        _write_dirs(spark, [writes], "overwrite", shared=victims)
 
     return ledger.commit(
         spark, path,
@@ -1262,7 +1343,7 @@ def delete_from_index(
             ledger.auto_delete_label(spark, path) if batch is None else batch
         ),
         meta,
-        ("df", "stats", "tombstones") if lexical else ("tombstones",),
+        (*lay.partials, "tombstones"),
         stage,
     )
 
@@ -1276,19 +1357,15 @@ def compact_index(
     the maintenance half of the append lifecycle (FAISS merges
     segments; Delta/Iceberg call this OPTIMIZE/rewriteDataFiles).
 
-    Every ``append_*_index`` batch lands as its OWN parquet files,
-    clustered only within the batch: after many ingest epochs the
-    artifact is (a) a small-file pile — at 100 TB, thousands of
-    sub-row-group files per append schedule — and (b) no longer
-    bucket-contiguous ACROSS files, so a probe's (table_id, sig) /
-    centroid_id min-max pruning stops skipping whole files (each
-    small file spans fewer rows but EVERY file still holds every
-    bucket's epoch slice). Compaction re-shuffles the postings on
-    the artifact's own cluster keys (from metadata — works for both
-    index kinds) and rewrites them as ``num_partitions`` files
-    (default: current shuffle-partition setting), restoring the
-    freshly-built layout without touching row content: a probe
-    before and after compaction is row-identical (pytest-asserted).
+    Every ``append_*_index`` batch and stream epoch lands as its OWN
+    parquet files, clustered only within the batch: after many ingest
+    epochs the artifact is a small-file pile — at 100 TB, thousands
+    of sub-row-group files per append schedule. Compaction rewrites
+    the data dir on its kind's cluster keys as ``num_partitions``
+    files (default: current shuffle-partition setting), in the
+    freshly-built layout (``_write_dirs``), without touching row
+    content: a probe before and after compaction is row-identical
+    (pytest-asserted).
 
     Single-writer, stop-the-world by contract (same as append), and
     crash-safe by construction: each data dir (``index``, or the
@@ -1307,14 +1384,7 @@ def compact_index(
     the metadata plus ``files_before`` / ``files_after`` so callers
     and tests can see the layout actually collapsed.
     """
-    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
-
-    meta = _read_meta_any_kind(
-        spark,
-        path,
-        kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
-        verb="compact",
-    )
+    meta = _read_meta_any_kind(spark, path, verb="compact")
     # uncommitted ledgered batches settle first (swept, or compaction
     # refuses); then the pending COMMITTED delete tombstones purge
     # PHYSICALLY here (every loader anti-joined them logically until
@@ -1324,24 +1394,11 @@ def compact_index(
     # load-correct
     _settle_ledger_for_compaction(spark, path)
     tomb = _read_tombstones(spark, path)
-    specs = _compact_specs(meta, tomb)
-
-    # each data dir stages and swaps independently; every dir's
-    # content is load-equivalent before and after its own swap, so a
-    # crash between dirs leaves a correct (part-compacted) artifact
-    # and the next run completes the rest. Being independent, the dirs
-    # stage concurrently: the dimension-sized folds run beside the
-    # corpus-sized rewrite instead of queuing behind it
-    from concurrent.futures import ThreadPoolExecutor
-
-    def compact(spec) -> tuple[int | None, int]:
-        sub, keys, transform, fold_one = spec
-        return _compact_dir(
-            spark, f"{path}/{sub}", keys, num_partitions, transform, fold_one
-        )
-
-    with ThreadPoolExecutor(max_workers=len(specs)) as pool:
-        counts = list(pool.map(compact, specs))
+    counts = _compact_dirs(
+        spark,
+        [(f"{path}/{sub}", *spec) for sub, *spec in _compact_specs(meta, tomb)],
+        num_partitions,
+    )
     before = [fb for fb, _ in counts]
     before_total = None if None in before else sum(before)
     after_total = sum(fa for _, fa in counts)
@@ -1355,94 +1412,82 @@ def compact_index(
 
 
 def _compact_specs(meta: dict, tomb: DataFrame | None) -> list:
-    """Per-dir specs (subdir, cluster keys, optional transform,
-    fold-to-one flag) that rewrite the artifact at ``meta`` into its
-    freshly-built layout with the tombstoned ids ``tomb`` purged — what
-    ``compact_index`` writes in place and ``restore_index`` writes to a
-    new path."""
-    from workhop2_etl_spark.operators.retrieval import (
-        _LEXICAL_KIND,
-        _lexical_compact_specs,
-    )
-
-    if meta["kind"] == _LEXICAL_KIND:
-        return _lexical_compact_specs(tomb)
-    keys = ["table_id", "sig"] if meta["kind"] == _LSH_KIND else ["centroid_id"]
+    """Per-dir specs (subdir, cluster keys, transform, one-file flag)
+    that rewrite the artifact at ``meta`` into its freshly-built layout
+    with the tombstoned ids ``tomb`` purged — what ``compact_index``
+    writes in place and ``restore_index`` writes to a new path. The
+    data dir re-clusters; the lexical df and stats FOLD their
+    per-batch signed partials into one net record each (append
+    partials positive, delete partials negative — the loader
+    aggregates either way, so the fold is load-equivalent while
+    collapsing thousands of batch files; terms fully deleted net to
+    df ≤ 0 and are dropped, as a rebuild would)."""
+    lay = _LAYOUTS[meta["kind"]]
 
     def purge(d: DataFrame) -> DataFrame:
-        return d.join(F.broadcast(tomb), "id", "left_anti")
+        return d.join(F.broadcast(tomb), lay.id_col, "left_anti")
 
-    return [("index", keys, purge if tomb is not None else None, False)]
+    specs = [(lay.data, lay.keys, purge if tomb is not None else None, False)]
+    if meta["kind"] == _LEXICAL_KIND:
+        specs += [
+            ("df", lay.keys, _fold_df, True),
+            ("stats", (), _fold_stats, True),
+        ]
+    return specs
 
 
-def _clustered(
-    df: DataFrame,
-    keys: list[str],
-    num_partitions: int | None,
-    transform,
-    fold_one: bool,
-) -> DataFrame:
-    """``df`` after ``transform``, laid out as one compaction spec
-    says: folded partials are dimension-sized, so one file (coalesce,
-    not repartition: the fold's own aggregation already provides the
-    shuffle boundary); everything else hash-partitioned on ``keys``
-    and sorted within each file."""
-    if transform is not None:
-        df = transform(df)
-        if fold_one:
-            return df.coalesce(1).sortWithinPartitions(*keys) if keys else df.coalesce(1)
-    return (
-        df.repartition(num_partitions, *keys) if num_partitions
-        else df.repartition(*keys)
-    ).sortWithinPartitions(*keys)
+def _compact_dirs(
+    spark: SparkSession, dirs: list, num_partitions: int | None
+) -> list[tuple[int | None, int]]:
+    """Stage-and-swap data dirs (the crash-safe core of
+    ``compact_index``): each ``(data dir, keys, transform, one_file)``
+    stages into ``<dir>.compacting`` (one full write; ``transform``,
+    when given, rewrites the relation on the way and must be
+    load-equivalent), then swaps in with metadata-only delete+rename.
+    The dirs stage concurrently, then swap one by one. A crash before a
+    staged ``_SUCCESS`` leaves its live dir untouched (dead staging
+    discarded next run); a crash inside the swap window is detected
+    (staging committed) and the swap completes WITHOUT re-reading the
+    possibly half-deleted data dir. Returns (files_before | None on
+    crash-recovery, files_after) per dir."""
+    writes, before = [], []
+    for data, keys, transform, one_file in dirs:
+        staging = f"{data}.compacting"
+        if exists(spark, f"{staging}/_SUCCESS"):
+            before.append(None)  # crash recovery: old layout already gone
+            continue
+        # an uncommitted leftover from a crash mid-stage: the live data
+        # dir is intact — discard it and compact normally
+        delete(spark, staging)
+        before.append(len(data_files(spark, data)))
+        rel = readers.read_parquet(spark, data)
+        writes.append(_Write(transform(rel) if transform else rel, staging,
+                             keys, one_file))
+    _write_dirs(spark, [writes], "overwrite", num_partitions)
+
+    # every staged copy is complete and durable; swap each in with
+    # metadata-only filesystem ops (both re-runnable after a crash)
+    for data, *_ in dirs:
+        delete(spark, data)
+        rename_or_raise(spark, f"{data}.compacting", data)
+    return [
+        (fb, len(data_files(spark, data))) for (data, *_), fb in zip(dirs, before)
+    ]
 
 
 def _compact_dir(
     spark: SparkSession,
     data: str,
-    keys: list[str],
+    keys,
     num_partitions: int | None,
     transform=None,
-    fold_one: bool = True,
+    one_file: bool = False,
 ) -> tuple[int | None, int]:
-    """Stage-and-swap one data dir (the crash-safe core of
-    ``compact_index``): stage into ``<dir>.compacting`` (one full
-    write), then swap in with metadata-only delete+rename. A crash
-    before the staged ``_SUCCESS`` leaves the live dir untouched
-    (dead staging discarded next run); a crash inside the swap window
-    is detected (staging committed) and the swap completes WITHOUT
-    re-reading the possibly half-deleted data dir. ``transform``
-    (optional) rewrites the relation during the stage — the lexical
-    kind folds its signed partials (``fold_one=True`` → one
-    dimension-sized output file) and the tombstone purge filters a
-    corpus-sized relation in place (``fold_one=False`` → the normal
-    key-clustered layout); either way it must be load-equivalent.
-    Returns (files_before | None on crash-recovery, files_after)."""
-    staging = f"{data}.compacting"
-    fs, data_p = fs_and_path(spark, data)
-    _, staging_p = fs_and_path(spark, staging)
-    _, staged_ok = fs_and_path(spark, f"{staging}/_SUCCESS")
-
-    if fs.exists(staging_p) and not fs.exists(staged_ok):
-        # uncommitted leftover from a crash mid-stage: the live data
-        # dir is intact — discard and compact normally
-        fs.delete(staging_p, True)
-    if not fs.exists(staged_ok):
-        files_before = len(data_files(spark, data))
-        reparted = _clustered(
-            readers.read_parquet(spark, data), keys, num_partitions, transform, fold_one
-        )
-        reparted.write.mode("overwrite").parquet(staging)
-    else:
-        files_before = None  # crash recovery: old layout already gone
-
-    # the staged copy is complete and durable; swap it in with
-    # metadata-only filesystem ops (both re-runnable after a crash)
-    if fs.exists(data_p):
-        fs.delete(data_p, True)
-    if not fs.rename(staging_p, data_p):
-        raise IOError(f"rename {staging} -> {data} failed during compaction")
-    return files_before, len(data_files(spark, data))
+    """``_compact_dirs`` over one data dir alone — the state a crash
+    between a multi-dir artifact's swaps leaves."""
+    return _compact_dirs(
+        spark, [(data, keys, transform, one_file)], num_partitions
+    )[0]
 
 
 def restore_index(
@@ -1481,8 +1526,6 @@ def restore_index(
     the catalog level). ``mode`` is ``'overwrite'`` or
     ``'error'``/``'errorifexists'``; any other mode raises before
     anything is written. Returns the metadata written."""
-    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
-
     _check_save_mode(mode)
     if src_path.rstrip("/") == dst_path.rstrip("/"):
         raise ValueError(
@@ -1490,36 +1533,19 @@ def restore_index(
             "in-place restore would destroy the history it reads; "
             "restore to a new path and swap at the catalog level"
         )
-    meta = _read_meta_any_kind(
-        spark, src_path,
-        kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
-        verb="restore",
-    )
+    meta = _read_meta_any_kind(spark, src_path, verb="restore")
     _reset_lifecycle_state(spark, dst_path, mode)
     tomb = _read_tombstones(spark, src_path, as_of=as_of)
     # the compaction specs over the snapshot; the writes read
-    # DIFFERENT source dirs and write different target dirs, so they
-    # submit from a thread pool: the lexical kind's
-    # dimension-sized fold jobs back-fill the clustered tf rewrite's
-    # straggler tail instead of queuing behind it
-    writes = [
-        (
-            _clustered(
-                _gated_or_raise(spark, src_path, sub, as_of=as_of),
-                keys, num_partitions, transform, fold_one,
-            ),
-            sub,
-        )
-        for sub, keys, transform, fold_one in _compact_specs(meta, tomb)
-    ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _w(pair):
-        rel, sub = pair
-        rel.write.mode(mode).parquet(f"{dst_path}/{sub}")
-
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        list(pool.map(_w, writes))
+    # DIFFERENT source dirs and write different target dirs, so the
+    # lexical kind's dimension-sized fold jobs back-fill the clustered
+    # tf rewrite's straggler tail instead of queuing behind it
+    writes = []
+    for sub, keys, transform, one_file in _compact_specs(meta, tomb):
+        rel = _gated_or_raise(spark, src_path, sub, as_of=as_of)
+        writes.append(_Write(transform(rel) if transform else rel,
+                             f"{dst_path}/{sub}", keys, one_file))
+    _write_dirs(spark, [writes], mode, num_partitions)
     if meta["kind"] == _IVF_POSTINGS_KIND:
         # the quantizer (and pq8 codebooks) ride the artifact —
         # the snapshot's postings are only meaningful under them
@@ -1579,16 +1605,8 @@ def index_changes(
     their batch's files are live, and are skipped once a compaction
     has folded those files into the base state, so compacting once
     adopts the sequenced format going forward."""
-    from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
-
-    meta = _read_meta_any_kind(
-        spark, path,
-        kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
-        verb="read changes from",
-    )
-    lexical = meta["kind"] == _LEXICAL_KIND
-    id_name = "doc_id" if lexical else "id"
-    data_sub = "tf" if lexical else "index"
+    meta = _read_meta_any_kind(spark, path, verb="read changes from")
+    lay = _LAYOUTS[meta["kind"]]
     if to_seq is None:
         to_seq = int(meta.get("epoch") or 0)
     if from_seq > to_seq:
@@ -1617,7 +1635,7 @@ def index_changes(
     for seq, b in sorted(batches):
         op, sub = (
             ("delete", "tombstones") if b.kind == ledger.DELETE
-            else ("insert", data_sub)
+            else ("insert", lay.data)
         )
         files = ledger.batch_files(spark, path, sub, b)
         if not files:
@@ -1627,21 +1645,21 @@ def index_changes(
                 "this batch into base files, so the changelog cannot reach "
                 "it; tail from a sequence after the compaction"
             )
-        ids = readers.read_parquet(spark, *files).select(id_name).distinct()
+        ids = readers.read_parquet(spark, *files).select(lay.id_col).distinct()
         parts.append(
             ids.select(
                 F.lit(seq).cast("long").alias("commit_seq"),
                 F.lit(op).alias("op"),
-                id_name,
+                lay.id_col,
             )
         )
     if not parts:
-        rel = _gated_or_raise(spark, path, data_sub)
+        rel = _gated_or_raise(spark, path, lay.data)
         return (
             rel.select(
                 F.lit(0).cast("long").alias("commit_seq"),
                 F.lit("").alias("op"),
-                id_name,
+                lay.id_col,
             ).limit(0)
         )
     out = parts[0]
@@ -1677,21 +1695,8 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     the honest fsck price; run it on the maintenance cadence, not per
     probe. Read-only, safe against a live artifact (it sees the last
     committed state, like any reader)."""
-    from workhop2_etl_spark.operators.retrieval import (
-        _LEXICAL_KIND,
-        _doc_stats,
-        _fold_df,
-        _fold_stats,
-    )
-
-    meta = _read_meta_any_kind(
-        spark, path,
-        kinds=(_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND),
-        verb="check",
-    )
-    lexical = meta["kind"] == _LEXICAL_KIND
-    id_name = "doc_id" if lexical else "id"
-    data_sub = "tf" if lexical else "index"
+    meta = _read_meta_any_kind(spark, path, verb="check")
+    lay = _LAYOUTS[meta["kind"]]
     problems: list[str] = []
 
     n_orphans = len(ledger.staging_dirs(spark, path)) + sum(
@@ -1700,19 +1705,19 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
     )
     n_uncommitted = len(ledger.uncommitted(spark, path, _BATCH_SUBS))
 
-    rel = _ledger_gated_parquet(spark, path, data_sub)
+    rel = _ledger_gated_parquet(spark, path, lay.data)
     tomb = _read_tombstones(spark, path)
     n_tomb = int(tomb.count()) if tomb is not None else 0
     if rel is None:
         n_live = 0
-        problems.append(f"no committed data under {data_sub}/")
+        problems.append(f"no committed data under {lay.data}/")
     else:
         live = (
-            rel.join(F.broadcast(tomb), id_name, "left_anti")
+            rel.join(F.broadcast(tomb), lay.id_col, "left_anti")
             if tomb is not None else rel
         )
         n_live = int(live.count())
-        if lexical:
+        if meta["kind"] == _LEXICAL_KIND:
             # the loader's folded partials vs a recount over visible tf
             got_df_rel = _ledger_gated_parquet(spark, path, "df")
             if got_df_rel is None:  # tampered: the loader would raise
@@ -1807,19 +1812,14 @@ def check_index(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _read_meta_any_kind(
-    spark: SparkSession,
-    path: str,
-    kinds: tuple[str, ...] = (_LSH_KIND, _IVF_POSTINGS_KIND),
-    verb: str = "compact",
+    spark: SparkSession, path: str, verb: str = "compact"
 ) -> dict:
-    """Metadata of whichever index kind lives at ``path``, restricted
-    to ``kinds`` (compaction serves the two postings kinds; streaming
-    ingest additionally accepts the lexical kind); refuses others —
-    e.g. a centroids-only artifact is one file and has nothing to
-    compact."""
+    """Metadata of whichever index kind (``_LAYOUTS``) lives at
+    ``path``; refuses other artifacts — e.g. a centroids-only artifact
+    is one file, with nothing to ``verb``."""
     meta = _read_meta(spark, path, expect_kind="*")
-    if meta["kind"] not in kinds:
-        allowed = " and ".join(repr(k) for k in kinds)
+    if meta["kind"] not in _LAYOUTS:
+        allowed = " and ".join(repr(k) for k in _LAYOUTS)
         raise ValueError(
             f"artifact at {path} is kind={meta['kind']!r} — only "
             f"{allowed} indexes {verb}"

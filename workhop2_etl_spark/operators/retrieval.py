@@ -21,8 +21,8 @@ Scale shape (the part that matters at 100 TB):
   vocabulary (a broadcast), so the big ``df`` relation never shuffles
   against ``tf``.
 * Every floating-point score folds in a DETERMINISTIC order (per-term
-  contributions added sequentially in ascending-term order; since r13
-  two bit-identical physical shapes exist — a window aggregate over
+  contributions added sequentially in ascending-term order; two
+  bit-identical physical shapes exist — a window aggregate over
   term-sorted rows for the in-session paths, the collect_list +
   sort_array + ``F.aggregate`` fold for artifact probes — see
   ``_bm25_score``), so scores are bit-reproducible against a SQL
@@ -35,8 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from workhop2_etl_spark.session import arrow_table, local_relation
-from workhop2_etl_spark.sources.fs import write_parquet
+from workhop2_etl_spark.session import local_relation
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -49,7 +48,7 @@ def _seq_sum(contribs_by_key: Column) -> Column:
     hash-aggregate addition order is engine- and partitioning-
     dependent. DuckDB twin: list_reduce(list(v ORDER BY key), +).
 
-    Duplicate keys (r11 adversarial note): ``sort_array`` orders by
+    Duplicate keys: ``sort_array`` orders by
     the WHOLE struct — (key, then v) — so the fold stays
     deterministic even when keys repeat. The BM25 pipeline never
     feeds duplicates (tf is unique per (doc_id, term) and the query
@@ -94,7 +93,7 @@ def bm25_topk(
     query, ordered by (rounded score desc, doc_id asc) — integer and
     id tiebreaks keep the ranking cross-engine deterministic.
 
-    Evaluation note (r12): constructing the returned frame runs ONE
+    Evaluation note: constructing the returned frame runs ONE
     bounded eager action — the query relation (query-bounded by
     contract) materializes at the driver so its lineage executes once
     instead of once per broadcast build; relations beyond the 2^20-row
@@ -242,7 +241,7 @@ def _bm25_score(
     query_rows: list | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, n_hit) — the un-ranked scoring half
-    of ``_bm25_rank``, split out (r11) so the ``max_df``-pruned path
+    of ``_bm25_rank``, split out so the ``max_df``-pruned path
     can apply its per-query candidate restriction BEFORE the top-k
     window (reusing the ranked core would let the interim top-k cut
     candidates that belong in the final k). ``candidates`` (optional,
@@ -256,13 +255,13 @@ def _bm25_score(
     order from +0.0, so scores are bit-identical (pinned on the full
     fixture corpus by test_bm25_window_sum_bit_identical_to_fold):
 
-    - ``'window'`` (r13): a window aggregate over term-sorted rows —
+    - ``'window'``: a window aggregate over term-sorted rows —
       whole-stage-codegen-friendly, and its one query_id exchange also
       serves the downstream ranking window. Interleaved min-of-4 A/B
       at sf0.1: 4.8s → 3.2s on the in-session shape, where the
       contribution relation arrives on the corpus aggregation's many
       partitions and the saved exchange + codegen dominate.
-    - ``'fold'`` (the pre-r13 shape): collect_list + sort_array + a
+    - ``'fold'``: collect_list + sort_array + a
       sequential fold — an ObjectHashAggregate, but its per-group
       sorts are over ≤|query-vocab| elements. On ARTIFACT PROBES the
       contribution relation comes off a few scan partitions and is
@@ -356,7 +355,7 @@ def _bm25_score(
         "term",
         (idf * tf_part).alias("__v"),
     )
-    # The 'window' shape (r13): the same deterministic sum —
+    # The 'window' shape: the same deterministic sum —
     # contributions added sequentially in ascending-term order,
     # starting from +0.0 — computed by a window aggregate over
     # term-sorted rows (a window frame's processor accumulates rows in
@@ -414,14 +413,12 @@ def save_lexical_index(
     num_partitions: int | None = None,
 ) -> dict:
     """Build the BM25 posting relation and persist the index at
-    ``path``: ``tf`` (doc_id, term, tf, dl — hash-repartitioned on
-    term and sorted within each file, so every file spans most of the
-    term range and a probe's term IN-list filters rows, not files),
-    ``df`` (per-epoch (term, df) partials),
-    ``stats`` (per-epoch (n_docs, sum_dl) partials), and the metadata
-    record. ``tokenizer`` is a free-form contract string recorded so
-    a probe pipeline can refuse an index tokenized under another
-    convention (the guard is load-time, by label — the tokens
+    ``path``: ``tf`` (doc_id, term, tf, dl — clustered on term, see
+    ``index_store._write_dirs``), ``df`` (per-epoch (term, df)
+    partials), ``stats`` (per-epoch (n_docs, sum_dl) partials), and
+    the metadata record. ``tokenizer`` is a free-form contract string
+    recorded so a probe pipeline can refuse an index tokenized under
+    another convention (the guard is load-time, by label — the tokens
     themselves were the caller's input). ``mode`` is ``'overwrite'``
     or ``'error'``/``'errorifexists'``; any other mode raises before
     anything is written. Returns the metadata."""
@@ -429,15 +426,12 @@ def save_lexical_index(
         FORMAT_VERSION,
         _check_save_mode,
         _reset_lifecycle_state,
+        _write_batch,
         _write_meta,
     )
 
     _check_save_mode(mode)
     _reset_lifecycle_state(corpus_tokens.sparkSession, path, mode)
-    _write_lexical_epoch(
-        corpus_tokens, path, id_col, tok_col, mode,
-        num_partitions=num_partitions,
-    )
     meta = {
         "kind": _LEXICAL_KIND,
         "version": FORMAT_VERSION,
@@ -449,83 +443,10 @@ def save_lexical_index(
         "tokenizer": tokenizer,
         "epoch": 0,
     }
+    _write_batch(corpus_tokens, path, meta, mode, tok_col,
+                 num_partitions=num_partitions)
     _write_meta(corpus_tokens.sparkSession, path, meta, mode)
     return meta
-
-
-def _write_lexical_epoch(
-    corpus_tokens: DataFrame,
-    path: str,
-    id_col: str,
-    tok_col: str,
-    mode: str,
-    num_partitions: int | None = None,
-) -> None:
-    # ONE corpus pass: the tf relation persists across the three
-    # writes so the corpus is tokenized and aggregated once — df AND
-    # stats both derive from it (stats via min(dl) per doc, the same
-    # per-doc-exact trick the delete path uses). tf is the
-    # aggregation OUTPUT (distinct (doc, term) pairs), far smaller
-    # than the raw corpus; MEMORY_AND_DISK spills rather than
-    # recomputing.
-    from pyspark import StorageLevel
-
-    from workhop2_etl_spark.operators.index_store import _plan_is_empty_local
-
-    tf = _tf_relation(corpus_tokens, id_col, tok_col)
-    # df/stats are PARTIALS over THIS epoch's documents only (never a
-    # re-read of the accumulated tf dir, which in append mode already
-    # holds earlier epochs); the loader sums partials, which equals
-    # the single-shot aggregate because epochs index disjoint
-    # documents (id discipline is the caller's, as with ANN appends).
-    # Deriving stats from tf is exact: tf and _stats_partial exclude
-    # the same empty-token docs and the counts/sums are integers.
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = _doc_stats(tf)
-    # a seed save (save_lexical_index(corpus.limit(0), ...), every
-    # streaming lifecycle's starting state, or an empty append) writes
-    # its three files driver-side when Catalyst proves the input
-    # statically empty: empty tf/df parts and the one (0, 0) stats
-    # partial a global aggregate over empty input produces, typed by
-    # the same lazy frames the Spark writer would have written
-    if _plan_is_empty_local(tf):
-        spark = corpus_tokens.sparkSession
-        write_parquet(spark, arrow_table([], tf.schema), f"{path}/tf", mode)
-        write_parquet(spark, arrow_table([], df.schema), f"{path}/df", mode)
-        write_parquet(
-            spark, arrow_table([(0, 0)], stats.schema), f"{path}/stats", mode
-        )
-        return
-
-    tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        reparted = (
-            tf.repartition(num_partitions, "term") if num_partitions
-            else tf.repartition("term")
-        )
-        (
-            reparted.sortWithinPartitions("term")
-            .write.mode(mode)
-            .parquet(f"{path}/tf")
-        )
-        # coalesce(1), not repartition(1): the aggregations above
-        # already shuffle, so coalesce folds the post-shuffle read
-        # into the single per-epoch partial file without a SECOND
-        # exchange (one less Exchange and stage per write). The
-        # two partial writes are independent reads of the cached tf,
-        # so they run CONCURRENTLY (the second job's tasks back-fill
-        # the first's tail; actions are only sequential when driver
-        # code calls them sequentially).
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _w(pair):
-            rel, sub = pair
-            rel.coalesce(1).write.mode(mode).parquet(f"{path}/{sub}")
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(_w, [(df, "df"), (stats, "stats")]))
-    finally:
-        tf.unpersist()
 
 
 def append_lexical_index(
@@ -542,18 +463,11 @@ def append_lexical_index(
     partials). Re-appending an already-indexed doc_id double-counts
     it — same id discipline as the ANN index appends; single-writer
     by contract."""
-    from workhop2_etl_spark.operators.index_store import _read_meta
-    from workhop2_etl_spark.operators.index_store import _write_meta
+    from workhop2_etl_spark.operators.index_store import _append
 
-    spark = corpus_tokens.sparkSession
-    meta = _read_meta(spark, path, _LEXICAL_KIND)
-    _write_lexical_epoch(
-        corpus_tokens, path, id_col or meta["id_col"], tok_col, "append",
-        num_partitions=num_partitions,
+    return _append(
+        corpus_tokens, path, _LEXICAL_KIND, tok_col, id_col, num_partitions
     )
-    meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
-    _write_meta(spark, path, meta, "overwrite")
-    return meta
 
 
 def load_lexical_index(
@@ -656,28 +570,6 @@ def lexical_index_stats(
     )
 
 
-def _lexical_compact_specs(tombstones: DataFrame | None = None):
-    """Per-dir compaction specs for ``index_store.compact_index``:
-    (subdir, cluster keys, optional transform, fold-to-one flag). tf
-    re-clusters by term (hash-partitioned, sorted within each file:
-    term ranges of the files still overlap, so the probe's IN-list
-    prunes no file) and, when deletes are pending, PURGES tombstoned
-    docs; df
-    and stats FOLD their per-epoch signed partials into one net
-    record (append partials positive, delete partials negative — the
-    loader aggregates either way, so the fold is load-equivalent
-    while collapsing thousands of epoch files; terms fully deleted
-    net to df ≤ 0 and are dropped, as a rebuild would)."""
-    def purge_tf(d: DataFrame) -> DataFrame:
-        return d.join(F.broadcast(tombstones), "doc_id", "left_anti")
-
-    return [
-        ("tf", ["term"], purge_tf if tombstones is not None else None, False),
-        ("df", ["term"], _fold_df, True),
-        ("stats", [], _fold_stats, True),
-    ]
-
-
 def _term_in(spark, vocab: list[str]) -> Column:
     """``term IN (vocab)``, built inside the JVM. The vocabulary crosses
     py4j once, as the one array cell of an Arrow ``LocalRelation``,
@@ -712,12 +604,10 @@ def probe_lexical_index(
     The query vocabulary collects to the driver (bounded loudly at
     ``max_terms`` — query terms are dimension-sized by contract) and
     becomes an IN-list filter pushed into the posting scan. It drops
-    non-query terms' rows during the scan; it does not skip files,
-    because the tf files are hash-partitioned on term and each spans
-    most of the term range, so the probe still reads the whole
-    artifact.
+    non-query terms' rows during the scan but skips no file (the tf
+    layout is ``index_store._write_dirs``').
 
-    ``max_df`` (r11, OFF by default — the default path stays
+    ``max_df`` (OFF by default — the default path stays
     oracle-exact and unpruned) bounds the probe's candidate volume
     for head-term-heavy queries, the 100 TB serving posture: an
     unpruned probe pays Σ df candidate rows, which for a stopword-ish
@@ -739,7 +629,7 @@ def probe_lexical_index(
     clears HB(q) (checked with a half-ulp rounding margin PLUS an FP
     slack sized by the head-term count, and HB itself folds in
     term-sorted deterministic order — the flag never over-claims and
-    never flips between runs; r12 advice fix). The tf-saturation
+    never flips between runs). The tf-saturation
     bound is strict only for k1 > 0, so the pruned path rejects
     k1 <= 0 (use the exhaustive default for k1 = 0). ``exact =
     false`` means head-only
@@ -768,7 +658,7 @@ def probe_lexical_index(
     if len(pair_rows) <= pair_cap:
         # NULL terms never match a join/IN-list (the lazy path dropped
         # them silently); drop them before sorting — a None alongside
-        # strings would raise from sorted() (r12 advice fix)
+        # strings would raise from sorted()
         vocab = sorted({r.term for r in pair_rows if r.term is not None})
         if len(vocab) > max_terms:
             raise ValueError(
@@ -803,7 +693,7 @@ def probe_lexical_index(
         # broadcast builds overlap the final action's other stages
         # under AQE, so eager driver collects here would serialize two
         # extra actions for nothing (measured +~1s per probe at sf0.1
-        # when r13 tried it; reverted to lazy for this path).
+        # when tried; so this path stays lazy).
         # agg_shape='fold': probe contributions come off a few scan
         # partitions and are vocab-bounded — the fold's per-group tiny
         # sorts beat the window shape's global term sort here
@@ -814,7 +704,7 @@ def probe_lexical_index(
             exclude_self=exclude_self, agg_shape="fold",
             query_rows=pair_rows,
         )
-    # r13 optimization (max_df-PRUNED path only): materialize the
+    # max_df-PRUNED path only: materialize the
     # vocabulary-sized df slice and the one-row stats at the driver.
     # Both are lazy RE-AGGREGATIONS over the artifact's per-epoch
     # partial files (load_lexical_index) and the pruned plan
@@ -1011,7 +901,7 @@ def bm25_prf_expand(
     pass 2 — was re-tokenized and re-aggregated each time; now tf is
     persisted across pass 1 + harvest (spilling, never recomputing)
     and unpersisted before return, and df/stats derive from it (the
-    ``_write_lexical_epoch`` per-doc-exact trick — same integers, so
+    ``_doc_stats`` per-doc-exact recount — same integers, so
     scores are unchanged bit-for-bit). Measured: the t15 plan's 31
     shuffles → 13, 27 AQE stage-jobs → ~14 on the pass-2 action."""
     if n_feedback < 1 or m_expand < 1:
@@ -1196,7 +1086,7 @@ def rrf_fuse(
     contract), so the full-outer join and the final window are over
     tiny, query-keyed data regardless of corpus size.
 
-    Malformed arms (r11 adversarial hardening): a duplicate
+    Malformed arms: a duplicate
     (query_id, doc_id) within one arm — a caller fusing a relation
     that did not come from a row_number window — would fan out the
     full-outer join and surface the SAME document at several fused
@@ -1205,7 +1095,7 @@ def rrf_fuse(
     duplicate candidates, and a no-op (identity aggregation) for
     well-formed window-ranked arms.
 
-    Plan shape (r12): the cross-arm alignment is a UNION + one hash
+    Plan shape: the cross-arm alignment is a UNION + one hash
     aggregate, not a full-outer join — full-outer can't broadcast, so
     the join form cost a SortMergeJoin (sorts on both |Q|·k arms);
     union-aggregate has the same semantics (min ignores the other
@@ -1269,7 +1159,7 @@ def weighted_fuse(
     malformed-arm hardening as rrf_fuse. Scale: all relations are
     |Q|·k, query-bounded by contract.
 
-    Plan shape (r12): the per-query extrema relation (|Q| rows)
+    Plan shape: the per-query extrema relation (|Q| rows)
     broadcasts into its normalization join, and the cross-arm
     alignment is a UNION + one hash aggregate instead of a full-outer
     join (which can't broadcast and forced a SortMergeJoin) — same
@@ -1285,7 +1175,7 @@ def weighted_fuse(
     beta = 1.0 - alpha
 
     def _norm(arm: DataFrame, tag: str) -> DataFrame:
-        # non-finite guard (the r10 NaN-ranks-first class): Spark
+        # non-finite guard (NaN would rank first): Spark
         # orders NaN above every number, so one NaN score would win
         # its arm's max, poison the normalization denominator, and
         # rank first in the fusion. The engine's own top-k arms never

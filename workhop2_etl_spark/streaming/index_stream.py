@@ -39,18 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.operators.index_store import (
-    _IVF_POSTINGS_KIND,
-    _LSH_KIND,
-    _read_centroid_rows,
-    _read_codebook_rows,
+    _LAYOUTS,
     _read_meta_any_kind,
-    _write_ivf_postings,
-    _write_signed,
+    _write_batch,
 )
 from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
 from workhop2_etl_spark.sources.fs import fs_and_path
-
-_INGEST_KINDS = (_LSH_KIND, _IVF_POSTINGS_KIND, _LEXICAL_KIND)
 
 
 def ingest_epoch(
@@ -83,31 +77,11 @@ def ingest_epoch(
     sees the whole epoch or none of it (never tf rows without their
     df/stats partials), and a delete derives its victims from
     COMMITTED rows only."""
-    meta = _read_meta_any_kind(
-        spark, index_path, kinds=_INGEST_KINDS, verb="stream-ingest"
-    )
-    lexical = meta["kind"] == _LEXICAL_KIND
+    meta = _read_meta_any_kind(spark, index_path, verb="stream-ingest")
 
     def stage(staging: str) -> None:
-        if meta["kind"] == _LSH_KIND:
-            _write_signed(
-                batch,
-                index_path,
-                int(meta["dim"]),
-                int(meta["num_planes"]),
-                int(meta["num_tables"]),
-                id_col or meta["id_col"],
-                vec_col,
-                "overwrite",
-                data_dir=f"{staging}/index",
-                num_partitions=partitions_per_epoch,
-                store_dtype=meta.get("store_dtype", "float64"),
-            )
-        elif lexical:
-            from workhop2_etl_spark.operators.retrieval import (
-                _write_lexical_epoch,
-            )
-
+        col = vec_col
+        if meta["kind"] == _LEXICAL_KIND:
             # the artifact's own metadata names its token column
             # (recorded at save time) — caller arguments can confirm
             # but never silently remap it; artifacts without the field
@@ -132,37 +106,15 @@ def ingest_epoch(
                     f"{list(batch.columns)} — fix the stream's prepare hook "
                     "to produce that column"
                 )
-            _write_lexical_epoch(
-                batch, staging, id_col or meta["id_col"], tok_col,
-                "overwrite", num_partitions=partitions_per_epoch,
-            )
-        else:  # _IVF_POSTINGS_KIND (guaranteed by _read_meta_any_kind)
-            centroids = _read_centroid_rows(
-                spark, f"{index_path}/centroids", meta
-            )
-            store_dtype = meta.get("store_dtype", "float64")
-            _write_ivf_postings(
-                batch,
-                index_path,
-                centroids,
-                id_col or meta["id_col"],
-                vec_col,
-                "overwrite",
-                data_dir=f"{staging}/index",
-                num_partitions=partitions_per_epoch,
-                store_dtype=store_dtype,
-                codebooks=(
-                    _read_codebook_rows(spark, f"{index_path}/codebooks", meta)
-                    if store_dtype == "pq8"
-                    else None
-                ),
-                dim=int(meta["dim"]),
-            )
+            col = tok_col
+        _write_batch(
+            batch, index_path, meta, "overwrite", col, id_col,
+            target=staging, num_partitions=partitions_per_epoch,
+        )
 
     return ledger.commit(
         spark, index_path, ledger.stream_batch(epoch_id), meta,
-        ("tf", "df", "stats") if lexical else ("index",),
-        stage,
+        _LAYOUTS[meta["kind"]].subs, stage,
     )
 
 
@@ -227,9 +179,7 @@ def stream_index_ingest(
     micro-batch before indexing — e.g. tokenizing raw document text
     into the ``toks`` column a lexical artifact ingests. It must be
     deterministic (a replayed epoch re-prepares the same rows)."""
-    _read_meta_any_kind(  # fail fast before starting
-        spark, index_path, kinds=_INGEST_KINDS, verb="stream-ingest"
-    )
+    _read_meta_any_kind(spark, index_path, verb="stream-ingest")  # fail fast
 
     import hashlib
 
