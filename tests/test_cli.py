@@ -87,3 +87,29 @@ def test_cli_pipeline_over_csv_pair(spark, tmp_path, capsys):
 def test_cli_pipeline_requires_csv_args():
     with pytest.raises(SystemExit):
         main(["pipeline"])  # argparse: missing required --grammy/--spotify
+
+
+def test_verify_local_refuses_unknown_query_name(monkeypatch, capsys):
+    """tools/verify_local.py exits non-zero on a query name the
+    registry does not hold, before it starts Spark: a misspelt name
+    would otherwise check nothing and report all green."""
+    import importlib.util
+    import pathlib
+    import sys
+
+    from workhop2_etl_spark import session
+
+    tool = pathlib.Path(__file__).resolve().parent.parent / "tools" / "verify_local.py"
+    spec = importlib.util.spec_from_file_location("verify_local", tool)
+    verify_local = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(verify_local)
+
+    def no_spark(*a, **k):
+        raise AssertionError("verify_local started Spark")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(
+        sys, "argv", ["verify_local.py", "q1_pricing_summary", "t10_bigram_counts"]
+    )
+    assert verify_local.main() != 0
+    assert "t10_bigram_counts" in capsys.readouterr().out

@@ -5,14 +5,18 @@ ingest, delete, compaction and restore — lays it out through one
 writer (``index_store._write_dirs``): corpus-sized files sorted on
 the kind's cluster keys, one file per dimension-sized partial. The
 first test reads the files back with pyarrow after each verb; the
-second keeps the layout decisions inside the writer."""
+second keeps the layout decisions inside the writer. The last keeps
+every incremental artifact on the one commit protocol
+(operators/ledger.py)."""
 
 from __future__ import annotations
 
 import ast
+import io
 import os
 import pathlib
 import tempfile
+import tokenize
 import uuid
 
 import pyarrow.parquet as pq
@@ -126,14 +130,15 @@ def test_every_verb_writes_the_kind_layout(spark, kind):
     for sub in (*partials, "tombstones"):
         assert len(now[sub] - before[sub]) == 1, sub
 
-    IDX.compact_index(spark, path, num_partitions=2)
+    compacted = IDX.compact_index(spark, path, num_partitions=2)
     _check_written(path, kind, {}, partials)
     for sub in partials:
         assert len(_files(path, sub)) == 1, sub
     assert not _files(path, "tombstones")
 
     dst = _tmp(f"{kind}_restored")
-    IDX.restore_index(spark, path, dst, as_of=2, num_partitions=2)
+    IDX.restore_index(spark, path, dst, as_of=compacted["epoch"],
+                      num_partitions=2)
     _check_written(dst, kind, {}, partials)
     for sub in partials:
         assert len(_files(dst, sub)) == 1, sub
@@ -192,3 +197,24 @@ def test_index_layout_decided_only_in_the_writer():
                     found.add((mod, owner, tok))
     assert found <= LAYOUT_ALLOWLIST, found - LAYOUT_ALLOWLIST
     assert {t for m, f, t in found if f == "_write_dirs"} == set(_LAYOUT_TOKENS)
+
+
+def test_one_commit_protocol_for_incremental_artifacts():
+    """Static guard: no string or comment in the package builds or
+    parses an ``epoch=<N>`` / ``base=<k>`` generation dir, and no
+    ``_compact_tmp`` publish path is left. Every incremental artifact
+    commits through the ledger (operators/ledger.py)."""
+    import workhop2_etl_spark
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    found = []
+    for f in sorted(root.rglob("*.py")):
+        toks = tokenize.generate_tokens(io.StringIO(f.read_text()).readline)
+        for tok in toks:
+            text = tok.string
+            if "_compact_tmp" in text or (
+                tok.type in (tokenize.STRING, tokenize.COMMENT)
+                and ("epoch=" in text or "base=" in text)
+            ):
+                found.append(f"{f.relative_to(root)}:{tok.start[0]}")
+    assert not found, found

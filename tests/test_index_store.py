@@ -1385,7 +1385,8 @@ def test_snapshot_as_of_reconstructs_each_commit(spark):
     it stood after commit N — epochs and deletes committed later are
     hidden across ALL relations at once (scores stay bit-exact
     single-shot BM25 over the visible docs). Legacy empty markers
-    stay visible under any as_of; compaction bounds history."""
+    stay visible under any as_of; a snapshot before a compaction
+    raises."""
     from workhop2_etl_spark.operators import retrieval as RET
     from workhop2_etl_spark.streaming import index_stream as IS
 
@@ -1427,7 +1428,8 @@ def test_snapshot_as_of_reconstructs_each_commit(spark):
 
     # compaction folds batches into base files: history ends here
     IDX.compact_index(spark, path, num_partitions=1)
-    assert snap(as_of=1) == snap()
+    with pytest.raises(ValueError, match="compacted away"):
+        snap(as_of=1)
 
 
 def test_snapshot_as_of_postings_kinds(spark):

@@ -201,6 +201,27 @@ def test_near_dup_pairs_never_pair_null_text(spark):
     assert [r.doc_ids for r in exact_dup_groups(df).collect()] == [[3, 4]]
 
 
+def test_minhash_never_pairs_null_text(spark):
+    """NULL text gets the all-NULL signature an empty document gets, so
+    no MinHash consumer pairs two NULL-text documents: the LSH
+    candidates hold no pair, and the stream dedup drops neither."""
+    from workhop2_etl_spark.operators.dedup_text import (
+        minhash_candidates,
+        minhash_signatures,
+    )
+    from workhop2_etl_spark.streaming.dedup_stream import neardup_filter_batch
+
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, "some text"), (4, "")],
+        "doc_id long, text string",
+    )
+    sigs = {r.doc_id: r.sig for r in minhash_signatures(df).collect()}
+    assert sigs[1] == sigs[2] == sigs[4] == [None] * 16
+    assert minhash_candidates(df).collect() == []
+    survivors, _ = neardup_filter_batch(df, None)
+    assert sorted(r.doc_id for r in survivors.collect()) == [1, 2, 3, 4]
+
+
 def test_dedupe_exact_row_math(spark):
     base = [s or "" for s in _batch(120)]
     rows = [(i, base[i % 40]) for i in range(120)]  # force duplicates

@@ -979,6 +979,7 @@ def test_hist_rollup_combine_exact_and_epoch_protocol(spark, sf_dir, tmp_path):
     from workhop2_etl_spark.operators.incremental import (
         _HIST_BINS,
         combine_hist_rollups,
+        commit_epoch,
         hist_quantile,
         rollup_events_daily_hist,
     )
@@ -989,11 +990,12 @@ def test_hist_rollup_combine_exact_and_epoch_protocol(spark, sf_dir, tmp_path):
     a = ev.filter(F.col("event_id") % 3 == 0)
     b = ev.filter(F.col("event_id") % 3 != 0)
 
-    # (2) write the partials as epoch generations and read through
-    # the protocol reader with the histogram combine algebra
+    # (2) commit the partials as the rollup sink's epochs and read
+    # them back with the histogram combine algebra
     tdir = str(tmp_path / "hist_rollup")
-    rollup_events_daily_hist(a).write.mode("overwrite").parquet(f"{tdir}/epoch=0")
-    rollup_events_daily_hist(b).write.mode("overwrite").parquet(f"{tdir}/epoch=1")
+    for e, part in enumerate((a, b)):
+        commit_epoch(spark, tdir, "stream-rollup", e,
+                     lambda part=part: rollup_events_daily_hist(part))
     via_epochs = read_rollup(spark, tdir, combine_fn=combine_hist_rollups)
 
     single = rollup_events_daily_hist(ev)
@@ -1070,12 +1072,12 @@ def test_incremental_join_view_matches_full_rejoin(spark, sf_dir, tmp_path):
     assert len(grows) == len(wrows) and len(wrows) > 0
     assert [key(r) for r in grows] == [key(r) for r in wrows]
 
-    # compaction folds epochs below the top into base=<k> on all
-    # three ledgers; contents unchanged, and a replay of the live
-    # top epoch still converges (history reads base + (k, n))
+    # compaction folds every committed epoch of the three sinks into
+    # base files; contents unchanged, and a replay of the top epoch
+    # still skips
     from workhop2_etl_spark.operators.incremental import compact_join_view
 
-    assert compact_join_view(spark, a_dir, b_dir, v_dir) == 6  # 2 each
+    assert compact_join_view(spark, a_dir, b_dir, v_dir) == 9  # 3 each
     after = sorted(map(key, read_join_view(spark, v_dir).collect()))
     assert after == [key(r) for r in wrows]
     apply_join_delta(spark, a_dir, b_dir, v_dir, splits[2][0], splits[2][1],
@@ -1085,11 +1087,9 @@ def test_incremental_join_view_matches_full_rejoin(spark, sf_dir, tmp_path):
 
     # plan shape: a mid-size refresh broadcasts the delta sides
     da, db = splits[2]
-    from workhop2_etl_spark.operators.incremental import (
-        _epochs_below,
-        _union_epochs,
-    )
-    a_old = _union_epochs(spark, _epochs_below(spark, a_dir, 2), da)
+    from workhop2_etl_spark.operators.incremental import _history
+
+    a_old = _history(spark, a_dir, 3, da)
     plan = (
         a_old.join(db.hint("broadcast"), "o_custkey", "inner")
         ._jdf.queryExecution().executedPlan().toString()
@@ -1238,62 +1238,36 @@ def test_leakage_safe_split_clusters_never_span(spark):
     assert spanning_doc > 0, "fixture has no cluster straddling a per-doc split"
 
 
-def test_generation_dirs_tolerate_stray_entries(spark, sf_dir, tmp_path):
-    """A ledger dir that picked up stray non-generation entries
-    (editor droppings, foreign tools, 'base=abc') must not crash
-    readers or refreshes — stray names are skipped, real generations
-    still read (r06 ADVICE: the base=<k> parse used a bare int())."""
+def test_sink_readers_tolerate_stray_entries(spark, sf_dir, tmp_path):
+    """A sink artifact that picked up stray entries (editor droppings,
+    foreign tools: dirs, hidden files, a backup copy of a ledger
+    marker) must not crash its readers — stray names are skipped and
+    the committed epochs still read, in the present and as of an
+    epoch."""
     import os
 
     from workhop2_etl_spark.operators.incremental import (
         combine_hist_rollups,
+        commit_epoch,
         rollup_events_daily_hist,
-        rollup_part_dirs,
     )
     from workhop2_etl_spark.session import load_table
     from workhop2_etl_spark.streaming.windows import read_rollup
 
     ev = load_table(spark, sf_dir, "events")
     tdir = str(tmp_path / "stray")
-    rollup_events_daily_hist(ev).write.mode("overwrite").parquet(f"{tdir}/epoch=0")
-    os.makedirs(f"{tdir}/base=abc")          # stray: non-integer base
-    os.makedirs(f"{tdir}/epoch=1.bak")       # stray: non-integer epoch
-    os.makedirs(f"{tdir}/notes")             # stray: unrelated dir
+    commit_epoch(spark, tdir, "stream-rollup", 0,
+                 lambda: rollup_events_daily_hist(ev))
+    os.makedirs(f"{tdir}/notes")                      # stray dir at the root
+    os.makedirs(f"{tdir}/partials/old")               # stray dir in the sub
+    open(f"{tdir}/partials/.part.crc", "w").close()   # hidden file
+    open(f"{tdir}/ledger/epoch-{1:012d}~", "w").close()  # marker backup
 
-    dirs = rollup_part_dirs(spark, tdir)
-    assert dirs == [f"{tdir}/epoch=0"]
-    assert dirs == rollup_part_dirs(spark, tdir, as_of=0)
-    n = read_rollup(spark, tdir, combine_fn=combine_hist_rollups).count()
-    assert n > 0
-
-
-def test_as_of_refuses_mid_sweep_multi_base_state(spark, sf_dir, tmp_path):
-    """Crash between compaction publish and sweep leaves base=0 AND
-    base=2 live. An as_of BETWEEN them (as_of=1) must raise — the new
-    compaction may have already deleted epoch dirs the old base needs
-    — while as_of ≥ the newest base still answers (r06 ADVICE #1)."""
-    import pytest as _pytest
-
-    from workhop2_etl_spark.operators.incremental import (
-        rollup_events_daily_hist,
-        rollup_part_dirs,
-    )
-    from workhop2_etl_spark.session import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    part = rollup_events_daily_hist(ev)
-    tdir = str(tmp_path / "midsweep")
-    part.write.mode("overwrite").parquet(f"{tdir}/base=0")
-    part.write.mode("overwrite").parquet(f"{tdir}/epoch=1")  # not yet swept
-    part.write.mode("overwrite").parquet(f"{tdir}/base=2")
-    part.write.mode("overwrite").parquet(f"{tdir}/epoch=3")
-
-    with _pytest.raises(ValueError, match="compacted away"):
-        rollup_part_dirs(spark, tdir, as_of=1)
-    assert rollup_part_dirs(spark, tdir, as_of=2) == [f"{tdir}/base=2"]
-    assert rollup_part_dirs(spark, tdir, as_of=3) == [
-        f"{tdir}/base=2", f"{tdir}/epoch=3",
-    ]
+    want = read_rollup(spark, tdir, combine_fn=combine_hist_rollups).collect()
+    assert want
+    assert read_rollup(
+        spark, tdir, combine_fn=combine_hist_rollups, as_of=0
+    ).collect() == want
 
 
 def test_hist_rollup_drops_all_null_cells(spark):

@@ -1,7 +1,9 @@
-"""Incremental near-dup ingestion (streaming/dedup_stream.py) and
-stream-static enrichment: the streaming machinery must reproduce the
-documented deterministic dedup rule across micro-batch boundaries,
-and re-running with the same checkpoint must add nothing.
+"""The stream sinks — incremental near-dup ingestion
+(streaming/dedup_stream.py), the streaming rollup and the join views —
+and stream-static enrichment: the streaming machinery must reproduce
+the batch answer across micro-batch boundaries, re-running with the
+same checkpoint must add nothing, and a replay of a committed epoch
+must change nothing (every sink commits through operators/ledger.py).
 """
 
 from __future__ import annotations
@@ -15,6 +17,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.operators import ledger
+from workhop2_etl_spark.operators.incremental import commit_epoch, sink_files
 from workhop2_etl_spark.streaming import dedup_stream as DS
 from workhop2_etl_spark.streaming import windows as SW
 
@@ -98,6 +102,29 @@ def staged(spark, tmp_path_factory):
 _ROLLUP_COLS = ["day", "event_type", "n", "sum_value", "min_value", "max_value"]
 
 
+def _survivors(spark, out_dir: str) -> list[int]:
+    """The doc ids the near-dup sink at ``out_dir`` committed."""
+    files = sink_files(spark, out_dir, "neardup-docs")
+    return [r["doc_id"] for r in spark.read.parquet(*files).collect()]
+
+
+def _epoch_files(spark, table: str, epoch: int) -> list[str]:
+    """The partial files the rollup sink committed for ``epoch``."""
+    return ledger.batch_files(spark, table, "partials", ledger.stream_batch(epoch))
+
+
+def _uncommit_last_batch(ckpt: str) -> int:
+    """Drop the last entry of a streaming checkpoint's commit log, so
+    the next run re-delivers that micro-batch with its epoch id — the
+    at-least-once replay after a crash inside the sink."""
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    return last
+
+
 def _canon_rollup(rows):
     """Canonical comparable set for rollup rows: sum_value is a float
     accumulated in different orders by the partial-combine and
@@ -178,7 +205,7 @@ def test_stream_neardup_ingest_matches_greedy_oracle(spark, staged):
         num_bands=NUM_BANDS,
         threshold=THRESHOLD,
     )
-    got = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
+    got = set(_survivors(spark, out_dir))
     expected = _expected_survivors(spark, [batch1, batch2])
     assert got == expected
     # sanity on the engineered families (greedy, not closure):
@@ -198,10 +225,8 @@ def test_stream_neardup_ingest_matches_greedy_oracle(spark, staged):
         num_bands=NUM_BANDS,
         threshold=THRESHOLD,
     )
-    again = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
-    assert again == got
-    n_rows = spark.read.parquet(out_dir).count()
-    assert n_rows == len(got)
+    again = _survivors(spark, out_dir)
+    assert sorted(again) == sorted(got)  # no survivor twice
 
 
 def test_stream_static_enrich_equals_batch(spark):
@@ -260,23 +285,97 @@ def test_stream_rollup_equals_batch_and_exactly_once(spark, tmp_path_factory):
     again = canon(SW.read_rollup(spark, table).collect())
     assert again == got
 
-    # retry idempotence: replaying one epoch's write (the at-least-
-    # once failure mode) must not change what readers combine
-    import os as _os
-
-    epochs = sorted(d for d in _os.listdir(table) if d.startswith("epoch="))
-    assert len(epochs) > 1  # several micro-batches actually ran
-    one = spark.read.parquet(_os.path.join(table, epochs[0]))
-    one.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-        _os.path.join(table, epochs[0])
-    )
+    # retry idempotence: replaying a committed epoch's commit (the
+    # at-least-once failure mode), even with different rows, skips and
+    # does not change what readers combine
+    assert len(ledger.commits(spark, table)) > 1  # several micro-batches ran
+    replay = lambda: rollup_events_daily(spark.read.parquet(src))  # noqa: E731
+    assert commit_epoch(spark, table, "stream-rollup", 0, replay) == "skipped"
     retried = canon(SW.read_rollup(spark, table).collect())
     assert retried == got
 
 
+def test_failed_rollup_replay_keeps_committed_totals(spark, tmp_path_factory):
+    """A replay of a committed rollup epoch whose ``rollup_fn`` fails
+    after its shuffle must leave the committed totals readable: the
+    ledger skips the committed epoch, so nothing is deleted and the
+    failing partial is never computed."""
+    from workhop2_etl_spark.operators.incremental import rollup_events_daily
+    from workhop2_etl_spark.session import load_table
+
+    root = tmp_path_factory.mktemp("rollup_failed_replay")
+    src = str(root / "events.parquet")
+    table = str(root / "daily")
+    ckpt = str(root / "ckpt")
+    load_table(spark, SF_DIR, "events").repartition(3).write.mode(
+        "overwrite"
+    ).parquet(src)
+    SW.stream_rollup_to_parquet(spark, src, table, ckpt, max_files_per_trigger=1)
+    before = _canon_rollup(SW.read_rollup(spark, table).collect())
+
+    def failing(batch):
+        part = rollup_events_daily(batch)
+        return part.withColumn("n", F.when(
+            F.col("n") > 0, F.raise_error(F.lit("replay failed after its shuffle"))
+        ).otherwise(F.col("n")))
+
+    assert _uncommit_last_batch(ckpt) >= 1
+    SW.stream_rollup_to_parquet(
+        spark, src, table, ckpt, max_files_per_trigger=1, rollup_fn=failing
+    )
+    assert _canon_rollup(SW.read_rollup(spark, table).collect()) == before
+
+
+def test_failed_join_view_replay_keeps_view(spark, tmp_path_factory):
+    """A replay of a committed join-view epoch whose fact delta fails
+    after its shuffle must leave the view and its history as they
+    were, so the next epoch still brings the view to the batch join.
+    The failing row has a NULL key: the view's join filters it out, so
+    only the fact side's own write would evaluate it — each of the
+    three sinks skips the committed epoch instead."""
+    from workhop2_etl_spark.operators.incremental import (
+        apply_join_delta,
+        read_join_view,
+    )
+    from workhop2_etl_spark.session import load_table
+
+    root = tmp_path_factory.mktemp("join_view_failed_replay")
+    dirs = [str(root / d) for d in ("a", "b", "view")]
+    orders = load_table(spark, SF_DIR, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    cust = load_table(spark, SF_DIR, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_name"
+    )
+    splits = [
+        (orders.filter(F.col("o_orderkey") % 3 == k),
+         cust.filter(F.col("o_custkey") % 3 == k))
+        for k in range(3)
+    ]
+    for n, (da, db) in enumerate(splits[:2]):
+        apply_join_delta(spark, *dirs, da, db, "o_custkey", n)
+    n_rows = read_join_view(spark, dirs[2]).count()
+
+    orphan = spark.createDataFrame([(-1, None, 0.0)], orders.schema)
+    failing = (
+        splits[1][0].unionByName(orphan).repartition(2)
+        .withColumn("o_totalprice", F.when(
+            F.col("o_custkey").isNull(), F.raise_error(F.lit("replay failed"))
+        ).otherwise(F.col("o_totalprice")))
+    )
+    apply_join_delta(spark, *dirs, failing, splits[1][1], "o_custkey", 1)
+    assert read_join_view(spark, dirs[2]).count() == n_rows
+
+    apply_join_delta(spark, *dirs, *splits[2], "o_custkey", 2)
+    assert read_join_view(spark, dirs[2]).count() == orders.join(
+        cust, "o_custkey"
+    ).count()
+
+
 def test_rollup_epoch_compaction_preserves_totals(spark, tmp_path_factory):
     """Folding per-epoch partials into one must not change what
-    read_rollup returns, and must leave exactly one epoch dir."""
+    read_rollup returns, and must leave one base file and no epoch
+    file."""
     from workhop2_etl_spark.operators.incremental import compact_rollup_epochs
     from workhop2_etl_spark.session import load_table
 
@@ -296,20 +395,21 @@ def test_rollup_epoch_compaction_preserves_totals(spark, tmp_path_factory):
     assert n >= 2
     after = canon(SW.read_rollup(spark, table).collect())
     assert after == before
-    # layout: one base generation + the live top epoch only
-    assert sum(1 for d in os.listdir(table) if d.startswith("base=")) == 1
-    assert sum(1 for d in os.listdir(table) if d.startswith("epoch=")) == 1
+    # layout: every committed epoch folded into one base file
+    assert ledger.batches(spark, table, ["partials"]) == {}
+    assert len(sink_files(spark, table, "stream-rollup")) == 1
 
-    # a second compaction with nothing below the top is a no-op
+    # a second compaction with no epoch left to fold is a no-op
     assert compact_rollup_epochs(spark, table) == 0
     assert canon(SW.read_rollup(spark, table).collect()) == before
 
 
 def test_folded_epoch_replay_after_compaction(spark, tmp_path_factory):
-    """The at-least-once failure mode the compaction protocol must
-    survive: after epochs are folded into base=<k>, a late retry
-    re-creates a folded ``epoch=e`` (e <= k). Readers must ignore it
-    — totals unchanged — and the next compaction must clean it up."""
+    """The at-least-once failure mode compaction must survive: after
+    the epochs are folded into the base, a late replay of a folded
+    epoch — re-delivered by the stream, or committed directly with
+    different rows — skips at its ledger marker. Totals stay the same,
+    and the next compaction finds nothing to fold."""
     from workhop2_etl_spark.operators.incremental import (
         compact_rollup_epochs,
         rollup_events_daily,
@@ -319,43 +419,28 @@ def test_folded_epoch_replay_after_compaction(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("rollup_replay")
     src = str(root / "events.parquet")
     table = str(root / "daily")
+    ckpt = str(root / "ckpt")
     ev = load_table(spark, SF_DIR, "events")
     ev.repartition(3).write.mode("overwrite").parquet(src)
-    SW.stream_rollup_to_parquet(
-        spark, src, table, str(root / "ckpt"), max_files_per_trigger=1
-    )
+    SW.stream_rollup_to_parquet(spark, src, table, ckpt, max_files_per_trigger=1)
 
     canon = _canon_rollup
 
-    epochs = sorted(
-        (d for d in os.listdir(table) if d.startswith("epoch=")),
-        key=lambda d: int(d.split("=", 1)[1]),
-    )
-    assert len(epochs) >= 3
-    folded = epochs[0]
-    # keep a copy of a to-be-folded epoch's partial (what a replayed
-    # foreachBatch of that epoch would rewrite)
-    replay_partial = spark.read.parquet(
-        os.path.join(table, folded)
-    ).localCheckpoint(eager=True)
-
     before = canon(SW.read_rollup(spark, table).collect())
-    assert compact_rollup_epochs(spark, table) >= 2
+    assert compact_rollup_epochs(spark, table) == 3
 
-    # late retry resurrects the folded epoch dir
-    replay_partial.write.mode("overwrite").parquet(os.path.join(table, folded))
+    # the stream re-delivers its last (folded) epoch
+    _uncommit_last_batch(ckpt)
+    SW.stream_rollup_to_parquet(spark, src, table, ckpt, max_files_per_trigger=1)
     assert canon(SW.read_rollup(spark, table).collect()) == before
 
     # worst case: the replayed partial differs (e.g. a bigger batch) —
-    # still ignored, because the reader rule excludes e <= k entirely
-    rollup_events_daily(spark.read.parquet(src)).write.mode("overwrite").parquet(
-        os.path.join(table, folded)
-    )
+    # still skipped, because the epoch's marker outlives its files
+    bigger = lambda: rollup_events_daily(spark.read.parquet(src))  # noqa: E731
+    assert commit_epoch(spark, table, "stream-rollup", 0, bigger) == "skipped"
     assert canon(SW.read_rollup(spark, table).collect()) == before
 
-    # next compaction sweeps the stale dir without changing totals
-    compact_rollup_epochs(spark, table)
-    assert not os.path.isdir(os.path.join(table, folded))
+    assert compact_rollup_epochs(spark, table) == 0
     assert canon(SW.read_rollup(spark, table).collect()) == before
 
 
@@ -401,9 +486,8 @@ def test_rollup_and_compaction_on_file_uri(spark, tmp_path_factory):
     before = canon(SW.read_rollup(spark, stream_uri).collect())
     assert compact_rollup_epochs(spark, stream_uri) >= 2
     assert canon(SW.read_rollup(spark, stream_uri).collect()) == before
-    names = fs.list_child_dirs(spark, stream_uri)
-    assert sum(1 for d in names if d.startswith("base=")) == 1
-    assert sum(1 for d in names if d.startswith("epoch=")) == 1
+    assert ledger.batches(spark, stream_uri, ["partials"]) == {}
+    assert len(fs.data_files(spark, fs.join(stream_uri, "partials"))) == 1
 
 
 def test_stream_neardup_ingest_on_file_uri(spark, staged):
@@ -428,16 +512,16 @@ def test_stream_neardup_ingest_on_file_uri(spark, staged):
         num_bands=NUM_BANDS,
         threshold=THRESHOLD,
     )
-    got = {r["doc_id"] for r in spark.read.parquet(out_uri).collect()}
+    got = set(_survivors(spark, out_uri))
     assert got == _expected_survivors(spark, [batch1, batch2])
 
 
 def test_index_compaction_then_continued_ingest(spark, tmp_path_factory):
     """Compacting the dedup index between runs must not change
-    decisions: batches 1-2 ingest, the index epochs fold into a
-    base=<k> generation, then a NEW batch arrives and must still be
-    checked against everything accepted so far (via the base) —
-    survivors equal the greedy oracle over all three batches."""
+    decisions: batches 1-2 ingest, the index epochs fold into base
+    files, then a NEW batch arrives and must still be checked against
+    everything accepted so far (via the base) — survivors equal the
+    greedy oracle over all three batches."""
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
@@ -480,17 +564,15 @@ def test_index_compaction_then_continued_ingest(spark, tmp_path_factory):
     run()
 
     n = DS.compact_index_epochs(spark, index_dir)
-    assert n == 1  # epoch 0 folded; live top epoch 1 stays
-    names = os.listdir(index_dir)
-    assert sum(1 for d in names if d.startswith("base=")) == 1
-    assert sum(1 for d in names if d.startswith("epoch=")) == 1
-    # idempotent when nothing below the top
+    assert n == 2  # both committed epochs folded
+    assert ledger.batches(spark, index_dir, ["bands"]) == {}
+    # idempotent when no epoch is left to fold
     assert DS.compact_index_epochs(spark, index_dir) == 0
 
     write_batch(2, batch3)
     run()  # same checkpoint: only batch3 processes, as epoch 2
 
-    got = {r["doc_id"] for r in spark.read.parquet(out_dir).collect()}
+    got = set(_survivors(spark, out_dir))
     expected = _expected_survivors(spark, [batch1, batch2, batch3])
     assert got == expected
     assert 23 not in got and 24 in got  # dup caught THROUGH the base
@@ -535,7 +617,7 @@ def test_stream_distinct_sketch_rollup_matches_batch(spark, tmp_path_factory):
     want = estimates(rollup_events_daily_distinct(spark.read.parquet(src)))
     assert got == want  # exact, not approximate: same sketch algorithm
 
-    # folding epochs into base=<k> must preserve every estimate
+    # folding the epochs into the base must preserve every estimate
     assert compact_rollup_epochs(
         spark, table, combine_fn=combine_distinct_rollups
     ) >= 2
@@ -545,9 +627,10 @@ def test_stream_distinct_sketch_rollup_matches_batch(spark, tmp_path_factory):
 
 def test_stream_hist_rollup_and_epoch_time_travel(spark, tmp_path_factory):
     """The epoch sink carries the histogram-quantile measure, and the
-    reader time-travels: as_of=N combines exactly the first N+1
-    epochs' partials; compaction preserves the present but makes
-    pre-fold snapshots raise instead of answering wrong."""
+    reader time-travels: as_of=N combines exactly the partials of
+    epochs 0..N; compaction preserves the present but makes pre-fold
+    snapshots raise instead of answering wrong, while snapshots at or
+    after the fold read the base plus the later epochs."""
     import pytest as _pytest
 
     from workhop2_etl_spark.operators.incremental import (
@@ -560,54 +643,54 @@ def test_stream_hist_rollup_and_epoch_time_travel(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("hist_stream")
     src = str(root / "events.parquet")
     table = str(root / "daily_hist")
+    ckpt = str(root / "ckpt")
     ev = load_table(spark, SF_DIR, "events")
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    SW.stream_rollup_to_parquet(
-        spark,
-        src,
-        table,
-        str(root / "ckpt"),
-        max_files_per_trigger=1,
-        rollup_fn=rollup_events_daily_hist,
-    )
+    def stream():
+        SW.stream_rollup_to_parquet(
+            spark, src, table, ckpt, max_files_per_trigger=1,
+            rollup_fn=rollup_events_daily_hist,
+        )
 
     def cells(df):
         return {(r.day, r.event_type): (r.n, list(r.hist)) for r in df.collect()}
 
-    full = cells(SW.read_rollup(spark, table, combine_fn=combine_hist_rollups))
+    def read(as_of=None):
+        return cells(SW.read_rollup(
+            spark, table, combine_fn=combine_hist_rollups, as_of=as_of
+        ))
+
+    stream()
+    full = read()
     want = cells(rollup_events_daily_hist(spark.read.parquet(src)))
     assert full == want  # bit-identical bin vectors, however split
 
     # snapshot as of epoch 1: exactly epochs {0, 1}'s partials (the
     # stream assigns files to epochs in its own order, so the
-    # expectation reads the epoch dirs it actually wrote)
-    snap1_want = cells(
-        combine_hist_rollups(
-            spark.read.parquet(f"{table}/epoch=0", f"{table}/epoch=1")
-        )
-    )
-    snap = cells(
-        SW.read_rollup(spark, table, combine_fn=combine_hist_rollups, as_of=1)
-    )
-    assert snap == snap1_want
-    assert sum(n for n, _ in snap.values()) < sum(n for n, _ in full.values())
-    snap2_want = cells(
-        combine_hist_rollups(
-            spark.read.parquet(*[f"{table}/epoch={e}" for e in (0, 1, 2)])
-        )
-    )
+    # expectation reads the files it actually committed)
+    snap1_want = cells(combine_hist_rollups(spark.read.parquet(
+        *_epoch_files(spark, table, 0), *_epoch_files(spark, table, 1)
+    )))
+    assert read(as_of=1) == snap1_want
+    assert sum(n for n, _ in snap1_want.values()) < sum(n for n, _ in full.values())
 
-    # compaction folds epochs 0-2 into base=2; present unchanged,
+    # compaction folds epochs 0-3 into the base; present unchanged,
     # pre-fold history now refuses rather than lying
-    assert compact_rollup_epochs(spark, table, combine_fn=combine_hist_rollups) == 3
-    after = cells(SW.read_rollup(spark, table, combine_fn=combine_hist_rollups))
-    assert after == want
-    assert cells(
-        SW.read_rollup(spark, table, combine_fn=combine_hist_rollups, as_of=2)
-    ) == snap2_want
+    assert compact_rollup_epochs(spark, table, combine_fn=combine_hist_rollups) == 4
+    assert read() == want
+    assert read(as_of=3) == want
     with _pytest.raises(ValueError, match="compacted away"):
-        SW.read_rollup(spark, table, combine_fn=combine_hist_rollups, as_of=1)
+        read(as_of=1)
+
+    # an epoch committed after the fold: snapshots at the fold read the
+    # base alone, later ones the base plus the new epoch
+    ev.limit(40).write.mode("append").parquet(src)
+    stream()
+    assert read(as_of=3) == want
+    grown = read(as_of=4)
+    assert grown == read() == cells(rollup_events_daily_hist(spark.read.parquet(src)))
+    assert grown != want
 
 
 def test_stream_join_view_matches_batch_join(spark, tmp_path_factory):

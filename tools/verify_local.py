@@ -74,6 +74,11 @@ def main() -> int:
         i = args.index("--artifact")
         artifact_path = args[i + 1]
         args = args[:i] + args[i + 2 :]
+    qs = e.queries()
+    unknown = sorted(set(args) - set(qs))
+    if unknown:  # a misspelt name would otherwise check nothing and pass
+        print(f"unknown query name(s): {', '.join(unknown)}")
+        return 2
     artifact = open(artifact_path, "w") if artifact_path else None
 
     def record(obj: dict) -> None:
@@ -108,7 +113,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs = e.queries()
     oracles = e.oracle_sql()
     only = set(args)
     failures = []

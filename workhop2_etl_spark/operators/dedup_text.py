@@ -147,31 +147,6 @@ def _shingle_base_hash(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long") % MINHASH_P
 
 
-def minhash_signature(c: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """MinHash signature as an array of (stringified) ints.
-
-    Hash family: h_i(s) = (a_i · x + b_i) mod P over ONE md5-derived
-    base hash x per shingle — one string hash instead of num_hashes,
-    with the family spread by cheap integer arithmetic (the classic
-    universal-hash construction; a_i·x < 2^62 so 64-bit ints never
-    overflow, which matters because SQL engines raise on overflow
-    rather than wrap). Empty documents get NULL components (never
-    collide).
-    """
-    sh = word_shingles(c, shingle_n)
-    xs = F.transform(sh, _shingle_base_hash)
-
-    def affine(a: int, b: int):
-        # 1-arg lambda via closure — F.transform binds the array index
-        # to any second parameter, including default args.
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MINHASH_P
-
-    comps = [
-        F.array_min(F.transform(xs, affine(*minhash_coeffs(i)))) for i in range(num_hashes)
-    ]
-    return F.array(*[c_.cast("string") for c_ in comps])
-
-
 def lsh_bands(sig: Column, num_bands: int = 4, band_size: int = 4) -> Column:
     """Split a signature into bands and hash each band to a bucket
     key: array of (band_id, band_key) structs. Docs sharing ANY band
@@ -200,19 +175,31 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signatures as a DataFrame (id, sig: array<string>).
 
-    Row-based formulation: explode shingles → one md5-derived base
-    hash per shingle → num_hashes affine ``min`` aggregates → one
-    shuffle by id. Semantically identical to the
-    column expression ``minhash_signature`` but scales structurally:
-    the per-shingle work is flat rows inside codegen, and crucially
+    Hash family: h_i(s) = (a_i · x + b_i) mod P over ONE md5-derived
+    base hash x per shingle — one string hash instead of num_hashes,
+    with the family spread by cheap integer arithmetic (the classic
+    universal-hash construction; a_i·x < 2^62 so 64-bit ints never
+    overflow, which matters because SQL engines raise on overflow
+    rather than wrap).
+
+    Row-based formulation: explode shingles → one base hash per
+    shingle → num_hashes affine ``min`` aggregates → one shuffle by
+    id. The per-shingle work is flat rows inside codegen, and crucially
     the aggregation is a plan barrier — downstream self-joins reuse
     the computed signature instead of inlining the whole shingle+hash
     expression tree into both join sides (which compiled for minutes
     at mere hundreds of documents).
-    Empty docs keep a row (explode_outer) with an all-NULL signature.
+    Empty docs keep a row (explode_outer) with an all-NULL signature,
+    and so do NULL-text docs: unknown content is not evidence of
+    similar content, so they never share a band and never pair
+    (``exact_dup_groups`` excludes them for the same reason).
     """
+    text = F.col(text_col)
     sh = df.select(
-        F.col(id_col), F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("s")
+        F.col(id_col),
+        F.explode_outer(
+            F.when(text.isNotNull(), word_shingles(text, shingle_n))
+        ).alias("s"),
     )
     based = sh.select(id_col, _shingle_base_hash(F.col("s")).alias("__x"))
     aggs = []
@@ -329,12 +316,8 @@ def near_dup_pairs(
     never happens; Jaccard runs only on LSH survivors. An input in
     fewer partitions than the default parallelism is spread over it
     first (``_fanned_out``), so both shingle stages use every core.
-
-    NULL-text documents never pair: their one shingle ``''`` would
-    make every two of them a pair at Jaccard 1.0, and unknown content
-    is not evidence of similar content (``exact_dup_groups`` excludes
-    them for the same reason)."""
-    df = _fanned_out(df.filter(F.col(text_col).isNotNull()))
+    NULL-text documents never pair (``minhash_signatures``)."""
+    df = _fanned_out(df)
     cands = minhash_candidates(df, text_col, id_col, num_hashes, num_bands, shingle_n)
     sh = df.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("__shingles")

@@ -18,33 +18,10 @@ All directory manipulation goes through the Hadoop FileSystem API
 (sources/fs.py), so the rollup table can live on HDFS / S3A / local
 disk interchangeably.
 
-Epoch layout and compaction protocol
-------------------------------------
-streaming/windows.py::stream_rollup_to_parquet writes one combinable
-partial per micro-batch under ``epoch=N/``. Readers fold partials, so
-reader cost grows with epoch count; ``compact_rollup_epochs``
-periodically folds old epochs into a ``base=<k>`` generation where
-``k`` is the highest epoch folded. The reader rule (shared by
-``rollup_part_dirs``) is:
-
-    take the base=<k> with the LARGEST k (if any), plus every
-    epoch=<e> with e > k; ignore everything else.
-
-This rule makes every failure and replay scenario read correctly:
-
-* crash after writing ``_compact_tmp``: readers ignore
-  underscore-prefixed dirs — state unchanged;
-* crash after renaming tmp → ``base=<k_new>`` but before deleting the
-  folded inputs: folded epochs all have e <= k_new and any older base
-  has k_old < k_new, so readers already use only the new base —
-  no double count, and a re-run of compaction finishes the deletes;
-* an at-least-once REPLAY of a folded epoch (foreachBatch retries
-  exactly when a crash interrupted an epoch) re-creates ``epoch=<e>``
-  with e <= k — readers ignore it, so folded data can neither be
-  double-counted nor resurrected. Only epochs STRICTLY BELOW the
-  current top are folded, so the live top epoch keeps its own dir and
-  its replay stays a same-data overwrite, as in the uncompacted
-  layout.
+The streaming rollup, near-dup and join-view sinks commit each
+micro-batch as a stream epoch of a ledgered artifact
+(operators/ledger.py lists their kinds and subs): ``commit_epoch``
+writes, ``sink_files`` reads, ``compact_sink`` folds.
 """
 
 from __future__ import annotations
@@ -52,6 +29,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.operators import ledger
+from workhop2_etl_spark.operators.index_store import (
+    FORMAT_VERSION,
+    _compact_dirs,
+    _read_meta,
+    _settle_ledger_for_compaction,
+    _write_meta,
+)
 from workhop2_etl_spark.session import local_relation
 from workhop2_etl_spark.sources import fs
 from workhop2_etl_spark.sources.readers import read_parquet
@@ -76,16 +61,7 @@ def rollup_events_daily(events: DataFrame) -> DataFrame:
 
 def combine_rollups(a: DataFrame, b: DataFrame) -> DataFrame:
     """Merge two partial rollups: counts/sums add, min/min, max/max."""
-    return (
-        a.unionByName(b)
-        .groupBy(*_KEYS)
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_value").alias("sum_value"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
+    return _combine_parts(a.unionByName(b))
 
 
 def _combine_parts(parts: DataFrame) -> DataFrame:
@@ -108,8 +84,8 @@ def _combine_parts(parts: DataFrame) -> DataFrame:
 # partial sketches is BIT-IDENTICAL to the single-pass sketch (same
 # deterministic algorithm), so estimates agree exactly however the
 # data was split across epochs/batches. The sketch column is plain
-# binary: it survives parquet round trips and the epoch/compaction
-# protocol above unchanged.
+# binary: it survives parquet round trips and the stream sink's
+# epochs and compaction unchanged.
 
 
 def rollup_events_daily_distinct(events: DataFrame) -> DataFrame:
@@ -181,146 +157,83 @@ def refresh_daily_rollup(
     return days
 
 
-def _gen_id(name: str, prefix: str) -> int | None:
-    """Parse a ``<prefix><int>`` generation dir name; None for names
-    with the wrong prefix OR a non-integer suffix. A ledger dir can
-    pick up stray entries (editor droppings, foreign tools) — every
-    reader/refresh skips them rather than crashing on a bare int()."""
-    if not name.startswith(prefix):
-        return None
-    try:
-        return int(name[len(prefix):])
-    except ValueError:
-        return None
+# ---------------------------------------------------------------------------
+# Stream sinks: one ledgered artifact per directory
+# ---------------------------------------------------------------------------
 
 
-def _scan_generations(
-    spark: SparkSession, table_dir: str
-) -> tuple[int, list[int]]:
-    """(best base generation k or -1, sorted live epoch ids > k)."""
-    names = fs.list_child_dirs(spark, table_dir)
-    bases = sorted(
-        b for n in names for b in [_gen_id(n, "base=")] if b is not None
+def _sink_meta(spark: SparkSession, path: str, kind: str) -> dict:
+    """The metadata record of the ``kind`` sink at ``path``, written at
+    epoch 0 on first use."""
+    if fs.exists(spark, fs.join(path, "meta")):
+        return _read_meta(spark, path, kind)
+    meta = {"kind": kind, "version": FORMAT_VERSION, "epoch": 0}
+    _write_meta(spark, path, meta, "overwrite")
+    return meta
+
+
+def commit_epoch(
+    spark: SparkSession, path: str, kind: str, epoch_id: int, rows
+) -> str:
+    """Commit ``rows()`` as stream epoch ``epoch_id`` of the ``kind``
+    sink at ``path`` through ``ledger.commit``. ``rows`` is called only
+    when the epoch is not committed yet, so a replay of a committed
+    epoch neither computes nor deletes anything. Returns
+    ``'committed'`` or ``'skipped'``."""
+    sub = ledger.SINKS[kind]
+    return ledger.commit(
+        spark, path, ledger.stream_batch(epoch_id),
+        _sink_meta(spark, path, kind), (sub,),
+        lambda staging: rows().write.mode("overwrite").parquet(
+            fs.join(staging, sub)
+        ),
     )
-    k = bases[-1] if bases else -1
-    epochs = sorted(
-        e
-        for n in names
-        for e in [_gen_id(n, "epoch=")]
-        if e is not None and e > k
-    )
-    return k, epochs
 
 
-def sweep_stale_generations(
-    spark: SparkSession, table_dir: str, best_k: int
-) -> None:
-    """Delete dirs a crash or late replay left superseded below the
-    published ``base=<best_k>``: epochs ≤ best_k and older bases.
-    Readers already ignore them by the generation rule; this reclaims
-    the storage. Shared by both compaction protocols (rollup and
-    dedup-index) so the layout convention lives in one place."""
-    for n in fs.list_child_dirs(spark, table_dir):
-        e = _gen_id(n, "epoch=")
-        if e is not None and e <= best_k:
-            fs.delete(spark, fs.join(table_dir, n))
-        b = _gen_id(n, "base=")
-        if b is not None and b < best_k:
-            fs.delete(spark, fs.join(table_dir, n))
-
-
-def rollup_part_dirs(
-    spark: SparkSession, table_dir: str, as_of: int | None = None
+def sink_files(
+    spark: SparkSession, path: str, kind: str, through: int | None = None
 ) -> list[str]:
-    """Directories a reader must combine: the newest base generation
-    (if any) plus every live epoch above it — the reader half of the
-    compaction protocol documented in the module docstring.
+    """The committed files of the ``kind`` sink at ``path``: its base
+    files plus every committed epoch (through epoch ``through`` only,
+    when given; a snapshot that predates a fold raises)."""
+    return ledger.visible_files(
+        spark, path, ledger.SINKS[kind], through=through
+    )[0]
 
-    ``as_of`` time-travels to the table as of epoch N: the newest
-    base with k ≤ N plus epochs in (k, N]. Compaction destroys
-    history below its fold point, so a snapshot older than the
-    NEWEST base raises rather than silently answering with a
-    different epoch's totals — retention is exactly "epochs not yet
-    folded". The newest-base rule (not oldest) matters in the
-    transient multi-base state a crash between compaction publish
-    and sweep can leave: an as_of between an old base and the new
-    one would otherwise combine the old base with epoch dirs the
-    new compaction may have already partially deleted.
-    """
-    names = fs.list_child_dirs(spark, table_dir) if as_of is not None else None
-    if as_of is None:
-        k, epochs = _scan_generations(spark, table_dir)
-    else:
-        all_bases = [
-            b for n in names for b in [_gen_id(n, "base=")] if b is not None
-        ]
-        if all_bases and as_of < max(all_bases):
-            raise ValueError(
-                f"snapshot as_of={as_of} predates the newest base "
-                f"generation base={max(all_bases)}: that history was "
-                "compacted away (or its epochs may be mid-sweep)"
-            )
-        k = max(all_bases) if all_bases else -1
-        epochs = sorted(
-            e
-            for n in names
-            for e in [_gen_id(n, "epoch=")]
-            if e is not None and k < e <= as_of
-        )
-    dirs = []
-    if k >= 0:
-        dirs.append(fs.join(table_dir, f"base={k}"))
-    dirs.extend(fs.join(table_dir, f"epoch={e}") for e in epochs)
-    if not dirs:
-        raise FileNotFoundError(f"no rollup partials under {table_dir}")
-    return dirs
+
+def compact_sink(spark: SparkSession, path: str, kind: str, fold=None) -> int:
+    """Fold every committed epoch of the ``kind`` sink at ``path`` into
+    base files with the index compaction core (stage, then swap), then
+    bump the metadata epoch. ``fold``, when given, combines the rows
+    into one load-equivalent file (a rollup's ``combine_fn``); without
+    it the rows are concatenated. Returns the number of epochs
+    folded."""
+    meta = _read_meta(spark, path, kind)
+    sub = ledger.SINKS[kind]
+    data = fs.join(path, sub)
+    _settle_ledger_for_compaction(spark, path, (sub,))
+    n = len(ledger.batches(spark, path, (sub,)))
+    if not n and not fs.exists(spark, f"{data}.compacting"):
+        return 0  # nothing to fold, and no crashed swap to finish
+    _compact_dirs(spark, [(data, (), fold, fold is not None)], None)
+    _write_meta(spark, path, dict(meta, epoch=int(meta["epoch"]) + 1), "overwrite")
+    return n
 
 
 def compact_rollup_epochs(
     spark: SparkSession, table_dir: str, combine_fn=None
 ) -> int:
-    """Fold every live epoch STRICTLY BELOW the current top epoch
-    (plus the previous base generation, if any) into a new
-    ``base=<k>`` dir, then delete the superseded inputs. Readers see
-    identical totals at every point (combinable measures only); see
-    the module docstring for the crash/replay analysis. Returns the
-    number of epoch dirs folded (0 = nothing to do).
+    """Fold every committed epoch of the streaming rollup at
+    ``table_dir`` into one base partial (``compact_sink``); readers see
+    identical totals before and after. Returns the number of epochs
+    folded (0 = nothing to do).
 
     ``combine_fn`` (default: the n/sum/min/max algebra) must match
     the measures stored in the partials — pass
     ``combine_distinct_rollups`` for the HLL sketch rollup."""
-    if combine_fn is None:
-        combine_fn = _combine_parts
-
-    def sweep_stale(best_k: int) -> None:
-        sweep_stale_generations(spark, table_dir, best_k)
-
-    k, epochs = _scan_generations(spark, table_dir)
-    foldable = epochs[:-1]  # keep the top epoch live
-    if not foldable:
-        sweep_stale(k)
-        return 0
-
-    in_dirs = []
-    if k >= 0:
-        in_dirs.append(fs.join(table_dir, f"base={k}"))
-    in_dirs.extend(fs.join(table_dir, f"epoch={e}") for e in foldable)
-
-    combined = combine_fn(read_parquet(spark, *in_dirs))
-    new_k = foldable[-1]
-    tmp = fs.join(table_dir, "_compact_tmp")
-    combined.write.mode("overwrite").parquet(tmp)
-    # Publish first (rename), delete superseded inputs after — every
-    # intermediate state reads correctly under the base=<k> rule. The
-    # rename must succeed before any input is deleted: Hadoop rename
-    # reports failure by returning false, and deleting the inputs
-    # after a failed publish would strand the fold in _compact_tmp
-    # (underscore-prefixed — invisible to every reader).
-    fs.rename_or_raise(spark, tmp, fs.join(table_dir, f"base={new_k}"))
-    for d in in_dirs:
-        fs.delete(spark, d)
-    sweep_stale(new_k)
-    return len(foldable)
+    return compact_sink(
+        spark, table_dir, "stream-rollup", combine_fn or _combine_parts
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -330,7 +243,7 @@ def compact_rollup_epochs(
 # Quantiles are the other classic rollup-breaker (exact percentiles
 # need the full value multiset). A fixed-bin equi-width histogram is
 # a combinable partial — bin-count vectors ADD — so approximate
-# quantiles join the same epoch/compaction algebra as sums and HLL
+# quantiles join the same partial-combine algebra as sums and HLL
 # sketches: combine(hist(A), hist(B)) is BIT-IDENTICAL to hist(A∪B)
 # (integer adds), and the quantile estimate (upper edge of the first
 # bin whose cumulative count reaches ceil(q·n)) is exact integer
@@ -426,13 +339,12 @@ def hist_quantile(
 #
 #     Δview_N  =  dA ⋈ (B_{<N} ∪ dB)  ∪  A_{<N} ⋈ dB
 #
-# Inputs and view all use the ``epoch=<N>`` dir layout the rollup
-# protocol established: a refresh OVERWRITES its own epoch dirs, so
-# an at-least-once replay (same epoch, same deltas) converges to the
-# same bytes, and a crash between the three writes leaves a view
-# whose readers see a consistent as-of-(N-1) state — history reads
-# always use epochs STRICTLY BELOW the refresh epoch, never the
-# partially written one.
+# Inputs and view are ``join-rows`` sinks, one per directory, and a
+# refresh commits epoch N into each of the three. History reads take
+# the committed epochs below N only, so a refresh never reads its own
+# rows, and the epoch a crash left committed in some of the three
+# directories replays into the others with the same ``Δview_N``; a
+# replay of a committed epoch skips.
 #
 # Scale shape: both delta joins broadcast the DELTA side, so each is
 # a map-side join over the big input's scan — no shuffle of history,
@@ -442,35 +354,13 @@ def hist_quantile(
 # would.
 
 
-def _epochs_below(spark: SparkSession, d: str, below: int) -> list[str]:
-    """History dirs covering every epoch < ``below``, under the same
-    generation rule as the rollup protocol: the newest ``base=<k>``
-    (which folds epochs ≤ k) plus live ``epoch=<e>`` dirs with
-    k < e < below. Join-view compaction folds strictly below the top
-    epoch, so any base always satisfies k < the epoch being applied —
-    replays of the live epoch never read their own rows as history."""
-    if not fs.is_dir(spark, d):
-        return []
-    names = fs.list_names(spark, d)
-    bases = sorted(
-        b
-        for n in names
-        for b in [_gen_id(n, "base=")]
-        if b is not None and b < below
-    )
-    k = bases[-1] if bases else -(1 << 62)
-    out = [fs.join(d, f"base={k}")] if bases else []
-    for name in names:
-        e = _gen_id(name, "epoch=")
-        if e is not None and k < e < below:
-            out.append(fs.join(d, name))
-    return sorted(out)
-
-
-def _union_epochs(spark: SparkSession, dirs: list[str], like: DataFrame):
-    if not dirs:
+def _history(spark: SparkSession, d: str, below: int, like: DataFrame):
+    """The rows of the join side at ``d`` committed in epochs below
+    ``below`` (empty, typed like ``like``, before any)."""
+    files = sink_files(spark, d, "join-rows", through=below - 1)
+    if not files:
         return local_relation(spark, [], like.schema)
-    return spark.read.schema(like.schema).parquet(*dirs)
+    return read_parquet(spark, *files)
 
 
 def apply_join_delta(
@@ -493,49 +383,37 @@ def apply_join_delta(
             "rename before maintaining (the view carries both sides)"
         )
     n = int(epoch_id)
-    a_old = _union_epochs(spark, _epochs_below(spark, a_dir, n), a_delta)
-    b_old = _union_epochs(spark, _epochs_below(spark, b_dir, n), b_delta)
 
-    d_view = a_delta.hint("broadcast").join(
-        b_old.unionByName(b_delta), on, "inner"
-    ).unionByName(a_old.join(b_delta.hint("broadcast"), on, "inner"))
+    def view_delta() -> DataFrame:
+        a_old = _history(spark, a_dir, n, a_delta)
+        b_old = _history(spark, b_dir, n, b_delta)
+        return a_delta.hint("broadcast").join(
+            b_old.unionByName(b_delta), on, "inner"
+        ).unionByName(a_old.join(b_delta.hint("broadcast"), on, "inner"))
 
-    # History reads stop strictly below n, so every partial state is
-    # replay-safe: whichever of the three epoch-n dirs a crash left
-    # behind, re-delivering (epoch_id, deltas) recomputes the SAME
-    # d_view from the unchanged <n history and overwrites all three.
-    # The caller must guarantee redelivery of an incomplete epoch
-    # (foreachBatch checkpointing does).
-    d_view.write.mode("overwrite").parquet(fs.join(view_dir, f"epoch={n}"))
-    a_delta.write.mode("overwrite").parquet(fs.join(a_dir, f"epoch={n}"))
-    b_delta.write.mode("overwrite").parquet(fs.join(b_dir, f"epoch={n}"))
+    commit_epoch(spark, view_dir, "join-rows", n, view_delta)
+    commit_epoch(spark, a_dir, "join-rows", n, lambda: a_delta)
+    commit_epoch(spark, b_dir, "join-rows", n, lambda: b_delta)
 
 
 def read_join_view(spark: SparkSession, view_dir: str, like: DataFrame | None = None):
-    """Union of all committed view generations (newest base plus live
-    epochs; dirs are self-describing; ``like`` only supplies a schema
-    for the empty-view case)."""
-    dirs = _epochs_below(spark, view_dir, 1 << 62)
-    if not dirs:
-        if like is None:
-            raise ValueError(f"join view {view_dir} is empty")
-        return local_relation(spark, [], like.schema)
-    return read_parquet(spark, *dirs)
+    """The maintained view: its committed rows (``like`` only supplies
+    a schema for the empty-view case)."""
+    files = sink_files(spark, view_dir, "join-rows")
+    if files:
+        return read_parquet(spark, *files)
+    if like is None:
+        raise ValueError(f"join view {view_dir} is empty")
+    return local_relation(spark, [], like.schema)
 
 
 def compact_join_view(
     spark: SparkSession, a_dir: str, b_dir: str, view_dir: str
 ) -> int:
-    """Fold each of the three epoch ledgers' dirs strictly below
-    their top epoch into a ``base=<k>`` generation — the same
-    crash/replay-safe publish protocol as the rollup compaction, with
-    identity "combine" (these ledgers are append-only row sets, not
-    keyed partials). Bounds reader file counts as epochs accumulate;
-    history reads keep working because any base satisfies k < the
-    live epoch (only the top epoch can replay). Returns total epoch
-    dirs folded."""
-    ident = lambda df: df
+    """Fold each of the view's three sinks into base files
+    (``compact_sink``; the rows are concatenated), bounding reader file
+    counts as epochs accumulate. Returns the total number of epochs
+    folded."""
     return sum(
-        compact_rollup_epochs(spark, d, combine_fn=ident)
-        for d in (view_dir, a_dir, b_dir)
+        compact_sink(spark, d, "join-rows") for d in (view_dir, a_dir, b_dir)
     )

@@ -347,6 +347,9 @@ def _write_dirs(
       ``repartition(1)``: the aggregation upstream already shuffles,
       so coalescing folds the post-shuffle read into the one writer
       task without a second exchange;
+    - a relation with neither keys nor ``one_file`` (a stream sink's
+      rows, compacted) keeps its scan's partitions, which already pack
+      small files together;
     - when Catalyst proves ``seed`` statically empty (a
       ``save_*(corpus.limit(0), ...)`` seed, the streaming lifecycles'
       starting state, or an empty append or epoch), each relation is
@@ -369,6 +372,8 @@ def _write_dirs(
     def lay(w: _Write) -> None:
         if w.one_file:
             rel = w.rel.coalesce(1)
+        elif not w.keys:
+            rel = w.rel
         elif num_partitions:
             rel = w.rel.repartition(num_partitions, *w.keys)
         else:
@@ -1173,8 +1178,9 @@ def _ledger_gated_parquet(
     wrote, a total order under the single-writer contract). Markers
     without a sequence stay visible under any ``as_of``. History
     reaches back to the last ``compact_index`` (compaction folds
-    batches into base files, physically — the Delta-VACUUM analog) and
-    does not cover un-ledgered batch appends."""
+    batches into base files, physically — the Delta-VACUUM analog): a
+    snapshot before it raises (the ledger's fold rule). It does not
+    cover un-ledgered batch appends."""
     files, hid = ledger.visible_files(spark, path, sub, as_of)
     if not files:  # e.g. a replay swept a crashed batch's files
         return None
@@ -1183,10 +1189,14 @@ def _ledger_gated_parquet(
     return readers.read_parquet(spark, f"{path}/{sub}")
 
 
-def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
-    """Bring the ledger to a state ``compact_index`` may fold.
-    Compaction reads data dirs DIRECTLY (not through the marker-gated
-    loader — it rewrites whole dirs), so:
+def _settle_ledger_for_compaction(
+    spark: SparkSession, path: str, subs
+) -> None:
+    """Bring the ledger of the artifact at ``path``, whose batches write
+    ``subs``, to a state a compaction may fold (``compact_index`` and
+    the stream sinks' ``incremental.compact_sink``). Compaction reads
+    data dirs DIRECTLY (not through the marker-gated loader — it
+    rewrites whole dirs), so:
 
     - an UNCOMMITTED stream epoch (renamed files or a staging dir
       without a marker) stops it: its renamed rows would fold into the
@@ -1203,7 +1213,7 @@ def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
       post-compaction live state).
 
     Single-writer by contract, like every mutator here."""
-    pending = ledger.uncommitted(spark, path, _BATCH_SUBS)
+    pending = ledger.uncommitted(spark, path, subs)
     for b, files in pending.items():
         if b.kind == ledger.STREAM:
             raise ValueError(
@@ -1227,8 +1237,6 @@ def _settle_ledger_for_compaction(spark: SparkSession, path: str) -> None:
     for files in pending.values():  # only delete batches are left
         for f in files:
             delete(spark, f, False)
-    if not data_files(spark, join(path, "tombstones")):
-        delete(spark, join(path, "tombstones"))  # only deletes populate it
 
 
 def _read_tombstones(spark: SparkSession, path: str, as_of: int | None = None):
@@ -1392,7 +1400,9 @@ def compact_index(
     # a crash in between leaves tombstones pointing at already-purged
     # rows, whose anti-join is a no-op, so any intermediate state stays
     # load-correct
-    _settle_ledger_for_compaction(spark, path)
+    _settle_ledger_for_compaction(spark, path, _BATCH_SUBS)
+    if not data_files(spark, join(path, "tombstones")):
+        delete(spark, join(path, "tombstones"))  # only deletes populate it
     tomb = _read_tombstones(spark, path)
     counts = _compact_dirs(
         spark,
@@ -1599,12 +1609,13 @@ def index_changes(
     The base save and un-ledgered batch appends are the artifact's
     INITIAL state, not changes (start tailing from the seq you
     snapshotted); compaction folds batch files into base files, so —
-    as with ``as_of`` — history reaches back to the last compaction,
-    and asking past it raises rather than under-reporting. Legacy
-    (pre-sequence, empty) markers carry no order: they raise while
-    their batch's files are live, and are skipped once a compaction
-    has folded those files into the base state, so compacting once
-    adopts the sequenced format going forward."""
+    by the same fold rule as ``as_of`` (operators/ledger.py) — history
+    reaches back to the last compaction, and asking past it raises
+    rather than under-reporting. Legacy (pre-sequence, empty) markers
+    carry no order: they raise while their batch's files are live, and
+    are skipped once a compaction has folded those files into the base
+    state, so compacting once adopts the sequenced format going
+    forward."""
     meta = _read_meta_any_kind(spark, path, verb="read changes from")
     lay = _LAYOUTS[meta["kind"]]
     if to_seq is None:
@@ -1615,6 +1626,7 @@ def index_changes(
             f"({from_seq}, {to_seq})"
         )
 
+    ledger.check_unfolded(spark, path, as_of=from_seq)
     batches = []
     for b, seq in ledger.commits(spark, path):
         if seq is None:
@@ -1638,13 +1650,6 @@ def index_changes(
             else ("insert", lay.data)
         )
         files = ledger.batch_files(spark, path, sub, b)
-        if not files:
-            raise ValueError(
-                f"commit seq {seq} at {path} has a ledger marker but no "
-                f"{sub}/ files of batch {b.marker} — a compaction folded "
-                "this batch into base files, so the changelog cannot reach "
-                "it; tail from a sequence after the compaction"
-            )
         ids = readers.read_parquet(spark, *files).select(lay.id_col).distinct()
         parts.append(
             ids.select(

@@ -1,11 +1,23 @@
-"""The ledger of a persisted index's batch commits: one commit path
-for the two verbs that change an artifact in multi-file batches, and
+"""The ledger of a persisted artifact's batch commits: one commit path
+for every verb that changes an artifact in multi-file batches, and
 the one place that knows how those batches are named.
 
 ``index_store.delete_from_index`` commits a delete batch (tombstones,
 plus negative df/stats partials for the lexical kind) and
 ``index_stream.ingest_epoch`` a stream epoch (one micro-batch's rows,
-plus positive partials). Under the artifact root ``<path>``:
+plus positive partials). The stream sinks commit each micro-batch as a
+stream epoch of a sink artifact: a metadata record (kind, format
+version, epoch) and one sub per kind (``SINKS``):
+
+- ``stream-rollup`` (``streaming/windows.py::stream_rollup_to_parquet``):
+  ``partials``, one combinable rollup partial per epoch;
+- ``neardup-docs`` and ``neardup-bands``
+  (``streaming/dedup_stream.py::stream_neardup_ingest``): ``docs``,
+  the surviving documents, and ``bands``, their LSH band rows;
+- ``join-rows`` (``operators/incremental.py::apply_join_delta``):
+  ``rows``, for each of a join view's two sides and the view.
+
+Under the artifact root ``<path>``:
 
 - delete batch ``<label>``: files ``<sub>/delete-<label>-NNNNN.parquet``,
   marker ``ledger/delete-<label>``, staging dir ``delete.<label>``;
@@ -36,9 +48,16 @@ atomic for readers:
 A marker that exists but holds no sequence (a crash between creating
 and writing it, or one written before markers carried sequences) is
 committed at an unknown point: ``as_of`` snapshot reads always show
-it. Single writer by contract, like every index mutator. All I/O goes
-through sources/fs.py, so the artifact may live on any Hadoop
-filesystem."""
+it.
+
+A compaction folds every committed batch's files into base files
+(files with no batch name); the markers stay, so a replay of a folded
+batch still skips. A snapshot — as of a commit sequence, or through a
+stream epoch — that must hide a folded batch PREDATES THE FOLD: its
+rows are in the base files, so ``visible_files`` raises rather than
+answer with the folded state. Single writer by contract, like every
+index mutator. All I/O goes through sources/fs.py, so the artifact may
+live on any Hadoop filesystem."""
 
 from __future__ import annotations
 
@@ -64,8 +83,16 @@ from workhop2_etl_spark.sources.fs import (
 DELETE = "delete"
 STREAM = "stream"
 
+#: the stream-sink kinds, each with the one sub its epochs write
+SINKS = {
+    "stream-rollup": "partials",
+    "neardup-docs": "docs",
+    "neardup-bands": "bands",
+    "join-rows": "rows",
+}
+
 _FILE = re.compile(r"(delete|stream)-(.+)-\d+\.parquet")
-_MARKER = re.compile(r"(delete|epoch)-(.+)")
+_MARKER = re.compile(r"delete-(.+)|epoch-(\d+)")
 _STAGING = re.compile(r"delete\.(.+)|ingest\.epoch-(.+)")
 
 
@@ -106,7 +133,9 @@ def _parse_file(name: str) -> Batch | None:
 
 def parse_marker(name: str) -> Batch | None:
     m = _MARKER.fullmatch(name)
-    return Batch(DELETE if m[1] == "delete" else STREAM, m[2]) if m else None
+    if not m:
+        return None
+    return Batch(DELETE, m[1]) if m[1] is not None else Batch(STREAM, m[2])
 
 
 def _parse_staging(name: str) -> Batch | None:
@@ -173,29 +202,72 @@ def batch_files(
     ]
 
 
+def _after(
+    spark: SparkSession, path: str, b: Batch,
+    as_of: int | None, through: int | None,
+) -> bool:
+    """Whether committed batch ``b`` lies after a snapshot as of commit
+    sequence ``as_of`` or through stream epoch ``through``."""
+    if through is not None and b.kind == STREAM and int(b.tag) > through:
+        return True
+    return (
+        as_of is not None
+        and (seq := _commit_seq(spark, path, b)) is not None
+        and seq > as_of
+    )
+
+
+def check_unfolded(
+    spark: SparkSession, path: str,
+    as_of: int | None = None, through: int | None = None,
+) -> None:
+    """Raise if the snapshot as of ``as_of`` or through ``through``
+    predates a fold (module docstring): a committed batch after it has
+    no file left in any dir of the artifact."""
+    live = batches(spark, path, list_child_dirs(spark, path))
+    for b in map(parse_marker, sorted(_markers(spark, path))):
+        if b is not None and b not in live and _after(spark, path, b, as_of, through):
+            at = f"as_of={as_of}" if as_of is not None else f"through epoch {through}"
+            raise ValueError(
+                f"snapshot {at} of {path} predates a fold: a compaction "
+                f"folded batch {b.marker} into the base files, so that "
+                "history was compacted away — read at or after the fold"
+            )
+
+
 def visible_files(
-    spark: SparkSession, path: str, sub: str, as_of: int | None = None
+    spark: SparkSession, path: str, sub: str,
+    as_of: int | None = None, through: int | None = None,
 ) -> tuple[list[str], bool]:
     """The data files under ``<path>/<sub>`` a reader sees, and whether
     any file was hidden. Hidden are the files of a batch without a
-    marker and, under ``as_of``, of a batch whose marker holds a
-    sequence greater than ``as_of``."""
+    marker and, in a snapshot, of a batch after it: one whose marker
+    holds a sequence greater than ``as_of``, or a stream epoch greater
+    than ``through``. A snapshot that predates a fold raises."""
+    if as_of is not None or through is not None:
+        check_unfolded(spark, path, as_of, through)
     files = data_files(spark, join(path, sub))
     owner = {f: _parse_file(_name(f)) for f in files}
-    batches = set(owner.values()) - {None}
-    if not batches:
+    owners = set(owner.values()) - {None}
+    if not owners:
         return files, False
     hidden = {
-        b for b in batches
+        b for b in owners
         if not committed(spark, path, b)
-        or (
-            as_of is not None
-            and (seq := _commit_seq(spark, path, b)) is not None
-            and seq > as_of
-        )
+        or _after(spark, path, b, as_of, through)
     }
     visible = [f for f in files if owner[f] not in hidden]
     return visible, len(visible) < len(files)
+
+
+def batches(spark: SparkSession, path: str, subs) -> dict[Batch, list[str]]:
+    """The files under each ``<path>/<sub>`` of every batch, by batch."""
+    out: dict[Batch, list[str]] = {}
+    for sub in subs:
+        for f in data_files(spark, join(path, sub)):
+            if (b := _parse_file(_name(f))) is not None:
+                out.setdefault(b, []).append(f)
+    return out
 
 
 def uncommitted(
@@ -203,12 +275,10 @@ def uncommitted(
 ) -> dict[Batch, list[str]]:
     """The files under each ``<path>/<sub>`` of every batch without a
     marker, by batch."""
-    out: dict[Batch, list[str]] = {}
-    for sub in subs:
-        for f in data_files(spark, join(path, sub)):
-            if (b := _parse_file(_name(f))) is not None:
-                out.setdefault(b, []).append(f)
-    return {b: fl for b, fl in out.items() if not committed(spark, path, b)}
+    return {
+        b: fl for b, fl in batches(spark, path, subs).items()
+        if not committed(spark, path, b)
+    }
 
 
 def staging_dirs(spark: SparkSession, path: str) -> list[Batch]:

@@ -37,12 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.operators.dedup_text import lsh_bands, minhash_signatures
 from workhop2_etl_spark.operators.incremental import (
-    _scan_generations,
-    sweep_stale_generations,
+    commit_epoch,
+    compact_sink,
+    sink_files,
 )
-from workhop2_etl_spark.sources import fs
 from workhop2_etl_spark.sources.readers import read_parquet
 
 
@@ -177,17 +178,20 @@ def stream_neardup_ingest(
 ) -> None:
     """Run the incremental near-dup ingest over every file currently
     in ``stream_dir`` (availableNow, one file per micro-batch so
-    arrival order is honored), writing survivors under ``out_dir``
-    and their band rows under ``index_dir``.
+    arrival order is honored), committing survivors as a
+    ``neardup-docs`` sink at ``out_dir`` and their band rows as a
+    ``neardup-bands`` sink at ``index_dir`` (operators/ledger.py;
+    ``incremental.sink_files`` lists what a reader sees).
 
-    Idempotence under retry: foreachBatch is at-least-once, so both
-    sinks partition by epoch (``epoch=N/``) and each epoch OVERWRITES
-    its own directory. A batch replayed after a mid-epoch failure (a)
-    sees only index rows from epochs < N — its own partial rows are
-    excluded, so survivors never match themselves — and (b) rewrites
-    epoch N's output in place instead of appending duplicates. With
-    the checkpoint committed, a re-run adds no batches at all (both
-    properties asserted in tests)."""
+    Idempotence under retry: foreachBatch is at-least-once, so each
+    micro-batch commits as stream epoch N of both sinks through the
+    ledger, survivors first. A batch replayed after a mid-epoch failure
+    (a) reads only the band rows committed in epochs < N — its own
+    rows are excluded, so survivors never match themselves — and (b)
+    commits what the failure left uncommitted, whole; a replay of an
+    epoch committed in both sinks skips. With the checkpoint committed,
+    a re-run adds no batches at all (both properties asserted in
+    tests)."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -196,26 +200,12 @@ def stream_neardup_ingest(
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark_l = batch_df.sparkSession
-        index = None
-        # Hadoop-FS listing (sources/fs.py): the index can live on
-        # HDFS / S3A / local disk interchangeably. Reader rule shared
-        # with compact_index_epochs: newest base=<k> generation (its
-        # k is always < the replaying epoch — only epochs strictly
-        # below the latest committed batch are ever folded) plus the
-        # live epochs in (k, epoch_id).
-        k, epochs = _scan_generations(spark_l, index_dir)
-        if k >= epoch_id:
-            raise RuntimeError(
-                f"index base generation {k} >= replaying epoch {epoch_id}: "
-                "the index was compacted past the stream's committed "
-                "offset — restore the checkpoint or rebuild the index"
-            )
-        prior = [f"base={k}"] if k >= 0 else []
-        prior += [f"epoch={e}" for e in epochs if e < epoch_id]
-        if prior:
-            index = read_parquet(spark_l, *[fs.join(index_dir, d) for d in prior])
+        if ledger.committed(spark_l, index_dir, ledger.stream_batch(epoch_id)):
+            return  # both sinks hold the epoch: bands commit last
+        prior = sink_files(spark_l, index_dir, "neardup-bands", through=epoch_id - 1)
+        index = read_parquet(spark_l, *prior) if prior else None
         # pin=True materializes the band signatures + drop decision
-        # once, so the survivor and index writes share one computed
+        # once, so the survivor and index commits share one computed
         # dedup pass (and one consistent decision set) instead of
         # re-running the minhash/LSH plan per sink.
         survivors, new_rows = neardup_filter_batch(
@@ -228,12 +218,8 @@ def stream_neardup_ingest(
             threshold=threshold,
             pin=True,
         )
-        survivors.write.mode("overwrite").parquet(
-            fs.join(out_dir, f"epoch={epoch_id}")
-        )
-        new_rows.write.mode("overwrite").parquet(
-            fs.join(index_dir, f"epoch={epoch_id}")
-        )
+        commit_epoch(spark_l, out_dir, "neardup-docs", epoch_id, lambda: survivors)
+        commit_epoch(spark_l, index_dir, "neardup-bands", epoch_id, lambda: new_rows)
 
     (
         stream.writeStream.foreachBatch(apply_batch)
@@ -245,39 +231,11 @@ def stream_neardup_ingest(
 
 
 def compact_index_epochs(spark, index_dir: str) -> int:
-    """Fold every index epoch STRICTLY BELOW the current top into a
-    single ``base=<k>`` generation (k = highest epoch folded), then
-    delete the folded dirs — bounding the directory count the
-    per-batch index read must touch as epochs accumulate.
-
-    Band rows are append-only facts (no combine algebra needed —
-    folding is pure concatenation), so the only invariant is the
-    reader rule shared with ``apply_batch``: newest base plus epochs
-    above its k. Publish-by-rename before deleting inputs gives the
-    same crash-window story as operators/incremental.py::
-    compact_rollup_epochs: every intermediate state reads correctly,
-    and a replay of the live top epoch (the only epoch foreachBatch
-    can replay) never overlaps the base. Returns the number of epoch
-    dirs folded."""
-    k, epochs = _scan_generations(spark, index_dir)
-    foldable = epochs[:-1]
-    if not foldable:
-        # finish the deletes a crash between publish and sweep left
-        # behind (same no-op-path contract as compact_rollup_epochs)
-        if k >= 0:
-            sweep_stale_generations(spark, index_dir, k)
-        return 0
-    in_dirs = ([fs.join(index_dir, f"base={k}")] if k >= 0 else []) + [
-        fs.join(index_dir, f"epoch={e}") for e in foldable
-    ]
-    new_k = foldable[-1]
-    tmp = fs.join(index_dir, "_compact_tmp")
-    read_parquet(spark, *in_dirs).write.mode("overwrite").parquet(tmp)
-    # publish must succeed before any input dies — a false return from
-    # Hadoop rename with the deletes still running would strand the
-    # fold in _compact_tmp (invisible to readers)
-    fs.rename_or_raise(spark, tmp, fs.join(index_dir, f"base={new_k}"))
-    for d in in_dirs:
-        fs.delete(spark, d)
-    sweep_stale_generations(spark, index_dir, new_k)
-    return len(foldable)
+    """Fold every committed epoch of the band index at ``index_dir``
+    into base files (``incremental.compact_sink``), bounding the file
+    count the per-batch index read must touch as epochs accumulate.
+    Band rows are append-only facts, so the fold is a concatenation.
+    A replay of a folded epoch skips at its ledger marker, and a new
+    epoch reads the base plus the epochs committed after the fold.
+    Returns the number of epochs folded."""
+    return compact_sink(spark, index_dir, "neardup-bands")

@@ -327,8 +327,7 @@ def stream_upsert_to_parquet(
             merged = merge_upsert(base, batch_df, keys)
         else:
             merged = batch_df
-        # Durable publish-by-rename (same discipline as
-        # compact_rollup_epochs): the merge is WRITTEN to tmp before
+        # Durable publish-by-rename: the merge is WRITTEN to tmp before
         # the base it read is touched — at every instant a complete
         # copy of the table exists ON DISK (a localCheckpoint pin is
         # executor memory/disk blocks, not durable storage). Renames
@@ -386,26 +385,29 @@ def stream_rollup_to_parquet(
     rollup_fn=None,
 ) -> None:
     """foreachBatch sink maintaining a streaming materialized rollup
-    as per-epoch PARTIALS: each micro-batch writes its combinable
-    partial aggregates (operators/incremental.py shape) to its own
-    ``epoch=N/`` directory with overwrite. foreachBatch is
-    at-least-once, so an in-place merge (refresh_daily_rollup) would
-    double-count a replayed batch; per-epoch overwrite makes the
-    retry idempotent — the replay rewrites exactly its own partial.
+    as per-epoch PARTIALS: each micro-batch commits its combinable
+    partial aggregates (operators/incremental.py shape) as one stream
+    epoch of a ``stream-rollup`` sink (operators/ledger.py).
+    foreachBatch is at-least-once, so an in-place merge
+    (refresh_daily_rollup) would double-count a replayed batch; the
+    ledger makes the retry exactly-once — a replay of a committed
+    epoch skips, and a reader sees an epoch whole or not at all.
     Readers combine partials via ``read_rollup`` (counts/sums add,
     min/min, max/max); periodic compaction
-    (operators/incremental.py::compact_rollup_epochs) folds old
-    epochs into a ``base=<k>`` generation without changing reader
-    semantics. Stream ≡ batch and retry/re-run no-double-count are
+    (operators/incremental.py::compact_rollup_epochs) folds the
+    committed epochs into one base partial without changing reader
+    totals. Stream ≡ batch and retry/re-run no-double-count are
     asserted in tests.
 
     ``rollup_fn`` (default ``rollup_events_daily``) maps a micro-batch
     to its combinable partial — any measure with a partial-combine
     algebra works, including the HLL distinct-count sketches
-    (``rollup_events_daily_distinct``): the epoch protocol only needs
-    the partial to be a DataFrame whose rows merge per key."""
-    from workhop2_etl_spark.operators.incremental import rollup_events_daily
-    from workhop2_etl_spark.sources import fs
+    (``rollup_events_daily_distinct``): the sink only needs the
+    partial to be a DataFrame whose rows merge per key."""
+    from workhop2_etl_spark.operators.incremental import (
+        commit_epoch,
+        rollup_events_daily,
+    )
 
     if rollup_fn is None:
         rollup_fn = rollup_events_daily
@@ -416,8 +418,9 @@ def stream_rollup_to_parquet(
     stream = reader.parquet(parquet_path)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
-        rollup_fn(batch_df).write.mode("overwrite").parquet(
-            fs.join(table_dir, f"epoch={epoch_id}")
+        commit_epoch(
+            batch_df.sparkSession, table_dir, "stream-rollup", epoch_id,
+            lambda: rollup_fn(batch_df),
         )
 
     (
@@ -433,25 +436,24 @@ def read_rollup(
     spark, table_dir: str, combine_fn=None, as_of: int | None = None
 ) -> DataFrame:
     """Combine the rollup partials into the current totals — the
-    reader half of stream_rollup_to_parquet. Reads the newest
-    ``base=<k>`` generation plus every ``epoch>k`` dir (the
-    compaction protocol's reader rule), so replayed folded epochs are
-    ignored. ``combine_fn`` (default: counts/sums add, min/min,
-    max/max) must match the sink's ``rollup_fn`` measure algebra —
-    pass ``combine_distinct_rollups`` for the HLL sketch rollup.
-    ``as_of`` time-travels to the totals as of that epoch id (raises
-    if compaction already folded that history — see
-    ``rollup_part_dirs``)."""
+    reader half of stream_rollup_to_parquet. Reads the committed
+    partials only (base files plus committed epochs), so a reader
+    racing a commit or a crashed epoch never sees part of an epoch.
+    ``combine_fn`` (default: counts/sums add, min/min, max/max) must
+    match the sink's ``rollup_fn`` measure algebra — pass
+    ``combine_distinct_rollups`` for the HLL sketch rollup.
+    ``as_of`` time-travels to the totals through that epoch id
+    (raises if compaction already folded a later epoch: that history
+    was compacted away)."""
     from workhop2_etl_spark.operators.incremental import (
         _combine_parts,
-        rollup_part_dirs,
+        sink_files,
     )
 
-    if combine_fn is None:
-        combine_fn = _combine_parts
-    return combine_fn(
-        read_parquet(spark, *rollup_part_dirs(spark, table_dir, as_of=as_of))
-    )
+    files = sink_files(spark, table_dir, "stream-rollup", through=as_of)
+    if not files:
+        raise FileNotFoundError(f"no rollup partials under {table_dir}")
+    return (combine_fn or _combine_parts)(read_parquet(spark, *files))
 
 
 def windowed_distinct_users(
@@ -506,20 +508,18 @@ def stream_join_view_to_parquet(
     folds in through the delta-join algebra
     (operators/incremental.py::apply_join_delta) — each batch joins
     only against accumulated history, never re-joining the whole
-    fact table. Epoch layout: the dim seed is epoch 0 (with an empty
-    fact delta), micro-batch N lands as epoch N+1; foreachBatch's
-    at-least-once replays overwrite their own epoch dirs, so the
-    view converges to exactly-once contents (same argument as
-    ``stream_rollup_to_parquet``)."""
+    fact table. Epochs: the dim seed is epoch 0 (with an empty fact
+    delta), micro-batch N lands as epoch N+1; each commits through the
+    ledger, so a replay of a committed epoch — the seed's on every
+    re-run included — skips, and the view converges to exactly-once
+    contents (same argument as ``stream_rollup_to_parquet``)."""
     from workhop2_etl_spark.operators.incremental import apply_join_delta
-    from workhop2_etl_spark.sources import fs
 
     schema = read_parquet(spark, fact_path).schema
     empty_fact = local_relation(spark, [], schema)
-    if not fs.exists(spark, fs.join(b_dir, "epoch=0")):
-        apply_join_delta(
-            spark, a_dir, b_dir, view_dir, empty_fact, dim, on, epoch_id=0
-        )
+    apply_join_delta(
+        spark, a_dir, b_dir, view_dir, empty_fact, dim, on, epoch_id=0
+    )
     empty_dim = local_relation(spark, [], dim.schema)
 
     reader = spark.readStream.schema(schema)
