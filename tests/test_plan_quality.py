@@ -701,6 +701,65 @@ def test_ranked_topk_operators_push_window_group_limit(spark):
     )
 
 
+_RANKED_TOPK_QUERIES = [
+    "v1_topk_cosine_bruteforce",
+    "v2_topk_cosine_lsh",
+    "v5_topk_cosine_ivf",
+    "v6_topk_cosine_lsh_multiprobe",
+    "v8_topk_cosine_lsh_multitable",
+    "v13_topk_ivf_pq",
+    "v14_topk_ivf_pq_refine",
+    "v15_hybrid_rrf",
+    "v17_topk_truncated_refine",
+    "v19_hybrid_weighted",
+    "t11_bm25_topk",
+]
+
+
+@pytest.mark.parametrize("qname", _RANKED_TOPK_QUERIES)
+def test_registry_topk_executes_window_group_limit(spark, qname):
+    """Every registry query that ranks through ``dedupe.top_k`` keeps
+    the WindowGroupLimit pushdown in the plan that actually ran (the
+    post-AQE final plan), not only in the operator-level plans
+    above."""
+    df = suite.QUERIES[qname](spark, SF_DIR)
+    assert df.collect(), qname
+    assert "WindowGroupLimit" in _final_plan(df), qname
+
+
+# the one row_number outside top_k: _bm25_score's 'window' shape
+# numbers each (query, doc) group's term rows only to keep ONE row
+# carrying the group's window sum — a dedup of a window aggregate
+# whose sum must see every row, not a ranking (a WindowGroupLimit
+# there would prune the rows the sum needs)
+_ROW_NUMBER_ALLOWED = {("dedupe.py", "top_k"), ("retrieval.py", "_bm25_score")}
+
+
+def test_row_number_lives_in_top_k_only():
+    """Static guard: in the ranking modules, ``F.row_number()`` is
+    called only inside ``dedupe.top_k`` (and the allowlisted BM25
+    window-sum shape), so every ranking shares one rule."""
+    import ast
+    import pathlib
+
+    import workhop2_etl_spark.operators as ops
+
+    root = pathlib.Path(ops.__file__).parent
+    found = set()
+    for name in ("similarity.py", "retrieval.py", "index_store.py", "dedupe.py"):
+        tree = ast.parse((root / name).read_text())
+        for fn in tree.body:
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "row_number"
+                ):
+                    found.add((name, getattr(fn, "name", "<module>")))
+    assert ("dedupe.py", "top_k") in found
+    assert found <= _ROW_NUMBER_ALLOWED, found - _ROW_NUMBER_ALLOWED
+
+
 def test_prf_persisted_second_pass_pushes_vocab(spark):
     """r12 (verdict ask #3): probe_lexical_index_prf's SECOND pass is
     a probe of the persisted artifact with the EXPANDED vocabulary —
@@ -1103,9 +1162,6 @@ def test_driver_relations_plan_as_local_relations(spark, tmp_path):
     postings, cs, imeta = IDX.load_ivf_index(spark, ivf)
     _assert_no_logical_rdd(spark, "probe_ivf_index", lambda: (
         IDX.probe_ivf_index(postings, cs, imeta, queries, k=3, nprobe=2)
-    ))
-    _assert_no_logical_rdd(spark, "with_hyperplane_signature", lambda: (
-        SIM.with_hyperplane_signature(emb, "embedding", dim=64, num_planes=6)
     ))
     _assert_no_logical_rdd(spark, "with_multitable_signatures", lambda: (
         SIM.with_multitable_signatures(emb, "embedding", dim=64,

@@ -386,24 +386,31 @@ def test_truncated_refine_exhaustive_equals_bruteforce(spark):
 
 
 def test_truncated_refine_blas_kernel_identical(spark):
-    """The BLAS prefix scan must produce the IDENTICAL final result
-    as the expression twin (both stages rank on rounded scores with
-    id tiebreaks), and the kernel knob rejects unknown values."""
+    """The refine's BLAS prefix scan must produce the IDENTICAL final
+    result as an expression reference built in the test: the
+    expression brute force over the same prefixes, then the same
+    exact rescore (both stages rank on rounded scores with id
+    tiebreaks)."""
     from tests.conftest import SF_DIR as _SF
 
     emb = load_table(spark, _SF, "embeddings").filter(F.col("vec_id") < 200)
     queries = emb.filter(F.col("vec_id") % 40 == 0)
-    a = SIM.topk_cosine_truncated_refine(
-        emb, queries, prefix_dim=16, k=5, n_candidates=15, kernel="expr"
+
+    def prefix(df):
+        return df.select(
+            "vec_id", F.slice("embedding", 1, 16).alias("embedding")
+        )
+
+    cand = SIM.topk_cosine_bruteforce(
+        prefix(emb), prefix(queries), k=15
+    ).select("query_id", "neighbor_id")
+    a = SIM._exact_rescore_candidates(
+        emb, queries, cand, 5, "vec_id", "embedding", 6
     ).collect()
     b = SIM.topk_cosine_truncated_refine(
-        emb, queries, prefix_dim=16, k=5, n_candidates=15, kernel="blas"
+        emb, queries, prefix_dim=16, k=5, n_candidates=15
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b)) and a
-    with pytest.raises(ValueError, match="kernel"):
-        SIM.topk_cosine_truncated_refine(
-            emb, queries, prefix_dim=16, kernel="numpy"
-        )
 
 
 def test_lexical_index_stats(spark, tmp_path):

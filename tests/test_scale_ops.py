@@ -385,7 +385,7 @@ def test_ann_plan_size_flat_at_production_dims(spark):
         "vec_id long, embedding array<float>",
     )
     t0 = time.time()
-    sigs = SIM.with_hyperplane_signature(df, "embedding", dim, planes, out_col="sig")
+    sigs = SIM.with_multitable_signatures(df, "embedding", dim, planes, num_tables=1)
     plan = sigs._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan) < 20_000, f"plan blew up: {len(plan)} chars"
     rows = sigs.collect()
@@ -1653,6 +1653,38 @@ def test_ivf_pq_planted_recall_and_shapes(spark):
         SIM.pq_encode(
             emb, [(m, j, [1.0]) for m in range(2) for j in range(2)], dim=DIM,
         )
+
+
+def test_pq_rejects_dim_not_divisible_by_subspaces(spark, tmp_path):
+    """Codewords of length dim // m must tile the vector. At dim=10
+    with m=3 subspaces of length 3 the BLAS encoder's reshape failed
+    inside the job and the expression encoder silently ignored
+    element 10; every PQ entry point now raises before any job runs
+    or any file is written, naming dim and m."""
+    import pytest as _pytest
+
+    from workhop2_etl_spark.operators import index_store as IDX
+    from workhop2_etl_spark.operators import similarity as SIM
+
+    df = spark.createDataFrame(
+        [(i, [float((i + d) % 5) for d in range(10)]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    cb = [(m, j, [float(m + j)] * 3) for m in range(3) for j in range(2)]
+    cents = [(0, [1.0] * 10), (1, [-1.0] * 10)]
+    msg = "dim=10 not divisible by m=3"
+    with _pytest.raises(ValueError, match=msg):
+        SIM.pq_encode(df, cb, dim=10)
+    with _pytest.raises(ValueError, match=msg):
+        SIM.pq_encode_blas(df, cb, dim=10)
+    with _pytest.raises(ValueError, match=msg):
+        SIM.topk_cosine_ivf_pq(df, df, cents, cb, dim=10)
+    path = str(tmp_path / "pq_ragged")
+    with _pytest.raises(ValueError, match=msg):
+        IDX.save_ivf_index(
+            df, path, cents, dim=10, store_dtype="pq8", codebooks=cb
+        )
+    assert not os.path.exists(path)
 
 
 def test_ivf_pq_adc_matches_reconstruction_scoring(spark):

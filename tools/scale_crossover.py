@@ -10,7 +10,7 @@ markdown table (for PERF.md) plus one JSON line.
 What is measured per corpus size:
 - ANN (fixed 64 queries, k=5, dim=64):
   v1 brute force (exact; broadcast queries × full corpus) vs
-  v2 hyperplane-LSH (12 planes → 4096 buckets) vs
+  v2 one-table hyperplane-LSH (12 planes → 4096 buckets) vs
   v5 IVF (64 trained centroids, nprobe=2), plus recall@5 of each
   approximate method against the exact answer.
   The IVF quantizer fit (KMeans on a ≤50k-row seeded sample) is timed
@@ -87,23 +87,19 @@ def ann_crossover(spark: SparkSession, sizes: list[int]) -> list[dict]:
     its ceiling at large n). The built index is persisted and the
     probe timed against the cached relation."""
     from workhop2_etl_spark.operators import similarity as SIM
+    from workhop2_etl_spark.operators.dedupe import top_k
     from workhop2_etl_spark.operators.similarity import (
         cosine_with_norms,
         ivf_assign,
         l2_norm,
-        with_hyperplane_signature,
+        with_multitable_signatures,
+        with_multitable_signatures_blas,
     )
-    from pyspark.sql import Window
 
     def topk(scored):
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= K)
-            .select("query_id", "neighbor_id", "score", F.col("__rn").alias("rank"))
-        )
+        return top_k(
+            scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], K
+        ).select("query_id", "neighbor_id", "score", "rank")
 
     results = []
     for n in sizes:
@@ -125,21 +121,23 @@ def ann_crossover(spark: SparkSession, sizes: list[int]) -> list[dict]:
             )
         )
 
-        # ---- LSH: build = corpus signatures; probe = bucket equi-join
+        # ---- LSH: build = corpus signatures (one table, the BLAS
+        #      kernel, as topk_cosine_lsh signs its corpus); probe =
+        #      bucket equi-join
         t0 = time.time()
-        lsh_index = with_hyperplane_signature(
+        lsh_index = with_multitable_signatures_blas(
             emb.select(F.col("vec_id").alias("neighbor_id"),
                        F.col("embedding").alias("__cvec")),
-            "__cvec", DIM, NUM_PLANES, out_col="__csig",
-        ).withColumn("__cn", l2_norm(F.col("__cvec"))).persist()
+            "__cvec", DIM, NUM_PLANES, 1, sig_col="__csig",
+        ).drop("table_id").withColumn("__cn", l2_norm(F.col("__cvec"))).persist()
         lsh_index.count()
         t_lsh_build = round(time.time() - t0, 3)
         q = F.broadcast(
-            with_hyperplane_signature(
+            with_multitable_signatures(
                 queries.select(F.col("vec_id").alias("query_id"),
                                F.col("embedding").alias("__qvec")),
-                "__qvec", DIM, NUM_PLANES, out_col="__qsig",
-            ).withColumn("__qn", l2_norm(F.col("__qvec")))
+                "__qvec", DIM, NUM_PLANES, 1, sig_col="__qsig",
+            ).drop("table_id").withColumn("__qn", l2_norm(F.col("__qvec")))
         )
         t_lsh, lsh_rows = _timed(
             topk(
@@ -161,10 +159,6 @@ def ann_crossover(spark: SparkSession, sizes: list[int]) -> list[dict]:
         #      (table, sig) equi-join + candidate dedup. The recall
         #      configuration (single-table p^b recall is ~6% at these
         #      neighbor distances — measured; banding fixes it).
-        from workhop2_etl_spark.operators.similarity import (
-            with_multitable_signatures,
-        )
-
         t0 = time.time()
         mt_index = with_multitable_signatures(
             emb.select(F.col("vec_id").alias("neighbor_id"),

@@ -6,7 +6,8 @@ global sort followed by drop_duplicates (dags/etl_grammy_spotify.py:
 window-argmax here: shuffle on the group key only, no global sort,
 and a total-order tiebreak so results are deterministic under any
 partitioning (pandas kept first-encounter order — nondeterministic
-under re-sorts; SURVEY §7.4 item 2).
+under re-sorts; SURVEY §7.4 item 2). The window rule itself is
+``top_k``, which every per-group top-k in the engine ranks through.
 """
 
 from __future__ import annotations
@@ -15,6 +16,29 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _ROW_NUM = "__w2e_rn"
+
+
+def top_k(
+    df: DataFrame,
+    keys: list[str],
+    order_by: list[Column],
+    k: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The one ranking rule: the first ``k`` rows per ``keys`` under
+    ``order_by``, numbered 1..k in ``rank_col``. ``order_by`` must be
+    a total order (callers end it with a unique id), so the kept rows
+    and their ranks are deterministic under any partitioning.
+
+    ``row_number`` filtered on ``<= k`` is the shape Spark plans as a
+    ``WindowGroupLimit``: rows beyond k per group are pruned before the
+    window's shuffle, so a top-k never pays a full per-group sort.
+    Scores that must not rank (NULL for a dirty vector) are the
+    caller's to drop before this call."""
+    w = Window.partitionBy(*keys).orderBy(*order_by)
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
 
 
 def argmax_dedupe(df: DataFrame, keys: list[str], order_by: list[Column]) -> DataFrame:
@@ -26,12 +50,7 @@ def argmax_dedupe(df: DataFrame, keys: list[str], order_by: list[Column]) -> Dat
     group (the reference's `Unknown` artist) is handled by AQE skew
     splitting on the window shuffle.
     """
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn(_ROW_NUM, F.row_number().over(w))
-        .filter(F.col(_ROW_NUM) == 1)
-        .drop(_ROW_NUM)
-    )
+    return top_k(df, keys, order_by, 1, rank_col=_ROW_NUM).drop(_ROW_NUM)
 
 
 def key_duplicate_rows(df: DataFrame, keys: list[str], count_col: str = "n_per_key") -> DataFrame:

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.operators.dedupe import top_k
 from workhop2_etl_spark.session import local_relation
 
 BM25_K1 = 1.2
@@ -103,8 +104,8 @@ def bm25_topk(
     term), dl carried through it as min(dl) so no re-join on doc_id);
     df semi-joined to the query vocabulary then broadcast; stats
     reduced to one row and broadcast; the scoring join is
-    tf ⋈bc query_terms — map-side only. Final top-k is a window on
-    query_id (row_number + filter → TakeOrdered-shaped per group).
+    tf ⋈bc query_terms — map-side only. Final top-k is
+    ``dedupe.top_k`` on query_id (a WindowGroupLimit per group).
     """
     tf = _tf_relation(corpus_tokens, id_col, tok_col)
     stats = _stats_from_counts(
@@ -219,12 +220,9 @@ def _bm25_rank(
         k1=k1, b=b, round_digits=round_digits, exclude_self=exclude_self,
         agg_shape=agg_shape, query_rows=query_rows,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        agg.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score", "n_hit")
-    )
+    return top_k(
+        agg, ["query_id"], [F.desc("score"), F.asc("doc_id")], k
+    ).select("query_id", "rank", "doc_id", "score", "n_hit")
 
 
 def _bm25_score(
@@ -787,11 +785,7 @@ def _bm25_rank_pruned(
         agg_shape="fold",
         query_rows=query_rows,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    ranked = top_k(scored, ["query_id"], [F.desc("score"), F.asc("doc_id")], k)
     # per-query head-term score upper bound HB(q) = Σ idf·(k1+1).
     # The per-term bound idf·(k1+1) is STRICT only for k1 > 0: at
     # k1 = 0 the tf saturation collapses to exactly 1 and a
@@ -959,12 +953,13 @@ def _prf_harvest(
         .agg(F.sum("tf").alias("__w"))
         .join(query_terms, ["query_id", "term"], "left_anti")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("__w"), F.asc("term"))
-    return (
-        harvested.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= m_expand)
-        .select("query_id", "term")
-    )
+    return top_k(
+        harvested,
+        ["query_id"],
+        [F.desc("__w"), F.asc("term")],
+        m_expand,
+        rank_col="__rn",
+    ).select("query_id", "term")
 
 
 def probe_lexical_index_prf(
@@ -1088,7 +1083,7 @@ def rrf_fuse(
 
     Malformed arms: a duplicate
     (query_id, doc_id) within one arm — a caller fusing a relation
-    that did not come from a row_number window — would fan out the
+    that did not come from a ranker — would fan out the
     full-outer join and surface the SAME document at several fused
     ranks. Each arm is therefore collapsed to its BEST (minimum) rank
     per (query_id, doc_id) first — the standard RRF treatment of
@@ -1124,15 +1119,12 @@ def rrf_fuse(
         + F.coalesce(F.lit(1.0) / (F.lit(k_rrf) + F.col("rank_b")), F.lit(0.0)),
         round_digits,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("rrf_score", rscore)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "rrf_score", "rank_a", "rank_b")
-    )
+    return top_k(
+        fused.withColumn("rrf_score", rscore),
+        ["query_id"],
+        [F.desc("rrf_score"), F.asc("doc_id")],
+        k,
+    ).select("query_id", "rank", "doc_id", "rrf_score", "rank_a", "rank_b")
 
 
 def weighted_fuse(
@@ -1222,16 +1214,13 @@ def weighted_fuse(
         + F.lit(beta) * F.coalesce(F.col("norm_b"), F.lit(0.0)),
         round_digits,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("fused_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("fused_score", score)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "rank", "doc_id", "fused_score",
-            F.round("norm_a", round_digits).alias("norm_a"),
-            F.round("norm_b", round_digits).alias("norm_b"),
-        )
+    return top_k(
+        fused.withColumn("fused_score", score),
+        ["query_id"],
+        [F.desc("fused_score"), F.asc("doc_id")],
+        k,
+    ).select(
+        "query_id", "rank", "doc_id", "fused_score",
+        F.round("norm_a", round_digits).alias("norm_a"),
+        F.round("norm_b", round_digits).alias("norm_b"),
     )

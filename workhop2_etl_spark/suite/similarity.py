@@ -61,8 +61,9 @@ def v1_topk_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# v2: LSH-bucketed approximate top-k (hyperplane signatures inlined as
-# literal weight arrays on both engines — same deterministic planes)
+# v2: LSH-bucketed approximate top-k (the oracle inlines the hyperplane
+# weights as literal arrays — the same deterministic md5 planes the
+# engine's signature kernels draw for table 0)
 # ---------------------------------------------------------------------------
 
 
@@ -163,12 +164,15 @@ def v3_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def v4_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from workhop2_etl_spark.operators.similarity import (
         cosine,
-        with_hyperplane_signature,
+        with_multitable_signatures_blas,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    s = with_hyperplane_signature(
-        emb.select("vec_id", F.col("embedding").alias("v")), "v", DIM, NUM_PLANES
+    # the corpus is both sides of the self-join, so it signs once,
+    # through the corpus-side kernel, at one table
+    s = with_multitable_signatures_blas(
+        emb.select("vec_id", F.col("embedding").alias("v")),
+        "v", DIM, NUM_PLANES, num_tables=1,
     )
     a = s.select(F.col("vec_id").alias("id_a"), F.col("v").alias("qv"), F.col("sig").alias("sa"))
     b = s.select(F.col("vec_id").alias("id_b"), F.col("v").alias("cv"), F.col("sig").alias("sb"))
