@@ -254,6 +254,11 @@ def test_parquet_schema_matches_spark_inference(spark, tmp_path, infer_ntz):
         ).parquet(parted)
         _same_schema(spark, parted)
         _same_schema(spark, *fs.data_files(spark, typed)[:2])
+        # sibling files are stated with one listing of their parent,
+        # beside a dir of another parent
+        other = str(tmp_path / "other")
+        spark.read.parquet(typed).write.parquet(other)
+        _same_schema(spark, *fs.data_files(spark, typed), other)
 
         mixed = str(tmp_path / "mixed")
         spark.sql(
@@ -276,11 +281,19 @@ def test_parquet_schema_matches_spark_inference(spark, tmp_path, infer_ntz):
 
 
 def test_parquet_schema_errors_name_the_path(spark, tmp_path):
-    """A missing path, a directory without data files and a truncated
+    """A missing path — alone, beside present siblings, or under a
+    missing parent — a directory without data files and a truncated
     footer raise, naming the path."""
     missing = str(tmp_path / "missing")
     with pytest.raises(FileNotFoundError, match=re.escape(missing)):
         readers.read_parquet(spark, missing)
+    with pytest.raises(FileNotFoundError, match=re.escape(f"{missing}/a")):
+        readers.read_parquet(spark, f"{missing}/a", f"{missing}/b")
+    two = str(tmp_path / "two")
+    spark.range(10).repartition(2).write.parquet(two)
+    gone = f"{two}/gone.parquet"
+    with pytest.raises(FileNotFoundError, match=re.escape(gone)):
+        readers.read_parquet(spark, *fs.data_files(spark, two), gone)
     empty = tmp_path / "empty"
     empty.mkdir()
     (empty / "_SUCCESS").write_bytes(b"")

@@ -124,10 +124,9 @@ def test_resize_real_nearest_neighbor():
     assert resized is not None
     out = ic.png_decode(resized)
     assert out is not None and out.shape == (3, 4, 3)
-    if not ic.HAVE_PIL:  # stdlib path is exact nearest-neighbor
-        ys = (np.arange(3) * 6) // 3
-        xs = (np.arange(4) * 8) // 4
-        assert np.array_equal(out, arr[ys][:, xs])
+    ys = (np.arange(3) * 6) // 3  # exact nearest-neighbor
+    xs = (np.arange(4) * 8) // 4
+    assert np.array_equal(out, arr[ys][:, xs])
     # not decodable → None (caller falls back to stub)
     assert ic.resize_real(b"not an image", 4, 3) is None
 
@@ -340,24 +339,18 @@ def test_extract_image_features_true_stats_and_null_tier(spark):
     r2 = rows[2]
     assert r2.width is None and r2.mean_r is None and r2.luma_std is None
     # tier accounting: the PNG names its codec tier; garbage is 'none'
-    assert r1.decode_tier in ("pil", "stdlib-png")
+    assert r1.decode_tier == "stdlib-png"
     assert r2.decode_tier == "none"
 
 
 def test_extract_image_features_jpeg_payload_tier_accounting(spark):
-    """A JPEG payload's feature row is OBSERVABLE, never silent: with
-    PIL absent the stdlib tier cannot decode JPEG, so the row must
-    carry decode_tier='none' with NULL features (a datasheet can then
-    count undecoded payloads); with PIL present the tier is 'pil' and
-    features are real. Either way decode_tier explains the row —
-    r06 verdict Missing #4."""
-    from workhop2_etl_spark.operators.imagecodec import HAVE_PIL
+    """An undecodable JPEG payload's feature row is OBSERVABLE, never
+    silent: the row carries decode_tier='none' with NULL features, so
+    a datasheet can count undecoded payloads."""
     from workhop2_etl_spark.operators.multimodal import extract_image_features
 
-    # minimal JPEG byte stream: SOI + APP0/JFIF header + EOI. Not a
-    # full scan — enough for PIL-less environments to exercise the
-    # fall-through, and intentionally truncated so even PIL treats it
-    # as undecodable (deterministic across environments).
+    # minimal JPEG byte stream: SOI + APP0/JFIF header + EOI, with no
+    # frame or scan for the stdlib JPEG tier to decode
     jfif = (
         b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
         b"\xff\xd9"
@@ -377,7 +370,6 @@ def test_extract_image_features_jpeg_payload_tier_accounting(spark):
         .collect()
     }
     assert counts == {"none": 1}
-    assert isinstance(HAVE_PIL, bool)
 
 
 def test_sample_video_frames_rejects_nonpositive_tick(spark):
@@ -394,8 +386,7 @@ def test_sample_video_frames_rejects_nonpositive_tick(spark):
 # ---------------------------------------------------------------------------
 # Stdlib baseline-JPEG codec (r07 verdict ask #4: a genuine JPEG
 # payload must yield non-NULL features with decode_tier naming the
-# tier — no more decode_tier='none' swallowing JFIF corpora on a
-# PIL-less cluster).
+# tier — no more decode_tier='none' swallowing JFIF corpora).
 # ---------------------------------------------------------------------------
 
 
@@ -467,11 +458,9 @@ def test_jpeg_noise_roundtrip_exact_bound():
 
 def test_extract_image_features_genuine_jpeg_tier(spark):
     """The Spark feature kernel over a GENUINE baseline JFIF payload:
-    non-NULL features, decode_tier='stdlib-jpeg' (or 'pil' where PIL
-    exists), and the feature values match the same kernel fed the
+    non-NULL features, decode_tier='stdlib-jpeg', and the feature values match the same kernel fed the
     losslessly-PNG-encoded twin of the same pixels to within JPEG
     quantization error."""
-    from workhop2_etl_spark.operators.imagecodec import HAVE_PIL
     from workhop2_etl_spark.operators.multimodal import extract_image_features
 
     arr = _gradient(12, 20, 3)
@@ -482,8 +471,8 @@ def test_extract_image_features_genuine_jpeg_tier(spark):
     )
     rows = {r.doc_id: r for r in extract_image_features(df).collect()}
     jr, pr = rows[1], rows[2]
-    assert jr.decode_tier == ("pil" if HAVE_PIL else "stdlib-jpeg")
-    assert pr.decode_tier == ("pil" if HAVE_PIL else "stdlib-png")
+    assert jr.decode_tier == "stdlib-jpeg"
+    assert pr.decode_tier == "stdlib-png"
     assert (jr.width, jr.height) == (20, 12)
     for f in ("mean_r", "mean_g", "mean_b", "luma_std"):
         assert jr[f] is not None
@@ -555,7 +544,7 @@ def test_codec_fuzz_corrupted_payloads_never_escape_contract():
     for name, base in bases:
         for _ in range(120):
             mut = mutate(base)
-            arr, tier = ic.decode_array_tiered(mut, allow_pil=False)
+            arr, tier = ic.decode_array_tiered(mut)
             assert tier in ("stdlib-jpeg", "stdlib-png", "none"), (name, tier)
             if arr is not None:
                 assert arr.dtype == np.uint8 and arr.ndim == 3, (name, arr.shape)

@@ -5,9 +5,11 @@ ingest, delete, compaction and restore — lays it out through one
 writer (``index_store._write_dirs``): corpus-sized files sorted on
 the kind's cluster keys, one file per dimension-sized partial. The
 first test reads the files back with pyarrow after each verb; the
-second keeps the layout decisions inside the writer. The last keeps
+second keeps the layout decisions inside the writer. The third keeps
 every incremental artifact on the one commit protocol
-(operators/ledger.py)."""
+(operators/ledger.py), and the last every foreachBatch stream on the
+one driver (streaming/drain.py), which binds ledgered sinks to their
+checkpoint."""
 
 from __future__ import annotations
 
@@ -218,3 +220,64 @@ def test_one_commit_protocol_for_incremental_artifacts():
             ):
                 found.append(f"{f.relative_to(root)}:{tok.start[0]}")
     assert not found, found
+
+
+_STREAM_TOKENS = ("readStream", "foreachBatch", "availableNow")
+STREAM_ALLOWLIST = {
+    *(("streaming/drain.py", "drain", t) for t in _STREAM_TOKENS),
+    # memory sinks, not foreachBatch streams: they hand the emitted
+    # rows back to the caller, and no ledger is involved
+    ("streaming/windows.py", "run_stream_to_memory", "readStream"),
+    ("streaming/windows.py", "run_stream_to_memory", "availableNow"),
+    ("suite/streaming.py", "st7_stateful_running_totals", "readStream"),
+    ("suite/streaming.py", "st7_stateful_running_totals", "availableNow"),
+}
+#: calls that commit a stream epoch through a ledger
+_EPOCH_COMMITS = {"commit_epoch", "ingest_epoch", "apply_join_delta", "commit"}
+
+
+def _call_name(node) -> str | None:
+    return getattr(node.func, "attr", getattr(node.func, "id", None))
+
+
+def test_one_stream_driver_binds_every_ledgered_sink():
+    """Static guard: the readStream → foreachBatch → availableNow chain
+    is built only in ``streaming/drain.py::drain`` (and the memory-sink
+    allowlist above); a function that drains a stream into a ledgered
+    sink names its artifacts in ``ledgered``, so they are bound to the
+    checkpoint; and the ``_stream-`` binding marker is spelled only in
+    operators/ledger.py."""
+    import workhop2_etl_spark
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    found, unbound, spelled = set(), [], []
+    for f in sorted(root.rglob("*.py")):
+        mod = str(f.relative_to(root))
+        text = f.read_text()
+        for top in ast.parse(text).body:
+            owner = getattr(top, "name", "<module>")
+            calls = []
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr in _STREAM_TOKENS:
+                    found.add((mod, owner, node.attr))
+                elif isinstance(node, ast.keyword) and node.arg in _STREAM_TOKENS:
+                    found.add((mod, owner, node.arg))
+                elif isinstance(node, ast.Constant) and node.value in _STREAM_TOKENS:
+                    found.add((mod, owner, node.value))
+                elif isinstance(node, ast.Call):
+                    calls.append(node)
+            if {_call_name(c) for c in calls} & _EPOCH_COMMITS:
+                unbound += [
+                    f"{mod}:{c.lineno}" for c in calls
+                    if _call_name(c) == "drain"
+                    and "ledgered" not in {k.arg for k in c.keywords}
+                ]
+        if mod != "operators/ledger.py":
+            toks = tokenize.generate_tokens(io.StringIO(text).readline)
+            spelled += [
+                f"{mod}:{t.start[0]}" for t in toks if "_stream-" in t.string
+            ]
+    assert found <= STREAM_ALLOWLIST, found - STREAM_ALLOWLIST
+    assert {t for m, f, t in found if f == "drain"} == set(_STREAM_TOKENS)
+    assert not unbound, unbound
+    assert not spelled, spelled

@@ -390,6 +390,8 @@ def test_legacy_raw_digest_binding_migrates(spark):
     genuinely different checkpoint still refuses."""
     import hashlib
 
+    from workhop2_etl_spark.operators.ledger import _canon_checkpoint
+
     emb = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < 300)
     path = _tmp("legacy_idx")
     IDX.save_lsh_index(emb.limit(0), path, dim=DIM, num_planes=4,
@@ -402,7 +404,7 @@ def test_legacy_raw_digest_binding_migrates(spark):
 
     # rewrite the binding to the pre-r11 form: md5(raw string)
     canon_d = hashlib.md5(
-        IS._canon_checkpoint(raw).encode()
+        _canon_checkpoint(raw).encode()
     ).hexdigest()[:12]
     legacy_d = hashlib.md5(raw.encode()).hexdigest()[:12]
     assert canon_d != legacy_d  # trailing slash makes them differ

@@ -9,6 +9,7 @@ must change nothing (every sink commits through operators/ledger.py).
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 import time
 
@@ -795,3 +796,220 @@ def test_stream_two_sided_join_view(spark, tmp_path_factory):
 
     SW.stream_join_view_two_sided(spark, **kw)
     assert read_join_view(spark, str(root / "view")).count() == n
+
+
+# ---------------------------------------------------------------------------
+# Checkpoint binding: a stream epoch id is its checkpoint's batch id, so
+# a FRESH checkpoint restarts at 0 and the ledger would skip its batches
+# as committed. Every ledgered sink is bound to its checkpoint
+# (operators/ledger.py::bind_stream) and refuses a different one; the
+# same checkpoint spelled differently still resumes, also after a
+# compaction.
+# ---------------------------------------------------------------------------
+
+
+def _spellings(ckpt: str) -> list[str]:
+    """The checkpoint ``ckpt`` as a trailing-slash, a relative and a
+    ``file:`` URI path: all name the same checkpoint."""
+    return [ckpt + "/", os.path.relpath(ckpt), f"file://{ckpt}"]
+
+
+def _check_binding(run, read, add_file, ckpt: str, fresh: str, compact) -> None:
+    """Drive a sink whose ``run(checkpoint)`` committed two or more
+    epochs under ``ckpt``: after ``add_file()``, a ``fresh`` checkpoint
+    raises naming it and leaves ``read()`` unchanged; the other
+    spellings of ``ckpt`` resume; after ``compact()`` the fresh
+    checkpoint still raises and ``ckpt`` still resumes. The caller
+    compares the final ``read()`` with the batch answer."""
+    before = read()
+    add_file()
+    with pytest.raises(ValueError, match=re.escape(fresh)):
+        run(fresh)
+    assert read() == before
+    for spelling in _spellings(ckpt):
+        run(spelling)
+    grown = read()
+    assert grown != before
+    assert compact() >= 3
+    add_file()
+    with pytest.raises(ValueError, match="different checkpoint"):
+        run(fresh)
+    assert read() == grown
+    run(ckpt)
+    assert read() != grown
+
+
+def test_rollup_refuses_a_fresh_checkpoint(spark, tmp_path_factory):
+    from workhop2_etl_spark.operators.incremental import (
+        compact_rollup_epochs,
+        rollup_events_daily,
+    )
+    from workhop2_etl_spark.session import load_table
+
+    root = tmp_path_factory.mktemp("rollup_bind")
+    src, table, ckpt = (str(root / d) for d in ("events", "daily", "ckpt"))
+    ev = load_table(spark, SF_DIR, "events")
+    parts = [ev.filter(F.col("event_id") % 4 == k) for k in range(4)]
+    for part in parts[:2]:
+        part.coalesce(1).write.mode("append").parquet(src)
+    pending = iter(parts[2:])
+
+    def run(checkpoint):
+        SW.stream_rollup_to_parquet(
+            spark, src, table, checkpoint, max_files_per_trigger=1
+        )
+
+    def read():
+        return _canon_rollup(SW.read_rollup(spark, table).collect())
+
+    run(ckpt)
+    assert len(ledger.commits(spark, table)) == 2
+    _check_binding(
+        run, read,
+        lambda: next(pending).coalesce(1).write.mode("append").parquet(src),
+        ckpt, str(root / "fresh"),
+        lambda: compact_rollup_epochs(spark, table),
+    )
+    assert read() == _canon_rollup(rollup_events_daily(ev).collect())
+
+
+def _orders_and_customers(spark):
+    from workhop2_etl_spark.session import load_table
+
+    orders = load_table(spark, SF_DIR, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    cust = load_table(spark, SF_DIR, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_name"
+    )
+    return orders, cust
+
+
+def _view_keys(spark, view_dir: str) -> list:
+    from workhop2_etl_spark.operators.incremental import read_join_view
+
+    return sorted(
+        (r.o_custkey, r.o_orderkey)
+        for r in read_join_view(spark, view_dir).collect()
+    )
+
+
+def test_join_view_refuses_a_fresh_checkpoint(spark, tmp_path_factory):
+    from workhop2_etl_spark.operators.incremental import compact_join_view
+
+    root = tmp_path_factory.mktemp("join_view_bind")
+    src, ckpt = str(root / "orders"), str(root / "ckpt")
+    dirs = [str(root / d) for d in ("a", "b", "view")]
+    orders, cust = _orders_and_customers(spark)
+    parts = [orders.filter(F.col("o_orderkey") % 4 == k) for k in range(4)]
+    parts[0].coalesce(1).write.mode("append").parquet(src)
+    pending = iter(parts[1:])
+
+    def run(checkpoint):
+        SW.stream_join_view_to_parquet(
+            spark, src, cust, *dirs, on="o_custkey",
+            checkpoint_dir=checkpoint, max_files_per_trigger=1,
+        )
+
+    run(ckpt)  # the dim seed (epoch 0) and one fact epoch
+    _check_binding(
+        run, lambda: _view_keys(spark, dirs[2]),
+        lambda: next(pending).coalesce(1).write.mode("append").parquet(src),
+        ckpt, str(root / "fresh"),
+        lambda: compact_join_view(spark, *dirs),
+    )
+    fact = spark.read.parquet(src)
+    assert _view_keys(spark, dirs[2]) == sorted(
+        (r.o_custkey, r.o_orderkey)
+        for r in fact.join(cust, "o_custkey").collect()
+    )
+
+
+def test_two_sided_join_view_refuses_a_fresh_checkpoint(spark, tmp_path_factory):
+    from workhop2_etl_spark.operators.incremental import compact_join_view
+
+    root = tmp_path_factory.mktemp("two_sided_bind")
+    src, ckpt = str(root / "feed"), str(root / "ckpt")
+    dirs = [str(root / d) for d in ("a", "b", "view")]
+    orders, cust = _orders_and_customers(spark)
+    feed = orders.select(
+        F.lit("a").alias("side"), "o_custkey", "o_orderkey", "o_totalprice",
+        F.lit(None).cast("string").alias("c_name"),
+    ).unionByName(cust.select(
+        F.lit("b").alias("side"), "o_custkey",
+        F.lit(None).cast("long").alias("o_orderkey"),
+        F.lit(None).cast("double").alias("o_totalprice"), "c_name",
+    ))
+    parts = [feed.filter(F.col("o_custkey") % 4 == k) for k in range(4)]
+    for part in parts[:2]:
+        part.coalesce(1).write.mode("append").parquet(src)
+    pending = iter(parts[2:])
+
+    def run(checkpoint):
+        SW.stream_join_view_two_sided(
+            spark, src,
+            lambda b: b.filter(F.col("side") == "a").select(
+                "o_orderkey", "o_custkey", "o_totalprice"),
+            lambda b: b.filter(F.col("side") == "b").select(
+                "o_custkey", "c_name"),
+            *dirs, on="o_custkey", checkpoint_dir=checkpoint,
+            max_files_per_trigger=1,
+        )
+
+    run(ckpt)
+    _check_binding(
+        run, lambda: _view_keys(spark, dirs[2]),
+        lambda: next(pending).coalesce(1).write.mode("append").parquet(src),
+        ckpt, str(root / "fresh"),
+        lambda: compact_join_view(spark, *dirs),
+    )
+    assert _view_keys(spark, dirs[2]) == sorted(
+        (r.o_custkey, r.o_orderkey)
+        for r in orders.join(cust, "o_custkey").collect()
+    )
+
+
+def test_neardup_refuses_a_fresh_checkpoint(spark, tmp_path_factory):
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    root = tmp_path_factory.mktemp("neardup_bind")
+    stream_dir = str(root / "in")
+    os.makedirs(stream_dir)
+    batch1, batch2 = _corpus()
+    base = [f"w{k}" for k in range(40)]
+    # doc 23 ≈ doc 2 (caught through the index), 24 and 34 unique
+    batches = [batch1, batch2, [
+        _doc(23, base[:3] + ["q23"] + base[4:]),
+        _doc(24, [f"u24_{k}" for k in range(40)]),
+    ], [_doc(34, [f"u34_{k}" for k in range(40)])]]
+    pending = iter(enumerate(batches))
+
+    def add_file():
+        i, batch = next(pending)
+        path = os.path.join(stream_dir, f"batch{i}.parquet")
+        pq.write_table(pa.table({
+            "doc_id": pa.array([d["doc_id"] for d in batch], pa.int64()),
+            "text": pa.array([d["text"] for d in batch], pa.string()),
+        }), path)
+        os.utime(path, (time.time() + i, time.time() + i))
+
+    schema = StructType(
+        [StructField("doc_id", LongType()), StructField("text", StringType())]
+    )
+    out_dir, index_dir, ckpt = (str(root / d) for d in ("out", "index", "ckpt"))
+
+    def run(checkpoint):
+        DS.stream_neardup_ingest(
+            spark, stream_dir, schema, out_dir, index_dir, checkpoint,
+            num_hashes=NUM_HASHES, num_bands=NUM_BANDS, threshold=THRESHOLD,
+        )
+
+    add_file()
+    add_file()
+    run(ckpt)
+    _check_binding(
+        run, lambda: sorted(_survivors(spark, out_dir)), add_file,
+        ckpt, str(root / "fresh"),
+        lambda: DS.compact_index_epochs(spark, index_dir),
+    )
+    assert set(_survivors(spark, out_dir)) == _expected_survivors(spark, batches)

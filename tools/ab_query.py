@@ -8,7 +8,12 @@ comparable number (the bench's own best-of-3 rationale).
 Each run also reports its Spark jobs and the executor run and CPU
 time of their completed stages (from the status store, which is kept
 with the UI off): a run time far above its CPU time is tasks waiting,
-not working.
+not working. The CPU figure is ``jvm_cpu_s``: Spark's
+``executorCpuTime`` counts the JVM task threads only, not the Python
+workers of a pandas UDF or ``mapInPandas`` kernel. A query that
+switches between an expression kernel and a BLAS (Arrow) kernel
+therefore reads as a CPU saving that may not exist; compare wall
+times across such a switch.
 
 Usage: python tools/ab_query.py [-n 3] q1 q2 ...
 """
@@ -54,13 +59,13 @@ def main() -> None:
         print(
             f"AB {name} min={min(times)} all={times}"
             f" jobs={best[0]} exec_run_s={best[1]:.2f}"
-            f" exec_cpu_s={best[2]:.2f}",
+            f" jvm_cpu_s={best[2]:.2f}",
             flush=True,
         )
 
 
 def _job_counters(spark, group: str) -> tuple[int, float, float]:
-    """(jobs, executor run s, executor CPU s) of the job group's
+    """(jobs, executor run s, executor JVM CPU s) of the job group's
     completed stages."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()

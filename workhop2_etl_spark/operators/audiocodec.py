@@ -4,8 +4,8 @@ Same tiering as operators/imagecodec.py: the RIFF/WAVE container
 layout is public and struct-parseable, so WAV payloads get their TRUE
 (channels, sample_rate, bits, frames, duration) without any codec
 library; anything unrecognized falls back to the deterministic stub
-in operators/multimodal.py. Compressed formats (mp3/ogg/flac) would
-slot in behind an import-try exactly like PIL does for images.
+in operators/multimodal.py. Compressed formats (mp3/ogg/flac) fall
+to the stub too.
 """
 
 from __future__ import annotations

@@ -1,20 +1,19 @@
 """Real image codec kernels for the multimodal operators.
 
-Three tiers, best available wins, all pure functions of the payload:
+Two tiers, best available wins, all pure functions of the payload, so
+the pixels never depend on what a machine has installed:
 
-1. **PIL**, when installed (import-tried; not in this container) —
-   any format, real resampling.
-2. **Stdlib PNG codec** (zlib + struct + numpy): full decode of
+1. **Stdlib PNG codec** (zlib + struct + numpy): full decode of
    non-interlaced 8-bit gray/RGB/RGBA PNGs, nearest-neighbor resize,
    re-encode. PNG's format is public and simple enough that the
    whole codec is ~80 lines — so "decode actual image bytes" does
    not have to wait for codec libraries. Plus a **stdlib
    baseline-sequential JPEG codec** (ITU-T T.81): full pixel decode
    of SOF0/SOF1 Huffman streams (4:4:4/4:2:2/4:2:0/gray, restart
-   markers), so genuine JPEG payloads yield real features on a
-   PIL-less cluster instead of NULLs; progressive/arithmetic/CMYK
-   return None and fall to the probe tier.
-3. **Header-only dimension probes** for PNG / JPEG / GIF / BMP
+   markers), so genuine JPEG payloads yield real features instead
+   of NULLs; progressive/arithmetic/CMYK return None and fall to the
+   probe tier.
+2. **Header-only dimension probes** for PNG / JPEG / GIF / BMP
    (struct over the public container layouts — what the `imagesize`
    library does): real width/height/channels without decoding
    pixels, which is all the metadata stage needs.
@@ -28,13 +27,6 @@ from __future__ import annotations
 
 import struct
 import zlib
-
-try:  # optional; absent in this container
-    from PIL import Image  # type: ignore
-
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -183,25 +175,13 @@ def png_encode(arr) -> bytes:
 
 
 def resize_real(payload: bytes, width: int, height: int) -> bytes | None:
-    """Real resize when a real decoder can handle the payload:
-    PIL if installed (any format, bilinear), else the stdlib PNG
-    codec (nearest-neighbor). None → caller falls back to the stub."""
+    """Real resize when the stdlib PNG codec can decode the payload
+    (nearest-neighbor). None → caller falls back to the stub."""
     import numpy as np
 
     if payload is None:
         return None
-    b = bytes(payload)
-    if HAVE_PIL:
-        import io
-
-        try:
-            with Image.open(io.BytesIO(b)) as im:
-                out = io.BytesIO()
-                im.resize((width, height)).save(out, format=im.format or "PNG")
-                return out.getvalue()
-        except Exception:
-            return None
-    arr = png_decode(b)
+    arr = png_decode(bytes(payload))
     if arr is None:
         return None
     h_in, w_in, _ = arr.shape
@@ -901,40 +881,21 @@ def jpeg_encode(arr, quant: int = 4, subsampling: tuple[int, int] = (1, 1),
 
 
 def decode_array(payload: bytes):
-    """Best-tier pixel decode to an (h, w, channels) uint8 array:
-    PIL when installed (any format), else the stdlib PNG codec, else
-    the stdlib baseline-JPEG decoder; None when no tier can decode
-    the payload."""
+    """Best-tier pixel decode to an (h, w, channels) uint8 array: the
+    stdlib PNG codec, else the stdlib baseline-JPEG decoder; None when
+    no tier can decode the payload."""
     return decode_array_tiered(payload)[0]
 
 
-def decode_array_tiered(payload: bytes, allow_pil: bool = True):
+def decode_array_tiered(payload: bytes):
     """(array, tier) pixel decode — like ``decode_array`` but also
-    names WHICH tier produced the pixels: ``'pil'`` (any format PIL
-    knows), ``'stdlib-png'`` (the pure-stdlib PNG codec),
-    ``'stdlib-jpeg'`` (the pure-stdlib baseline-sequential JFIF
-    decoder), or ``'none'`` with a None array when no tier can
-    decode (progressive JPEG, CMYK, truncated payloads, non-image
-    bytes). Downstream feature extractors carry the tier so a corpus
-    datasheet can account for undecodable payloads instead of them
-    vanishing into NULL features.
-
-    ``allow_pil=False`` pins the decode to the stdlib tiers even when
-    PIL is installed — for callers (e.g. the m10 oracle query) whose
-    expected pixel statistics must be identical in every environment;
-    PIL's IDCT/upsample rounding differs from ours at the last
-    decimal (r08 ADVICE #2)."""
-    if HAVE_PIL and allow_pil:
-        import io
-
-        import numpy as np
-
-        try:
-            with Image.open(io.BytesIO(bytes(payload or b""))) as im:
-                arr = np.asarray(im.convert("RGB" if im.mode not in ("L", "RGB", "RGBA") else im.mode))
-                return (arr[:, :, None] if arr.ndim == 2 else arr), "pil"
-        except Exception:
-            pass  # fall through to the stdlib tiers
+    names WHICH tier produced the pixels: ``'stdlib-png'`` (the
+    pure-stdlib PNG codec), ``'stdlib-jpeg'`` (the pure-stdlib
+    baseline-sequential JFIF decoder), or ``'none'`` with a None
+    array when no tier can decode (progressive JPEG, CMYK, truncated
+    payloads, non-image bytes). Downstream feature extractors carry
+    the tier so a corpus datasheet can account for undecodable
+    payloads instead of them vanishing into NULL features."""
     arr = png_decode(payload)
     if arr is not None:
         return arr, "stdlib-png"

@@ -24,10 +24,17 @@ Under the artifact root ``<path>``:
 - stream epoch ``e``: files ``<sub>/stream-<e:012d>-NNNNN.parquet``,
   marker ``ledger/epoch-<e:012d>``, staging dir ``ingest.epoch-<e:012d>``.
 
-Other names under ``ledger/`` (the stream's ``_stream-<digest>``
-checkpoint binding) are not batches. Labels may contain ``-``: a file
-belongs to the batch whose tag is its whole name minus the kind and
-the trailing file number, never to a batch whose tag is a prefix.
+Other names under ``ledger/`` are not batches: ``_stream-<digest>``
+binds the artifact to the checkpoint of the stream that feeds it
+(``bind_stream``). Every ledgered stream sink is bound — the index
+ingest, the rollup, the near-dup sinks and the join views — because a
+stream epoch id is the checkpoint's batch id: a fresh checkpoint
+restarts them at 0, and step 1 below would silently skip its batches
+as already committed.
+
+Labels may contain ``-``: a file belongs to the batch whose tag is its
+whole name minus the kind and the trailing file number, never to a
+batch whose tag is a prefix.
 
 ``commit`` runs the protocol that makes a batch exactly-once and
 atomic for readers:
@@ -61,6 +68,8 @@ live on any Hadoop filesystem."""
 
 from __future__ import annotations
 
+import hashlib
+import os
 import re
 from typing import NamedTuple
 
@@ -316,3 +325,82 @@ def commit(
     delete(spark, staging)
     _write_meta(spark, path, dict(meta, epoch=seq), "overwrite")
     return "committed"
+
+
+def _canon_checkpoint(checkpoint_dir: str) -> str:
+    """Canonical identity of a checkpoint path for the binding digest.
+    The binding guards against a DIFFERENT checkpoint (whose batch ids
+    restart at 0 and collide with committed epochs); the SAME
+    checkpoint referenced through an equivalent-but-unequal string
+    (trailing slash, relative vs absolute, a symlinked parent) must
+    therefore digest identically, or the resume raises a false
+    'different checkpoint' error. Remote URIs (hdfs://, s3a://) only
+    lose trailing slashes — resolving them needs the remote
+    filesystem; local paths — bare or spelled as file: URIs, which
+    Spark treats identically — resolve symlinks and relativity via
+    realpath."""
+    if checkpoint_dir.startswith("file:"):
+        # file:///p, file:/p (and the rare file://host-less //p) all
+        # name the local path /p to Hadoop's local filesystem
+        return os.path.realpath("/" + checkpoint_dir[5:].lstrip("/"))
+    if "://" in checkpoint_dir:
+        return checkpoint_dir.rstrip("/") or checkpoint_dir
+    return os.path.realpath(checkpoint_dir)
+
+
+def _binding(checkpoint: str) -> str:
+    return f"_stream-{hashlib.md5(checkpoint.encode()).hexdigest()[:12]}"
+
+
+def bind_stream(
+    spark: SparkSession, paths, checkpoint_dir: str, adopt: bool = False
+) -> None:
+    """Bind the artifacts at ``paths`` to the stream checkpoint
+    ``checkpoint_dir`` (module docstring), or raise before any batch
+    runs when one of them holds committed stream epochs bound to a
+    different checkpoint. Every path is checked before any marker is
+    written, so a refused run binds nothing.
+
+    The binding is the digest of the canonical checkpoint path
+    (``_canon_checkpoint``). A binding made before canonicalization
+    digests the raw spelling; resuming with that spelling accepts it
+    and writes the canonical marker beside it. A binding left on an
+    artifact with no stream epoch is replaced silently: nothing
+    committed can be skipped. ``adopt=True`` re-binds an artifact
+    with committed epochs to the new checkpoint — for a deliberate
+    migration whose source does not replay committed data."""
+    mine = _binding(_canon_checkpoint(checkpoint_dir))
+    legacy = _binding(checkpoint_dir)
+    drops = []
+    for path in paths:
+        entries = list_names(spark, join(path, "ledger"))
+        bound = {e for e in entries if e.startswith("_stream-")}
+        has_epochs = any(
+            b is not None and b.kind == STREAM
+            for b in map(parse_marker, entries)
+        )
+        drop = ()
+        if has_epochs and not bound & {mine, legacy}:
+            if not adopt:
+                raise ValueError(
+                    f"{path} has committed stream epochs bound to a "
+                    f"different checkpoint than {checkpoint_dir} "
+                    f"({'; '.join(sorted(bound)) or 'an untracked one'}). "
+                    "A new checkpoint restarts batch ids at 0, so its "
+                    "batches would collide with committed epochs and be "
+                    "silently skipped. Resume with the original checkpoint "
+                    "(path identity is canonicalized — trailing slashes, "
+                    "relative prefixes, file: URIs and symlinks are already "
+                    "ignored, so this really is a different checkpoint), or "
+                    "write to a new sink dir; an index stream may instead "
+                    "pass adopt_ledger=True to re-bind after verifying the "
+                    "new source does not replay already-indexed data"
+                )
+            drop = bound
+        elif not has_epochs and bound - {mine, legacy}:
+            drop = bound
+        drops.append((path, drop))
+    for path, drop in drops:
+        for e in drop:
+            delete(spark, join(path, "ledger", e), False)
+        write_bytes(spark, join(path, "ledger", mine), b"")

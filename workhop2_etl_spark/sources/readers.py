@@ -66,14 +66,7 @@ def _parquet_schema(spark: SparkSession, *paths: str) -> StructType:
     state = spark._jsparkSession.sessionState()
     conf = state.newHadoopConf()
     files = {}  # qualified path -> FileStatus
-    pending = []
-    for path in paths:
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(conf)
-        if not fs.exists(jpath):
-            raise FileNotFoundError(f"source path does not exist: {path}")
-        st = fs.getFileStatus(jpath)
-        pending.append((fs, st, st.getPath().toString()))
+    pending = _stat(jvm.org.apache.hadoop.fs.Path, conf, paths)
     while pending:
         fs, st, qualified = pending.pop()
         if not st.isDirectory():
@@ -103,6 +96,43 @@ def _parquet_schema(spark: SparkSession, *paths: str) -> StructType:
         pq.ParquetToSparkSchemaConverter(state.conf()),
     )
     return _parse_datatype_json_string(schema.json())
+
+
+def _stat(Path, conf, paths):
+    """(FileSystem, FileStatus, qualified path) of each of ``paths``,
+    in order. Paths that share a parent dir are stated with ONE
+    ``listStatus`` of the parent (a reader handed a ledger's visible
+    files passes one path per file); a path alone in its parent is
+    stated directly. Raises ``FileNotFoundError`` for a missing
+    path."""
+    groups: dict[tuple[str, bool], list[int]] = {}
+    for i, path in enumerate(paths):
+        parent, sep, _ = path.rstrip("/").rpartition("/")
+        shared = bool(sep and parent and not parent.endswith((":", "/")))
+        groups.setdefault((parent, True) if shared else (path, False), []).append(i)
+    out = [None] * len(paths)
+    for (parent, shared), members in groups.items():
+        if not shared or len(members) == 1:
+            for i in members:
+                jpath = Path(paths[i])
+                fs = jpath.getFileSystem(conf)
+                if fs.exists(jpath):
+                    st = fs.getFileStatus(jpath)
+                    out[i] = fs, st, st.getPath().toString()
+            continue
+        jparent = Path(parent)
+        fs = jparent.getFileSystem(conf)
+        listed = {}
+        if fs.exists(jparent):
+            for st in fs.listStatus(jparent):
+                qualified = st.getPath().toString()
+                listed[_name(qualified)] = fs, st, qualified
+        for i in members:
+            out[i] = listed.get(_name(paths[i].rstrip("/")))
+    for path, got in zip(paths, out):
+        if got is None:
+            raise FileNotFoundError(f"source path does not exist: {path}")
+    return out
 
 
 #: parquet summary files, preferred over data files in this order

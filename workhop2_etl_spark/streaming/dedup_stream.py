@@ -45,6 +45,7 @@ from workhop2_etl_spark.operators.incremental import (
     sink_files,
 )
 from workhop2_etl_spark.sources.readers import read_parquet
+from workhop2_etl_spark.streaming.drain import drain
 
 
 def _sig_similarity(a: str, b: str, num_hashes: int) -> F.Column:
@@ -191,12 +192,10 @@ def stream_neardup_ingest(
     commits what the failure left uncommitted, whole; a replay of an
     epoch committed in both sinks skips. With the checkpoint committed,
     a re-run adds no batches at all (both properties asserted in
-    tests)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
+    tests). Both sinks are bound to ``checkpoint_dir``
+    (``ledger.bind_stream``): a different checkpoint raises before any
+    batch runs — resume with the original one, or ingest into new
+    dirs."""
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark_l = batch_df.sparkSession
@@ -221,12 +220,9 @@ def stream_neardup_ingest(
         commit_epoch(spark_l, out_dir, "neardup-docs", epoch_id, lambda: survivors)
         commit_epoch(spark_l, index_dir, "neardup-bands", epoch_id, lambda: new_rows)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark, stream_dir, schema, checkpoint_dir, apply_batch, 1,
+        ledgered=(out_dir, index_dir),
     )
 
 

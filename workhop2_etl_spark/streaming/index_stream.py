@@ -44,7 +44,7 @@ from workhop2_etl_spark.operators.index_store import (
     _write_batch,
 )
 from workhop2_etl_spark.operators.retrieval import _LEXICAL_KIND
-from workhop2_etl_spark.sources.fs import fs_and_path
+from workhop2_etl_spark.streaming.drain import drain
 
 
 def ingest_epoch(
@@ -118,30 +118,6 @@ def ingest_epoch(
     )
 
 
-def _canon_checkpoint(checkpoint_dir: str) -> str:
-    """Canonical identity of a checkpoint path for the ledger binding
-    digest. The binding guards against a DIFFERENT checkpoint (whose
-    batch ids restart at 0 and collide with committed ledger epochs);
-    the SAME checkpoint referenced through an equivalent-but-unequal
-    string (trailing slash, relative vs absolute, a symlinked parent)
-    must therefore digest identically, or the resume raises a false
-    'bound to a different checkpoint' error that pushes users toward
-    adopt_ledger=True and weakens the guard. Remote URIs (hdfs://,
-    s3a://) only lose trailing slashes — resolving them needs the
-    remote filesystem; local paths — bare or spelled as file: URIs,
-    which Spark treats identically — resolve symlinks and relativity
-    via realpath."""
-    import os
-
-    if checkpoint_dir.startswith("file:"):
-        # file:///p, file:/p (and the rare file://host-less //p) all
-        # name the local path /p to Hadoop's local filesystem
-        return os.path.realpath("/" + checkpoint_dir[5:].lstrip("/"))
-    if "://" in checkpoint_dir:
-        return checkpoint_dir.rstrip("/") or checkpoint_dir
-    return os.path.realpath(checkpoint_dir)
-
-
 def stream_index_ingest(
     spark: SparkSession,
     stream_dir: str,
@@ -167,91 +143,19 @@ def stream_index_ingest(
     CHECKPOINT: epoch ids are the checkpoint's batch ids, so a fresh
     checkpoint restarts them at 0 and every new batch would collide
     with an already-committed ledger entry — silently SKIPPED, data
-    lost. The artifact therefore records which checkpoint feeds it
-    (``ledger/_stream-<digest>``); resuming with the same checkpoint
-    is the supported path, while a DIFFERENT checkpoint against a
-    non-empty ledger raises before any batch runs. Pass
-    ``adopt_ledger=True`` only for deliberate migrations (new
-    checkpoint whose sources are known not to replay indexed data) —
-    it re-binds the ledger to the new checkpoint.
+    lost. The artifact is therefore bound to the checkpoint that
+    feeds it (``ledger.bind_stream``, through ``drain``); resuming
+    with the same checkpoint is the supported path, while a DIFFERENT
+    checkpoint against a non-empty ledger raises before any batch
+    runs. Pass ``adopt_ledger=True`` only for deliberate migrations
+    (new checkpoint whose sources are known not to replay indexed
+    data) — it re-binds the ledger to the new checkpoint.
 
     ``prepare`` (optional ``DataFrame -> DataFrame``) transforms each
     micro-batch before indexing — e.g. tokenizing raw document text
     into the ``toks`` column a lexical artifact ingests. It must be
     deterministic (a replayed epoch re-prepares the same rows)."""
     _read_meta_any_kind(spark, index_path, verb="stream-ingest")  # fail fast
-
-    import hashlib
-
-    digest = hashlib.md5(_canon_checkpoint(checkpoint_dir).encode()).hexdigest()[:12]
-    # pre-canonicalization ledgers carry
-    # md5(raw path) markers; a resume that spells the SAME checkpoint
-    # non-canonically (relative prefix, trailing slash, file: URI,
-    # symlinked parent) must not trip the different-checkpoint error.
-    # Accept the raw-spelling legacy marker and migrate: the
-    # canonical marker is written alongside below, so the window is
-    # one resume. (A legacy binding made with an already-canonical
-    # string has raw == canon and matches the current digest anyway.)
-    legacy_names = {
-        f"_stream-{hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]}"
-    }
-    fs, ledger_p = fs_and_path(spark, f"{index_path}/ledger")
-    _, bind_p = fs_and_path(spark, f"{index_path}/ledger/_stream-{digest}")
-    if fs.exists(ledger_p):
-        entries = [
-            st.getPath().getName() for st in fs.listStatus(ledger_p)
-        ]
-        has_epochs = any(
-            b is not None and b.kind == ledger.STREAM
-            for b in map(ledger.parse_marker, entries)
-        )
-        legacy_bound = any(e in legacy_names for e in entries)
-        bound_elsewhere = any(
-            e.startswith("_stream-")
-            and e != f"_stream-{digest}"
-            and e not in legacy_names
-            for e in entries
-        )
-        if has_epochs and legacy_bound and not fs.exists(bind_p):
-            # one-time migration: same checkpoint under its legacy
-            # raw-string digest — adopt it as the canonical binding
-            # (the canonical marker is created below; the legacy
-            # marker stays, harmless, so older code can still resume)
-            pass
-        elif has_epochs and not fs.exists(bind_p):
-            if not adopt_ledger:
-                raise ValueError(
-                    f"index at {index_path} has a committed ingest ledger "
-                    f"bound to a different checkpoint ({'; '.join(sorted(e for e in entries if e.startswith('_stream-'))) or 'an untracked one'}). "
-                    f"A new checkpoint restarts batch ids at 0, so its "
-                    f"batches would collide with committed ledger epochs "
-                    f"and be silently skipped. Resume with the original "
-                    f"checkpoint (path identity is canonicalized — "
-                    f"trailing slashes, relative prefixes and symlinks "
-                    f"are already ignored, so this really is a different "
-                    f"checkpoint), or pass adopt_ledger=True to re-bind "
-                    f"after verifying the new source does not replay "
-                    f"already-indexed data"
-                )
-            for e in entries:  # deliberate migration: re-bind
-                if e.startswith("_stream-"):
-                    _, old = fs_and_path(spark, f"{index_path}/ledger/{e}")
-                    fs.delete(old, False)
-        elif bound_elsewhere and not has_epochs:
-            # stale binding with no epochs: nothing committed, safe to
-            # re-bind silently
-            for e in entries:
-                if e.startswith("_stream-"):
-                    _, old = fs_and_path(spark, f"{index_path}/ledger/{e}")
-                    fs.delete(old, False)
-    fs.mkdirs(ledger_p)
-    fs.createNewFile(bind_p)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(stream_dir)
-    )
 
     def _apply(batch_df: DataFrame, epoch_id: int) -> None:
         if prepare is not None:
@@ -266,12 +170,9 @@ def stream_index_ingest(
             partitions_per_epoch=partitions_per_epoch,
         )
 
-    (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark, stream_dir, schema, checkpoint_dir, _apply,
+        max_files_per_trigger, ledgered=(index_path,), adopt=adopt_ledger,
     )
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import SparkSession
 
 from workhop2_etl_spark.sources.readers import read_parquet
 from workhop2_etl_spark.sources.writers import write_jdbc
+from workhop2_etl_spark.streaming.drain import drain
 
 
 def _exec(conn, sql: str) -> None:
@@ -136,8 +137,9 @@ def jdbc_upsert_batch(
         # committed or not — means the stream's checkpoint no longer
         # matches this ledger (deleted checkpoint restarting at 0, or
         # a second pipeline sharing the target): skipping would
-        # silently drop every new batch, so fail loudly instead (the
-        # same divergence rule dedup_stream's index sink enforces).
+        # silently drop every new batch, so fail loudly instead. The
+        # parquet sinks get the same guarantee from their checkpoint
+        # binding (operators/ledger.py::bind_stream).
         st = conn.createStatement()
         try:
             rs = st.executeQuery(f"SELECT MAX(batch_id) FROM {ledger}")
@@ -216,22 +218,16 @@ def stream_upsert_to_jdbc(
     """Replay a parquet directory as a bounded stream (availableNow)
     into a JDBC table with transactional exactly-once upserts.
 
-    Same source/trigger contract as ``stream_upsert_to_parquet``;
-    re-running with the same checkpoint adds nothing, and a replayed
-    in-flight batch is skipped by the ledger even if its merge had
-    already committed.
+    Same source/trigger contract as ``stream_upsert_to_parquet``
+    (streaming/drain.py); re-running with the same checkpoint adds
+    nothing, and a replayed in-flight batch is skipped by the ledger
+    even if its merge had already committed. The ledger table keeps
+    its own checkpoint rule (``jdbc_upsert_batch``), so the stream
+    binds no artifact.
     """
     schema = read_parquet(spark, parquet_path).schema
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         jdbc_upsert_batch(batch_df, epoch_id, url, table, keys, **jdbc_options)
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(parquet_path)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, parquet_path, schema, checkpoint_dir, apply_batch)

@@ -24,8 +24,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.session import local_relation
 from workhop2_etl_spark.sources.readers import read_parquet
+from workhop2_etl_spark.streaming.drain import drain
 
 #: Late-data tolerance for all watermarked aggregations.
 DEFAULT_WATERMARK = "30 minutes"
@@ -344,15 +346,8 @@ def stream_upsert_to_parquet(
         fs.rename_or_raise(spark_l, tmp_dir, table_dir)
         fs.delete(spark_l, old_dir)
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(parquet_path)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # the swap is an idempotent upsert: no ledger to bind
+    drain(spark, parquet_path, schema, checkpoint_dir, apply_batch)
 
 
 def enrich_with_dim(
@@ -397,7 +392,10 @@ def stream_rollup_to_parquet(
     (operators/incremental.py::compact_rollup_epochs) folds the
     committed epochs into one base partial without changing reader
     totals. Stream ≡ batch and retry/re-run no-double-count are
-    asserted in tests.
+    asserted in tests. The sink is bound to ``checkpoint_dir``
+    (``ledger.bind_stream``): a different checkpoint raises before any
+    batch runs — resume with the original one, or roll up into a new
+    ``table_dir``.
 
     ``rollup_fn`` (default ``rollup_events_daily``) maps a micro-batch
     to its combinable partial — any measure with a partial-combine
@@ -411,11 +409,6 @@ def stream_rollup_to_parquet(
 
     if rollup_fn is None:
         rollup_fn = rollup_events_daily
-    schema = read_parquet(spark, parquet_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_path)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         commit_epoch(
@@ -423,12 +416,10 @@ def stream_rollup_to_parquet(
             lambda: rollup_fn(batch_df),
         )
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark, parquet_path, read_parquet(spark, parquet_path).schema,
+        checkpoint_dir, apply_batch, max_files_per_trigger,
+        ledgered=(table_dir,),
     )
 
 
@@ -512,20 +503,22 @@ def stream_join_view_to_parquet(
     delta), micro-batch N lands as epoch N+1; each commits through the
     ledger, so a replay of a committed epoch — the seed's on every
     re-run included — skips, and the view converges to exactly-once
-    contents (same argument as ``stream_rollup_to_parquet``)."""
+    contents (same argument as ``stream_rollup_to_parquet``). The
+    three dirs are bound to ``checkpoint_dir`` before the seed
+    (``ledger.bind_stream``): a different checkpoint raises — resume
+    with the original one, or maintain the view in new dirs."""
     from workhop2_etl_spark.operators.incremental import apply_join_delta
 
+    dirs = (a_dir, b_dir, view_dir)
+    # bound before the seed commits epoch 0, which drain's own binding
+    # would otherwise read as epochs of an unknown checkpoint
+    ledger.bind_stream(spark, dirs, checkpoint_dir)
     schema = read_parquet(spark, fact_path).schema
     empty_fact = local_relation(spark, [], schema)
     apply_join_delta(
         spark, a_dir, b_dir, view_dir, empty_fact, dim, on, epoch_id=0
     )
     empty_dim = local_relation(spark, [], dim.schema)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(fact_path)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         apply_join_delta(
@@ -539,12 +532,9 @@ def stream_join_view_to_parquet(
             epoch_id=int(epoch_id) + 1,
         )
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark, fact_path, schema, checkpoint_dir, apply_batch,
+        max_files_per_trigger, ledgered=dirs,
     )
 
 
@@ -566,14 +556,9 @@ def stream_join_view_two_sided(
     sides' deltas, and apply_join_delta folds them in under one epoch
     id — so the dA⋈dB term (rows of both sides arriving in the same
     batch joining each other) is exercised, not just fact-vs-seeded
-    dim. Same replay-idempotence argument as the one-sided wrapper."""
+    dim. Same replay-idempotence argument and checkpoint binding as
+    the one-sided wrapper."""
     from workhop2_etl_spark.operators.incremental import apply_join_delta
-
-    schema = read_parquet(spark, src_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src_path)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         apply_join_delta(
@@ -587,10 +572,8 @@ def stream_join_view_two_sided(
             epoch_id=int(epoch_id),
         )
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        spark, src_path, read_parquet(spark, src_path).schema,
+        checkpoint_dir, apply_batch, max_files_per_trigger,
+        ledgered=(a_dir, b_dir, view_dir),
     )

@@ -293,9 +293,8 @@ def m7_real_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # m8: REAL feature extraction in the oracle gate — the same three
 # genuine PNGs as m5, but now the kernel DECODES THE PIXELS
-# (imagecodec.decode_array → stdlib PNG codec here, PIL when
-# installed) and computes per-channel means + Rec.601 luma standard
-# deviation. The oracle states each file's true statistics
+# (imagecodec.decode_array → the stdlib PNG codec) and computes
+# per-channel means + Rec.601 luma standard deviation. The oracle states each file's true statistics
 # (verifiable offline with any image tool); matching them proves the
 # full unfilter→reconstruct path, not just header parsing. This
 # closes the m-family tier ladder: metadata (m1/m5), filter-before-
@@ -433,11 +432,8 @@ def m9_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixtures use, with decode_tier naming the stdlib JPEG tier — the
 # modality that previously fell to decode_tier='none' NULL features.
 # Oracle constants are the exact decoded-pixel statistics of the
-# stdlib tier, and the query PINS that tier (allow_pil=False) so the
-# gate is green in every environment — with PIL installed the tier
-# would otherwise flip to 'pil', whose IDCT/upsample rounding differs
-# at the 4th decimal (r08 ADVICE #2; the pytest twin covers the PIL
-# branch when available).
+# stdlib tier, the only pixel decoder the engine has, so the gate
+# reads the same on every machine.
 # ---------------------------------------------------------------------------
 #: 20x10 RGB 4:4:4 / 7x5 gray / 12x9 RGB 4:2:0+DRI baseline JFIFs.
 _JPEG_B64 = {
@@ -486,10 +482,7 @@ def m10_real_jpeg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(_JPEG_B64[2]))
     )
     staged = docs.select("doc_id", F.unbase64(b64).alias("payload"))
-    # allow_pil=False: the oracle's constants are the stdlib tier's
-    # exact pixel statistics — pinning the tier keeps this gate green
-    # whether or not PIL is installed (r08 ADVICE #2)
-    feats = MM.extract_image_features(staged, allow_pil=False)
+    feats = MM.extract_image_features(staged)
     return (
         feats.select(
             (F.col("doc_id") % 3).cast("int").alias("variant"),
