@@ -67,9 +67,9 @@ def _centroids(k: int, dim: int, seed: int = 3):
 
 def test_parquet_bytes_roundtrip_and_modes(spark, root, tmp_path):
     """write_parquet/read_parquet: bit-exact doubles (64×64 and
-    256×128 centroid sets), the schema Spark reads back, 'append' adds
-    a part file, 'error' refuses an existing directory, and an unknown
-    mode is refused before anything is written."""
+    256×128 centroid sets), the schema Spark reads back, 'error'
+    refuses an existing directory, and an unknown mode ('append',
+    'ignore') is refused before anything is written."""
     schema = "centroid_id int, centroid array<double>"
     for k, dim in ((64, 64), (256, 128)):
         rows = _centroids(k, dim)
@@ -84,9 +84,9 @@ def test_parquet_bytes_roundtrip_and_modes(spark, root, tmp_path):
 
     path = f"{root}/c64"
     one = arrow_table(_centroids(2, 4), schema)
-    fs.write_parquet(spark, one, path, "append")
-    assert len(fs.data_files(spark, path)) == 2
-    assert fs.read_parquet(spark, path).num_rows == 66
+    with pytest.raises(ValueError, match="write mode"):
+        fs.write_parquet(spark, one, path, "append")
+    assert fs.read_parquet(spark, path).num_rows == 64
     with pytest.raises(FileExistsError):
         fs.write_parquet(spark, one, path, "error")
     fs.write_parquet(spark, one, path, "overwrite")

@@ -5,11 +5,12 @@ ingest, delete, compaction and restore — lays it out through one
 writer (``index_store._write_dirs``): corpus-sized files sorted on
 the kind's cluster keys, one file per dimension-sized partial. The
 first test reads the files back with pyarrow after each verb; the
-second keeps the layout decisions inside the writer. The third keeps
-every incremental artifact on the one commit protocol
-(operators/ledger.py), and the last every foreachBatch stream on the
-one driver (streaming/drain.py), which binds ledgered sinks to their
-checkpoint."""
+second keeps the layout decisions inside the writer, and the third
+the "append" write mode out of the index modules, so an append is a
+ledgered batch. The fourth keeps every incremental artifact on the
+one commit protocol (operators/ledger.py), and the last every
+foreachBatch stream on the one driver (streaming/drain.py), which
+binds ledgered sinks to their checkpoint."""
 
 from __future__ import annotations
 
@@ -199,6 +200,23 @@ def test_index_layout_decided_only_in_the_writer():
                     found.add((mod, owner, tok))
     assert found <= LAYOUT_ALLOWLIST, found - LAYOUT_ALLOWLIST
     assert {t for m, f, t in found if f == "_write_dirs"} == set(_LAYOUT_TOKENS)
+
+
+def test_index_rows_have_no_append_write_mode():
+    """Static guard: no ``"append"`` write mode in the index modules or
+    the driver-side parquet writer. After a save, rows reach an index
+    data dir only through ``ledger.commit``'s renames; an append is a
+    ledgered batch like a stream epoch or a delete."""
+    import workhop2_etl_spark
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    found = [
+        f"{mod}:{node.lineno}"
+        for mod in (*_LAYOUT_MODULES, "sources/fs.py")
+        for node in ast.walk(ast.parse((root / mod).read_text()))
+        if isinstance(node, ast.Constant) and node.value == "append"
+    ]
+    assert not found, found
 
 
 def test_one_commit_protocol_for_incremental_artifacts():

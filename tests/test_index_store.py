@@ -343,7 +343,7 @@ def test_lexical_compact_crash_between_dirs_stays_loadable(spark):
 
     # simulate the crash window: tf's stage+swap completed, then the
     # process died before df/stats compacted (df still: 2 partials)
-    IDX._compact_dir(spark, f"{path}/tf", ["term"], 2, None)
+    IDX._compact_dirs(spark, [(f"{path}/tf", ["term"], None, False)], 2)
     assert len(os.listdir(f"{path}/df")) > 0
     assert probe(path) == want, "part-compacted artifact must stay exact"
 
@@ -1289,9 +1289,9 @@ def test_empty_seed_save_driver_layout_matches_spark_writer(spark):
         ), dtype
         assert spark.read.parquet(f"{seed}/index").count() == 0
 
-    # an empty append takes the same driver-side path in append mode
-    # (one more part file per dir), and the seeded artifact then loads
-    # and serves a stream epoch
+    # an empty append takes the same driver-side path into its
+    # staging dir (one more file per dir, renamed in at its commit),
+    # and the seeded artifact then loads and serves a stream epoch
     from workhop2_etl_spark.streaming import index_stream as IS
 
     seed = _tmp("lex_seed_driver")
@@ -2146,3 +2146,178 @@ def test_mixed_crash_state_hides_exactly_the_uncommitted_batches(spark):
     assert {r.doc_id for r in tf0.select("doc_id").distinct().collect()} == (
         docs(part(0)) | docs(part(1))
     )
+
+
+# ---------------------------------------------------------------------------
+# append_*_index commits through the ledger, like an epoch or a delete
+# ---------------------------------------------------------------------------
+
+
+def _appendable(spark, kind, n=150):
+    """(rows, id column, save(rows, path), append(rows, path),
+    state(path, as_of)) for one index kind; ``state`` is everything a
+    loader returns, reduced to comparable values (row ids with their
+    multiplicity; for the lexical kind also the folded df and stats)."""
+    from workhop2_etl_spark.operators import retrieval as RET
+
+    if kind == "lexical":
+        rows = _lex_corpus(spark, n=n)
+
+        def save(r, p):
+            RET.save_lexical_index(r, p, mode="overwrite", num_partitions=2)
+
+        def append(r, p):
+            return RET.append_lexical_index(r, p, num_partitions=2)
+
+        def state(p, as_of=None):
+            tf, df, stats, _ = RET.load_lexical_index(spark, p, as_of=as_of)
+            return (sorted(r.doc_id for r in tf.select("doc_id").collect()),
+                    sorted(map(tuple, df.collect())), stats.collect())
+
+        return rows, "doc_id", save, append, state
+
+    rows = load_table(spark, SF_DIR, "embeddings").filter(F.col("vec_id") < n)
+    if kind == "lsh":
+        def save(r, p):
+            IDX.save_lsh_index(r, p, dim=DIM, num_planes=4, num_tables=2,
+                               mode="overwrite")
+
+        append = IDX.append_lsh_index
+
+        def load(p, as_of):
+            return IDX.load_lsh_index(spark, p, as_of=as_of)[0]
+    else:
+        cents = SIM.fit_centroids(rows, n_centroids=4, seed=7, max_iter=3)
+
+        def save(r, p):
+            IDX.save_ivf_index(r, p, cents, dim=DIM, mode="overwrite")
+
+        append = IDX.append_ivf_index
+
+        def load(p, as_of):
+            return IDX.load_ivf_index(spark, p, as_of=as_of)[0]
+
+    def state(p, as_of=None):
+        return sorted(r.id for r in load(p, as_of).select("id").collect())
+
+    return rows, "vec_id", save, append, state
+
+
+def _batch_names(path):
+    """Every file name under the artifact's dirs, by dir."""
+    return {
+        d: sorted(n for n in os.listdir(f"{path}/{d}") if not n.startswith((".", "_")))
+        for d in os.listdir(path)
+        if os.path.isdir(f"{path}/{d}") and d not in ("ledger", "meta")
+    }
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "lexical"])
+def test_append_is_a_ledgered_batch(spark, kind):
+    """An append commits as a labelled append batch: its rows reach
+    the data dirs only under its batch-owned names, a snapshot as of
+    the save hides it, and the changelog lists its ids as inserts at
+    its commit sequence."""
+    rows, id_col, save, append, state = _appendable(spark, kind)
+    base = rows.filter(F.col(id_col) % 2 == 0)
+    delta = rows.filter(F.col(id_col) % 2 == 1)
+    path = _tmp(f"append_ledgered_{kind}")
+    save(base, path)
+    before, names = state(path), _batch_names(path)
+
+    assert append(delta, path)["epoch"] == 1
+
+    # (a) the snapshot as of the save hides the append
+    after = state(path)
+    assert after != before
+    assert state(path, as_of=0) == before
+    assert state(path, as_of=1) == after
+
+    # (b) the changelog lists the append's ids as inserts at seq 1
+    if kind == "lexical":
+        delta = delta.filter(F.size("toks") > 0)
+    want = {(1, "insert", r[0]) for r in delta.select(id_col).collect()}
+    got = IDX.index_changes(spark, path, 0).collect()
+    assert {tuple(r) for r in got} == want
+
+    # the rows came in through the ledger's renames, staging swept
+    assert "append-auto-000000" in os.listdir(f"{path}/ledger")
+    for d, now in _batch_names(path).items():
+        new = set(now) - set(names.get(d, ()))
+        assert all(n.startswith("append-auto-000000-") for n in new), (d, new)
+    assert not [d for d in os.listdir(path) if d.startswith("append.")]
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "lexical"])
+def test_crashed_append_is_invisible_and_rerun_commits_whole(spark, kind):
+    """(c) An append whose marker is missing (a crash after its
+    renames) is hidden from every loader; the check counts it as an
+    uncommitted batch and still finds the artifact consistent.
+    Re-running the append commits it whole, with no duplicate rows."""
+    rows, id_col, save, append, state = _appendable(spark, kind)
+    base = rows.filter(F.col(id_col) % 2 == 0)
+    delta = rows.filter(F.col(id_col) % 2 == 1)
+    path = _tmp(f"append_crash_{kind}")
+    save(base, path)
+    before = state(path)
+    append(delta, path)
+    after = state(path)
+
+    ledger_dir = f"{path}/ledger"
+    for m in os.listdir(ledger_dir) if os.path.isdir(ledger_dir) else ():
+        if m.startswith("append-"):
+            os.remove(f"{ledger_dir}/{m}")
+    assert state(path) == before
+    row = IDX.check_index(spark, path).collect()[0]
+    assert row.consistent, row.problems
+    assert row.n_uncommitted_batches == 1
+
+    append(delta, path)
+    assert state(path) == after
+    row = IDX.check_index(spark, path).collect()[0]
+    assert row.consistent and row.n_uncommitted_batches == 0
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "lexical"])
+def test_append_then_fresh_stream_binds(spark, kind):
+    """(d) Append batches are not stream epochs: a stream started with
+    a fresh checkpoint after an append binds and ingests."""
+    from workhop2_etl_spark.streaming import index_stream as IS
+
+    rows, id_col, save, append, state = _appendable(spark, kind)
+    parts = [rows.filter(F.col(id_col) % 3 == i) for i in range(3)]
+    path = _tmp(f"append_stream_{kind}")
+    save(parts[0], path)
+    append(parts[1], path)
+    src, ckpt = _tmp(f"append_stream_src_{kind}"), _tmp(f"append_stream_ckpt_{kind}")
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    parts[2].repartition(1).write.parquet(src)
+    IS.stream_index_ingest(spark, src, rows.schema, path, ckpt,
+                           partitions_per_epoch=1)
+
+    ref = _tmp(f"append_stream_ref_{kind}")
+    save(rows, ref)
+    assert state(path) == state(ref)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "lexical"])
+def test_empty_append_commits(spark, kind):
+    """(e) An empty append commits a batch of its own and leaves every
+    loader as it was; a later append still lands and is tailed at its
+    own sequence."""
+    rows, id_col, save, append, state = _appendable(spark, kind)
+    base = rows.filter(F.col(id_col) % 2 == 0)
+    delta = rows.filter(F.col(id_col) % 2 == 1)
+    path = _tmp(f"append_empty_{kind}")
+    save(base, path)
+    before = state(path)
+
+    assert append(rows.limit(0), path)["epoch"] == 1
+    assert "append-auto-000000" in os.listdir(f"{path}/ledger")
+    assert state(path) == before
+    assert append(delta, path)["epoch"] == 2
+    ref = _tmp(f"append_empty_ref_{kind}")
+    save(rows, ref)
+    assert state(path) == state(ref)
+    assert {r.commit_seq for r in IDX.index_changes(spark, path).collect()} == {2}

@@ -129,3 +129,35 @@ def test_merge_updates_and_inserts_in_one_batch(spark, derby_url, events):
     for r in base.collect():
         want = r.value + 1000.0 if r.event_id in bumped else r.value
         assert got[r.event_id][2] == pytest.approx(want)
+
+
+def test_fresh_checkpoint_raises_and_same_checkpoint_resumes(
+    spark, derby_url, events, tmp_path
+):
+    """The ledger's batch ids are the checkpoint's: a new checkpoint
+    restarts at batch 0, which a ledger at batch 0 would take for the
+    replay of its in-flight batch and skip. So the stream binds the
+    ledger to its checkpoint: a different one raises before any batch
+    (naming it) and leaves the target as it was; the same checkpoint
+    spelled differently resumes."""
+    src = str(tmp_path / "src")
+    ckpt_a, ckpt_b = str(tmp_path / "ckpt_a"), str(tmp_path / "ckpt_b")
+    first = events.filter(F.col("event_id") % 2 == 0)
+    first.write.mode("append").parquet(src)
+    stream_upsert_to_jdbc(spark, src, derby_url, "EV_FRESH", ["event_id"], ckpt_a, **DRIVER)
+    n_first = first.count()
+    assert len(_target_rows(spark, derby_url, "EV_FRESH")) == n_first
+
+    events.filter(F.col("event_id") % 2 == 1).write.mode("append").parquet(src)
+    with pytest.raises(ValueError, match="ckpt_b"):
+        stream_upsert_to_jdbc(spark, src, derby_url, "EV_FRESH", ["event_id"], ckpt_b, **DRIVER)
+    assert len(_target_rows(spark, derby_url, "EV_FRESH")) == n_first
+    assert not os.path.exists(ckpt_b)
+
+    stream_upsert_to_jdbc(
+        spark, src, derby_url, "EV_FRESH", ["event_id"], f"file:{ckpt_a}/", **DRIVER
+    )
+    expect = {
+        r.event_id: (r.user_id, r.event_type, r.value) for r in events.collect()
+    }
+    assert _target_rows(spark, derby_url, "EV_FRESH") == expect

@@ -95,7 +95,6 @@ from workhop2_etl_spark.sources.fs import (
     data_files,
     delete,
     exists,
-    fs_and_path,
     join,
     list_child_dirs,
     read_bytes,
@@ -169,14 +168,12 @@ def _write_meta(spark: SparkSession, path: str, meta: dict, mode: str) -> None:
     # in-memory ``_codebooks`` must never leak into the JSON record;
     # nulls are omitted, matching the Spark JSON writer's default
     row = {k: meta[k] for k in fields if meta.get(k) is not None}
-    fs, d = fs_and_path(spark, f"{path}/meta")
-    if fs.exists(d):
-        if mode != "overwrite":
-            raise ValueError(
-                f"index metadata already exists at {path}/meta "
-                f"(write mode {mode!r})"
-            )
-        fs.delete(d, True)
+    if mode != "overwrite" and exists(spark, f"{path}/meta"):
+        raise ValueError(
+            f"index metadata already exists at {path}/meta "
+            f"(write mode {mode!r})"
+        )
+    delete(spark, f"{path}/meta")
     write_bytes(
         spark, f"{path}/meta/part-00000.json",
         (json.dumps(row) + "\n").encode("utf-8"),
@@ -413,24 +410,56 @@ def _plan_is_empty_local(df: DataFrame) -> bool:
         return False
 
 
-def _append(
+def _commit_rows(
     batch: DataFrame,
     path: str,
-    kind: str,
+    meta: dict,
     col: str,
     id_col: str | None = None,
     num_partitions: int | None = None,
-) -> dict:
-    """The ``append_*_index`` verbs: ``batch`` appended through
-    ``_write_batch`` under the artifact's own metadata, then the
-    metadata epoch bumped. Returns the new metadata."""
+    epoch_id: int | None = None,
+    default_col: str = "embedding",
+) -> str:
+    """Commit ``batch``'s rows into the artifact at ``path`` (metadata
+    ``meta``) through the ledger: as stream epoch ``epoch_id``, or as
+    an append batch under the next auto label. ``_write_batch``
+    prepares the rows under the artifact's own parameters into the
+    batch's staging dir. ``col`` holds the vectors; for the lexical
+    kind the recorded ``tok_col`` wins, and ``col`` may only confirm
+    it or be the verb's ``default_col``. Returns ``'committed'`` or
+    ``'skipped'`` (epoch already in the ledger)."""
     spark = batch.sparkSession
-    meta = _read_meta(spark, path, kind)
-    _write_batch(batch, path, meta, "append", col, id_col,
-                 num_partitions=num_partitions)
-    meta = dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
-    _write_meta(spark, path, meta, "overwrite")
-    return meta
+    b = ledger.stream_batch(epoch_id) if epoch_id is not None else ledger.Batch(
+        ledger.APPEND, ledger.auto_label(spark, path, ledger.APPEND)
+    )
+
+    def stage(staging: str) -> None:
+        rows_col = col
+        if meta["kind"] == _LEXICAL_KIND:
+            # an artifact saved before tok_col was recorded reads
+            # ``col``, or 'toks' for the verb's default
+            rows_col = meta.get("tok_col") or (
+                col if col != default_col else "toks"
+            )
+            if col not in (default_col, rows_col):
+                raise ValueError(
+                    f"lexical index at {path} records tok_col={rows_col!r}, "
+                    f"but the batch names column {col!r}: the recorded "
+                    "token column wins; drop the override or rebuild the "
+                    "artifact under the new column name"
+                )
+            if rows_col not in batch.columns:
+                raise ValueError(
+                    f"lexical batch for {path} lacks the token column "
+                    f"{rows_col!r} the artifact records (columns "
+                    f"{batch.columns}); a stream's prepare hook must add it"
+                )
+        _write_batch(batch, path, meta, "overwrite", rows_col, id_col,
+                     target=staging, num_partitions=num_partitions)
+
+    return ledger.commit(
+        spark, path, b, meta, _LAYOUTS[meta["kind"]].subs, stage
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -449,9 +478,7 @@ def _reset_lifecycle_state(spark: SparkSession, path: str, mode: str) -> None:
     if mode != "overwrite":
         return
     for sub in ("ledger", "tombstones"):
-        fs, d = fs_and_path(spark, f"{path}/{sub}")
-        if fs.exists(d):
-            fs.delete(d, True)
+        delete(spark, join(path, sub))
 
 
 def save_lsh_index(
@@ -549,17 +576,18 @@ def append_lsh_index(
     exception). The delta is signed under the artifact's OWN stored
     parameters (dim / planes / tables from metadata — the caller
     cannot accidentally sign a batch under drifted geometry) and
-    appended as new parquet files; the metadata epoch increments so
-    readers and staleness checks can see the index advanced.
+    committed as a ledgered append batch (``_commit_rows``), seen
+    whole or not at all; a crashed append re-runs whole. Returns the
+    metadata, whose epoch is the batch's commit sequence.
 
     Id discipline is the caller's (same as any append-only store):
     re-appending rows already indexed yields duplicate (id, table)
     entries, which the probe's max-aggregate dedups per (query,
-    neighbor) — correct scores, wasted candidate volume. Writes are
-    parquet-append + metadata overwrite, single-writer by contract;
-    wrap the path in a transactional table format if concurrent
-    writers are possible."""
-    return _append(corpus_delta, path, _LSH_KIND, vec_col, id_col)
+    neighbor) — correct scores, wasted candidate volume.
+    Single-writer by contract, like every index mutator."""
+    meta = _read_meta(corpus_delta.sparkSession, path, _LSH_KIND)
+    _commit_rows(corpus_delta, path, meta, vec_col, id_col)
+    return dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
 
 
 def load_lsh_index(
@@ -575,8 +603,7 @@ def load_lsh_index(
     with what the caller expects (pass None to accept the stored
     value — the metadata is the source of truth for the probe).
     ``as_of`` reconstructs the SNAPSHOT after that commit sequence
-    (ledgered stream epochs and deletes only; see
-    ``_ledger_gated_parquet`` — history reaches the last
+    (see ``_ledger_gated_parquet`` — history reaches the last
     compaction)."""
     meta = _read_meta(spark, path, _LSH_KIND)
     _check_drift(
@@ -946,9 +973,11 @@ def append_ivf_index(
     """Grow an existing IVF index with newly-arrived corpus rows,
     assigned under the artifact's OWN stored quantizer (the caller
     cannot accidentally mix assignments from drifted centroids).
-    Parquet-append + metadata epoch bump; id discipline and the
+    The ledger commit, the returned metadata, id discipline and the
     single-writer contract are as ``append_lsh_index``."""
-    return _append(corpus_delta, path, _IVF_POSTINGS_KIND, vec_col, id_col)
+    meta = _read_meta(corpus_delta.sparkSession, path, _IVF_POSTINGS_KIND)
+    _commit_rows(corpus_delta, path, meta, vec_col, id_col)
+    return dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
 
 
 def load_ivf_index(
@@ -965,8 +994,8 @@ def load_ivf_index(
     For a ``pq8`` artifact the persisted codebooks ride back inside
     the metadata dict (key ``_codebooks``) so ``probe_ivf_index``
     can reconstruct without extra plumbing. ``as_of`` reconstructs
-    the snapshot after that commit sequence (ledgered batches only;
-    ``_ledger_gated_parquet``)."""
+    the snapshot after that commit sequence
+    (``_ledger_gated_parquet``)."""
     meta = _read_meta(spark, path, _IVF_POSTINGS_KIND)
     _check_drift(
         path, meta, {"dim": dim, "n_centroids": n_centroids, "seed": seed}
@@ -1163,13 +1192,11 @@ def _ledger_gated_parquet(
     or a stream epoch becomes visible at its ledger marker
     (operators/ledger.py), so a reader racing the renames, or loading
     after a mid-rename crash, never sees decremented stats with the
-    victims' tf rows still visible (delete), nor an epoch's tf rows
-    without its df/stats partials (stream ingest). Batch appends
-    (``append_*``) are NOT ledgered and keep their documented
-    single-writer/stop-the-world contract. When no file is hidden the
-    plain directory read is used (identical scan, partition discovery
-    and parquet pushdown). Returns None when the directory is missing
-    or nothing is visible.
+    victims' tf rows still visible (delete), nor a batch's tf rows
+    without its df/stats partials (append, stream ingest). When no
+    file is hidden the plain directory read is used (identical scan,
+    partition discovery and parquet pushdown). Returns None when the
+    directory is missing or nothing is visible.
 
     ``as_of`` (SNAPSHOT READS): additionally hide committed batches
     whose marker records a commit sequence GREATER than ``as_of`` —
@@ -1179,8 +1206,7 @@ def _ledger_gated_parquet(
     without a sequence stay visible under any ``as_of``. History
     reaches back to the last ``compact_index`` (compaction folds
     batches into base files, physically — the Delta-VACUUM analog): a
-    snapshot before it raises (the ledger's fold rule). It does not
-    cover un-ledgered batch appends."""
+    snapshot before it raises (the ledger's fold rule)."""
     files, hid = ledger.visible_files(spark, path, sub, as_of)
     if not files:  # e.g. a replay swept a crashed batch's files
         return None
@@ -1204,13 +1230,13 @@ def _settle_ledger_for_compaction(
       The replay assumes its own renamed files are the only copies, so
       sweeping them could race a concurrent resume; the stream must
       converge first;
-    - an uncommitted delete batch's files are swept: they were never
-      reader-visible, and its replay (same label) restages from the
+    - an uncommitted append or delete batch's files are swept: they
+      were never reader-visible, and its replay (same label) restages
+      whole — an append from its delta, a delete from the
       post-compaction live state;
     - a committed epoch's leftover staging (crash between marker and
-      sweep) is swept, and so is every delete batch's staging dir
-      (committed or not: a replay of the label restages from the
-      post-compaction live state).
+      sweep) is swept, and so is every append or delete batch's
+      staging dir (committed or not: a replay of the label restages).
 
     Single-writer by contract, like every mutator here."""
     pending = ledger.uncommitted(spark, path, subs)
@@ -1234,7 +1260,7 @@ def _settle_ledger_for_compaction(
             )
     for b in staged:
         delete(spark, join(path, b.staging))
-    for files in pending.values():  # only delete batches are left
+    for files in pending.values():  # only labelled batches are left
         for f in files:
             delete(spark, f, False)
 
@@ -1345,12 +1371,10 @@ def delete_from_index(
             ]
         _write_dirs(spark, [writes], "overwrite", shared=victims)
 
+    if batch is None:
+        batch = ledger.auto_label(spark, path, ledger.DELETE)
     return ledger.commit(
-        spark, path,
-        ledger.delete_batch(
-            ledger.auto_delete_label(spark, path) if batch is None else batch
-        ),
-        meta,
+        spark, path, ledger.Batch(ledger.DELETE, batch), meta,
         (*lay.partials, "tombstones"),
         stage,
     )
@@ -1375,10 +1399,10 @@ def compact_index(
     content: a probe before and after compaction is row-identical
     (pytest-asserted).
 
-    Single-writer, stop-the-world by contract (same as append), and
-    crash-safe by construction: each data dir (``index``, or the
-    lexical kind's ``tf``, ``df`` and ``stats``) stages on its own, all
-    of them concurrently, into ``<dir>.compacting`` (one full write —
+    Single-writer, stop-the-world by contract, and crash-safe by
+    construction: each data dir (``index``, or the lexical kind's
+    ``tf``, ``df`` and ``stats``) stages on its own, all of them
+    concurrently, into ``<dir>.compacting`` (one full write —
     the postings are never written twice), then swaps in with
     filesystem metadata-only operations (delete old dir, rename
     staging). A crash before the staged ``_SUCCESS`` marker leaves the
@@ -1485,21 +1509,6 @@ def _compact_dirs(
     ]
 
 
-def _compact_dir(
-    spark: SparkSession,
-    data: str,
-    keys,
-    num_partitions: int | None,
-    transform=None,
-    one_file: bool = False,
-) -> tuple[int | None, int]:
-    """``_compact_dirs`` over one data dir alone — the state a crash
-    between a multi-dir artifact's swaps leaves."""
-    return _compact_dirs(
-        spark, [(data, keys, transform, one_file)], num_partitions
-    )[0]
-
-
 def restore_index(
     spark: SparkSession,
     src_path: str,
@@ -1523,10 +1532,9 @@ def restore_index(
     exactly; the lexical df/stats folds are integer sums), and every
     lifecycle verb (append / ingest / delete / compact / snapshot)
     starts from scratch on it. History semantics are the loader's:
-    ``as_of`` orders LEDGERED batches (stream epochs, deletes) by
-    their recorded commit sequence and reaches back to the last
-    compaction; un-ledgered batch appends fold into whatever state
-    they were part of.
+    ``as_of`` orders the ledgered batches (appends, stream epochs,
+    deletes) by their recorded commit sequence and reaches back to
+    the last compaction.
 
     At scale this is one clustered write of the snapshot's surviving
     rows (the same shuffle ``compact_index`` pays) plus
@@ -1605,9 +1613,9 @@ def index_changes(
     document contributed ≥1 posting (empty-token docs never enter the
     index, matching the loader's n_docs).
 
-    Scope is the ledger's: stream-ingest epochs and delete batches.
-    The base save and un-ledgered batch appends are the artifact's
-    INITIAL state, not changes (start tailing from the seq you
+    Scope is the ledger's: append batches and stream-ingest epochs
+    (inserts) and delete batches. The base save is the artifact's
+    INITIAL state, not a change (start tailing from the seq you
     snapshotted); compaction folds batch files into base files, so —
     by the same fold rule as ``as_of`` (operators/ledger.py) — history
     reaches back to the last compaction, and asking past it raises

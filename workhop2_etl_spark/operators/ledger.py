@@ -2,11 +2,13 @@
 for every verb that changes an artifact in multi-file batches, and
 the one place that knows how those batches are named.
 
+The ``append_*_index`` verbs commit an append batch (a delta's rows,
+plus positive df/stats partials for the lexical kind) and
+``index_stream.ingest_epoch`` a stream epoch (the same for one
+micro-batch), both through ``index_store._commit_rows``;
 ``index_store.delete_from_index`` commits a delete batch (tombstones,
-plus negative df/stats partials for the lexical kind) and
-``index_stream.ingest_epoch`` a stream epoch (one micro-batch's rows,
-plus positive partials). The stream sinks commit each micro-batch as a
-stream epoch of a sink artifact: a metadata record (kind, format
+plus negative partials). The stream sinks commit each micro-batch as
+a stream epoch of a sink artifact: a metadata record (kind, format
 version, epoch) and one sub per kind (``SINKS``):
 
 - ``stream-rollup`` (``streaming/windows.py::stream_rollup_to_parquet``):
@@ -19,8 +21,9 @@ version, epoch) and one sub per kind (``SINKS``):
 
 Under the artifact root ``<path>``:
 
-- delete batch ``<label>``: files ``<sub>/delete-<label>-NNNNN.parquet``,
-  marker ``ledger/delete-<label>``, staging dir ``delete.<label>``;
+- append or delete batch ``<label>`` (kind ``append`` or ``delete``):
+  files ``<sub>/<kind>-<label>-NNNNN.parquet``, marker
+  ``ledger/<kind>-<label>``, staging dir ``<kind>.<label>``;
 - stream epoch ``e``: files ``<sub>/stream-<e:012d>-NNNNN.parquet``,
   marker ``ledger/epoch-<e:012d>``, staging dir ``ingest.epoch-<e:012d>``.
 
@@ -30,7 +33,11 @@ binds the artifact to the checkpoint of the stream that feeds it
 ingest, the rollup, the near-dup sinks and the join views — because a
 stream epoch id is the checkpoint's batch id: a fresh checkpoint
 restarts them at 0, and step 1 below would silently skip its batches
-as already committed.
+as already committed. The JDBC sink binds its ledger table by the
+same digest (``checkpoint_binding``).
+
+Files with no batch name are base files (a save's, a compaction's,
+and an append's from before appends were ledgered).
 
 Labels may contain ``-``: a file belongs to the batch whose tag is its
 whole name minus the kind and the trailing file number, never to a
@@ -89,6 +96,7 @@ from workhop2_etl_spark.sources.fs import (
     write_bytes,
 )
 
+APPEND = "append"
 DELETE = "delete"
 STREAM = "stream"
 
@@ -100,34 +108,30 @@ SINKS = {
     "join-rows": "rows",
 }
 
-_FILE = re.compile(r"(delete|stream)-(.+)-\d+\.parquet")
-_MARKER = re.compile(r"delete-(.+)|epoch-(\d+)")
-_STAGING = re.compile(r"delete\.(.+)|ingest\.epoch-(.+)")
+_FILE = re.compile(r"(append|delete|stream)-(.+)-\d+\.parquet")
+_MARKER = re.compile(r"(append|delete)-(.+)|epoch-(\d+)")
+_STAGING = re.compile(r"(append|delete)\.(.+)|ingest\.epoch-(.+)")
 
 
 class Batch(NamedTuple):
-    """One ledgered batch: ``kind`` is ``DELETE`` or ``STREAM``, ``tag``
-    the delete label or the zero-padded stream epoch."""
+    """One ledgered batch: ``kind`` is ``APPEND``, ``DELETE`` or
+    ``STREAM``, ``tag`` its label or its zero-padded stream epoch."""
 
     kind: str
     tag: str
 
     @property
     def marker(self) -> str:
-        return f"{'delete' if self.kind == DELETE else 'epoch'}-{self.tag}"
+        return f"{'epoch' if self.kind == STREAM else self.kind}-{self.tag}"
 
     @property
     def staging(self) -> str:
-        if self.kind == DELETE:
-            return f"delete.{self.tag}"
-        return f"ingest.epoch-{self.tag}"
+        if self.kind == STREAM:
+            return f"ingest.epoch-{self.tag}"
+        return f"{self.kind}.{self.tag}"
 
     def file_name(self, i: int) -> str:
         return f"{self.kind}-{self.tag}-{i:05d}.parquet"
-
-
-def delete_batch(label: str) -> Batch:
-    return Batch(DELETE, label)
 
 
 def stream_batch(epoch_id: int) -> Batch:
@@ -140,18 +144,17 @@ def _parse_file(name: str) -> Batch | None:
     return Batch(m[1], m[2]) if m else None
 
 
+def _parse(pattern: re.Pattern, name: str) -> Batch | None:
+    """The batch a marker (``_MARKER``) or staging dir (``_STAGING``)
+    name belongs to."""
+    m = pattern.fullmatch(name)
+    if not m:
+        return None
+    return Batch(m[1], m[2]) if m[1] is not None else Batch(STREAM, m[3])
+
+
 def parse_marker(name: str) -> Batch | None:
-    m = _MARKER.fullmatch(name)
-    if not m:
-        return None
-    return Batch(DELETE, m[1]) if m[1] is not None else Batch(STREAM, m[2])
-
-
-def _parse_staging(name: str) -> Batch | None:
-    m = _STAGING.fullmatch(name)
-    if not m:
-        return None
-    return Batch(DELETE, m[1]) if m[1] is not None else Batch(STREAM, m[2])
+    return _parse(_MARKER, name)
 
 
 def _name(file_path: str) -> str:
@@ -188,14 +191,15 @@ def commits(spark: SparkSession, path: str) -> list[tuple[Batch, int | None]]:
     ]
 
 
-def auto_delete_label(spark: SparkSession, path: str) -> str:
-    """The next default delete label, ``auto-NNNNNN``: one past the
-    highest existing auto sequence (not a count, so gaps and explicit
-    labels of any shape never make it collide with a marker)."""
+def auto_label(spark: SparkSession, path: str, kind: str) -> str:
+    """The next default ``kind`` label, ``auto-NNNNNN``: one past the
+    highest committed auto sequence of that kind (not a count, so gaps
+    and explicit labels never collide with a marker; a crashed batch's
+    label is reused, and its commit sweeps the crashed files)."""
     seqs = [
         int(m[1])
         for b in map(parse_marker, _markers(spark, path))
-        if b is not None and b.kind == DELETE
+        if b is not None and b.kind == kind
         and (m := re.fullmatch(r"auto-(\d+)", b.tag))
     ]
     return f"auto-{(max(seqs) + 1 if seqs else 0):06d}"
@@ -293,8 +297,8 @@ def uncommitted(
 def staging_dirs(spark: SparkSession, path: str) -> list[Batch]:
     """The batches whose staging dir exists at the artifact root."""
     return [
-        b for b in map(_parse_staging, sorted(list_child_dirs(spark, path)))
-        if b is not None
+        b for n in sorted(list_child_dirs(spark, path))
+        if (b := _parse(_STAGING, n)) is not None
     ]
 
 
@@ -352,6 +356,13 @@ def _binding(checkpoint: str) -> str:
     return f"_stream-{hashlib.md5(checkpoint.encode()).hexdigest()[:12]}"
 
 
+def checkpoint_binding(checkpoint_dir: str) -> str:
+    """The binding of a stream sink to the checkpoint ``checkpoint_dir``:
+    the digest of its canonical path, the same for every spelling of
+    the same checkpoint."""
+    return _binding(_canon_checkpoint(checkpoint_dir))
+
+
 def bind_stream(
     spark: SparkSession, paths, checkpoint_dir: str, adopt: bool = False
 ) -> None:
@@ -369,7 +380,7 @@ def bind_stream(
     committed can be skipped. ``adopt=True`` re-binds an artifact
     with committed epochs to the new checkpoint — for a deliberate
     migration whose source does not replay committed data."""
-    mine = _binding(_canon_checkpoint(checkpoint_dir))
+    mine = checkpoint_binding(checkpoint_dir)
     legacy = _binding(checkpoint_dir)
     drops = []
     for path in paths:

@@ -454,18 +454,19 @@ def append_lexical_index(
     tok_col: str = "toks",
     num_partitions: int | None = None,
 ) -> dict:
-    """Grow the lexical index with newly-arrived documents. The new
-    docs' tf rows append to the posting relation and their df/stats
-    PARTIALS append alongside; nothing already on disk is rewritten
+    """Grow the lexical index with newly-arrived documents: their tf
+    rows and df/stats PARTIALS commit together as one ledgered append
+    batch (``index_store._commit_rows``); nothing on disk is rewritten
     (df for an existing term is reconciled at load by summing
     partials). Re-appending an already-indexed doc_id double-counts
     it — same id discipline as the ANN index appends; single-writer
     by contract."""
-    from workhop2_etl_spark.operators.index_store import _append
+    from workhop2_etl_spark.operators.index_store import _commit_rows, _read_meta
 
-    return _append(
-        corpus_tokens, path, _LEXICAL_KIND, tok_col, id_col, num_partitions
-    )
+    meta = _read_meta(corpus_tokens.sparkSession, path, _LEXICAL_KIND)
+    _commit_rows(corpus_tokens, path, meta, tok_col, id_col, num_partitions,
+                 default_col="toks")
+    return dict(meta, epoch=int(meta.get("epoch") or 0) + 1)
 
 
 def load_lexical_index(
@@ -477,19 +478,18 @@ def load_lexical_index(
     NEGATIVE ones, so the sums are exactly the single-shot aggregates
     over the surviving documents regardless of lifecycle history;
     terms whose net df reaches 0 are dropped, as a rebuild would).
-    ``tf`` anti-joins any pending delete tombstones. Any LEDGERED
-    batch — a delete's tombstones + negative partials, a stream
-    epoch's tf rows + positive partials — appears TOGETHER or not at
-    all: all three reads hide files whose ledger marker is absent, so
-    the marker is each batch's atomic commit point even under a
-    reader racing the writer's renames or after a mid-rename crash
-    (operators/ledger.py). ``as_of`` reconstructs
-    the SNAPSHOT after that commit sequence: ledgered batches (stream
-    epochs, deletes) committed later are hidden across all three
-    relations at once, so the snapshot's scores are the bit-exact
-    single-shot BM25 over exactly the documents visible then; history
-    reaches back to the last compaction. Raises on kind/tokenizer
-    drift."""
+    ``tf`` anti-joins any pending delete tombstones. Every ledgered
+    batch — a delete's tombstones + negative partials, an append's or
+    a stream epoch's tf rows + positive partials — appears TOGETHER
+    or not at all: all three reads hide files whose ledger marker is
+    absent, so the marker is each batch's atomic commit point even
+    under a reader racing the writer's renames or after a mid-rename
+    crash (operators/ledger.py). ``as_of`` reconstructs the SNAPSHOT
+    after that commit sequence: batches committed later are hidden
+    across all three relations at once, so the snapshot's scores are
+    the bit-exact single-shot BM25 over exactly the documents visible
+    then; history reaches back to the last compaction. Raises on
+    kind/tokenizer drift."""
     from workhop2_etl_spark.operators.index_store import (
         _check_drift,
         _gated_or_raise,

@@ -45,11 +45,6 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = fs_and_path(spark, path)
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """Child names of a directory ([] if it does not exist)."""
     fs, p = fs_and_path(spark, path)
@@ -167,23 +162,22 @@ def write_parquet(spark: SparkSession, table, path: str, mode: str) -> None:
     (``part-00000-<uuid>-c000.snappy.parquet`` plus ``_SUCCESS``).
     ``mode``: ``'overwrite'`` replaces the directory,
     ``'error'``/``'errorifexists'`` raise ``FileExistsError`` if it
-    exists, ``'append'`` adds a part file beside the existing ones."""
+    exists."""
     import uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if mode not in ("overwrite", "error", "errorifexists", "append"):
+    if mode not in ("overwrite", "error", "errorifexists"):
         raise ValueError(
-            f"write mode must be 'overwrite', 'error', 'errorifexists' or "
-            f"'append', got {mode!r}"
+            f"write mode must be 'overwrite', 'error' or 'errorifexists', "
+            f"got {mode!r}"
         )
     fs, d = fs_and_path(spark, path)
     if fs.exists(d):
-        if mode == "overwrite":
-            fs.delete(d, True)
-        elif mode != "append":
+        if mode != "overwrite":
             raise FileExistsError(f"path {path} already exists (mode {mode!r})")
+        fs.delete(d, True)
     sink = pa.BufferOutputStream()
     pq.write_table(table, sink, compression="snappy")
     write_bytes(

@@ -16,6 +16,9 @@ offers something stronger — a real transaction. This sink uses it:
    crash replays the in-flight batch) the ledger row makes the batch
    a no-op BEFORE any write happens.
 
+The batch ids are the stream checkpoint's, so the stream first binds
+the ledger to its checkpoint (``_bind_checkpoint``).
+
 Crash anywhere before the commit → neither merge nor ledger row
 exist, the replay redoes both; crash after → the replay skips. This
 holds even for payloads that are NOT naturally idempotent (deltas,
@@ -37,8 +40,11 @@ the transaction/ledger protocol itself is engine-agnostic.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
 
+from workhop2_etl_spark.operators.ledger import checkpoint_binding
 from workhop2_etl_spark.sources.readers import read_parquet
 from workhop2_etl_spark.sources.writers import write_jdbc
 from workhop2_etl_spark.streaming.drain import drain
@@ -50,6 +56,30 @@ def _exec(conn, sql: str) -> None:
         st.execute(sql)
     finally:
         st.close()
+
+
+def _column(conn, sql: str) -> list:
+    """The first column of the rows ``sql`` selects (NULL as None)."""
+    st = conn.createStatement()
+    try:
+        rs, out = st.executeQuery(sql), []
+        while rs.next():
+            out.append(rs.getObject(1))
+        return out
+    finally:
+        st.close()  # closes its result set too
+
+
+def _check_identifier(table: str) -> None:
+    """The generated names (table, _STAGE, _EPOCHS, _STREAM) are
+    interpolated UNQUOTED so the database's identifier folding matches
+    the folding-aware ``_table_exists`` probe; a mixed-case or reserved
+    name would need quoting everywhere at once, so it is refused."""
+    if not re.fullmatch(r"[A-Za-z][A-Za-z0-9_]*", table):
+        raise ValueError(
+            f"jdbc sink target {table!r} is not a plain SQL identifier; "
+            "quoted/mixed-case targets need a dialect adapter"
+        )
 
 
 def _table_exists(conn, table: str) -> bool:
@@ -111,19 +141,7 @@ def jdbc_upsert_batch(
     drive it directly with synthetic epoch ids.
     """
     spark = batch_df.sparkSession
-    # The generated names (table, _STAGE, _EPOCHS) are interpolated
-    # UNQUOTED into DDL/MERGE so the database's identifier folding
-    # matches the folding-aware _table_exists probe. That contract
-    # only holds for plain identifiers — a mixed-case or reserved
-    # name would need quoting everywhere at once (a dialect adapter,
-    # like MySQL's), so reject it loudly instead of breaking halfway.
-    import re
-
-    if not re.fullmatch(r"[A-Za-z][A-Za-z0-9_]*", table):
-        raise ValueError(
-            f"jdbc sink target {table!r} is not a plain SQL identifier; "
-            "quoted/mixed-case targets need a dialect adapter"
-        )
+    _check_identifier(table)
     staging, ledger = f"{table}_STAGE", f"{table}_EPOCHS"
     conn = _connect(spark, url, jdbc_options)
     try:
@@ -137,22 +155,10 @@ def jdbc_upsert_batch(
         # committed or not — means the stream's checkpoint no longer
         # matches this ledger (deleted checkpoint restarting at 0, or
         # a second pipeline sharing the target): skipping would
-        # silently drop every new batch, so fail loudly instead. The
-        # parquet sinks get the same guarantee from their checkpoint
-        # binding (operators/ledger.py::bind_stream).
-        st = conn.createStatement()
-        try:
-            rs = st.executeQuery(f"SELECT MAX(batch_id) FROM {ledger}")
-            try:
-                top = None
-                if rs.next():
-                    v = rs.getLong(1)
-                    if not rs.wasNull():  # wasNull is only valid after getLong
-                        top = int(v)
-            finally:
-                rs.close()
-        finally:
-            st.close()
+        # silently drop every new batch, so fail loudly instead. A new
+        # checkpoint whose batch 0 meets a ledger at 0 is caught
+        # before the stream starts (``_bind_checkpoint``).
+        top = _column(conn, f"SELECT MAX(batch_id) FROM {ledger}")[0]
         if top is not None:
             if int(epoch_id) == top:
                 return False  # replay of the in-flight batch: no-op
@@ -206,6 +212,40 @@ def jdbc_upsert_batch(
         conn.close()
 
 
+def _bind_checkpoint(
+    spark, url: str, table: str, checkpoint_dir: str, jdbc_options: dict
+) -> None:
+    """Bind the ledger table ``<table>_EPOCHS`` to the checkpoint by
+    the rule of ``ledger.bind_stream``: the binding digest
+    (``checkpoint_binding``) is the one row of ``<table>_STREAM``, and
+    a ledger holding batches bound to another checkpoint, or to none,
+    raises before any batch runs."""
+    _check_identifier(table)
+    epochs, bound_to = f"{table}_EPOCHS", f"{table}_STREAM"
+    mine = checkpoint_binding(checkpoint_dir)
+    conn = _connect(spark, url, jdbc_options)
+    try:
+        if not _table_exists(conn, bound_to):
+            _exec(conn, f"CREATE TABLE {bound_to} (binding VARCHAR(64) NOT NULL)")
+        bound = set(_column(conn, f"SELECT binding FROM {bound_to}"))
+        if mine not in bound and _table_exists(conn, epochs) and _column(
+            conn, f"SELECT COUNT(*) FROM {epochs}"
+        )[0]:
+            raise ValueError(
+                f"JDBC ledger {epochs} holds batches of another checkpoint "
+                f"than {checkpoint_dir}, whose batch ids restart at 0 and "
+                "would be skipped as replays: resume with the original "
+                "checkpoint, or write to a new table"
+            )
+        # one autocommitted statement each: never a moment unbound
+        if not bound:
+            _exec(conn, f"INSERT INTO {bound_to} (binding) VALUES ('{mine}')")
+        elif bound != {mine}:
+            _exec(conn, f"UPDATE {bound_to} SET binding = '{mine}'")
+    finally:
+        conn.close()
+
+
 def stream_upsert_to_jdbc(
     spark: SparkSession,
     parquet_path: str,
@@ -221,11 +261,12 @@ def stream_upsert_to_jdbc(
     Same source/trigger contract as ``stream_upsert_to_parquet``
     (streaming/drain.py); re-running with the same checkpoint adds
     nothing, and a replayed in-flight batch is skipped by the ledger
-    even if its merge had already committed. The ledger table keeps
-    its own checkpoint rule (``jdbc_upsert_batch``), so the stream
-    binds no artifact.
+    even if its merge had already committed. The ledger table is
+    bound to ``checkpoint_dir`` first (``_bind_checkpoint``): a
+    different checkpoint raises before any batch runs, naming it.
     """
     schema = read_parquet(spark, parquet_path).schema
+    _bind_checkpoint(spark, url, table, checkpoint_dir, jdbc_options)
 
     def apply_batch(batch_df, epoch_id: int) -> None:
         jdbc_upsert_batch(batch_df, epoch_id, url, table, keys, **jdbc_options)
