@@ -107,3 +107,42 @@ def test_spec_best_new_artist_fill(spark, tables):
         .collect()
     )
     assert rows and all(r.artist == r.nominee for r in rows)
+
+
+#: The pipeline's output columns and types, in order, in both modes.
+_OUTPUT_SCHEMA = [
+    ("year", "int"),
+    ("title", "string"),
+    ("category", "string"),
+    ("nominee", "string"),
+    ("artist", "string"),
+    ("winner", "boolean"),
+    ("track_id", "string"),
+    ("album_name", "string"),
+    ("track_name", "string"),
+    ("popularity", "bigint"),
+    ("duration_ms", "bigint"),
+    ("explicit", "boolean"),
+    ("danceability", "double"),
+    ("energy", "double"),
+    ("key", "bigint"),
+    ("loudness", "double"),
+    ("mode", "bigint"),
+    ("speechiness", "double"),
+    ("acousticness", "double"),
+    ("instrumentalness", "double"),
+    ("liveness", "double"),
+    ("valence", "double"),
+    ("tempo", "double"),
+    ("track_genre", "string"),
+]
+
+
+@pytest.mark.parametrize("mode", ["spec", "strict"])
+def test_output_schema_names_order_and_types(spark, tables, mode):
+    """The finalized frame keeps the reference's column order and the
+    typed casts (:266-293); row digests ignore column order, so the
+    order is pinned here."""
+    _, _, g, s = tables
+    out = P.run_pipeline(g, s, mode=mode)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == _OUTPUT_SCHEMA

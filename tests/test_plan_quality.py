@@ -1254,3 +1254,84 @@ def test_fuzzy_fallback_tests_containment_over_distinct_haystacks(spark):
             if n.getClass().getSimpleName().endswith("JoinExec")
             and re.match(r"\w+ \[artists_norm#\d+\], \[artists_norm#\d+\]", n.simpleString(200))]
     assert back and all(c in ("BroadcastHashJoinExec", "ShuffledHashJoinExec") for c in back), back
+
+
+def _plan_details(desc: str) -> list[tuple[str, str]]:
+    """(node name, details) of every operator in a formatted plan
+    description; AQE's final and initial plans list each node once."""
+    blocks = re.split(r"\n(?=\(\d+\) )", desc)
+    return [(re.match(r"\(\d+\) ([\w ]+)", b).group(1).strip(), b)
+            for b in blocks if re.match(r"\(\d+\) ", b)]
+
+
+def _broadcast_keys(details: str) -> list[str]:
+    """The names of a hashed broadcast's key columns."""
+    names = re.findall(r"(\w+)#\d+L?", details.split("Arguments:")[0].split("Input", 1)[1])
+    return [names[int(i)] for i in re.findall(r"input\[(\d+),", details)]
+
+
+def test_pipeline_reads_spotify_once_and_matches_on_keys(spark, tmp_path):
+    """Over every SQL execution of one spec pipeline run plus its
+    parquet write (the executed plans in the status store): the
+    Spotify CSV is scanned once, since J1, J2 and J4 share one pinned
+    parse + normalize; and no broadcast of the fuzzy match carries a
+    payload-only column. The wide spotify_top row is broadcast only
+    to join back the winners on their track key."""
+    from tests.fixtures_grammy import make_grammy, make_spotify
+    from workhop2_etl_spark.plans import grammy_spotify as P
+    from workhop2_etl_spark.plans.schemas import FLOAT_COLS, GRAMMY_SCHEMA, SPOTIFY_SCHEMA
+    from workhop2_etl_spark.sources import readers, writers
+
+    make_grammy().to_csv(tmp_path / "grammy.csv", index=False)
+    make_spotify().to_csv(tmp_path / "spotify.csv", index=False)
+    seen = set(_sql_executions(spark))
+    g = readers.read_csv(spark, str(tmp_path / "grammy.csv"), GRAMMY_SCHEMA)
+    s = readers.read_csv(spark, str(tmp_path / "spotify.csv"), SPOTIFY_SCHEMA)
+    writers.write_parquet(P.run_pipeline(g, s, mode="spec"), str(tmp_path / "out"))
+    nodes = [n for desc in _sql_executions(spark, seen).values() for n in _plan_details(desc)]
+
+    scans = [d for name, d in nodes if name.startswith("Scan csv") and "spotify.csv" in d]
+    assert len(scans) == 1, scans
+
+    broadcasts = [d for name, d in nodes if name == "BroadcastExchange"]
+    payload = [d for d in broadcasts if any(re.search(rf"\b(_extract_)?{c}#", d) for c in FLOAT_COLS)]
+    assert payload, broadcasts
+    for d in payload:
+        assert "HashedRelationBroadcastMode" in d, d
+        assert sorted(_broadcast_keys(d)) == ["artists_norm", "track_name_norm"], d
+        assert "__best" not in d and "_extract_" not in d, d
+    # the match itself does broadcast spotify_top: its key and pick columns
+    assert any(_broadcast_keys(d) == ["track_name_norm"] for d in broadcasts), broadcasts
+
+
+_WITH_COLUMN_LOOP_SCOPE = ("plans/*.py", "operators/joins.py")
+
+
+def test_no_with_column_in_a_loop():
+    """Static guard: in the plan layer and the join operators, a loop
+    (or comprehension, or ``reduce``) never calls ``withColumn``: each
+    call re-analyzes the whole plan on the driver, so a per-column loop
+    costs one analysis per column where one ``select``/``withColumns``
+    costs one."""
+    import ast
+    import pathlib
+
+    import workhop2_etl_spark
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    loops = (ast.For, ast.AsyncFor, ast.While, ast.ListComp, ast.SetComp, ast.DictComp,
+             ast.GeneratorExp)
+    files = sorted(p for pat in _WITH_COLUMN_LOOP_SCOPE for p in root.glob(pat))
+    assert any(p.name == "grammy_spotify.py" for p in files), files
+    found = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            is_reduce = (isinstance(node, ast.Call)
+                         and getattr(node.func, "id", getattr(node.func, "attr", None)) == "reduce")
+            if not (isinstance(node, loops) or is_reduce):
+                continue
+            for inner in ast.walk(node):
+                if (isinstance(inner, ast.Call) and isinstance(inner.func, ast.Attribute)
+                        and inner.func.attr == "withColumn"):
+                    found.append(f"{path.relative_to(root)}:{inner.lineno}")
+    assert not found, found

@@ -44,10 +44,9 @@ def impute_left_join(
     """
     picked = argmax_dedupe(source, source_key, pick_order)
     joined = base.join(F.broadcast(picked), on, "left")
-    out = joined
-    for col_name, src_expr in fill.items():
-        out = out.withColumn(col_name, F.coalesce(src_expr, F.col(col_name)))
-    return out.select(*base.columns)
+    return joined.select(
+        *[F.coalesce(fill[c], F.col(c)).alias(c) if c in fill else F.col(c) for c in base.columns]
+    )
 
 
 def fuzzy_enrich(

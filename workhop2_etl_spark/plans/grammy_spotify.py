@@ -98,14 +98,16 @@ def normalize_tables(
         s_in = lambda c: c  # noqa: E731
         artists_norm = clean.normalize_text(F.col("artists"))
 
-    g = grammy
-    for c in ("category", "nominee", "artist"):
-        g = g.withColumn(f"{c}_norm", clean.normalize_text(g_in(F.col(c))))
-    s = (
-        spotify.withColumn("track_name_norm", clean.normalize_simple(s_in(F.col("track_name"))))
-        .withColumn("album_name_norm", clean.normalize_simple(s_in(F.col("album_name"))))
-        .withColumn("artists_orig", F.col("artists"))
-        .withColumn("artists_norm", artists_norm)
+    g = grammy.withColumns(
+        {f"{c}_norm": clean.normalize_text(g_in(F.col(c))) for c in ("category", "nominee", "artist")}
+    )
+    s = spotify.withColumns(
+        {
+            "track_name_norm": clean.normalize_simple(s_in(F.col("track_name"))),
+            "album_name_norm": clean.normalize_simple(s_in(F.col("album_name"))),
+            "artists_orig": F.col("artists"),
+            "artists_norm": artists_norm,
+        }
     )
     return g, s
 
@@ -127,6 +129,7 @@ def impute_artists(grammy: DataFrame, spotify: DataFrame) -> DataFrame:
     the nominee itself. All write-backs are keyed joins + coalesce —
     no row identity needed (SURVEY §7.4 item 1).
     """
+    cols = grammy.columns
     is_blank = F.col("artist_norm") == ""
 
     # J1 — album imputation: dedupe source to 1 row per album key.
@@ -144,17 +147,10 @@ def impute_artists(grammy: DataFrame, spotify: DataFrame) -> DataFrame:
         & (F.col("nominee_norm") == F.col("__j1_key")),
         "left",
     )
-    g = g.withColumn(
-        "artist", F.when(F.col("__j1_artist").isNotNull(), F.col("__j1_artist")).otherwise(F.col("artist"))
-    ).drop("__j1_key", "__j1_artist")
-
-    # :138 — remaining blanks → 'Unknown'.
-    g = g.withColumn(
-        "artist",
-        F.when(is_blank & (F.col("artist").isNull() | (F.col("artist") == "")), "Unknown").otherwise(
-            F.col("artist")
-        ),
-    )
+    # write-back, then :138 — remaining blanks → 'Unknown'.
+    artist = F.coalesce(F.col("__j1_artist"), F.col("artist"))
+    artist = F.when(is_blank & (artist.isNull() | (artist == "")), "Unknown").otherwise(artist)
+    g = _set_artist(g, cols, artist)
 
     # J2 — song imputation for rows that are still 'Unknown'.
     tracks = argmax_dedupe(
@@ -171,22 +167,22 @@ def impute_artists(grammy: DataFrame, spotify: DataFrame) -> DataFrame:
         & (F.col("nominee_norm") == F.col("__j2_key")),
         "left",
     )
-    g = g.withColumn(
-        "artist", F.when(F.col("__j2_artist").isNotNull(), F.col("__j2_artist")).otherwise(F.col("artist"))
-    ).drop("__j2_key", "__j2_artist")
-
-    # F9 — direct categories: nominee IS the artist (:173-180).
-    g = g.withColumn(
-        "artist",
-        clean.impute_when(
-            F.col("artist"),
-            F.col("category_norm").isin("best new artist")
-            & (F.col("artist") == "Unknown")
-            & (F.col("nominee_norm") != ""),
-            F.col("nominee"),
-        ),
+    # write-back, then F9 — direct categories: nominee IS the artist (:173-180).
+    artist = F.coalesce(F.col("__j2_artist"), F.col("artist"))
+    artist = clean.impute_when(
+        artist,
+        F.col("category_norm").isin("best new artist")
+        & (artist == "Unknown")
+        & (F.col("nominee_norm") != ""),
+        F.col("nominee"),
     )
-    return g
+    return _set_artist(g, cols, artist)
+
+
+def _set_artist(df: DataFrame, cols: list[str], artist: Column) -> DataFrame:
+    """``cols`` of ``df`` with ``artist`` in place of the artist column:
+    one projection that also drops the join's helper columns."""
+    return df.select(*[artist.alias(c) if c == "artist" else F.col(c) for c in cols])
 
 
 # ---------------------------------------------------------------------------
@@ -194,14 +190,19 @@ def impute_artists(grammy: DataFrame, spotify: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+#: spotify_top's key: one row per (artists, track title) after normalizing.
+_TRACK_KEY = ["artists_norm", "track_name_norm"]
+
+
 def build_spotify_top(spotify: DataFrame) -> DataFrame:
     """J4 — most popular version per (artists_norm, track_name_norm)
     (:216-219), with a deterministic tiebreak the pandas quicksort
     lacks. The result is bounded by the distinct key count (≤114k in
-    the reference) — small enough to broadcast into the fuzzy join."""
+    the reference); the fuzzy join broadcasts only its key and pick
+    columns."""
     return argmax_dedupe(
         spotify,
-        ["artists_norm", "track_name_norm"],
+        _TRACK_KEY,
         [F.desc_nulls_last("popularity"), F.asc("track_id"), F.asc("track_genre")],
     )
 
@@ -215,8 +216,10 @@ def match_songs(grammy: DataFrame, spotify_top: DataFrame, mode: str = "spec") -
     pre-'(' prefix (theta arm: the artist containment runs as a
     broadcast NLJ over distinct values, the title check on the
     surviving candidates). Best match = highest
-    popularity. Unmatched rows keep NULL enrichment. Output rows ==
-    input rows (left-join conservation).
+    popularity. The match carries only the winner's track key; the
+    rest of its spotify_top row joins back once on that key. Unmatched
+    rows keep NULL enrichment. Output rows == input rows (left-join
+    conservation).
 
     strict: contains('') is vacuously true (and 'nan' artists really
     search for the substring 'nan') — exactly the shipped semantics.
@@ -262,7 +265,11 @@ def match_songs(grammy: DataFrame, spotify_top: DataFrame, mode: str = "spec") -
             F.col("track_id"),
             F.col("track_genre"),
         ],
-        right_cols=list(spotify_top.columns),
+        # only what the conditions and the pick read crosses the
+        # broadcasts and the argmax; the payload is the track key,
+        # unique in spotify_top by construction (build_spotify_top)
+        right_cols=[*_TRACK_KEY, "popularity", "track_id", "track_genre"],
+        payload_cols=_TRACK_KEY,
         # the match depends only on the normalized keys — grammy rows
         # sharing (artist, nominee) resolve once.
         probe_keys=["artist_norm", "nominee_norm", "__song_prefix"],
@@ -270,7 +277,9 @@ def match_songs(grammy: DataFrame, spotify_top: DataFrame, mode: str = "spec") -
         # over distinct (needle, artists_norm) values, then the titles.
         fallback_contains=("artists_norm", needle),
     )
-    return enriched.drop("__song_prefix")
+    # the rest of the winning track joins back once, on its key; a miss
+    # keeps a NULL key and so NULL enrichment
+    return enriched.join(spotify_top, _TRACK_KEY, "left").select(*grammy.columns, *spotify_top.columns)
 
 
 def split_song_other(grammy: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -291,20 +300,24 @@ def finalize(merged: DataFrame, mode: str = "spec") -> DataFrame:
     The reference fills NaN with 'N/A' across the whole frame and then
     un-fills numerics back to NaN for the casts — a no-op round-trip
     for numeric columns. Here strings get the sentinel and numerics
-    are cast directly (same result, one pass).
+    are cast directly (same result, one pass). One projection: each
+    kept column is converted once, in place.
     """
-    out = merged.drop(*[c for c in FINAL_DROP_COLS if c in merged.columns])
-    out = out.withColumn("winner", clean.str_to_bool(F.col("winner")))
-    for c in FLOAT_COLS:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).try_cast("double"))
-    for c in INT_COLS:
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).try_cast("double").try_cast("long"))
-    for c, t in out.dtypes:
-        if t == "string":
-            out = out.withColumn(c, clean.null_to_sentinel(F.col(c)))
-    return out
+
+    def final(c: str, dtype: str) -> Column:
+        if c == "winner":
+            return clean.str_to_bool(F.col(c))
+        if c in FLOAT_COLS:
+            return F.col(c).try_cast("double")
+        if c in INT_COLS:
+            return F.col(c).try_cast("double").try_cast("long")
+        if dtype == "string":
+            return clean.null_to_sentinel(F.col(c))
+        return F.col(c)
+
+    return merged.select(
+        *[final(c, t).alias(c) for c, t in merged.dtypes if c not in FINAL_DROP_COLS]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -317,14 +330,29 @@ def run_pipeline(grammy: DataFrame, spotify: DataFrame, mode: str = "spec") -> D
 
     One lazy logical plan end-to-end: the reference's four Airflow
     tasks with CSV/XCom hops (SURVEY §3.1) collapse into a single
-    Catalyst-optimized DAG whose only materialization points are the
-    caller's sinks.
+    Catalyst-optimized DAG, cut only at the pins below.
+
+    The call itself runs Spark jobs. Under AQE, creating a
+    ``localCheckpoint(eager=False)`` RDD finalizes the adaptive plan
+    under it, so each pin's shuffle stages run here rather than in the
+    caller's sink: 10 jobs in spec mode at reference scale (4 for the
+    imputed-grammy pin, 1 for spotify_top, 5 for the fuzzy match's
+    pass-1 pin in ``operators/joins.py``; the normalized-Spotify pin
+    has no shuffle and runs none). The pins pay for themselves (warm
+    reference-scale spec op, 4 cores, median of 8): removing the
+    grammy, spotify_top and pass-1 pins took it from 2.07 to 2.84 s,
+    removing only the grammy pin cost +0.34 s and only the spotify_top
+    pin +0.23 s.
     """
     if mode not in ("spec", "strict"):
         raise ValueError(f"unknown mode: {mode}")
     g = clean_grammy(grammy, mode)
     g, s = normalize_tables(g, spotify, mode)
     if mode == "spec":
+        # J1, J2 and J4 all read the normalized tracks: pinned, the CSV
+        # is parsed and normalized once instead of three times. Strict
+        # mode has one consumer (J4) and no pin.
+        s = s.localCheckpoint(eager=False)
         g = impute_artists(g, s)
         # Re-normalize so the match stage sees imputed artists (the
         # reference's dead pass left the norm column stale — in spec
@@ -333,14 +361,14 @@ def run_pipeline(grammy: DataFrame, spotify: DataFrame, mode: str = "spec") -> D
         g = g.withColumn("artist_norm", clean.normalize_text(F.col("artist")))
     # Pin the two intermediates that fan out to multiple downstream
     # subplans (song/other split × two match passes consume g;
-    # spotify_top feeds both match arms). Spark has no cross-branch
-    # common-subexpression reuse, so without this the impute joins and
-    # the spotify argmax dedup re-execute once per reference — at
-    # reference scale that multiplied end-to-end latency ~4×. Both are
-    # dimension-sized by construction (grammy is the award list;
-    # spotify_top is one row per track key); eager=False defers
-    # materialization to first use and keeps the blocks GC-releasable
-    # (same pattern as the fuzzy-join probe cache, operators/joins.py).
+    # spotify_top feeds both match arms and the payload join-back).
+    # Spark has no cross-branch common-subexpression reuse, so without
+    # this the impute joins and the spotify argmax dedup re-execute once
+    # per reference. Both are dimension-sized by construction (grammy is
+    # the award list; spotify_top is one row per track key); eager=False
+    # keeps the blocks GC-releasable (same pattern as the fuzzy-join
+    # probe pin, operators/joins.py), but does not defer the shuffle
+    # stages under the pin (see the docstring).
     g = g.localCheckpoint(eager=False)
     song, other = split_song_other(g)
     spotify_top = build_spotify_top(s).localCheckpoint(eager=False)

@@ -33,6 +33,21 @@ TESTDATA_TABLES = (
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
+#: Ceiling of the default driver heap.
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def driver_memory(physical_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``$SPARK_DRIVER_MEMORY`` when set, else
+    half the machine's physical memory capped at 16g. A fixed 16g let
+    the driver heap grow past what a 15 GB box had before collecting,
+    and the kernel killed the JVM."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(physical_bytes // 2 >> 20, MAX_DRIVER_MEMORY_MB)}m"
+
 
 def get_spark(app_name: str = "workhop2_etl_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -98,7 +113,7 @@ def get_spark(app_name: str = "workhop2_etl_spark", shuffle_partitions: int | No
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/w2e_warehouse"),
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     if local_dir:
