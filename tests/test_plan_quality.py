@@ -611,16 +611,12 @@ def test_fusion_queries_have_no_sortmergejoin(spark, qname, tmp_path):
     assert "CartesianProduct" not in plan, qname
 
 
-def test_bm25_score_agg_shape_split(spark):
-    """r13 optimization: the BM25 scoring core has two bit-identical
-    physical shapes, chosen per input layout (interleaved A/B in
-    _bm25_score's docstring): the IN-SESSION paths (bm25_topk, PRF)
-    use the window aggregate over term-sorted rows — no collect_list
-    ObjectHashAggregate, one query_id exchange serving scoring AND
-    ranking — while ARTIFACT PROBES keep the fold, whose per-group
-    tiny sorts beat a global term sort on scan-partitioned
-    vocab-bounded slices. Both must plan the top-k rank filter as a
-    WindowGroupLimit pushdown."""
+def test_bm25_rankings_score_through_one_window_shape(spark):
+    """One BM25 scoring shape (see ``_bm25_score``): in the executed
+    (post-AQE) plans of the in-session ranking and of the unpruned
+    artifact probe, the per-term contributions are summed by a Window
+    and ranked through a WindowGroupLimit, and no collect_list fold
+    (an ObjectHashAggregate) is left."""
     import os
     import tempfile
 
@@ -644,14 +640,15 @@ def test_bm25_score_agg_shape_split(spark):
     )
     RET.save_lexical_index(corpus_tokens, path, mode="overwrite")
     tf, df, stats, meta = RET.load_lexical_index(spark, path)
-    plan = plan_of(RET.probe_lexical_index(tf, df, stats, meta, qt, k=10))
-    assert "ObjectHashAggregate" in plan, plan[:2000]  # fold, by design
-    assert "WindowGroupLimit" in plan
-    # in-session ranking: the window shape — no object aggregate
-    lex = RET.bm25_topk(corpus_tokens, qt, k=10)
-    lplan = plan_of(lex)
-    assert "ObjectHashAggregate" not in lplan, lplan[:2000]
-    assert "WindowGroupLimit" in lplan
+    for name, ranked in (
+        ("bm25_topk", RET.bm25_topk(corpus_tokens, qt, k=10)),
+        ("probe_lexical_index", RET.probe_lexical_index(tf, df, stats, meta, qt, k=10)),
+    ):
+        assert ranked.collect(), name
+        plan = _final_plan(ranked)
+        assert re.search(r"\bWindow \[[^\n]*\bsum\(", plan), (name, plan[:3000])
+        assert "WindowGroupLimit" in plan, name
+        assert "ObjectHashAggregate" not in plan, (name, plan[:3000])
 
 
 def test_ranked_topk_operators_push_window_group_limit(spark):
@@ -713,6 +710,11 @@ _RANKED_TOPK_QUERIES = [
     "v17_topk_truncated_refine",
     "v19_hybrid_weighted",
     "t11_bm25_topk",
+    "t12_bm25_persisted_index",
+    "t13_bm25_pruned_probe",
+    "t14_bm25_index_delete",
+    "t16_bm25_prf_persisted",
+    "v16_hybrid_persisted_rrf",
 ]
 
 
@@ -721,13 +723,18 @@ def test_registry_topk_executes_window_group_limit(spark, qname):
     """Every registry query that ranks through ``dedupe.top_k`` keeps
     the WindowGroupLimit pushdown in the plan that actually ran (the
     post-AQE final plan), not only in the operator-level plans
-    above."""
+    above. Its driver-side relations are ``LocalRelation``s
+    (``session.local_relation``): no ``LogicalRDD`` leaf is left in the
+    optimized plan."""
     df = suite.QUERIES[qname](spark, SF_DIR)
     assert df.collect(), qname
     assert "WindowGroupLimit" in _final_plan(df), qname
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert "LogicalRDD" not in names, (qname, names)
 
 
-# the one row_number outside top_k: _bm25_score's 'window' shape
+# the one row_number outside top_k: _bm25_score's window sum
 # numbers each (query, doc) group's term rows only to keep ONE row
 # carrying the group's window sum — a dedup of a window aggregate
 # whose sum must see every row, not a ranking (a WindowGroupLimit
@@ -758,6 +765,37 @@ def test_row_number_lives_in_top_k_only():
                     found.add((name, getattr(fn, "name", "<module>")))
     assert ("dedupe.py", "top_k") in found
     assert found <= _ROW_NUMBER_ALLOWED, found - _ROW_NUMBER_ALLOWED
+
+
+_DRIVER_COLLECTS = ("collect", "take", "first", "head", "toPandas", "toLocalIterator")
+
+
+def test_query_side_collects_through_collect_bounded():
+    """Static guard: nothing in operators/retrieval.py, and nothing in
+    ``topk_cosine_bruteforce_blas``, pulls rows to the driver except
+    through ``session.collect_bounded`` — one bounded rule for the
+    query side, and no lazy fallback past a cap."""
+    import ast
+    import pathlib
+
+    import workhop2_etl_spark.operators as ops
+
+    root = pathlib.Path(ops.__file__).parent
+    retrieval = ast.parse((root / "retrieval.py").read_text())
+    sim = ast.parse((root / "similarity.py").read_text())
+    blas = next(
+        fn for fn in sim.body
+        if getattr(fn, "name", None) == "topk_cosine_bruteforce_blas"
+    )
+    for where, tree in (("retrieval.py", retrieval), ("topk_cosine_bruteforce_blas", blas)):
+        names = [
+            (getattr(n.func, "attr", getattr(n.func, "id", None)), n.lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+        ]
+        bare = [(n, line) for n, line in names if n in _DRIVER_COLLECTS]
+        assert not bare, (where, bare)
+        assert any(n == "collect_bounded" for n, _ in names), where
 
 
 def test_prf_persisted_second_pass_pushes_vocab(spark):

@@ -1171,3 +1171,58 @@ def test_probe_vocabulary_crosses_py4j_once(spark, tmp_path, monkeypatch):
     got = large.collect()
     want = RETOP.bm25_topk(corpus, qt, k=10).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want)) and got
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "bm25_topk",
+        "bm25_prf_expand",
+        "probe_lexical_index",
+        "probe_lexical_index_prf",
+        "topk_cosine_bruteforce_blas",
+    ],
+)
+def test_query_side_past_its_cap_raises(spark, tmp_path, monkeypatch, entry):
+    """One bounded-collect rule for every query side: a query relation
+    past its entry point's cap raises a ValueError that names the
+    entry point and the cap, instead of running a lazy plan. The
+    in-session 2^20-row cap is patched down rather than built."""
+    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
+    corpus = docs.select(
+        "doc_id",
+        F.when(F.trim("text") == "", F.array().cast("array<string>"))
+        .otherwise(F.split(F.trim("text"), " "))
+        .alias("toks"),
+    )
+    # one term, many queries: within max_terms=1, past every cap below
+    over = spark.range(100).select(
+        F.col("id").alias("query_id"), F.lit("apple").alias("term")
+    )
+    if entry in ("bm25_topk", "bm25_prf_expand"):
+        monkeypatch.setattr(RET, "_QUERY_CAP", 64)
+        cap, call = 64, lambda: getattr(RET, entry)(corpus, over)
+    elif entry == "topk_cosine_bruteforce_blas":
+        emb = spark.range(20).select(
+            F.col("id").alias("vec_id"),
+            F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"),
+        )
+        cap = 10
+        call = lambda: SIM.topk_cosine_bruteforce_blas(emb, emb, k=3, max_queries=cap)
+    else:
+        path = str(tmp_path / "lex")
+        RET.save_lexical_index(corpus, path, mode="overwrite")
+        tf, df, stats, meta = RET.load_lexical_index(spark, path)
+        if entry == "probe_lexical_index":
+            cap = 64  # 64 * max_terms (query_id, term) pairs
+            call = lambda: RET.probe_lexical_index(tf, df, stats, meta, over, max_terms=1)
+        else:
+            # 40 pairs pass the first pass's 64 * max_terms cap; the
+            # expanded relation (those 40 plus the harvest) is capped at
+            # 16 * max_terms
+            cap = 16
+            call = lambda: RET.probe_lexical_index_prf(
+                tf, df, stats, meta, over.limit(40), max_terms=1
+            )
+    with pytest.raises(ValueError, match=rf"^{entry} .* has more than {cap} rows"):
+        call()

@@ -20,14 +20,16 @@ Scale shape (the part that matters at 100 TB):
   computed corpus-wide but immediately semi-joined down to the query
   vocabulary (a broadcast), so the big ``df`` relation never shuffles
   against ``tf``.
-* Every floating-point score folds in a DETERMINISTIC order (per-term
-  contributions added sequentially in ascending-term order; two
-  bit-identical physical shapes exist — a window aggregate over
-  term-sorted rows for the in-session paths, the collect_list +
-  sort_array + ``F.aggregate`` fold for artifact probes — see
-  ``_bm25_score``), so scores are bit-reproducible against a SQL
-  oracle rather than merely close — the same discipline as the
-  v-family cosine folds in operators/similarity.py.
+* Every floating-point score folds in a DETERMINISTIC order: one
+  window aggregate over term-sorted rows adds the per-term
+  contributions sequentially in ascending-term order (``_bm25_score``,
+  the one scoring shape of every ranking), so scores are
+  bit-reproducible against a SQL oracle rather than merely close — the
+  same discipline as the v-family cosine folds in
+  operators/similarity.py.
+* Each entry point collects its distinct (query_id, term) rows once,
+  through ``session.collect_bounded``; a query relation past its cap
+  raises instead of running lazily.
 """
 
 from __future__ import annotations
@@ -36,11 +38,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from workhop2_etl_spark.operators.dedupe import top_k
-from workhop2_etl_spark.session import local_relation
+from workhop2_etl_spark.session import collect_bounded, local_relation
 
 BM25_K1 = 1.2
 BM25_B = 0.75
 RRF_K = 60
+#: Row cap of an in-session query relation (``bm25_topk``,
+#: ``bm25_prf_expand``); the artifact probes cap by ``max_terms``.
+_QUERY_CAP = 1 << 20
 
 
 def _seq_sum(contribs_by_key: Column) -> Column:
@@ -97,8 +102,8 @@ def bm25_topk(
     Evaluation note: constructing the returned frame runs ONE
     bounded eager action — the query relation (query-bounded by
     contract) materializes at the driver so its lineage executes once
-    instead of once per broadcast build; relations beyond the 2^20-row
-    guard keep the fully lazy plan.
+    instead of once per broadcast build; more than 2^20 distinct
+    (query_id, term) rows raise ``ValueError``.
 
     Plan shape: ONE corpus shuffle (the tf aggregation on (doc_id,
     term), dl carried through it as min(dl) so no re-join on doc_id);
@@ -112,11 +117,29 @@ def bm25_topk(
         _stats_partial(corpus_tokens, tok_col)
     )
     df_all = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    queries, vocab = _collect_queries(query_terms, _QUERY_CAP, "bm25_topk query_terms")
     return _bm25_rank(
-        tf, df_all, stats, query_terms,
+        tf, df_all, stats, queries, vocab,
         k=k, k1=k1, b=b, round_digits=round_digits,
         exclude_self=exclude_self,
     )
+
+
+def _collect_queries(
+    query_terms: DataFrame, cap: int, what: str
+) -> tuple[DataFrame, list[str]]:
+    """The distinct (query_id, term) rows of ``query_terms``, collected
+    once through ``collect_bounded``, as a ``LocalRelation``, and their
+    sorted vocabulary. Left lazy, the caller's query-side lineage
+    (typically a corpus scan + tokenize + explode + distinct) would
+    execute once per broadcast build of the scoring core. The distinct
+    is defensive: a duplicate input row would double-count its term's
+    contribution. A NULL term never joins, so it stays out of the
+    vocabulary (``sorted`` would raise on None against str)."""
+    qt = query_terms.select("query_id", "term").distinct()
+    rows = collect_bounded(qt, cap, what)
+    vocab = sorted({r.term for r in rows if r.term is not None})
+    return local_relation(query_terms.sparkSession, rows, qt.schema), vocab
 
 
 def _tf_relation(corpus_tokens: DataFrame, id_col: str, tok_col: str) -> DataFrame:
@@ -200,25 +223,21 @@ def _bm25_rank(
     tf: DataFrame,
     df_all: DataFrame,
     stats: DataFrame,
-    query_terms: DataFrame,
+    queries: DataFrame,
+    vocab: list[str],
     k: int,
     k1: float,
     b: float,
     round_digits: int,
     exclude_self: bool,
-    agg_shape: str = "window",
-    query_rows: list | None = None,
 ) -> DataFrame:
     """The BM25 scoring + ranking core over prepared relations —
     shared verbatim by ``bm25_topk`` (in-session) and
     ``probe_lexical_index`` (loaded artifact), so a persisted index
-    probes row-identically to an in-session ranking (``agg_shape``
-    picks the physical aggregation; both produce bit-identical
-    scores — see ``_bm25_score``)."""
+    probes row-identically to an in-session ranking."""
     agg = _bm25_score(
-        tf, df_all, stats, query_terms,
+        tf, df_all, stats, queries, vocab,
         k1=k1, b=b, round_digits=round_digits, exclude_self=exclude_self,
-        agg_shape=agg_shape, query_rows=query_rows,
     )
     return top_k(
         agg, ["query_id"], [F.desc("score"), F.asc("doc_id")], k
@@ -229,78 +248,47 @@ def _bm25_score(
     tf: DataFrame,
     df_all: DataFrame,
     stats: DataFrame,
-    query_terms: DataFrame,
+    queries: DataFrame,
+    vocab: list[str],
     k1: float,
     b: float,
     round_digits: int,
     exclude_self: bool,
     candidates: DataFrame | None = None,
-    agg_shape: str = "window",
-    query_rows: list | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, score, n_hit) — the un-ranked scoring half
     of ``_bm25_rank``, split out so the ``max_df``-pruned path
     can apply its per-query candidate restriction BEFORE the top-k
     window (reusing the ranked core would let the interim top-k cut
-    candidates that belong in the final k). ``candidates`` (optional,
-    the pruned path's (query_id, doc_id) relation — bounded by
-    contract, broadcast) restricts scoring per (query, doc) BEFORE
-    the contribution aggregation, so the collect_list/fold volume is
+    candidates that belong in the final k). ``queries`` and ``vocab``
+    are the driver-collected query relation and its sorted terms
+    (``_collect_queries``). ``candidates`` (optional, the pruned
+    path's (query_id, doc_id) relation — bounded by contract,
+    broadcast) restricts scoring per (query, doc) BEFORE the
+    contributions are summed, so the window's input is
     candidate-sized even when the posting slice is head-term-heavy.
 
-    ``agg_shape`` picks the PHYSICAL aggregation only — both shapes
-    add the per-term contributions sequentially in ascending-term
-    order from +0.0, so scores are bit-identical (pinned on the full
-    fixture corpus by test_bm25_window_sum_bit_identical_to_fold):
-
-    - ``'window'``: a window aggregate over term-sorted rows —
-      whole-stage-codegen-friendly, and its one query_id exchange also
-      serves the downstream ranking window. Interleaved min-of-4 A/B
-      at sf0.1: 4.8s → 3.2s on the in-session shape, where the
-      contribution relation arrives on the corpus aggregation's many
-      partitions and the saved exchange + codegen dominate.
-    - ``'fold'``: collect_list + sort_array + a
-      sequential fold — an ObjectHashAggregate, but its per-group
-      sorts are over ≤|query-vocab| elements. On ARTIFACT PROBES the
-      contribution relation comes off a few scan partitions and is
-      vocab-bounded; there the global term-string sort the window
-      needs measured SLOWER (2.5s → 3.9s, same interleaved protocol),
-      so the probe paths keep the fold deliberately.
-
-    ``query_rows``: the distinct (query_id, term) rows of
-    ``query_terms``, when the caller has already collected them (the
-    artifact probe has, for its vocabulary IN-list) — the relation is
-    then built from them instead of being collected a second time."""
-    # defensive distinct: a duplicate (query_id, term) input row would
-    # double-count that term's contribution — the query relation is
-    # tiny by contract, so the dedup is free
-    qt = query_terms.select("query_id", "term").distinct()
-    # materialize the query relation at the driver. Left lazy, the
-    # caller's query-side lineage (typically a corpus scan + tokenize
-    # + explode + distinct) executes once per broadcast build —
-    # query_terms and qvocab are SEPARATE broadcast exchanges, so the
-    # same scan ran 2-4 times per action. The relation is
-    # query-bounded by contract; if it exceeds the 2^20-row ceiling,
-    # fall back to the lazy form unchanged.
-    if query_rows is None:
-        cap = 1 << 20
-        query_rows = qt.limit(cap + 1).collect()
-        if len(query_rows) > cap:
-            query_rows = None
-    if query_rows is not None:
-        spark = tf.sparkSession
-        query_terms = local_relation(spark, query_rows, qt.schema)
-        # a NULL term never joins, and sorted() raises on None-vs-str
-        vocab = sorted({r.term for r in query_rows if r.term is not None})
-        qvocab = local_relation(
-            spark, [(t,) for t in vocab], qt.select("term").schema
-        )
-    else:
-        query_terms = qt
-        qvocab = qt.select("term").distinct()
+    One shape scores every ranking, in-session and artifact probe
+    alike: a window aggregate over term-sorted rows adds each (query,
+    doc)'s per-term contributions sequentially in ascending-term
+    order from +0.0 — the sum the oracle's ``list_reduce(list(v ORDER
+    BY term), +)`` computes, bit for bit (pinned against a
+    collect_list + ``_seq_sum`` fold on the full fixture corpus by
+    test_bm25_window_sum_bit_identical_to_fold). It is whole-stage
+    codegen'd, and its one query_id exchange also serves the ranking
+    window. The fold it replaced, an ObjectHashAggregate behind a
+    second exchange, measured slower on both input layouts in
+    interleaved A/Bs (4 cores, sf0.1): 4.8s → 3.2s for the in-session
+    ranking, and on term-sorted artifact probes 1.41s → 1.20s at 64
+    queries, 4.25s → 3.12s at 286 and 8.57s → 6.14s at 572 (medians,
+    PERF.md)."""
+    spark = tf.sparkSession
+    qvocab = local_relation(
+        spark, [(t,) for t in vocab], queries.select("term").schema
+    )
     df_q = df_all.join(F.broadcast(qvocab), "term")
     scored = (
-        tf.join(F.broadcast(query_terms), "term")
+        tf.join(F.broadcast(queries), "term")
         .join(F.broadcast(df_q), "term")
         .crossJoin(F.broadcast(stats))
     )
@@ -329,40 +317,17 @@ def _bm25_score(
         + F.lit(k1)
         * (F.lit(one_minus_b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
     )
-    if agg_shape not in ("window", "fold"):
-        raise ValueError(
-            f"agg_shape must be 'window' or 'fold', got {agg_shape!r}"
-        )
-    if agg_shape == "fold":
-        contrib = scored.select(
-            "query_id",
-            "doc_id",
-            F.struct(
-                F.col("term").alias("key"), (idf * tf_part).alias("v")
-            ).alias("__c"),
-        )
-        return contrib.groupBy("query_id", "doc_id").agg(
-            F.round(_seq_sum(F.collect_list("__c")), round_digits).alias(
-                "score"
-            ),
-            F.count(F.lit(1)).alias("n_hit"),
-        )
     contrib = scored.select(
         "query_id",
         "doc_id",
         "term",
         (idf * tf_part).alias("__v"),
     )
-    # The 'window' shape: the same deterministic sum —
-    # contributions added sequentially in ascending-term order,
-    # starting from +0.0 — computed by a window aggregate over
-    # term-sorted rows (a window frame's processor accumulates rows in
-    # the window's sort order, so the addition order and every last
-    # ulp of the score are unchanged vs the fold). The explicit
-    # repartition on query_id alone (hash on a prefix of the window
-    # keys still co-locates each (query, doc) group) serves BOTH this
-    # window and the downstream ranking window — one exchange where
-    # the fold shape pays two.
+    # A window frame's processor accumulates rows in the window's sort
+    # order, so the sum adds the contributions in ascending-term order.
+    # The repartition on query_id alone (a prefix of the window keys
+    # still co-locates each (query, doc) group) serves both this window
+    # and the downstream ranking window.
     wseq = Window.partitionBy("query_id", "doc_id").orderBy("term")
     wall = wseq.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
@@ -599,11 +564,13 @@ def probe_lexical_index(
     ``bm25_topk`` over the original corpus (the scoring core is
     shared verbatim and the artifact round-trips exact integers).
 
-    The query vocabulary collects to the driver (bounded loudly at
-    ``max_terms`` — query terms are dimension-sized by contract) and
-    becomes an IN-list filter pushed into the posting scan. It drops
-    non-query terms' rows during the scan but skips no file (the tf
-    layout is ``index_store._write_dirs``').
+    The distinct (query_id, term) pairs collect to the driver once
+    (``session.collect_bounded`` at 64·``max_terms`` pairs), and their
+    vocabulary — bounded loudly at ``max_terms``, query terms are
+    dimension-sized by contract — becomes an IN-list filter pushed
+    into the posting scan. It drops non-query terms' rows during the
+    scan but skips no file (the tf layout is
+    ``index_store._write_dirs``').
 
     ``max_df`` (OFF by default — the default path stays
     oracle-exact and unpruned) bounds the probe's candidate volume
@@ -636,53 +603,40 @@ def probe_lexical_index(
     term is head-frequency has no candidates and returns no rows
     (the same contract as a query matching nothing); raise max_df
     for such stopword-only probes."""
-    # Materialize the whole (query_id, term) relation at the driver
-    # in ONE action, and hand the rows to the scoring core, which
-    # builds its query relation and vocabulary from them without
-    # collecting again. The lazy form executed the caller's
-    # query-side plan once for this vocab collect and once per
-    # broadcast build inside the scoring core, each time re-running
-    # the caller's corpus-scan/tokenize/explode lineage. The pair
-    # relation is the same bounded class as the vocabulary itself
-    # (|Q|·terms); if it somehow exceeds the generous 64·max_terms
-    # ceiling, fall back to a vocab-only collect instead of failing.
-    pair_cap = max_terms * 64
-    pair_rows = (
-        query_terms.select("query_id", "term")
-        .distinct()
-        .limit(pair_cap + 1)
-        .collect()
+    queries, vocab = _collect_queries(
+        query_terms, 64 * max_terms,
+        "probe_lexical_index query_terms (64*max_terms)",
     )
-    if len(pair_rows) <= pair_cap:
-        # NULL terms never match a join/IN-list (the lazy path dropped
-        # them silently); drop them before sorting — a None alongside
-        # strings would raise from sorted()
-        vocab = sorted({r.term for r in pair_rows if r.term is not None})
-        if len(vocab) > max_terms:
-            raise ValueError(
-                f"probe_lexical_index collected more than max_terms="
-                f"{max_terms} distinct query terms; the query side must "
-                "be the bounded relation — raise max_terms explicitly "
-                "if this is intentional"
-            )
-        query_terms = local_relation(
-            tf.sparkSession,
-            pair_rows,
-            query_terms.select("query_id", "term").schema,
+    return _probe_lexical(
+        tf, df, stats, queries, vocab, k=k, k1=k1, b=b,
+        round_digits=round_digits, exclude_self=exclude_self,
+        max_terms=max_terms, max_df=max_df,
+    )
+
+
+def _probe_lexical(
+    tf: DataFrame,
+    df: DataFrame,
+    stats: DataFrame,
+    queries: DataFrame,
+    vocab: list[str],
+    k: int,
+    k1: float,
+    b: float,
+    round_digits: int,
+    exclude_self: bool,
+    max_terms: int,
+    max_df: int | None,
+) -> DataFrame:
+    """``probe_lexical_index`` over its driver-collected query relation
+    (``_collect_queries``)."""
+    if len(vocab) > max_terms:
+        raise ValueError(
+            f"probe_lexical_index collected more than max_terms="
+            f"{max_terms} distinct query terms; the query side must "
+            "be the bounded relation — raise max_terms explicitly "
+            "if this is intentional"
         )
-    else:
-        pair_rows = None
-        vocab_rows = (
-            query_terms.select("term").distinct().limit(max_terms + 1).collect()
-        )
-        if len(vocab_rows) > max_terms:
-            raise ValueError(
-                f"probe_lexical_index collected more than max_terms="
-                f"{max_terms} distinct query terms; the query side must "
-                "be the bounded relation — raise max_terms explicitly "
-                "if this is intentional"
-            )
-        vocab = [r.term for r in vocab_rows]
     term_in = _term_in(tf.sparkSession, vocab)
     tf_v = tf.filter(term_in)
     df_v = df.filter(term_in)
@@ -692,15 +646,10 @@ def probe_lexical_index(
         # under AQE, so eager driver collects here would serialize two
         # extra actions for nothing (measured +~1s per probe at sf0.1
         # when tried; so this path stays lazy).
-        # agg_shape='fold': probe contributions come off a few scan
-        # partitions and are vocab-bounded — the fold's per-group tiny
-        # sorts beat the window shape's global term sort here
-        # (interleaved A/B recorded in _bm25_score's docstring).
         return _bm25_rank(
-            tf_v, df_v, stats, query_terms,
+            tf_v, df_v, stats, queries, vocab,
             k=k, k1=k1, b=b, round_digits=round_digits,
-            exclude_self=exclude_self, agg_shape="fold",
-            query_rows=pair_rows,
+            exclude_self=exclude_self,
         )
     # max_df-PRUNED path only: materialize the
     # vocabulary-sized df slice and the one-row stats at the driver.
@@ -714,14 +663,19 @@ def probe_lexical_index(
     # class as the vocabulary IN-list itself, at any corpus size.
     spark = tf.sparkSession
     df_v = df_v.select("term", "df")
-    df_v = local_relation(spark, df_v.collect(), df_v.schema)
+    df_v = local_relation(
+        spark,
+        collect_bounded(df_v, max_terms, "lexical index df slice (max_terms)"),
+        df_v.schema,
+    )
     stats = stats.select("n_docs", "avgdl")
-    stats = local_relation(spark, stats.collect(), stats.schema)
+    stats = local_relation(
+        spark, collect_bounded(stats, 1, "lexical index stats"), stats.schema
+    )
     return _bm25_rank_pruned(
-        tf_v, df_v, stats, query_terms,
+        tf_v, df_v, stats, queries, vocab,
         k=k, k1=k1, b=b, round_digits=round_digits,
         exclude_self=exclude_self, max_df=int(max_df),
-        query_rows=pair_rows,
     )
 
 
@@ -729,14 +683,14 @@ def _bm25_rank_pruned(
     tf: DataFrame,
     df_all: DataFrame,
     stats: DataFrame,
-    query_terms: DataFrame,
+    queries: DataFrame,
+    vocab: list[str],
     k: int,
     k1: float,
     b: float,
     round_digits: int,
     exclude_self: bool,
     max_df: int,
-    query_rows: list | None = None,
 ) -> DataFrame:
     """The ``max_df`` candidate-pruned ranking (see
     ``probe_lexical_index``). Deterministic semantics, independent of
@@ -749,12 +703,11 @@ def _bm25_rank_pruned(
     (≤ Σ_rare df ≤ |vocab|·max_df rows by construction) broadcasts
     into a semi-join on the scored slice, so the corpus-sized side
     still never shuffles."""
-    query_terms = query_terms.select("query_id", "term").distinct()
-    rare_q = query_terms.join(
+    rare_q = queries.join(
         F.broadcast(df_all.filter(F.col("df") <= max_df).select("term")),
         "term",
     )
-    head_q = query_terms.join(
+    head_q = queries.join(
         F.broadcast(df_all.filter(F.col("df") > max_df)), "term"
     )
     # candidate (query_id, doc_id): matches ≥1 rare term of the query
@@ -768,22 +721,20 @@ def _bm25_rank_pruned(
     # The per-(query, doc) candidate semi-join lands INSIDE the
     # scoring core, before the contribution aggregation — a doc that
     # matches only head terms of query q (candidate via another
-    # query) never reaches q's fold, and the collect_list volume is
+    # query) never reaches q's sum, and the window's input is
     # candidate-sized even for stopword-heavy posting slices.
     cand_docs = cand.select("doc_id").distinct()
     scored = _bm25_score(
         tf.join(F.broadcast(cand_docs), "doc_id"),
         df_all,
         stats,
-        query_terms,
+        queries,
+        vocab,
         k1=k1,
         b=b,
         round_digits=round_digits,
         exclude_self=exclude_self,
         candidates=cand,
-        # probe-slice input: the fold shape wins here (see _bm25_score)
-        agg_shape="fold",
-        query_rows=query_rows,
     )
     ranked = top_k(scored, ["query_id"], [F.desc("score"), F.asc("doc_id")], k)
     # per-query head-term score upper bound HB(q) = Σ idf·(k1+1).
@@ -885,10 +836,11 @@ def bm25_prf_expand(
     aggregation; at 100 TB run both passes against the persisted
     lexical index instead (load once, probe twice).
 
-    Execution: the expanded relation materializes
-    HERE, at the driver — it is query-bounded by contract (|Q|·(terms
-    + m_expand) rows, guarded loudly at 2^20), the same bounded-
-    collect class as ``probe_lexical_index_prf``'s expansion. Lazy
+    Execution: the query relation and the expanded relation each
+    materialize HERE, at the driver, through ``session.collect_bounded``
+    — both are query-bounded by contract (|Q|·(terms + m_expand) rows,
+    raising past 2^20), the same bounded-collect class as
+    ``probe_lexical_index_prf``'s expansion. Lazy
     nesting cost pass 1 twice (the returned relation sat in pass 2's
     lineage and was broadcast-built once per reference), and the tf
     relation — identical in pass 1, the harvest, and the caller's
@@ -906,31 +858,26 @@ def bm25_prf_expand(
         )
     from pyspark import StorageLevel
 
+    queries, vocab = _collect_queries(
+        query_terms, _QUERY_CAP, "bm25_prf_expand query_terms"
+    )
     tf = _tf_relation(corpus_tokens, id_col, tok_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     try:
-        query_terms = query_terms.select("query_id", "term").distinct()
         df_all = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         stats = _stats_from_counts(_doc_stats(tf))
         fb = _bm25_rank(
-            tf, df_all, stats, query_terms,
+            tf, df_all, stats, queries, vocab,
             k=n_feedback, k1=k1, b=b, round_digits=round_digits,
             exclude_self=True,
         ).select("query_id", "doc_id")
-        expanded = query_terms.unionByName(
-            _prf_harvest(tf, fb, query_terms, m_expand)
+        expanded = queries.unionByName(
+            _prf_harvest(tf, fb, queries, m_expand)
         )
-        cap = 1 << 20
-        rows = expanded.limit(cap + 1).collect()
-        if len(rows) > cap:
-            # out-of-contract input: fall back to the LAZY expanded
-            # relation — slow (pass 1 + the harvest sit in the
-            # caller's pass-2 lineage), but never an error where the
-            # lazy form worked. The
-            # unpersist in the finally below still runs; the lazy plan
-            # recomputes tf, which is exactly the old cost model.
-            return expanded
+        rows = collect_bounded(
+            expanded, _QUERY_CAP, "bm25_prf_expand expanded query_terms"
+        )
         return local_relation(
             corpus_tokens.sparkSession, rows, expanded.schema
         )
@@ -994,38 +941,27 @@ def probe_lexical_index_prf(
     are exact integers). ``max_df`` applies to both probe passes (the
     bounded serving posture; the result then carries the pruned
     path's per-query ``exact`` certificate from pass 2)."""
-    query_terms = query_terms.select("query_id", "term").distinct()
-    fb = probe_lexical_index(
-        tf, df, stats, meta, query_terms, k=n_feedback,
+    probe = dict(
         k1=k1, b=b, round_digits=round_digits, exclude_self=exclude_self,
         max_terms=max_terms, max_df=max_df,
+    )
+    queries, vocab = _collect_queries(
+        query_terms, 64 * max_terms,
+        "probe_lexical_index_prf query_terms (64*max_terms)",
+    )
+    fb = _probe_lexical(
+        tf, df, stats, queries, vocab, k=n_feedback, **probe
     ).select("query_id", "doc_id")
-    # materialize the expanded query relation ONCE, at the driver —
-    # it is query-bounded by contract (|Q|·(terms + m_expand) rows,
-    # the same bounded-collect class as the probe's own vocabulary
-    # IN-list, guarded by the same max_terms ceiling). Without this,
-    # pass 1 + the harvest sit in pass 2's lineage and execute twice
-    # (once for pass 2's vocabulary collect, again in its final
-    # action); a local relation also makes that vocabulary collect
-    # free and broadcasts without lineage.
-    exp_rows = (
-        query_terms.unionByName(_prf_harvest(tf, fb, query_terms, m_expand))
-        .limit(max_terms * 16 + 1)
-        .collect()
+    # the expanded query relation materializes ONCE, at the driver —
+    # it is query-bounded by contract (|Q|·(terms + m_expand) rows).
+    # Left lazy, pass 1 + the harvest would sit in pass 2's lineage
+    # and execute once per broadcast build.
+    expanded, exp_vocab = _collect_queries(
+        queries.unionByName(_prf_harvest(tf, fb, queries, m_expand)),
+        16 * max_terms,
+        "probe_lexical_index_prf expanded query_terms (16*max_terms)",
     )
-    if len(exp_rows) > 16 * max_terms:
-        raise ValueError(
-            f"probe_lexical_index_prf's expanded (query_id, term) "
-            f"relation exceeds 16*max_terms={16 * max_terms} rows; the "
-            "query side must be the bounded relation — raise max_terms "
-            "if intentional"
-        )
-    expanded = local_relation(tf.sparkSession, exp_rows, query_terms.schema)
-    return probe_lexical_index(
-        tf, df, stats, meta, expanded, k=k,
-        k1=k1, b=b, round_digits=round_digits, exclude_self=exclude_self,
-        max_terms=max_terms, max_df=max_df,
-    )
+    return _probe_lexical(tf, df, stats, expanded, exp_vocab, k=k, **probe)
 
 
 def bm25_contrib_sql(

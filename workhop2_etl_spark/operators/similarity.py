@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workhop2_etl_spark.operators.dedupe import top_k
-from workhop2_etl_spark.session import local_relation
+from workhop2_etl_spark.session import collect_bounded, local_relation
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -493,9 +493,9 @@ def topk_cosine_bruteforce_blas(
     order differs below it).
 
     Contracts enforced loudly (not silently): the query side must stay
-    dimension-sized — the collect is capped at ``max_queries`` via a
-    ``limit(max_queries+1)`` pre-collect bound, so a corpus-sized
-    ``queries`` raises instead of OOMing the driver — and both id
+    dimension-sized — it is collected through
+    ``session.collect_bounded`` at ``max_queries`` rows, so a
+    corpus-sized ``queries`` raises instead of OOMing the driver — and both id
     columns must be integral (the int64 kernel would crash on string
     ids and silently re-type overflow-free schemas); the output id
     columns keep the inputs' declared types, same as the expression
@@ -514,14 +514,10 @@ def topk_cosine_bruteforce_blas(
                 "non-integer id schemas"
             )
     out_schema = f"query_id {q_id_t}, neighbor_id {c_id_t}, score double"
-    q_rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"topk_cosine_bruteforce_blas collected more than max_queries="
-            f"{max_queries} query rows; the query side must be the bounded "
-            "relation (batch of probes, not a corpus) — raise max_queries "
-            "explicitly if this is intentional"
-        )
+    q_rows = collect_bounded(
+        queries.select(id_col, vec_col), max_queries,
+        "topk_cosine_bruteforce_blas queries (max_queries)",
+    )
     if not q_rows:
         return local_relation(corpus.sparkSession, [], out_schema + ", rank int")
     import numpy as np

@@ -165,13 +165,28 @@ def local_relation(
     list-built frame's.
 
     The rows live on the driver, so every caller bounds them first:
-    query-side relations by the probe's ``max_terms`` contract (or a
-    2^20-row guard), index geometry (planes, centroids, codebooks) by
-    its parameters, delete ids by the caller's list, and report rows
-    at one per rule or index."""
+    query-side relations through ``collect_bounded``, index geometry
+    (planes, centroids, codebooks) by its parameters, delete ids by
+    the caller's list, and report rows at one per rule or index."""
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def collect_bounded(df: DataFrame, cap: int, what: str) -> list:
+    """The rows of ``df``, which must number at most ``cap`` — the one
+    rule by which a relation that is bounded by contract (a probe's
+    query side, its vocabulary-sized statistics) reaches the driver.
+    One action reads at most ``cap + 1`` rows; more than ``cap``
+    raises a ``ValueError`` naming ``what`` and the cap instead of
+    running the caller's plan lazily or exhausting the driver."""
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(
+            f"{what} has more than {cap} rows; it must be the bounded "
+            "relation — raise the cap explicitly if this is intentional"
+        )
+    return rows
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
