@@ -1,8 +1,9 @@
-"""Persisted ANN index lifecycle (operators/index_store.py): build →
-save → load → probe must equal the in-session probe exactly, and
-loading under drifted parameters must fail loudly — the 100 TB
-posture is build-once, probe-many across sessions (r08 verdict ask
-#4)."""
+"""Persisted ANN index lifecycle (operators/index_store.py): the
+in-session searches share the row builder and the probe with the
+persisted path, so build → save → load → probe must return their rows
+exactly (the parquet round trip is lossless), and loading under
+drifted parameters must fail loudly — the 100 TB posture is
+build-once, probe-many across sessions."""
 
 from __future__ import annotations
 
@@ -30,7 +31,8 @@ def _tmp(name: str) -> str:
 
 @pytest.mark.parametrize("sig_kernel", ["expr", "blas"])
 def test_lsh_index_roundtrip_probe_identical(spark, sig_kernel):
-    """save → load → probe ≡ the in-session topk_cosine_lsh_multitable
+    """topk_cosine_lsh_multitable shares the row builder and the probe
+    with the persisted path; save → load → probe returns its rows
     (vec/norm doubles round-trip parquet exactly). The build signs with
     the BLAS kernel; the persisted (id, table_id, sig) rows equal what
     EITHER signature kernel assigns the corpus, so the probe — which
@@ -148,10 +150,10 @@ def test_lsh_index_incremental_append(spark):
 
 
 def test_ivf_index_roundtrip_probe_identical(spark):
-    """save → load → probe ≡ the in-session topk_cosine_ivf with the
-    same centroids, at nprobe=1 and at the nprobe=2 recall knob
-    (vec/norm doubles and cell assignments round-trip parquet
-    exactly; the probe path is the shared _ivf_probe)."""
+    """topk_cosine_ivf shares the row builder and the probe with the
+    persisted path; save → load → probe returns its rows for the same
+    centroids, at nprobe=1 and at the nprobe=2 recall knob (vec/norm
+    doubles and cell assignments round-trip parquet exactly)."""
     emb = load_table(spark, SF_DIR, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     cents = SIM.fit_centroids(emb, n_centroids=4, seed=7, max_iter=5)
@@ -500,8 +502,9 @@ def test_lsh_index_int8_quantized(spark):
 
 def test_ivf_index_pq8_lifecycle(spark):
     """store_dtype='pq8': the artifact stores PQ codes + recon norm
-    with the codebooks riding inside; a loaded probe is row-identical
-    to the in-session topk_cosine_ivf_pq; build-half-then-append-half
+    with the codebooks riding inside; the in-session topk_cosine_ivf_pq
+    shares the pq8 row builder and the probe, and a loaded probe
+    returns its rows; build-half-then-append-half
     equals single-shot; stream ingest and retrain keep the tier and
     codebooks; a corrupt codebook dir fails loudly."""
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -570,11 +573,12 @@ def test_ivf_index_pq8_lifecycle(spark):
 def test_insession_ivf_pq_never_ranks_corrupt_vectors(spark):
     """Two near-copies of a query vector — one carrying a NaN element,
     one cut to half length — must never come back from the in-session
-    IVF-PQ search, in recon or adc mode: the corpus encodes through
-    pq_encode_blas, which drops them, where the expression encoder
-    gave both valid codewords and ranked them 1–2 at score 1.0. The
-    in-session rows equal the persisted pq8 path for the same
-    centroids and codebooks."""
+    IVF-PQ search: the corpus encodes through pq_encode_blas, which
+    drops them, where the expression encoder gave both valid codewords
+    and ranked them 1–2 at score 1.0. The in-session search shares the
+    pq8 row builder and the probe with the persisted path, and a
+    save → load round trip of the same centroids and codebooks returns
+    the same rows."""
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     qvec = [float(x) for x in queries.orderBy("vec_id").first().embedding]
@@ -591,14 +595,11 @@ def test_insession_ivf_pq_never_ranks_corrupt_vectors(spark):
     cents = [(i, list(r.embedding)) for i, r in enumerate(rows)]
     cb = SIM.sample_pq_codebooks(emb, dim=DIM)
 
-    got = {}
-    for mode in ("recon", "adc"):
-        got[mode] = sorted(map(tuple, SIM.topk_cosine_ivf_pq(
-            corpus, queries, cents, cb, dim=DIM, k=3, nprobe=8,
-            score_mode=mode,
-        ).collect()))
-        ids = {r[1] for r in got[mode]}
-        assert got[mode] and not ids & {nan_id, short_id}, (mode, ids)
+    got = sorted(map(tuple, SIM.topk_cosine_ivf_pq(
+        corpus, queries, cents, cb, dim=DIM, k=3, nprobe=8,
+    ).collect()))
+    ids = {r[1] for r in got}
+    assert got and not ids & {nan_id, short_id}, ids
 
     path = _tmp("ivf_pq8_dirty")
     IDX.save_ivf_index(corpus, path, cents, dim=DIM, store_dtype="pq8",
@@ -606,7 +607,7 @@ def test_insession_ivf_pq_never_ranks_corrupt_vectors(spark):
     postings, lc, lm = IDX.load_ivf_index(spark, path)
     persisted = sorted(map(tuple, IDX.probe_ivf_index(
         postings, lc, lm, queries, k=3, nprobe=8).collect()))
-    assert persisted == got["recon"]
+    assert persisted == got
 
 
 def test_artifacts_with_kernel_metadata_still_grow(spark):

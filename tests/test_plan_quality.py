@@ -991,6 +991,54 @@ def test_parquet_reads_declare_a_schema():
     assert found == set(PARQUET_READ_ALLOWLIST), found ^ set(PARQUET_READ_ALLOWLIST)
 
 
+# The corpus-side ANN kernels. Only the index row builders call them,
+# so an in-session search and a persisted index of one kind build the
+# same rows and rank them through the same probe.
+ANN_CORPUS_KERNELS = (
+    "with_multitable_signatures_blas", "ivf_assign_blas", "pq_encode_blas",
+)
+ANN_KERNEL_CALLERS = {
+    ("operators/similarity.py", "_signed_rows"): "the LSH index rows",
+    ("operators/similarity.py", "_posting_rows"): "the IVF postings, every tier",
+    ("suite/similarity.py", "v4_embedding_near_dup"):
+        "a one-table self-join: the corpus signs once, and no index is probed",
+}
+# the IVF-PQ lookup-table score mode and the encoder's reconstruction
+# hooks, which only a second in-session IVF-PQ path needed
+DELETED_SEARCH_HOOKS = ("score_mode", "recon_col", "_cb_rel")
+
+
+def test_one_search_path_per_ann_index_kind():
+    """Static scope guard: no call to a corpus-side ANN kernel in the
+    engine outside the allowlist above, and no deleted search hook
+    left anywhere in it."""
+    import ast
+    import pathlib
+
+    import workhop2_etl_spark
+
+    root = pathlib.Path(workhop2_etl_spark.__file__).parent
+    found, hooks = set(), set()
+    for path in root.rglob("*.py"):
+        rel = path.relative_to(root).as_posix()
+        text = path.read_text()
+        hooks |= {
+            (rel, h) for h in DELETED_SEARCH_HOOKS if re.search(rf"\b{h}\b", text)
+        }
+        tree = ast.parse(text)
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call) and (
+                    getattr(node.func, "attr", None)
+                    or getattr(node.func, "id", None)
+                ) in ANN_CORPUS_KERNELS:
+                    found.add((rel, fn.name))
+    assert not hooks, sorted(hooks)
+    assert found == set(ANN_KERNEL_CALLERS), found ^ set(ANN_KERNEL_CALLERS)
+
+
 def _sql_executions(spark, seen=None) -> dict:
     """{execution id: physical plan description} of the SQL executions
     the status store holds (it is kept with the UI off), leaving out

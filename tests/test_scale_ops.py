@@ -1687,41 +1687,6 @@ def test_pq_rejects_dim_not_divisible_by_subspaces(spark, tmp_path):
     assert not os.path.exists(path)
 
 
-def test_ivf_pq_adc_matches_reconstruction_scoring(spark):
-    """score_mode='adc' (per-query codeword lookup table, m lookups
-    per pair) must produce the same neighbor sets as reconstruction
-    scoring, with scores equal up to float addition order (the m
-    partials sum in a hash aggregate)."""
-    from workhop2_etl_spark.operators import similarity as SIM
-    from workhop2_etl_spark.suite.similarity import DIM, N_CENTROIDS
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    rows = (
-        emb.filter(F.col("vec_id") % 37 == 0).orderBy("vec_id")
-        .limit(N_CENTROIDS).select("embedding").collect()
-    )
-    cents = [(i, list(r.embedding)) for i, r in enumerate(rows)]
-    cb = SIM.sample_pq_codebooks(emb, dim=DIM)
-
-    recon = SIM.topk_cosine_ivf_pq(
-        emb, queries, cents, cb, dim=DIM, k=5, nprobe=2).collect()
-    adc = SIM.topk_cosine_ivf_pq(
-        emb, queries, cents, cb, dim=DIM, k=5, nprobe=2,
-        score_mode="adc").collect()
-
-    rset = {(r.query_id, r.neighbor_id): r.score for r in recon}
-    aset = {(r.query_id, r.neighbor_id): r.score for r in adc}
-    assert set(rset) == set(aset) and rset
-    for pair, s in rset.items():
-        assert abs(s - aset[pair]) <= 1e-6, (pair, s, aset[pair])
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="score_mode"):
-        SIM.topk_cosine_ivf_pq(
-            emb, queries, cents, cb, dim=DIM, score_mode="lut")
-
-
 def test_pq_encode_blas_identical_to_expression(spark):
     """The Arrow/BLAS PQ encoder emits code-for-code IDENTICAL
     assignments and bit-identical stored reconstruction norms to the

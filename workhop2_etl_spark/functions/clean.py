@@ -113,7 +113,7 @@ def parse_timestamp_coerce(c: Column, fmt: str = "yyyy-MM-dd'T'HH:mm:ssXXX") -> 
     unquoted = re.sub(r"'[^']*'", "", fmt)
     has_offset = any(tok in unquoted for tok in ("X", "x", "Z", "O", "V"))
     if has_offset:
-        # Range guard (r09 adversarial pass): a parseable instant
+        # Range guard (found by adversarial inputs): a parseable instant
         # whose UTC wall-clock falls outside TIMESTAMP_NTZ's domain
         # ('9999-12-31T23:59:59-01:00' renders as year 10000;
         # '0001-01-01T00:00:00+05:00' as year 0) would otherwise

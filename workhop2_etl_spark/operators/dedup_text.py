@@ -342,34 +342,6 @@ def near_dup_pairs(
 # ---------------------------------------------------------------------------
 
 
-def simhash16(c: Column) -> Column:
-    """16-bit SimHash over word tokens.
-
-    Per token, the hash value is the first 4 hex chars of md5 (16
-    bits); each bit votes +1/-1 weighted by presence; the signature
-    bit is 1 iff the vote is positive. Small enough to stay exact in
-    integer SQL arithmetic in any oracle engine, while exercising the
-    real SimHash shape (per-bit majority over token hashes).
-    """
-    toks = F.array_distinct(_norm_tokens(c))
-    hashes = F.transform(toks, lambda t: F.conv(F.substring(F.md5(t), 1, 4), 16, 10).cast("long"))
-
-    def vote_for_bit(b: int):
-        # 2-arg lambda via closure — see hash_with note above.
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bits = []
-    for b in range(16):
-        vote = F.aggregate(hashes, F.lit(0), vote_for_bit(b))
-        bits.append(F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    total = bits[0]
-    for x in bits[1:]:
-        total = total + x
-    return total.cast("int")
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -99,7 +99,7 @@ def png_decode(payload: bytes):
         (length,), ctype = struct.unpack(">I", b[pos : pos + 4]), b[pos + 4 : pos + 8]
         data = b[pos + 8 : pos + 8 + length]
         if ctype == b"IHDR":
-            if len(data) != 13:  # truncated/corrupt header (fuzz r09)
+            if len(data) != 13:  # truncated/corrupt header (found by fuzzing)
                 return None
             w, h, depth, color, _, _, interlace = struct.unpack(">IIBBBBB", data)
             if depth != 8 or interlace != 0 or color not in (0, 2, 6):
@@ -504,7 +504,7 @@ def _split_entropy_segments(b: bytes, start: int) -> list[bytes]:
         if m == 0xFF:
             # T.81 B.1.1.2: any number of 0xFF FILL bytes may precede
             # a marker (including RSTn) — skip them instead of
-            # treating FF FF as end-of-scan (r08 ADVICE #3)
+            # treating FF FF as end-of-scan
             i += 1
             continue
         if m == 0x00:

@@ -15,7 +15,7 @@ object stores:
 
 * ``save_lsh_index`` / ``append_lsh_index`` / ``load_lsh_index`` /
   ``probe_lsh_index`` — the multi-table hyperplane signature index
-  (operators/similarity.py::with_multitable_signatures*). The saved
+  (rows built by operators/similarity.py::_signed_rows). The saved
   relation is one row per (vector, table): id, vector, its L2 norm,
   table_id, sig — everything the probe needs, so probing never
   touches the original corpus table.
@@ -44,6 +44,13 @@ object stores:
   ``index_changes`` — the CDC changelog of ledgered mutations
   between two commit sequences, reading only the tailed batches'
   own files.
+
+This module holds persistence only. The rows an index stores are
+built, and probed, by operators/similarity.py (``_signed_rows``,
+``_posting_rows``, ``probe_lsh_index``, ``probe_ivf_index``) — the
+same builder and probe the in-session searches run — so a loaded
+index ranks exactly as one built in session. Both probes are
+re-exported here.
 
 Every artifact carries a metadata record (kind, dim, planes, tables,
 seed, format version) written as a one-row JSON dataset
@@ -77,16 +84,11 @@ from workhop2_etl_spark.operators.retrieval import (
     _tf_relation,
 )
 from workhop2_etl_spark.operators.similarity import (
-    _ivf_probe,
-    _multitable_probe,
-    _pq_codebook_relation,
-    ivf_assign,
-    ivf_assign_blas,
-    l2_norm,
-    pq_decode,
-    pq_encode_blas,
-    with_multitable_signatures,
-    with_multitable_signatures_blas,
+    _decoded_postings,
+    _posting_rows,
+    _signed_rows,
+    probe_ivf_index,
+    probe_lsh_index,
 )
 from workhop2_etl_spark.operators import ledger
 from workhop2_etl_spark.session import arrow_table, local_relation
@@ -531,39 +533,6 @@ def save_lsh_index(
     return meta
 
 
-def _signed_rows(
-    corpus: DataFrame, meta: dict, id_col: str, vec_col: str
-) -> DataFrame:
-    """The LSH index rows of ``corpus`` under the geometry in ``meta``:
-    (id, vec | qvec + scale, norm, table_id, sig)."""
-    store_dtype = meta.get("store_dtype", "float64")
-    if store_dtype not in ("float64", "int8"):
-        raise ValueError(
-            f"store_dtype must be 'float64' or 'int8', got {store_dtype!r}"
-        )
-    base = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    if store_dtype == "int8":
-        # the LSH relation stores the vector once per TABLE row (×L
-        # redundancy), so quantized storage compounds: ~8× smaller
-        # elements × the L-way duplication. Signing always runs on
-        # the float vector (bucket choice is never quantized); the
-        # quantization is the shared _int8_quantize (dirty-vector
-        # guard and HALF_UP convention documented there).
-        base = _int8_quantize(base)
-    else:
-        base = base.withColumn("norm", l2_norm(F.col("vec")))
-    signed = with_multitable_signatures_blas(
-        base,
-        "vec",
-        int(meta["dim"]),
-        int(meta["num_planes"]),
-        int(meta["num_tables"]),
-        table_col="table_id",
-        sig_col="sig",
-    )
-    return signed.drop("vec") if store_dtype == "int8" else signed
-
-
 def append_lsh_index(
     corpus_delta: DataFrame,
     path: str,
@@ -616,51 +585,6 @@ def load_lsh_index(
     if tomb is not None:  # pending deletes: logical until compaction
         index = index.join(F.broadcast(tomb), "id", "left_anti")
     return index, meta
-
-
-def probe_lsh_index(
-    index: DataFrame,
-    meta: dict,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Top-k cosine neighbors from a LOADED index — identical results
-    to ``topk_cosine_lsh_multitable`` over the original corpus with
-    the index's parameters (the persisted vec/norm round-trip parquet
-    doubles exactly; the pytest twin asserts row equality).
-
-    The corpus side is the index relation as loaded (never re-signed,
-    never re-normed); only the |Q| query vectors are signed here, with
-    the expression kernel — signatures are kernel-independent by the
-    documented sign-identity, and |Q| is small by contract. An
-    ``int8`` artifact rescans with dequantized vectors — scores are
-    approximate within quantization error, buckets are exact."""
-    q = with_multitable_signatures(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-        ).withColumn("__qn", l2_norm(F.col("__qvec"))),
-        "__qvec",
-        int(meta["dim"]),
-        int(meta["num_planes"]),
-        int(meta["num_tables"]),
-        table_col="__qt",
-        sig_col="__qsig",
-    )
-    if meta.get("store_dtype", "float64") == "int8":
-        cvec = _dequant_int8(F.col("qvec"), F.col("scale"))
-    else:
-        cvec = F.col("vec")
-    c = index.select(
-        F.col("id").alias("neighbor_id"),
-        cvec.alias("__cvec"),
-        F.col("norm").alias("__cn"),
-        F.col("table_id").alias("__ct"),
-        F.col("sig").alias("__csig"),
-    )
-    return _multitable_probe(c, q, k=k, round_digits=round_digits)
 
 
 # ---------------------------------------------------------------------------
@@ -840,97 +764,6 @@ def save_ivf_index(
     return meta
 
 
-def _dequant_int8(qvec, scale):
-    """Dequantized float64 vector from an int8-quantized posting —
-    the probe-side inverse of the quantization in
-    ``_int8_quantize`` (pure expressions, JVM-side)."""
-    return F.transform(qvec, lambda q: q.cast("double") * scale)
-
-
-def _int8_quantize(df: DataFrame, vec: str = "vec") -> DataFrame:
-    """Symmetric per-vector int8 scalar quantization (FAISS SQ8):
-    appends ``scale`` (max|x|/127 — the full int8 range per vector),
-    ``qvec`` (array<tinyint>), and ``norm`` (of the DEQUANTIZED
-    vector, so probe cosines are internally consistent). Shared by
-    the LSH and IVF int8 tiers — ONE quantization convention.
-
-    Quantization uses Spark SQL round (HALF_UP) — reproducible in
-    ANSI SQL, so an oracle can recompute the identical stored values.
-
-    Dirty-vector guard: a NaN element drives ``scale`` to NaN
-    (greatest's NaN-largest ordering) and an ±inf element drives it
-    to +inf, where inf/inf = NaN — either way the ANSI NaN→tinyint
-    cast would fail the WHOLE build job on one corrupt row. Such
-    rows store zeros under their honest non-finite scale; the
-    dequantized vector is then all-NaN, its norm NaN, and the
-    scoring guard (similarity._cosine_from_denom) NULLs them out of
-    every ranking — the same exclusion the float tier applies to
-    non-finite vectors."""
-    scale = F.aggregate(
-        F.transform(F.col(vec), F.abs),
-        F.lit(0.0),
-        lambda acc, v: F.greatest(acc, v),
-    ) / F.lit(127.0)
-    q_ok = (
-        (F.col("scale") > 0)
-        & ~F.isnan(F.col("scale"))
-        & (F.col("scale") != float("inf"))
-    )
-    qvec = F.when(
-        q_ok,
-        F.transform(
-            F.col(vec),
-            lambda x: F.round(x / F.col("scale")).cast("tinyint"),
-        ),
-    ).otherwise(
-        F.transform(F.col(vec), lambda x: F.lit(0).cast("tinyint"))
-    )
-    return (
-        df.withColumn("scale", scale)
-        .withColumn("qvec", qvec)
-        .withColumn("norm", l2_norm(_dequant_int8(F.col("qvec"), F.col("scale"))))
-    )
-
-
-def _posting_rows(
-    corpus: DataFrame,
-    meta: dict,
-    id_col: str,
-    vec_col: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[tuple[int, int, list[float]]] | None,
-) -> DataFrame:
-    """The IVF postings of ``corpus`` assigned under ``centroids``, in
-    the storage tier of ``meta``: (id, vec | qvec + scale | codes,
-    norm, centroid_id)."""
-    store_dtype = meta.get("store_dtype", "float64")
-    if store_dtype not in ("float64", "int8", "pq8"):
-        raise ValueError(
-            f"store_dtype must be 'float64', 'int8' or 'pq8', got {store_dtype!r}"
-        )
-    if store_dtype == "pq8" and codebooks is None:
-        raise ValueError("store_dtype='pq8' requires codebooks")
-    assigned = ivf_assign_blas(
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        centroids,
-        id_col="id",
-        vec_col="vec",
-    )
-    if store_dtype == "pq8":
-        # PQ tier: m small ints + one reconstruction norm per vector
-        # (see similarity.pq_encode) — the FAISS-IVFPQ disk model
-        return pq_encode_blas(
-            assigned, codebooks, int(meta["dim"]), id_col="id",
-            vec_col="vec", norm_col="norm", keep_cols=("centroid_id",),
-        )
-    if store_dtype == "int8":
-        # assignment above ran on the FLOAT vector (cell choice is
-        # never quantized); storage quantizes via the shared
-        # _int8_quantize (dirty-vector guard documented there)
-        return _int8_quantize(assigned).drop("vec")
-    return assigned.withColumn("norm", l2_norm(F.col("vec")))
-
-
 def _write_codebook_rows(
     spark: SparkSession,
     codebooks: list[tuple[int, int, list[float]]],
@@ -1045,17 +878,7 @@ def retrain_ivf_index(
 
     _check_save_mode(mode)
     postings, _, meta = load_ivf_index(spark, src_path)
-    store_dtype = meta.get("store_dtype", "float64")
-    if store_dtype == "pq8":
-        one, _, kk, _ = _pq_codebook_relation(
-            spark, meta["_codebooks"], int(meta["dim"])
-        )
-        postings = postings.crossJoin(F.broadcast(one))
-        vec = pq_decode(F.col("codes"), "__cb", kk)
-    elif store_dtype == "int8":
-        vec = _dequant_int8(F.col("qvec"), F.col("scale"))
-    else:
-        vec = F.col("vec")
+    postings, vec = _decoded_postings(postings, meta)
     corpus = postings.select(
         F.col("id").alias(meta["id_col"]), vec.alias("embedding")
     )
@@ -1073,7 +896,7 @@ def retrain_ivf_index(
         dim=int(meta["dim"]),
         id_col=meta["id_col"],
         seed=seed,
-        store_dtype=store_dtype,
+        store_dtype=meta.get("store_dtype", "float64"),
         codebooks=meta.get("_codebooks"),
         mode=mode,
     )
@@ -1838,59 +1661,6 @@ def _read_meta_any_kind(
             f"{allowed} indexes {verb}"
         )
     return meta
-
-
-def probe_ivf_index(
-    postings: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    meta: dict,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
-    """Top-k cosine neighbors from a LOADED IVF index — identical
-    results to ``topk_cosine_ivf`` over the original corpus with the
-    same centroids (parquet round-trips doubles exactly; the pytest
-    twin asserts row equality). Only the |Q| query vectors are
-    assigned here (``nprobe`` is the recall knob, as in-session); the
-    corpus side is the postings relation as loaded — never
-    re-assigned, never re-normed. An ``int8`` artifact (metadata
-    ``store_dtype``) rescans with dequantized vectors — scores are
-    approximate within quantization error, cells are exact."""
-    if int(meta["dim"]) and centroids and len(centroids[0][1]) != int(meta["dim"]):
-        raise ValueError(
-            f"centroids disagree with index metadata dim={meta['dim']}"
-        )
-    store_dtype = meta.get("store_dtype", "float64")
-    if store_dtype == "pq8":
-        one, _, kk, _ = _pq_codebook_relation(
-            postings.sparkSession, meta["_codebooks"], int(meta["dim"])
-        )
-        postings = postings.crossJoin(F.broadcast(one))
-        cvec = pq_decode(F.col("codes"), "__cb", kk)
-    elif store_dtype == "int8":
-        cvec = _dequant_int8(F.col("qvec"), F.col("scale"))
-    else:
-        cvec = F.col("vec")
-    c = postings.select(
-        F.col("id").alias("neighbor_id"),
-        cvec.alias("__cvec"),
-        F.col("centroid_id"),
-        F.col("norm").alias("__cn"),
-    )
-    q = ivf_assign(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-        ),
-        centroids,
-        id_col="query_id",
-        vec_col="__qvec",
-        nprobe=nprobe,
-    ).withColumn("__qn", l2_norm(F.col("__qvec")))
-    return _ivf_probe(c, q, k=k, round_digits=round_digits)
 
 
 __all__ = [

@@ -418,7 +418,7 @@ def extract_image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             # decode) hit a batch-bounded memo instead of re-decoding.
             # Keyed on a 16-byte md5 digest: hashlib accepts the
             # bytearray pandas hands us directly, so no per-row
-            # bytes() copy of the whole payload (r08 ADVICE #4).
+            # bytes() copy of the whole payload.
             memo: dict = {}
             for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
                 key = (

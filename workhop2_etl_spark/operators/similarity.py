@@ -14,6 +14,16 @@ Two paths, per the standard ANN playbook:
   md5 of (plane index, dimension index), so signatures are
   reproducible across engines and runs without a random state.
 
+Each ANN index kind has one search path. Its row builder
+(``_signed_rows`` for multi-table LSH, ``_posting_rows`` for IVF in
+the float64, int8 and pq8 tiers) turns a corpus into index rows, and
+its probe (``probe_lsh_index``, ``probe_ivf_index``) ranks queries
+against them. The in-session searches (``topk_cosine_lsh_multitable``,
+``topk_cosine_ivf``, ``topk_cosine_ivf_pq``, and the corpus side of
+``topk_cosine_lsh``) are that builder and probe without the disk;
+operators/index_store.py persists the same rows and probes them
+after a load.
+
 All arithmetic is double precision with sequential array folds, so
 results are bit-reproducible for the oracle comparison.
 """
@@ -63,16 +73,9 @@ def _cosine_from_denom(a: Column, b: Column, denom: Column) -> Column:
     NULL-for-dirty matches the BLAS kernels, which drop non-finite
     rows (np.isfinite keep mask in topk_cosine_bruteforce_blas, the
     dirty-row guards in the signature/PQ encoders)."""
-    return _score_from_dot(dot(a, b), denom)
-
-
-def _score_from_dot(dotc: Column, denom: Column) -> Column:
-    """The guard tiering over an ALREADY-COMPUTED dot product — shared
-    by ``_cosine_from_denom`` and the ADC scorer (whose dot comes from
-    the codeword lookup table, not a vector fold)."""
     finite = ~F.isnan(denom) & (denom != float("inf"))
     return (
-        F.when(finite & (denom > 0), dotc / denom)
+        F.when(finite & (denom > 0), dot(a, b) / denom)
         .when(finite & (denom == 0), F.lit(0.0))
         .otherwise(F.lit(None).cast("double"))
     )
@@ -349,38 +352,35 @@ def topk_cosine_ivf(
     """IVF ANN: exact cosine within the query's ``nprobe`` nearest
     cells (the recall knob IVF indexes are actually tuned with).
 
-    Both sides quantize with the same centroids: the corpus through
-    ``ivf_assign_blas`` into exactly one cell, each query through the
-    expression ``ivf_assign`` into its ``nprobe`` nearest cells
-    (exploded on the broadcast query side — mirrors the LSH
-    multi-probe shape: the corpus is never replicated). The search
-    stays an equi-join on centroid_id — shuffle ∝ probed-cell
-    populations (~nprobe/n_cells of the corpus per query), never the
-    n×|Q| cross product. A (query, neighbor) pair matches in at most
-    one cell (the neighbor lives in one cell; the probe set is
-    distinct), so no dedup pass is needed.
+    This is a float64 IVF index built and probed in session: the
+    corpus becomes ``_posting_rows`` (assigned through
+    ``ivf_assign_blas`` into exactly one cell) and ``probe_ivf_index``
+    assigns each query into its ``nprobe`` nearest cells (exploded on
+    the broadcast query side — mirrors the LSH multi-probe shape: the
+    corpus is never replicated). The search stays an equi-join on
+    centroid_id — shuffle ∝ probed-cell populations (~nprobe/n_cells
+    of the corpus per query), never the n×|Q| cross product. A
+    (query, neighbor) pair matches in at most one cell (the neighbor
+    lives in one cell; the probe set is distinct), so no dedup pass
+    is needed.
     """
-    c = ivf_assign_blas(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        F.col("centroid_id"),
-    ).withColumn("__cn", l2_norm(F.col("__cvec")))
-    q = ivf_assign(queries, centroids, id_col, vec_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.col("centroid_id"),
-    ).withColumn("__qn", l2_norm(F.col("__qvec")))
-    return _ivf_probe(c, q, k=k, round_digits=round_digits)
+    meta = {
+        "dim": len(centroids[0][1]) if centroids else 0,
+        "store_dtype": "float64",
+    }
+    postings = _posting_rows(corpus, meta, id_col, vec_col, centroids, None)
+    return probe_ivf_index(
+        postings, centroids, meta, queries, k=k, nprobe=nprobe,
+        id_col=id_col, vec_col=vec_col, round_digits=round_digits,
+    )
 
 
 def _ivf_probe(c: DataFrame, q: DataFrame, k: int, round_digits: int) -> DataFrame:
     """The IVF search itself, over already-assigned sides: corpus
     ``c`` = (neighbor_id, __cvec, centroid_id, __cn — one cell per
     vector), queries ``q`` = (query_id, __qvec, centroid_id, __qn —
-    one row per probed cell). Shared verbatim by ``topk_cosine_ivf``
-    (in-session assignment) and ``index_store.probe_ivf_index``
-    (postings loaded from parquet), so a persisted index probes
-    row-identically to an in-session one."""
+    one row per probed cell). The join and ranking stage of
+    ``probe_ivf_index``."""
     pairs = c.join(F.broadcast(q), ["centroid_id"]).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -402,12 +402,12 @@ def topk_cosine_lsh(
 
     Equi-join on the signature replaces the cross join — at corpus
     scale each query touches ~n/2^planes candidates. This is the
-    one-table member of the multi-table family: the corpus signs
-    through ``with_multitable_signatures_blas`` and the queries through
-    ``with_multitable_signatures``, both at ``num_tables=1`` (table 0's
-    planes), exactly as ``topk_cosine_lsh_multitable`` splits them.
-    NULL and wrong-length corpus vectors are not signed, so they never
-    become candidates (they could never score anyway).
+    one-table member of the multi-table family: the corpus becomes the
+    LSH index rows of ``_signed_rows`` at ``num_tables=1`` (table 0's
+    planes) and the queries sign through ``with_multitable_signatures``,
+    exactly as ``probe_lsh_index`` splits them. NULL and wrong-length
+    corpus vectors are not signed, so they never become candidates
+    (they could never score anyway).
 
     ``hamming_probe=1`` is the multi-probe recall knob: each query
     additionally probes the ``num_planes`` buckets at Hamming
@@ -421,17 +421,13 @@ def topk_cosine_lsh(
     """
     if hamming_probe not in (0, 1):
         raise ValueError(f"hamming_probe must be 0 or 1, got {hamming_probe}")
-    c = with_multitable_signatures_blas(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-        ).withColumn("__cn", l2_norm(F.col("__cvec"))),
-        "__cvec",
-        dim,
-        num_planes,
-        num_tables=1,
-        table_col="__ct",
-        sig_col="__csig",
-    ).drop("__ct")
+    meta = {"dim": dim, "num_planes": num_planes, "num_tables": 1}
+    c = _signed_rows(corpus, meta, id_col, vec_col).select(
+        F.col("id").alias("neighbor_id"),
+        F.col("vec").alias("__cvec"),
+        F.col("norm").alias("__cn"),
+        F.col("sig").alias("__csig"),
+    )
     q = with_multitable_signatures(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
@@ -750,7 +746,9 @@ def topk_cosine_lsh_multitable(
     tables OR'ed), vs ``topk_cosine_lsh``'s single table + optional
     Hamming probe.
 
-    The corpus signs through ``with_multitable_signatures_blas`` and
+    This is a float64 LSH index built and probed in session: the
+    corpus becomes the index rows of ``_signed_rows`` (signed through
+    ``with_multitable_signatures_blas``) and ``probe_lsh_index`` signs
     the queries through the expression ``with_multitable_signatures``
     (identical signatures; the matmul kernel is the one that scales).
 
@@ -767,31 +765,11 @@ def topk_cosine_lsh_multitable(
     recall as 1−(1−p^b)^L; planes-per-table divide bucket population
     (2^b buckets/table). b=6, L=8 at cosine-0.8 neighbors ≈ 0.90
     expected pair recall."""
-    # norms attach BEFORE the ×L signature explode so each row's
-    # array fold runs once, not once per table
-    c = with_multitable_signatures_blas(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-        ).withColumn("__cn", l2_norm(F.col("__cvec"))),
-        "__cvec",
-        dim,
-        num_planes,
-        num_tables,
-        table_col="__ct",
-        sig_col="__csig",
+    meta = {"dim": dim, "num_planes": num_planes, "num_tables": num_tables}
+    return probe_lsh_index(
+        _signed_rows(corpus, meta, id_col, vec_col), meta, queries, k=k,
+        id_col=id_col, vec_col=vec_col, round_digits=round_digits,
     )
-    q = with_multitable_signatures(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-        ).withColumn("__qn", l2_norm(F.col("__qvec"))),
-        "__qvec",
-        dim,
-        num_planes,
-        num_tables,
-        table_col="__qt",
-        sig_col="__qsig",
-    )
-    return _multitable_probe(c, q, k=k, round_digits=round_digits)
 
 
 def _multitable_probe(
@@ -800,9 +778,7 @@ def _multitable_probe(
     k: int,
     round_digits: int = 6,
 ) -> DataFrame:
-    """Probe stage of multi-table LSH, shared by the in-session path
-    (``topk_cosine_lsh_multitable``) and the persisted-index path
-    (operators/index_store.py::probe_lsh_index).
+    """The join and ranking stage of ``probe_lsh_index``.
 
     Contract: ``signed_corpus`` carries (neighbor_id, __cvec, __cn,
     __ct, __csig) — one row per (vector, table); ``signed_queries``
@@ -1047,8 +1023,6 @@ def pq_encode_blas(
     codes_col: str = "codes",
     norm_col: str = "recon_norm",
     keep_cols: tuple[str, ...] = (),
-    recon_col: str | None = None,
-    _cb_rel=None,
 ) -> DataFrame:
     """Arrow/BLAS twin of ``pq_encode`` — identical codes, matmul
     formulation. The expression encoder runs m·k interpreted
@@ -1078,10 +1052,8 @@ def pq_encode_blas(
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType
 
-    spark = df.sparkSession
-    one, num_subspaces, k, dsub = (
-        _cb_rel if _cb_rel is not None
-        else _pq_codebook_relation(spark, codebooks, dim)
+    one, num_subspaces, k, dsub = _pq_codebook_relation(
+        df.sparkSession, codebooks, dim
     )
     C = np.zeros((num_subspaces, k, dsub), dtype=np.float64)
     for m, j, c in codebooks:
@@ -1127,20 +1099,15 @@ def pq_encode_blas(
     _codes_fn.__annotations__ = {"v": pd.Series, "return": pd.Series}
     _enc = F.pandas_udf(ArrayType(IntegerType()))(_codes_fn)
 
-    staged = (
+    return (
         df.withColumn(codes_col, _enc(F.col(vec_col)))
         .filter(F.col(codes_col).isNotNull())
         .crossJoin(F.broadcast(one))
         .withColumn(norm_col, l2_norm(pq_decode(F.col(codes_col), "__cb", k)))
-    )
-    if recon_col is not None:
-        staged = staged.withColumn(
-            recon_col, pq_decode(F.col(codes_col), "__cb", k)
+        .select(
+            F.col(id_col), F.col(codes_col), F.col(norm_col),
+            *[F.col(c) for c in keep_cols],
         )
-    return staged.select(
-        F.col(id_col), F.col(codes_col), F.col(norm_col),
-        *([F.col(recon_col)] if recon_col is not None else []),
-        *[F.col(c) for c in keep_cols],
     )
 
 
@@ -1155,6 +1122,246 @@ def pq_decode(codes, cb_col, k: int):
     return F.flatten(idx)
 
 
+# ---------------------------------------------------------------------------
+# Index rows and probes: one search path per index kind
+# ---------------------------------------------------------------------------
+
+
+def _dequant_int8(qvec, scale):
+    """Dequantized float64 vector from an int8-quantized posting —
+    the probe-side inverse of the quantization in
+    ``_int8_quantize`` (pure expressions, JVM-side)."""
+    return F.transform(qvec, lambda q: q.cast("double") * scale)
+
+
+def _int8_quantize(df: DataFrame, vec: str = "vec") -> DataFrame:
+    """Symmetric per-vector int8 scalar quantization (FAISS SQ8):
+    appends ``scale`` (max|x|/127 — the full int8 range per vector),
+    ``qvec`` (array<tinyint>), and ``norm`` (of the DEQUANTIZED
+    vector, so probe cosines are internally consistent). Shared by
+    the LSH and IVF int8 tiers — ONE quantization convention.
+
+    Quantization uses Spark SQL round (HALF_UP) — reproducible in
+    ANSI SQL, so an oracle can recompute the identical stored values.
+
+    Dirty-vector guard: a NaN element drives ``scale`` to NaN
+    (greatest's NaN-largest ordering) and an ±inf element drives it
+    to +inf, where inf/inf = NaN — either way the ANSI NaN→tinyint
+    cast would fail the WHOLE build job on one corrupt row. Such
+    rows store zeros under their honest non-finite scale; the
+    dequantized vector is then all-NaN, its norm NaN, and the
+    scoring guard (``_cosine_from_denom``) NULLs them out of
+    every ranking — the same exclusion the float tier applies to
+    non-finite vectors."""
+    scale = F.aggregate(
+        F.transform(F.col(vec), F.abs),
+        F.lit(0.0),
+        lambda acc, v: F.greatest(acc, v),
+    ) / F.lit(127.0)
+    q_ok = (
+        (F.col("scale") > 0)
+        & ~F.isnan(F.col("scale"))
+        & (F.col("scale") != float("inf"))
+    )
+    qvec = F.when(
+        q_ok,
+        F.transform(
+            F.col(vec),
+            lambda x: F.round(x / F.col("scale")).cast("tinyint"),
+        ),
+    ).otherwise(
+        F.transform(F.col(vec), lambda x: F.lit(0).cast("tinyint"))
+    )
+    return (
+        df.withColumn("scale", scale)
+        .withColumn("qvec", qvec)
+        .withColumn("norm", l2_norm(_dequant_int8(F.col("qvec"), F.col("scale"))))
+    )
+
+
+def _signed_rows(
+    corpus: DataFrame, meta: dict, id_col: str, vec_col: str
+) -> DataFrame:
+    """The LSH index rows of ``corpus`` under the geometry in ``meta``:
+    (id, vec | qvec + scale, norm, table_id, sig)."""
+    store_dtype = meta.get("store_dtype", "float64")
+    if store_dtype not in ("float64", "int8"):
+        raise ValueError(
+            f"store_dtype must be 'float64' or 'int8', got {store_dtype!r}"
+        )
+    base = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    if store_dtype == "int8":
+        # the LSH relation stores the vector once per TABLE row (×L
+        # redundancy), so quantized storage compounds: ~8× smaller
+        # elements × the L-way duplication. Signing always runs on
+        # the float vector (bucket choice is never quantized); the
+        # quantization is the shared _int8_quantize (dirty-vector
+        # guard and HALF_UP convention documented there).
+        base = _int8_quantize(base)
+    else:
+        base = base.withColumn("norm", l2_norm(F.col("vec")))
+    signed = with_multitable_signatures_blas(
+        base,
+        "vec",
+        int(meta["dim"]),
+        int(meta["num_planes"]),
+        int(meta["num_tables"]),
+        table_col="table_id",
+        sig_col="sig",
+    )
+    return signed.drop("vec") if store_dtype == "int8" else signed
+
+
+def probe_lsh_index(
+    index: DataFrame,
+    meta: dict,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_digits: int = 6,
+) -> DataFrame:
+    """Top-k cosine neighbors from LSH index rows (``_signed_rows``),
+    loaded from an artifact or built in session —
+    ``topk_cosine_lsh_multitable`` is this probe over the rows it
+    builds, and a persisted index probes identically (vec/norm
+    doubles round-trip parquet exactly).
+
+    The corpus side is the index relation as given (never re-signed,
+    never re-normed); only the |Q| query vectors are signed here, with
+    the expression kernel — signatures are kernel-independent by the
+    documented sign-identity, and |Q| is small by contract. An
+    ``int8`` artifact rescans with dequantized vectors — scores are
+    approximate within quantization error, buckets are exact."""
+    q = with_multitable_signatures(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        ).withColumn("__qn", l2_norm(F.col("__qvec"))),
+        "__qvec",
+        int(meta["dim"]),
+        int(meta["num_planes"]),
+        int(meta["num_tables"]),
+        table_col="__qt",
+        sig_col="__qsig",
+    )
+    if meta.get("store_dtype", "float64") == "int8":
+        cvec = _dequant_int8(F.col("qvec"), F.col("scale"))
+    else:
+        cvec = F.col("vec")
+    c = index.select(
+        F.col("id").alias("neighbor_id"),
+        cvec.alias("__cvec"),
+        F.col("norm").alias("__cn"),
+        F.col("table_id").alias("__ct"),
+        F.col("sig").alias("__csig"),
+    )
+    return _multitable_probe(c, q, k=k, round_digits=round_digits)
+
+
+def _posting_rows(
+    corpus: DataFrame,
+    meta: dict,
+    id_col: str,
+    vec_col: str,
+    centroids: list[tuple[int, list[float]]],
+    codebooks: list[tuple[int, int, list[float]]] | None,
+) -> DataFrame:
+    """The IVF postings of ``corpus`` assigned under ``centroids``, in
+    the storage tier of ``meta``: (id, vec | qvec + scale | codes,
+    norm, centroid_id)."""
+    store_dtype = meta.get("store_dtype", "float64")
+    if store_dtype not in ("float64", "int8", "pq8"):
+        raise ValueError(
+            f"store_dtype must be 'float64', 'int8' or 'pq8', got {store_dtype!r}"
+        )
+    if store_dtype == "pq8" and codebooks is None:
+        raise ValueError("store_dtype='pq8' requires codebooks")
+    assigned = ivf_assign_blas(
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        centroids,
+        id_col="id",
+        vec_col="vec",
+    )
+    if store_dtype == "pq8":
+        # PQ tier: m small ints + one reconstruction norm per vector
+        # (see pq_encode) — the FAISS-IVFPQ disk model
+        return pq_encode_blas(
+            assigned, codebooks, int(meta["dim"]), id_col="id",
+            vec_col="vec", norm_col="norm", keep_cols=("centroid_id",),
+        )
+    if store_dtype == "int8":
+        # assignment above ran on the FLOAT vector (cell choice is
+        # never quantized); storage quantizes via the shared
+        # _int8_quantize (dirty-vector guard documented there)
+        return _int8_quantize(assigned).drop("vec")
+    return assigned.withColumn("norm", l2_norm(F.col("vec")))
+
+
+def _decoded_postings(postings: DataFrame, meta: dict) -> tuple[DataFrame, Column]:
+    """IVF postings in the storage tier of ``meta``, and the float64
+    vector column they decode to: ``vec`` as stored, the dequantized
+    ``qvec`` of an ``int8`` tier, or the reconstruction of a ``pq8``
+    tier's codes under ``meta['_codebooks']`` (the codebook relation
+    joins the postings for it)."""
+    store_dtype = meta.get("store_dtype", "float64")
+    if store_dtype == "pq8":
+        one, _, kk, _ = _pq_codebook_relation(
+            postings.sparkSession, meta["_codebooks"], int(meta["dim"])
+        )
+        return (
+            postings.crossJoin(F.broadcast(one)),
+            pq_decode(F.col("codes"), "__cb", kk),
+        )
+    if store_dtype == "int8":
+        return postings, _dequant_int8(F.col("qvec"), F.col("scale"))
+    return postings, F.col("vec")
+
+
+def probe_ivf_index(
+    postings: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    meta: dict,
+    queries: DataFrame,
+    k: int = 5,
+    nprobe: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    round_digits: int = 6,
+) -> DataFrame:
+    """Top-k cosine neighbors from IVF postings (``_posting_rows``),
+    loaded from an artifact or built in session — ``topk_cosine_ivf``
+    and ``topk_cosine_ivf_pq`` are this probe over the rows they
+    build, and a persisted index probes identically (parquet
+    round-trips doubles exactly). Only the |Q| query vectors are
+    assigned here (``nprobe`` is the recall knob); the corpus side is
+    the postings relation as given — never re-assigned, never
+    re-normed. An ``int8`` index (``store_dtype``) rescans with
+    dequantized vectors and a ``pq8`` one with reconstructions under
+    ``meta['_codebooks']`` — scores are approximate within
+    quantization error, cells are exact."""
+    if int(meta["dim"]) and centroids and len(centroids[0][1]) != int(meta["dim"]):
+        raise ValueError(
+            f"centroids disagree with index metadata dim={meta['dim']}"
+        )
+    postings, cvec = _decoded_postings(postings, meta)
+    c = postings.select(
+        F.col("id").alias("neighbor_id"),
+        cvec.alias("__cvec"),
+        F.col("centroid_id"),
+        F.col("norm").alias("__cn"),
+    )
+    q = ivf_assign(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
+        ),
+        centroids,
+        id_col="query_id",
+        vec_col="__qvec",
+        nprobe=nprobe,
+    ).withColumn("__qn", l2_norm(F.col("__qvec")))
+    return _ivf_probe(c, q, k=k, round_digits=round_digits)
+
+
 def topk_cosine_ivf_pq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1166,140 +1373,29 @@ def topk_cosine_ivf_pq(
     vec_col: str = "embedding",
     round_digits: int = 6,
     nprobe: int = 1,
-    score_mode: str = "recon",
 ) -> DataFrame:
     """IVF-PQ ANN search: IVF cells bound the candidate set (exactly
     ``topk_cosine_ivf``'s equi-join — shuffle ∝ probed-cell
     populations, never n×|Q|), and candidates score against their PQ
-    RECONSTRUCTIONS — the corpus side carries only (codes,
-    recon_norm, centroid_id), never the original vectors, so the
-    search's working set is the PQ-compressed one. Queries stay
-    float (asymmetric distance — the standard, higher-recall PQ
-    configuration). Reconstruction + the sequential cosine fold make
-    scores cross-engine reproducible; the probe itself is the shared
-    ``_ivf_probe``. The corpus assigns and encodes through the BLAS
-    kernels (``ivf_assign_blas``, ``pq_encode_blas``), exactly as a
-    persisted ``pq8`` build does, so NULL, ragged and non-finite
-    vectors never become neighbors; queries assign through the
-    expression ``ivf_assign``.
+    RECONSTRUCTIONS — the corpus side carries only (codes, norm,
+    centroid_id), never the original vectors, so the search's working
+    set is the PQ-compressed one. Queries stay float (asymmetric
+    distance — the standard, higher-recall PQ configuration).
+    Reconstruction + the sequential cosine fold make scores
+    cross-engine reproducible.
 
-    ``score_mode='adc'`` is the classic asymmetric-distance-
-    computation variant: per query, the dot against every codeword
-    is precomputed ONCE (an m×k lookup table, |Q|·m·k rows,
-    broadcast), and each candidate pair costs m table lookups + a
-    sum instead of a dim-element fold. Scores match ``'recon'`` up
-    to float addition order (the m partials sum in a hash
-    aggregate), so ADC is the non-oracle performance path —
-    tolerance-compared in pytest, measured in PERF.md."""
-    if score_mode not in ("recon", "adc"):
-        raise ValueError(
-            f"score_mode must be 'recon' or 'adc', got {score_mode!r}"
-        )
-    # one codebook relation, broadcast by both the encode and the
-    # decode (or the ADC lookup table): identical driver-built
-    # relations are distinct plans, so exchange reuse never dedupes
-    # them and each extra reference is its own broadcast build
-    cb_rel = _pq_codebook_relation(corpus.sparkSession, codebooks, dim)
-    one, _, _, dsub = cb_rel
-    assigned = ivf_assign_blas(corpus, centroids, id_col, vec_col)
-    q = ivf_assign(queries, centroids, id_col, vec_col, nprobe=nprobe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        F.col("centroid_id"),
-    ).withColumn("__qn", l2_norm(F.col("__qvec")))
-
-    if score_mode == "recon":
-        # the encode emits the reconstruction alongside the norm — the
-        # identical pq_decode expression, no second codebook broadcast
-        enc = pq_encode_blas(
-            assigned,
-            codebooks,
-            dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            keep_cols=("centroid_id",),
-            recon_col="__cvec",
-            _cb_rel=cb_rel,
-        )
-        c = enc.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("__cvec"),
-            F.col("centroid_id"),
-            F.col("recon_norm").alias("__cn"),
-        )
-        return _ivf_probe(c, q, k=k, round_digits=round_digits)
-    enc = pq_encode_blas(
-        assigned,
-        codebooks,
-        dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        keep_cols=("centroid_id",),
-        _cb_rel=cb_rel,
+    This is a pq8 IVF index built and probed in session: the corpus
+    becomes the pq8 ``_posting_rows`` (assigned and encoded through
+    ``ivf_assign_blas`` and ``pq_encode_blas``, so NULL, ragged and
+    non-finite vectors never become neighbors) and ``probe_ivf_index``
+    decodes them under ``codebooks`` and assigns the queries through
+    the expression ``ivf_assign``."""
+    meta = {"dim": dim, "store_dtype": "pq8", "_codebooks": codebooks}
+    postings = _posting_rows(corpus, meta, id_col, vec_col, centroids, codebooks)
+    return probe_ivf_index(
+        postings, centroids, meta, queries, k=k, nprobe=nprobe,
+        id_col=id_col, vec_col=vec_col, round_digits=round_digits,
     )
-
-    # ADC: per-query lookup table of codeword partial dots, |Q|·m·k
-    # rows, broadcast. Each candidate pair explodes to m (m, code)
-    # rows, joins the LUT, and sums — the dim-fold never runs.
-    lut = (
-        q.select("query_id", "__qvec").distinct()
-        .crossJoin(F.broadcast(one))
-        .select(
-            "query_id",
-            F.explode("__cb").alias("__cw"),
-            F.col("__qvec"),
-        )
-        .select(
-            "query_id",
-            F.col("__cw.m").alias("__m"),
-            F.col("__cw.j").alias("__j"),
-            F.aggregate(
-                F.zip_with(
-                    F.slice(
-                        F.col("__qvec"), F.col("__cw.m") * dsub + 1, dsub
-                    ),
-                    F.col("__cw.c"),
-                    lambda x, cc: x.cast("double") * cc,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ).alias("__partial"),
-        )
-    )
-    cand = (
-        enc.select(
-            F.col(id_col).alias("neighbor_id"),
-            "codes",
-            F.col("recon_norm").alias("__cn"),
-            "centroid_id",
-        )
-        .join(
-            F.broadcast(q.select("query_id", "centroid_id", "__qn")),
-            ["centroid_id"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id", "neighbor_id", "__cn", "__qn",
-            F.posexplode("codes").alias("__m", "__j"),
-        )
-    )
-    scored = (
-        cand.join(F.broadcast(lut), ["query_id", "__m", "__j"])
-        .groupBy("query_id", "neighbor_id", "__cn", "__qn")
-        .agg(F.sum("__partial").alias("__dot"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _score_from_dot(
-                    F.col("__dot"), F.col("__qn") * F.col("__cn")
-                ),
-                round_digits,
-            ).alias("score"),
-        )
-        .filter(F.col("score").isNotNull())  # dirty (non-finite) rows out
-    )
-    return _rank_pairs(scored, k)
 
 
 def topk_cosine_ivf_pq_refine(
@@ -1314,7 +1410,6 @@ def topk_cosine_ivf_pq_refine(
     vec_col: str = "embedding",
     round_digits: int = 6,
     nprobe: int = 1,
-    score_mode: str = "recon",
 ) -> DataFrame:
     """IVF-PQ search with an exact refine stage — FAISS's
     ``IVFPQR``/refine pattern: the PQ-compressed index nominates
@@ -1346,7 +1441,6 @@ def topk_cosine_ivf_pq_refine(
         vec_col=vec_col,
         round_digits=round_digits,
         nprobe=nprobe,
-        score_mode=score_mode,
     ).select("query_id", "neighbor_id")
     return _exact_rescore_candidates(
         corpus, queries, cand, k, id_col, vec_col, round_digits

@@ -38,7 +38,7 @@ def _row_salt(num_salts: int, salt_on: str | list[str] | None = None) -> Column:
     Uniqueness is what makes hashing spread hot keys: a hot key's
     rows share the key but differ in the unique column, so they still
     fan out over the salt domain. (Hashing the WHOLE row does not —
-    hot rows are typically identical duplicates, the round-10 find.)
+    hot rows are typically identical duplicates.)
 
     Without ``salt_on`` the salt falls back to round-robin
     ``pmod(monotonically_increasing_id(), n)`` — perfectly even

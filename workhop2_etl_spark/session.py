@@ -94,10 +94,10 @@ def get_spark(app_name: str = "workhop2_etl_spark", shuffle_partitions: int | No
         # one job at 1 partition, then 4×, 16×... — costing 2-3 extra
         # job launches per guard. Sized to the parallelism (like
         # shuffle.partitions above), one job scans all partitions at
-        # once; r12 optimization, scale-adaptive by construction.
+        # once, scale-adaptive by construction.
         .config("spark.sql.limit.initialNumPartitions", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Shuffled-hash-vs-sort-merge was A/B'd both ways in r12 and
+        # Shuffled-hash-vs-sort-merge was A/B'd both ways and
         # REJECTED: the static knob (preferSortMergeJoin=false) never
         # fired (the surviving SMJs sit on subplans with no usable
         # size estimates), and AQE's runtime conversion

@@ -198,7 +198,7 @@ def k1_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_value": ("max", F.max("value")),
             },
             # event_id is row-unique → deterministic retry-stable salt
-            # (the r11 SPARK-23207 hardening; positional fallback only
+            # (the SPARK-23207 hardening; positional fallback only
             # when no unique column exists)
             salt_on="event_id",
         )
@@ -298,7 +298,7 @@ def k2_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = ev.groupBy("event_type").agg(F.avg("value").alias("ty_avg"))
     joined = salted_shuffle_join(
         # event_id rides along only as the deterministic salt source
-        # (row-unique → retry-stable assignment, the r11 hardening)
+        # (row-unique → retry-stable assignment, SPARK-23207)
         ev.select("event_id", "event_type", "value"),
         stats,
         on=["event_type"],

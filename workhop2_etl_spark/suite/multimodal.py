@@ -422,7 +422,7 @@ def m9_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# m10: REAL JPEG decode in the oracle gate (r07 verdict ask #4) —
+# m10: REAL JPEG decode in the oracle gate —
 # payloads are genuine baseline-sequential JFIF bytes (generated once
 # with operators/imagecodec.jpeg_encode; verifiable offline with any
 # JPEG tool), one per decoder path: 4:4:4 RGB, grayscale, and

@@ -925,14 +925,12 @@ def x17_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "text", "lang", n_tok.alias("n_tok"))
 
     ex = DD.dedupe_exact(passed)
-    # row-based SimHash (r12 optimization): the inline simhash16
-    # expression is an interpreted 16-way F.aggregate fold that
-    # re-hashes every token once PER BIT (no codegen for higher-order
-    # functions); the explode + 16-conditional-sums twin hashes each
-    # token once and its groupBy(doc_id) shuffle is docs-sized after
-    # map-side partial aggregation. Bit-identical votes (same md5[:4]
-    # integer hash, same ±1 sums) — measured 3.6s → 2.1s on the
-    # signature stage alone at sf0.1.
+    # row-based SimHash (the one SimHash kernel): explode + 16
+    # conditional sums hash each token once, where a column-form
+    # 16-way F.aggregate fold would re-hash every token once PER BIT
+    # (no codegen for higher-order functions); the groupBy(doc_id)
+    # shuffle is docs-sized after map-side partial aggregation —
+    # measured 3.6s → 2.1s on the signature stage alone at sf0.1.
     sim_keep = (
         DD.simhash_signatures(ex)
         .groupBy("simhash")
@@ -978,7 +976,7 @@ def x17_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# x19 (r12): MODEL-GATED corpus prep — the production FineWeb-style
+# x19: MODEL-GATED corpus prep — the production FineWeb-style
 # stage the x-family lacked: a linear quality classifier over hashed
 # features (operators/text.py, t18's kernel with the same
 # pseudo-trained md5-uniform weights) gates documents BEFORE exact

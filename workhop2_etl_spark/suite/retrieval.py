@@ -301,7 +301,7 @@ def t13_bm25_pruned_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the probe's API (it becomes a pushed-down df threshold), so the
     # corpus size must reach the driver — this is the artifact's own
     # dimension-sized stats relation, the same bounded-collect class
-    # as the probe's vocabulary IN-list (r11 verdict nit, documented)
+    # as the probe's vocabulary IN-list
     n_docs = stats.collect()[0].n_docs
     qt = (
         corpus_tokens.filter(
@@ -413,7 +413,7 @@ def st14_streaming_lexical_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
     base = tempfile.mkdtemp(prefix="w2e_st14_")
     src, path, ckpt = (os.path.join(base, d) for d in ("src", "idx", "ckpt"))
     # one write job, three part files → three availableNow epochs
-    # (r12, the st15 pattern: any disjoint split works — the epochs'
+    # (the st15 pattern: any disjoint split works — the epochs'
     # df/stats partials are additive in any grouping)
     docs.repartition(3).write.mode("overwrite").parquet(src)
 
@@ -432,9 +432,9 @@ def st14_streaming_lexical_ingest(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# st15 (r12): the full lexical index lifecycle in one query — stream
+# st15: the full lexical index lifecycle in one query — stream
 # ingest (three exactly-once epochs through the prepare tokenizer),
-# then DELETE a slice, then probe. Pins this round's marker-gated
+# then DELETE a slice, then probe. Pins the ledger's marker-gated
 # batch visibility end to end: the delete's signed partials net
 # against three stream epochs' positive partials (not a batch
 # build's), its tombstones anti-join the streamed tf rows, and the
@@ -491,7 +491,7 @@ def st15_streaming_ingest_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# st16 (r12): SNAPSHOT READ of the lexical artifact — every ledger
+# st16: SNAPSHOT READ of the lexical artifact — every ledger
 # marker records its commit sequence, so load(as_of=N) reconstructs
 # the index exactly as it stood after commit N (the Delta-time-travel
 # analog, bounded by the last compaction). The query ingests two
@@ -545,7 +545,7 @@ def st16_snapshot_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# st17 (r12): SNAPSHOT RESTORE — materialize load(as_of=N) as a fresh
+# st17: SNAPSHOT RESTORE — materialize load(as_of=N) as a fresh
 # artifact (index_store.restore_index, the rollback verb: Delta
 # RESTORE made blue/green). The query builds the same lifecycle as
 # st16 (two direct epochs, then a delete), restores AT as_of=2 to a
@@ -599,7 +599,7 @@ def st17_index_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# t17 (r12): the CDC CHANGELOG — index_changes returns the ledgered
+# t17: the CDC CHANGELOG — index_changes returns the ledgered
 # mutation events between two commit sequences as (commit_seq, op,
 # doc_id) rows, reading ONLY the selected batches' own files (the
 # changelog costs the change volume, never a corpus scan). The query
@@ -944,7 +944,7 @@ def t15_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# t16: PRF against the PERSISTED lexical index (r12, verdict ask #3)
+# t16: PRF against the PERSISTED lexical index
 # — t15's 100 TB shape made an oracle-checked query: the corpus tf
 # aggregation is paid once at save time; pass 1, the harvest, and
 # pass 2 all run against the loaded artifact, each probe reading only

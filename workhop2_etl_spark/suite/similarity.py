@@ -438,7 +438,7 @@ def v8_topk_cosine_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# v9: the PERSISTED-index lifecycle end to end (r08 verdict ask #4) —
+# v9: the PERSISTED-index lifecycle end to end —
 # sign the corpus with the BLAS kernel, WRITE the index artifact to
 # parquet (+ a validated metadata record), LOAD it back, and probe
 # the loaded relation with a fresh query set. The oracle knows

@@ -501,7 +501,7 @@ def st13_streaming_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="w2e_st13_")
     src, path, ckpt = (os.path.join(base, d) for d in ("src", "idx", "ckpt"))
     # one write job, three part files → three availableNow epochs
-    # (r12, the st15 pattern: any disjoint split works — epoch
+    # (the st15 pattern: any disjoint split works — epoch
     # membership is irrelevant to the append-equivalent postings)
     emb.repartition(3).write.mode("overwrite").parquet(src)
 
